@@ -3,20 +3,17 @@ pair list (e.g. MinHash+LSH output), so every document gets a canonical
 cluster id (the minimum doc id in its component) and dedup can keep exactly
 one survivor per cluster instead of dropping both ends of every pair.
 
-Two algorithms, same output contract (cluster_id = min node id reachable):
+``connected_components`` runs alternating large-star/small-star rounds
+(Kiveris et al., "Connected Components in MapReduce and Beyond", 2014 —
+public algorithm). Each round halves tree heights, so convergence is
+O(log d) rounds even on adversarial long-chain graphs; each half-round is
+one groupBy-min + one join-free projection over the edge list. No
+driver-side graph state; per-round results are ``localCheckpoint``-ed so
+the plan doesn't grow with iteration count (standard practice for
+iterative DataFrame algorithms).
 
-* ``star`` (default, the scale path): alternating large-star/small-star
-  rounds (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  2014 — public algorithm). Each round halves tree heights, so convergence
-  is O(log d) rounds even on adversarial long-chain graphs; each half-round
-  is one groupBy-min + one join-free projection over the edge list.
-* ``label``: iterative min-label propagation. Rounds needed = graph
-  diameter — fine for the star-shaped components LSH candidate graphs
-  produce (2-4 rounds typical), quadratic-ish wall clock on long chains.
-
-No driver-side graph state in either; per-round results are
-``localCheckpoint``-ed so the plan doesn't grow with iteration count
-(standard practice for iterative DataFrame algorithms)."""
+``connected_components_driver`` is a driver-side union-find with the same
+output contract, for edge lists already known to be small."""
 
 from __future__ import annotations
 
@@ -66,16 +63,19 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
+def connected_components(
     pairs: DataFrame,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Large-star/small-star component labeling (Kiveris et al. 2014):
-    O(log d) rounds on any graph shape, so a 10k-node path converges in
-    ~14 rounds where plain label propagation needs 10k. At fixpoint the
-    edge set is a star per component, rooted at the component minimum."""
+    """(node, cluster_id) for every node appearing in ``pairs``;
+    cluster_id = min node id in the connected component.
+
+    Large-star/small-star labeling (Kiveris et al. 2014): O(log d) rounds
+    on any graph shape, so a 10k-node path converges in ~14 rounds where
+    plain label propagation needs 10k. At fixpoint the edge set is a star
+    per component, rooted at the component minimum."""
     edges = (
         pairs.select(
             F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
@@ -109,7 +109,7 @@ def connected_components_star(
         edges, prev_count = new_edges, new_count
     if not converged:
         logger.warning(
-            "connected_components_star did not converge in %d rounds; "
+            "connected_components did not converge in %d rounds; "
             "labels may split components — raise max_iter", max_iter,
         )
     members = edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
@@ -140,7 +140,7 @@ def connected_components_driver(
     contract as ``connected_components`` ((node, cluster_id), cluster_id =
     component minimum), built for graphs already known to be small.
 
-    The distributed forms pay ~10–25 Spark jobs of per-iteration overhead
+    The distributed ``connected_components`` pays ~10–25 Spark jobs of per-iteration overhead
     (checkpoint + convergence count per round) regardless of graph size —
     measured 11 s for a 260k-edge reduced graph whose union-find answer
     costs well under a second. Callers gate on an edge-count threshold
@@ -182,63 +182,6 @@ def connected_components_driver(
         ]
     )
     return spark.createDataFrame(out, schema)
-
-
-def connected_components(
-    pairs: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iter: int = 25,
-    algorithm: str = "star",
-) -> DataFrame:
-    """(node, cluster_id) for every node appearing in ``pairs``;
-    cluster_id = min node id in the connected component.
-
-    ``algorithm="star"`` (default) is the O(log d)-round scale path;
-    ``"label"`` is plain min-label propagation (diameter rounds — only
-    sensible when components are known to be shallow)."""
-    if algorithm == "star":
-        return connected_components_star(pairs, src_col, dst_col, max_iter)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}: expected 'star' or 'label'")
-    edges = (
-        pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .unionByName(pairs.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = edges.select(F.col("u").alias("node"), F.col("u").alias("label")).distinct()
-    for _ in range(max_iter):
-        neighbor_labels = (
-            edges.join(labels, edges["v"] == labels["node"])
-            .select(F.col("u").alias("node"), "label")
-        )
-        new_labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # range exhausted with labels still moving: the labeling is split
-        # along chains longer than max_iter — surface it rather than return
-        # silently-wrong clusters
-        logger.warning(
-            "connected_components did not converge in %d rounds (%d labels "
-            "still changing); raise max_iter or switch to large-star/"
-            "small-star for long-chain graphs",
-            max_iter, changed,
-        )
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
 
 def dedup_clusters(

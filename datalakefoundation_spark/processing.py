@@ -885,13 +885,6 @@ class Processing:
         else:
             target_pruned = target
         fn = S.scd2_state if historic else S.merge_state
-        # target_rows hint for the adaptive join form: the manifest's
-        # recorded total (an upper bound on any pruned read) — metadata,
-        # not a count() action. Unknown (None, e.g. pre-metrics manifests)
-        # falls back to the scale-safe decomposition.
-        hint_rows = (
-            int(mf.metrics.get("total_rows", 0) or 0) if mf is not None else 0
-        )
         state = fn(
             target_pruned,
             source,
@@ -902,12 +895,6 @@ class Processing:
             delete_missing=self.delete_missing,
             with_action_column=True,
             extra_columns=evolved,
-            target_rows=hint_rows or None,
-            # slice size from the fused bookkeeping count (no extra job):
-            # gates the full-outer form's SHUFFLE_HASH build side — an
-            # oversized bootstrap slice must not become an unspillable
-            # hash-map build (r12, ADVICE r11)
-            source_rows=self._slice_count,
         )
         # Per-action counts are collected DURING the write via df.observe —
         # the merged state is computed exactly once and never cached. (The

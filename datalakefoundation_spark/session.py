@@ -31,22 +31,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Shuffled-hash joins are taken ONLY where this engine places an
-        # explicit, size-gated SHUFFLE_HASH hint (strategies._shj_build_side
-        # — the merge/SCD2 small-target full-outer, whose build side is
-        # provably bounded); hints are honored regardless of this conf. The
-        # r11 session-global preferSortMergeJoin=false bought nothing beyond
-        # those hinted joins in any of the 117 audited plans, while exposing
-        # EVERY join in the session to an unspillable hash-map build when
-        # post-filter/UDF size estimates run low (ADVICE r11) — so the
-        # default is back to Spark's always-spillable sort-merge preference.
-        # Clusters that want planner-chosen SHJ can set
-        # SPARK_GRAFT_PREFER_SMJ=false; the plan audit
-        # (tools/explain_audit.py) flags any un-hinted ShuffledHashJoin.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

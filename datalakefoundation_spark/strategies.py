@@ -2,40 +2,27 @@
 
 Reference semantics: Full.scala:19-77, Merge.scala:22-148, Historic.scala:14-168.
 The reference drives Delta Lake's MERGE builder; this environment has no Delta
-jars, so the same clause semantics are expressed as ONE full-outer shuffle join
-per run producing the post-merge state (pure ``(target, source) -> new_state``
-DataFrame functions). This is exactly what a copy-on-write MERGE does
-physically; the storage layer (tables/lake_table.py) adds partition pruning so
-only affected partitions are rewritten.
+jars, so the same clause semantics are expressed as pure
+``(target, source) -> new_state`` DataFrame functions — exactly what a
+copy-on-write MERGE does physically; the storage layer
+(tables/lake_table.py) adds partition pruning so only affected partitions
+are rewritten.
 
 Scale notes (100 TB):
-* Joins shuffle on the PK hash — a sha256 hex string, uniformly
-  distributed, so no key skew by construction.
+* Joins key on the PK hash — a sha256 hex string, uniformly distributed,
+  so no key skew by construction.
 * Target is pre-filtered to the source slice's partitions (IN-list pushdown,
   reference Merge.scala:38-48) before the join; untouched partitions are not
   read at all.
-* The source slice is typically tiny vs the target. A full-outer join can
-  never broadcast in Spark, so at scale the state is built from an
-  equivalent decomposition that can: ``target LEFT JOIN source`` (covers
-  matched + target-only rows; AQE broadcasts the slice, so the TARGET IS
+* The source slice is typically tiny vs the target, so the state is built
+  from two joins that let the slice broadcast: ``target LEFT JOIN source``
+  (matched + target-only rows; AQE broadcasts the slice, so the TARGET IS
   NEVER SHUFFLED) unioned with ``source LEFT ANTI JOIN target(pk)`` (the
   inserts; the anti join's target side is a pk-only projection, so even
-  its SMJ fallback shuffles one 64-char column instead of every target
-  column). Row-for-row identical to the full-outer form.
-* THE FORM IS ADAPTIVE (``join_form='auto'`` + ``target_rows`` hint): the
-  decomposition reads the target twice, which is nearly free when the
-  target is a stored table (the anti join's pk projection is a
-  column-pruned parquet scan) but doubles compute when the target is a
-  derived pipeline (the pk is itself computed, e.g. sha256 over every
-  column). Below ``SMALL_TARGET_ROWS`` the broadcast win cannot repay a
-  second scan, so ``auto`` picks the single full-outer join (each side
-  scanned once); above it — or when the size is unknown — it picks the
-  scale-safe decomposition. Callers pass ``target_rows`` from real
-  metadata (LakeTable manifest stats; parquet footer counts), never from
-  a ``count()`` action, which would itself cost the scan being avoided.
-  Both forms are proven row-identical by the model-based suites
-  (tests/test_model_based.py), which run every generated history through
-  each form.
+  its sort-merge fallback shuffles one 64-char column instead of every
+  target column). A single full-outer join could never broadcast. Neither
+  join is ever hinted to shuffled-hash, so no plan builds an unspillable
+  hash map from an unbounded side.
 * No Python UDFs; every clause is a ``when`` chain inside whole-stage codegen.
 """
 
@@ -99,52 +86,6 @@ def _output_columns(
     return out
 
 
-# Below this many target rows, 'auto' uses one full-outer join (each side
-# scanned once) instead of the broadcast decomposition (target scanned
-# twice). Calibrated with min-of-3 isolated driver-methodology runs at
-# sf0.1 (BASELINE.md merge-form section): for a ~135k-row derived-pipeline
-# target the full-outer form is ~2x faster because the decomposition's
-# pk-only second scan re-executes the sha256 pipeline; the broadcast win
-# only repays that once the avoided shuffle is tens of millions of rows.
-SMALL_TARGET_ROWS = 2_000_000
-
-
-def _pick_full_outer(join_form: str, target_rows: int | None) -> bool:
-    if join_form not in ("auto", "full_outer", "decomposed"):
-        raise ValueError(f"join_form must be auto|full_outer|decomposed, got {join_form!r}")
-    if join_form != "auto":
-        return join_form == "full_outer"
-    return target_rows is not None and target_rows <= SMALL_TARGET_ROWS
-
-
-def _shj_build_side(
-    target: DataFrame, source: DataFrame,
-    target_rows: int | None, source_rows: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Pick the SHUFFLE_HASH build side for the small-target full-outer
-    join (guide §3.1) — the build side must be PROVABLY bounded, because a
-    shuffled-hash build map cannot spill (r12, ADVICE r11: the r11 form
-    unconditionally hinted the SOURCE, whose size this path never checks —
-    a bulk bootstrap load of a huge slice into a small/new table would
-    build the unbounded side and OOM where sort-merge degraded gracefully).
-
-    Preference order:
-    * source known small (the steady-state incremental slice) -> build
-      source: the r11-measured plan, bounded by ``source_rows``;
-    * else target known small (guaranteed when ``join_form='auto'`` chose
-      this path) -> build target: bounded by the SMALL_TARGET_ROWS gate;
-    * else (both unknown — only reachable by forcing
-      ``join_form='full_outer'`` with no size hints) -> no hint: the
-      planner keeps its own size conditions and the always-spillable SMJ
-      fallback.
-    """
-    if source_rows is not None and source_rows <= SMALL_TARGET_ROWS:
-        return target, source.hint("shuffle_hash")
-    if target_rows is not None and target_rows <= SMALL_TARGET_ROWS:
-        return target.hint("shuffle_hash"), source
-    return target, source
-
-
 def merge_state(
     target: DataFrame,
     source: DataFrame,
@@ -155,9 +96,6 @@ def merge_state(
     delete_missing: bool = False,
     with_action_column: bool = False,
     extra_columns=(),
-    target_rows: int | None = None,
-    join_form: str = "auto",
-    source_rows: int | None = None,
 ) -> DataFrame:
     """Post-merge state of the 4-clause Delta merge J1-J5 (Merge.scala:96-125).
 
@@ -173,37 +111,9 @@ def merge_state(
     ``delete_window`` is a predicate over TARGET columns scoping delete
     inference (watermark window + partition IN-list, ProcessStrategy.scala:86-153).
 
-    ``target_rows``/``join_form`` select the physical join form (see module
-    docstring); ``source_rows`` (when the caller knows the slice size, e.g.
-    from the load path's fused bookkeeping count) gates which side the
-    full-outer form's SHUFFLE_HASH hint builds — see ``_shj_build_side``.
-    Every form is row-identical.
+    Built as target LEFT JOIN source + source ANTI target(pk) (module
+    docstring).
     """
-    if _pick_full_outer(join_form, target_rows):
-        return _merge_state_full_outer(
-            target, source, pk, prefix, processing_time, delete_window,
-            delete_missing, with_action_column, extra_columns,
-            target_rows, source_rows,
-        )
-    return _merge_state_decomposed(
-        target, source, pk, prefix, processing_time, delete_window,
-        delete_missing, with_action_column, extra_columns,
-    )
-
-
-def _merge_state_decomposed(
-    target: DataFrame,
-    source: DataFrame,
-    pk: str,
-    prefix: str,
-    processing_time: str,
-    delete_window: Column | None,
-    delete_missing: bool,
-    with_action_column: bool,
-    extra_columns,
-) -> DataFrame:
-    """Broadcast-capable two-part form: target LEFT JOIN source (target never
-    shuffled) + source ANTI target(pk). The scale path."""
     deleted_c = f"{prefix}deleted"
     lastseen_c = f"{prefix}lastSeen"
     hash_c = f"{prefix}SourceHash"
@@ -215,8 +125,7 @@ def _merge_state_decomposed(
     # --- part 1: target LEFT JOIN source — matched + target-only rows.
     # The slice sits on the broadcastable (right) side, so AQE turns this
     # into a BroadcastHashJoin for any normally-sized slice: the target is
-    # scanned, never shuffled. (A full-outer join — the previous form —
-    # can never broadcast.)
+    # scanned, never shuffled.
     part1 = t.join(s, F.col(f"t.{pk}") == F.col(f"s.{pk}"), "left")
 
     matched = F.col(f"s.{pk}").isNotNull()
@@ -271,7 +180,7 @@ def _merge_state_decomposed(
     # --- part 2: source-only rows (the insert clause, Merge.scala:109).
     # The anti join's right side is a pk-only projection of the target, so
     # even when both sides are too big to broadcast, the shuffle moves one
-    # 64-char column — not every target column the full-outer form moved.
+    # 64-char column, not every target column.
     inserts = s.join(t.select(F.col(f"t.{pk}")), on=pk, how="left_anti")
     if not with_action_column:
         inserts = inserts.where(~F.col(deleted_c))
@@ -280,7 +189,7 @@ def _merge_state_decomposed(
         if c in source.columns:
             col = F.col(c)
         else:
-            # full-outer src_only rows carried NULL target values — typed
+            # an insert has no target side: a typed NULL
             col = F.lit(None).cast(target.schema[c].dataType)
         ins_proj.append(col.alias(c))
     # (evolved columns are source columns by construction, so the NULL
@@ -300,110 +209,6 @@ def _merge_state_decomposed(
     return part1.unionByName(part2)
 
 
-def _merge_state_full_outer(
-    target: DataFrame,
-    source: DataFrame,
-    pk: str,
-    prefix: str,
-    processing_time: str,
-    delete_window: Column | None,
-    delete_missing: bool,
-    with_action_column: bool,
-    extra_columns,
-    target_rows: int | None = None,
-    source_rows: int | None = None,
-) -> DataFrame:
-    """Single full-outer-join form: each side scanned exactly once. The
-    small-target path — a full outer can never broadcast, but below
-    SMALL_TARGET_ROWS the shuffle is cheaper than the decomposition's
-    second target scan (BASELINE.md merge-form measurements)."""
-    deleted_c = f"{prefix}deleted"
-    lastseen_c = f"{prefix}lastSeen"
-    hash_c = f"{prefix}SourceHash"
-    out_cols = _output_columns(target, source, extra_columns)
-
-    # SHUFFLE_HASH hint (r11, guide §3.1): both sides of the small-target
-    # full-outer are similar-sized, so the planner's "much smaller" rule
-    # never picks shuffled-hash on its own and the join pays a Sort on BOTH
-    # sides of the exchange. The hint goes on a PROVABLY bounded side only
-    # (r12, _shj_build_side) — a shuffled-hash build map cannot spill. Full
-    # outer SHJ is supported since Spark 3.1. Row content is unaffected.
-    t_h, s_h = _shj_build_side(target, source, target_rows, source_rows)
-    t = t_h.alias("t")
-    s = s_h.alias("s")
-    joined = t.join(s, F.col(f"t.{pk}") == F.col(f"s.{pk}"), "full_outer")
-
-    matched = F.col(f"t.{pk}").isNotNull() & F.col(f"s.{pk}").isNotNull()
-    src_only = F.col(f"t.{pk}").isNull()
-    tgt_only = F.col(f"s.{pk}").isNull()
-
-    src_deleted = F.col(f"s.{deleted_c}")
-    hash_differs = F.col(f"s.{hash_c}") != F.col(f"t.{hash_c}")
-
-    infer_delete = _infer_delete_cond(delete_missing, delete_window, tgt_only, deleted_c)
-
-    keep = (
-        matched
-        | (src_only & ~src_deleted)  # insert clause condition (Merge.scala:109)
-        | tgt_only
-    )
-    # unmatched-deleted source rows survive tagged 'skip_delete' when the
-    # action column is requested (observe-based metrics count them,
-    # Merge.scala:35,92,132); without it they are filtered here
-    if with_action_column:
-        keep = keep | (src_only & src_deleted)
-    joined = joined.where(keep)
-
-    # src_only rows take the source side unconditionally: the ~src_deleted
-    # cases are the inserts, and the src_deleted cases (only reachable with
-    # the action column, tagged 'skip_delete' for the observe metrics)
-    # must carry source values like the decomposed form's part2 does —
-    # NULL payloads would make the two forms observably different
-    take_source_row = (matched & ~src_deleted & hash_differs) | src_only
-
-    projections = []
-    for c in out_cols:
-        # schema-drift / evolved-column handling mirrors the decomposed
-        # form: a target column missing from the source keeps its target
-        # value on updated rows; an evolved column (additive evolution)
-        # has no target side and reads as a typed NULL wherever the
-        # source row isn't taken
-        if c in target.columns:
-            tc = F.col(f"t.{c}")
-        else:
-            tc = F.lit(None).cast(source.schema[c].dataType)
-        sc = F.col(f"s.{c}") if c in source.columns else tc
-        if c == deleted_c:
-            col = (
-                F.when(matched & src_deleted, F.lit(True))
-                .when(take_source_row, sc)
-                .when(infer_delete, F.lit(True))
-                .otherwise(tc)
-            )
-        elif c == lastseen_c:
-            col = (
-                F.when(matched, sc)  # all three matched clauses set lastSeen from source
-                .when(take_source_row, sc)
-                .when(infer_delete, ts_lit(processing_time))
-                .otherwise(tc)
-            )
-        else:
-            col = _nvl_pick(take_source_row, sc, tc)
-        projections.append(col.alias(c))
-    if with_action_column:
-        projections.append(
-            F.when(matched & src_deleted, F.lit("soft_delete"))
-            .when(matched & hash_differs, F.lit("update"))
-            .when(matched, F.lit("touch"))
-            .when(src_only & src_deleted, F.lit("skip_delete"))
-            .when(src_only, F.lit("insert"))
-            .when(infer_delete, F.lit("infer_delete"))
-            .otherwise(F.lit("keep"))
-            .alias("__action")
-        )
-    return joined.select(*projections)
-
-
 def scd2_state(
     target: DataFrame,
     source: DataFrame,
@@ -414,9 +219,6 @@ def scd2_state(
     delete_missing: bool = False,
     with_action_column: bool = False,
     extra_columns=(),
-    target_rows: int | None = None,
-    join_form: str = "auto",
-    source_rows: int | None = None,
 ) -> DataFrame:
     """Post-run SCD Type 2 state (Historic.scala:14-168, clauses J6-J8).
 
@@ -432,35 +234,9 @@ def scd2_state(
     The source is expected to already carry the temporal columns from
     pipeline step P4 (ValidFrom=pt, ValidTo=sentinel, IsCurrent=true).
 
-    ``target_rows``/``join_form`` select the physical join form (see module
-    docstring); ``source_rows`` gates the full-outer form's SHUFFLE_HASH
-    build side (``_shj_build_side``). Every form is row-identical.
+    Built as current LEFT JOIN source + source ANTI current(pk), like
+    ``merge_state``.
     """
-    if _pick_full_outer(join_form, target_rows):
-        return _scd2_state_full_outer(
-            target, source, pk, prefix, processing_time, delete_window,
-            delete_missing, with_action_column, extra_columns,
-            target_rows, source_rows,
-        )
-    return _scd2_state_decomposed(
-        target, source, pk, prefix, processing_time, delete_window,
-        delete_missing, with_action_column, extra_columns,
-    )
-
-
-def _scd2_state_decomposed(
-    target: DataFrame,
-    source: DataFrame,
-    pk: str,
-    prefix: str,
-    processing_time: str,
-    delete_window: Column | None,
-    delete_missing: bool,
-    with_action_column: bool,
-    extra_columns,
-) -> DataFrame:
-    """Broadcast-capable form: current LEFT JOIN source + source ANTI
-    current(pk). The scale path."""
     deleted_c = f"{prefix}deleted"
     lastseen_c = f"{prefix}lastSeen"
     hash_c = f"{prefix}SourceHash"
@@ -479,11 +255,10 @@ def _scd2_state_decomposed(
 
     t = current.alias("t")
     s = source.alias("s")
-    # Same broadcast-capable decomposition as merge_state: current LEFT
-    # JOIN source (matched + target-only; slice broadcastable, current
-    # versions never shuffled) + source ANTI current-pk (inserts; pk-only
-    # shuffle on the fallback path). Row-for-row equal to the full-outer
-    # form, which can never broadcast.
+    # Same broadcast-capable joins as merge_state: current LEFT JOIN
+    # source (matched + target-only; slice broadcastable, current versions
+    # never shuffled) + source ANTI current-pk (inserts; pk-only shuffle on
+    # the fallback path).
     joined = t.join(s, F.col(f"t.{pk}") == F.col(f"s.{pk}"), "left")
 
     matched = F.col(f"s.{pk}").isNotNull()
@@ -547,9 +322,8 @@ def _scd2_state_decomposed(
     )
     merged = joined.select(F.explode(emitted).alias("__r")).select("__r.*")
 
-    # inserts: source rows with no current target version (the full-outer
-    # form's src_only branch); missing source columns become typed NULLs,
-    # exactly what the outer join's all-NULL t-side produced
+    # inserts: source rows with no current target version; target columns
+    # the source lacks become typed NULLs
     ins = source.join(current.select(F.col(pk)), on=pk, how="left_anti")
     ins_proj = [
         (F.col(c) if c in source.columns else F.lit(None).cast(target.schema[c].dataType)).alias(c)
@@ -572,112 +346,6 @@ def _scd2_state_decomposed(
     if with_action_column:
         hist = hist.withColumn("__action", F.lit("historical"))
     return hist.unionByName(merged).unionByName(inserts)
-
-
-def _scd2_state_full_outer(
-    target: DataFrame,
-    source: DataFrame,
-    pk: str,
-    prefix: str,
-    processing_time: str,
-    delete_window: Column | None,
-    delete_missing: bool,
-    with_action_column: bool,
-    extra_columns,
-    target_rows: int | None = None,
-    source_rows: int | None = None,
-) -> DataFrame:
-    """Single full-outer-join form over current versions: each side scanned
-    exactly once (the small-target path; see _merge_state_full_outer).
-    Keeps the single-pass explode — each joined row emits 1-2 output rows."""
-    deleted_c = f"{prefix}deleted"
-    lastseen_c = f"{prefix}lastSeen"
-    hash_c = f"{prefix}SourceHash"
-    vto_c = f"{prefix}ValidTo"
-    iscur_c = f"{prefix}IsCurrent"
-    out_cols = _output_columns(target, source, extra_columns)
-
-    # NULL IsCurrent counts as CURRENT (see _scd2_state_decomposed)
-    is_current = F.coalesce(F.col(iscur_c), F.lit(True))
-    historical = target.where(~is_current)
-    current = target.where(is_current)
-
-    # same SHUFFLE_HASH rationale as _merge_state_full_outer: hint only a
-    # provably bounded build side (r12, _shj_build_side)
-    t_h, s_h = _shj_build_side(current, source, target_rows, source_rows)
-    t = t_h.alias("t")
-    s = s_h.alias("s")
-    joined = t.join(s, F.col(f"t.{pk}") == F.col(f"s.{pk}"), "full_outer")
-
-    matched = F.col(f"t.{pk}").isNotNull() & F.col(f"s.{pk}").isNotNull()
-    src_only = F.col(f"t.{pk}").isNull()
-    tgt_only = F.col(f"s.{pk}").isNull()
-    hash_differs = F.col(f"s.{hash_c}") != F.col(f"t.{hash_c}")
-
-    infer_delete = _infer_delete_cond(delete_missing, delete_window, tgt_only, deleted_c)
-
-    close_old = matched & hash_differs
-    pt_ts = ts_lit(processing_time)
-
-    # shape A: surviving target-side row (closed, deleted-closed, untouched)
-    a_fields = []
-    for c in out_cols:
-        if c in target.columns:
-            tc = F.col(f"t.{c}")
-        else:  # evolved column: closed/untouched versions never had it
-            tc = F.lit(None).cast(source.schema[c].dataType)
-        if c == vto_c:
-            col = F.when(close_old | infer_delete, pt_ts).otherwise(tc)
-        elif c == iscur_c:
-            col = F.when(close_old | infer_delete, F.lit(False)).otherwise(tc)
-        elif c == deleted_c:
-            col = F.when(infer_delete, F.lit(True)).otherwise(tc)
-        elif c == lastseen_c:
-            col = F.when(infer_delete, pt_ts).otherwise(tc)
-        else:
-            col = tc
-        a_fields.append(col.alias(c))
-    if with_action_column:
-        a_fields.append(
-            F.when(close_old, F.lit("close"))
-            .when(infer_delete, F.lit("delete_close"))
-            .when(matched, F.lit("unchanged"))
-            .otherwise(F.lit("keep"))
-            .alias("__action")
-        )
-
-    # shape B: new current version from source (insert or new-version, J8);
-    # schema drift carries the previous version's value forward
-    b_fields = [
-        (F.col(f"s.{c}") if c in source.columns else F.col(f"t.{c}")).alias(c)
-        for c in out_cols
-    ]  # evolved columns are source columns, so t.{c} only hits real target cols
-    if with_action_column:
-        b_fields.append(
-            F.when(close_old, F.lit("new_version")).otherwise(F.lit("insert")).alias("__action")
-        )
-
-    a_struct, b_struct = F.struct(*a_fields), F.struct(*b_fields)
-    emitted = (
-        F.when(src_only, F.array(b_struct))
-        .when(close_old, F.array(a_struct, b_struct))
-        .otherwise(F.array(a_struct))
-    )
-    merged = joined.select(F.explode(emitted).alias("__r")).select("__r.*")
-
-    hist = historical.select(
-        *[
-            (
-                F.col(c)
-                if c in historical.columns
-                else F.lit(None).cast(source.schema[c].dataType).alias(c)
-            )
-            for c in out_cols
-        ]
-    )
-    if with_action_column:
-        hist = hist.withColumn("__action", F.lit("historical"))
-    return hist.unionByName(merged)
 
 
 def merge_metrics(

@@ -832,8 +832,8 @@ FROM lineitem GROUP BY l_returnflag
 # ---------------------------------------------------------------- clusters
 def q_dedup_clusters(spark, sf_dir):
     """Connected components over the MinHash candidate pairs: every clustered
-    doc gets the min doc id of its component as cluster_id. Iterative
-    min-label propagation in Spark; the DuckDB twin is a recursive CTE
+    doc gets the min doc id of its component as cluster_id. Large-star/
+    small-star rounds in Spark; the DuckDB twin is a recursive CTE
     computing min reachable id — both are exact component labelings, so the
     fixpoint is engine-independent."""
     from datalakefoundation_spark.ext.cluster import dedup_clusters

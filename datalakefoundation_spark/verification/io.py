@@ -47,29 +47,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = per[key] = spark.read.parquet(path)
     return df
 
-
-_ROWS_CACHE: dict[tuple, int] = {}
-
-
-def table_rows(sf_dir: str, name: str) -> int | None:
-    """Row count from parquet FOOTER metadata only — an O(footers)
-    driver-side read (~1 ms), never a scan or a Spark action. Used as the
-    ``target_rows`` hint for the adaptive merge/SCD2 join form; an upper
-    bound (callers filter slices down) is exactly what the small-target
-    decision needs. None when the path is unreadable."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-        n = _ROWS_CACHE.get(key)
-        if n is None:
-            import pyarrow.dataset as ds
-            import pyarrow.parquet as pq
-
-            d = ds.dataset(path)
-            n = _ROWS_CACHE[key] = sum(
-                pq.ParquetFile(f).metadata.num_rows for f in d.files
-            )
-        return n
-    except Exception:
-        return None

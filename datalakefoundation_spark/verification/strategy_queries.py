@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakefoundation_spark.verification.io import read_table, table_rows
+from datalakefoundation_spark.verification.io import read_table
 
 from datalakefoundation_spark import pipeline as P
 from datalakefoundation_spark.strategies import merge_state, scd2_state
@@ -36,12 +36,6 @@ def _read_orders(spark, sf_dir):
     # (one sha256) is light relative to a forced extra shuffle of both
     # slices — measured 2x slower with the repartition at sf0.1.
     return read_table(spark, sf_dir, "orders").select(*PAYLOAD)
-
-
-def _orders_rows(sf_dir):
-    """Footer-metadata row count of the orders table: the target_rows hint
-    for the adaptive join form (an upper bound on every slice; O(1))."""
-    return table_rows(sf_dir, "orders")
 
 
 def _slice1(spark, sf_dir):
@@ -216,9 +210,7 @@ def q_merge_upsert(spark, sf_dir):
     """4-clause merge J1-J4: upsert + lastSeen touch, no deletes."""
     target = _pipe(_slice1(spark, sf_dir), T0)
     source = _pipe(_slice2(spark, sf_dir, with_deleted=False), T1)
-    return merge_state(target, source, "PK_orders", processing_time=T1,
-                       target_rows=_orders_rows(sf_dir),
-                       source_rows=_orders_rows(sf_dir))
+    return merge_state(target, source, "PK_orders", processing_time=T1)
 
 
 def q_merge_soft_delete(spark, sf_dir):
@@ -226,9 +218,7 @@ def q_merge_soft_delete(spark, sf_dir):
     target payload), and deleted source rows are never inserted."""
     target = _pipe(_slice1(spark, sf_dir), T0)
     source = _pipe(_slice2(spark, sf_dir, with_deleted=True), T1)
-    return merge_state(target, source, "PK_orders", processing_time=T1,
-                       target_rows=_orders_rows(sf_dir),
-                       source_rows=_orders_rows(sf_dir))
+    return merge_state(target, source, "PK_orders", processing_time=T1)
 
 
 def q_delete_inference(spark, sf_dir):
@@ -242,8 +232,6 @@ def q_delete_inference(spark, sf_dir):
         processing_time=T1,
         delete_window=_delete_window(),
         delete_missing=True,
-        target_rows=_orders_rows(sf_dir),
-        source_rows=_orders_rows(sf_dir),
     )
 
 
@@ -274,9 +262,7 @@ def q_scd2_versions(spark, sf_dir):
     """J6+J8: close changed current versions at T1 and append new versions."""
     target = _pipe(_slice1(spark, sf_dir), T0, historic=True)
     source = _pipe(_slice2(spark, sf_dir, with_deleted=False), T1, historic=True)
-    return _fmt_ts(scd2_state(target, source, "PK_orders", processing_time=T1,
-                              target_rows=_orders_rows(sf_dir),
-                              source_rows=_orders_rows(sf_dir)))
+    return _fmt_ts(scd2_state(target, source, "PK_orders", processing_time=T1))
 
 
 def q_scd2_delete_inference(spark, sf_dir):
@@ -291,8 +277,6 @@ def q_scd2_delete_inference(spark, sf_dir):
             processing_time=T1,
             delete_window=_delete_window(),
             delete_missing=True,
-            target_rows=_orders_rows(sf_dir),
-            source_rows=_orders_rows(sf_dir),
         )
     )
 
@@ -399,8 +383,7 @@ def q_change_feed(spark, sf_dir):
     before = _pipe(_slice1(spark, sf_dir), T0)
     after = merge_state(
         before, _pipe(_slice2(spark, sf_dir, with_deleted=False), T1),
-        "PK_orders", processing_time=T1, target_rows=_orders_rows(sf_dir),
-        source_rows=_orders_rows(sf_dir),
+        "PK_orders", processing_time=T1,
     )
     return compute_changes(before, after, "PK_orders")
 

@@ -536,11 +536,11 @@ def test_connected_components_long_path_converges(spark):
     """Adversarial long-chain graph: a 10k-node path has diameter 10k, so
     label propagation would need 10k rounds — large-star/small-star must
     collapse it to one component within its O(log d) budget (~14 rounds)."""
-    from datalakefoundation_spark.ext.cluster import connected_components_star
+    from datalakefoundation_spark.ext.cluster import connected_components
 
     n = 10_000
     pairs = spark.range(n - 1).selectExpr("id AS doc_a", "id + 1 AS doc_b")
-    out = connected_components_star(pairs, max_iter=30)
+    out = connected_components(pairs, max_iter=30)
     agg = out.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("cluster_id").alias("c"),
@@ -550,12 +550,16 @@ def test_connected_components_long_path_converges(spark):
     assert (agg["n"], agg["c"], agg["m"], agg["mx"]) == (n, 1, 0, n - 1)
 
 
-def test_connected_components_star_matches_label_propagation(spark):
-    """Property: both algorithms produce the identical labeling on a random
-    graph (deterministic seed) mixing chains, stars and isolated pairs."""
+def test_connected_components_star_matches_driver_union_find(spark):
+    """Property: the distributed large-star/small-star labeling equals the
+    driver-side union-find on a random graph (deterministic seed) mixing
+    chains, stars and isolated pairs."""
     import random
 
-    from datalakefoundation_spark.ext.cluster import connected_components
+    from datalakefoundation_spark.ext.cluster import (
+        connected_components,
+        connected_components_driver,
+    )
 
     rng = random.Random(7)
     edges = set()
@@ -568,13 +572,13 @@ def test_connected_components_star_matches_label_propagation(spark):
     pairs = spark.createDataFrame(sorted(edges), "doc_a long, doc_b long")
     star = {
         (r["node"], r["cluster_id"])
-        for r in connected_components(pairs, algorithm="star").collect()
+        for r in connected_components(pairs).collect()
     }
-    label = {
+    driver = {
         (r["node"], r["cluster_id"])
-        for r in connected_components(pairs, algorithm="label").collect()
+        for r in connected_components_driver(pairs).collect()
     }
-    assert star == label
+    assert star == driver
 
 
 def test_dedup_clusters_planted(spark, docs):

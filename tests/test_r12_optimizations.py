@@ -7,9 +7,8 @@ None of these changed any operator's rows; they changed failure modes:
 * the blocked tri-state refuses / avoids non-integral id columns instead
   of crashing mid-job depending on a size estimate, and casts narrower
   integral ids back so the auto pick cannot change the output schema;
-* the merge/SCD2 full-outer SHUFFLE_HASH hint lands only on a PROVABLY
-  bounded build side (``strategies._shj_build_side``) — an unbounded
-  bootstrap slice no longer becomes an unspillable hash-map build;
+* merge/SCD2 state plans contain no shuffled-hash join, so an unbounded
+  bootstrap slice can never become an unspillable hash-map build;
 * ``train_bigram_lm`` materializes the reused unigram table with a
   lineage-keeping persist (executor-loss-safe) instead of
   ``localCheckpoint`` — still exactly one corpus scan in the plan.
@@ -137,27 +136,27 @@ def test_blocked_int_ids_cast_back(spark, embs, monkeypatch):
     assert _rows(sem_b) == _rows(sem_p)
 
 
-# ------------------------------------------------- SHJ build-side gating
+# ------------------------------------------- no shuffled-hash state joins
 
 
-def _merge_inputs(spark, prefix=""):
+def _merge_inputs(spark, n_source: int):
     target = spark.range(0, 50).select(
         F.sha2(F.col("id").cast("string"), 256).alias("PK_k"),
         F.col("id").alias("v"),
         F.sha2(F.concat(F.lit("h"), F.col("id").cast("string")), 256).alias(
-            f"{prefix}SourceHash"
+            "SourceHash"
         ),
-        F.lit(False).alias(f"{prefix}deleted"),
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias(f"{prefix}lastSeen"),
+        F.lit(False).alias("deleted"),
+        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("lastSeen"),
     )
-    source = spark.range(25, 75).select(
+    source = spark.range(25, 25 + n_source).select(
         F.sha2(F.col("id").cast("string"), 256).alias("PK_k"),
         (F.col("id") * 10).alias("v"),
         F.sha2(F.concat(F.lit("g"), F.col("id").cast("string")), 256).alias(
-            f"{prefix}SourceHash"
+            "SourceHash"
         ),
-        F.lit(False).alias(f"{prefix}deleted"),
-        F.lit("2026-02-01 00:00:00").cast("timestamp").alias(f"{prefix}lastSeen"),
+        F.lit(False).alias("deleted"),
+        F.lit("2026-02-01 00:00:00").cast("timestamp").alias("lastSeen"),
     )
     return target, source
 
@@ -166,77 +165,29 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_shj_hint_builds_known_small_source(spark):
-    target, source = _merge_inputs(spark)
-    st = S.merge_state(
-        target, source, "PK_k", join_form="full_outer", source_rows=50
+def test_state_plans_have_no_shuffled_hash_join(spark):
+    """A small target meeting a large source (the bootstrap-load shape):
+    neither merge_state nor scd2_state plans a ShuffledHashJoin, whose
+    build map cannot spill."""
+    target, source = _merge_inputs(spark, n_source=2_000_000)
+    plan = _plan(S.merge_state(target, source, "PK_k"))
+    assert "ShuffledHashJoin" not in plan, plan
+
+    def temporal(df, valid_from):
+        return (
+            df.withColumn("ValidFrom", F.lit(valid_from).cast("timestamp"))
+            .withColumn("ValidTo", F.lit(S.VALID_TO_SENTINEL).cast("timestamp"))
+            .withColumn("IsCurrent", F.lit(True))
+        )
+
+    plan = _plan(
+        S.scd2_state(
+            temporal(target, "2026-01-01 00:00:00"),
+            temporal(source, "2026-02-01 00:00:00"),
+            "PK_k",
+        )
     )
-    plan = _plan(st)
-    assert "ShuffledHashJoin" in plan and "BuildRight" in plan, plan
-
-
-def test_shj_hint_builds_small_target_when_source_unknown(spark):
-    """The ADVICE r11 scenario: unbounded bootstrap slice into a small
-    table — the build side must be the TARGET (bounded by the
-    SMALL_TARGET_ROWS gate), never the unchecked source."""
-    target, source = _merge_inputs(spark)
-    st = S.merge_state(
-        target, source, "PK_k", join_form="auto", target_rows=50
-    )
-    plan = _plan(st)
-    assert "ShuffledHashJoin" in plan and "BuildLeft" in plan, plan
-    # oversized source_rows must behave like unknown
-    st2 = S.merge_state(
-        target, source, "PK_k", join_form="auto", target_rows=50,
-        source_rows=S.SMALL_TARGET_ROWS + 1,
-    )
-    assert "BuildLeft" in _plan(st2)
-
-
-def test_shj_no_hint_when_both_sides_unknown(spark):
-    """Forced full_outer with no size signal: no unspillable build — the
-    planner keeps its own choice (sort-merge under the default session)."""
-    target, source = _merge_inputs(spark)
-    st = S.merge_state(target, source, "PK_k", join_form="full_outer")
-    assert "ShuffledHashJoin" not in _plan(st)
-
-
-def test_shj_build_side_rows_identical(spark):
-    """The hint placement is physical only: all three hint outcomes return
-    row-identical merge states."""
-    target, source = _merge_inputs(spark)
-    a = S.merge_state(
-        target, source, "PK_k", join_form="full_outer", source_rows=50
-    )
-    b = S.merge_state(
-        target, source, "PK_k", join_form="full_outer", target_rows=50
-    )
-    c = S.merge_state(target, source, "PK_k", join_form="full_outer")
-    assert _rows(a) == _rows(b) == _rows(c)
-
-
-def test_scd2_shj_build_side(spark):
-    prefix = ""
-    target, source = _merge_inputs(spark)
-    t2 = target.withColumn(
-        f"{prefix}ValidFrom", F.lit("2026-01-01 00:00:00").cast("timestamp")
-    ).withColumn(
-        f"{prefix}ValidTo", F.lit(S.VALID_TO_SENTINEL).cast("timestamp")
-    ).withColumn(f"{prefix}IsCurrent", F.lit(True))
-    s2 = source.withColumn(
-        f"{prefix}ValidFrom", F.lit("2026-02-01 00:00:00").cast("timestamp")
-    ).withColumn(
-        f"{prefix}ValidTo", F.lit(S.VALID_TO_SENTINEL).cast("timestamp")
-    ).withColumn(f"{prefix}IsCurrent", F.lit(True))
-    small_src = S.scd2_state(
-        t2, s2, "PK_k", join_form="full_outer", source_rows=50
-    )
-    assert "BuildRight" in _plan(small_src)
-    unknown_src = S.scd2_state(
-        t2, s2, "PK_k", join_form="auto", target_rows=50
-    )
-    assert "BuildLeft" in _plan(unknown_src)
-    assert _rows(small_src) == _rows(unknown_src)
+    assert "ShuffledHashJoin" not in plan, plan
 
 
 # ----------------------------------------------------------- LM persist

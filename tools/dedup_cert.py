@@ -78,7 +78,7 @@ def build_corpus(spark, replicas: int):
 
 
 def cc_rounds(pairs, max_iter: int = 25):
-    """connected_components_star's loop, instrumented to report rounds."""
+    """connected_components' loop, instrumented to report rounds."""
     edges = (
         pairs.select(
             F.greatest("doc_a", "doc_b").alias("u"),

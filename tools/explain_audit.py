@@ -48,14 +48,11 @@ ALLOWED_CARTESIAN = {
     "q_decontaminate_bloom",
 }
 
-# Queries allowed to contain a ShuffledHashJoin (r12, VERDICT r11 #6): a
-# shuffled-hash build map cannot spill, so every SHJ in an audited plan must
-# have a PROVABLY bounded build side. The only sanctioned source is the
-# merge/SCD2 small-target full-outer hint (strategies._shj_build_side),
-# whose build side is gated on source_rows/target_rows <= SMALL_TARGET_ROWS
-# (2M). Any other query planning an SHJ — e.g. via a session-level
-# preferSortMergeJoin=false — is flagged as a problem.
-ALLOWED_SHJ_PREFIXES = ("q_merge", "q_scd2", "q_delete_inference", "q_change_feed")
+# Queries allowed to contain a ShuffledHashJoin: none. A shuffled-hash
+# build map cannot spill, and nothing in the engine hints SHUFFLE_HASH or
+# turns off Spark's sort-merge preference, so any SHJ in an audited plan
+# (e.g. from a session-level preferSortMergeJoin=false) is flagged.
+ALLOWED_SHJ_PREFIXES: tuple[str, ...] = ()
 
 
 def main() -> None:
