@@ -82,8 +82,8 @@ class Processing:
         # deletion-vector ref, lake_table.merge_patch). MoR writes
         # O(changed rows) per run regardless of table size — the right
         # trade for trickle/streaming ingestion into huge tables — at the
-        # cost of one small anti-join per live patch on reads until
-        # auto-compaction folds them.
+        # cost of a broadcast mask join and a growing segment count on
+        # reads until auto-compaction folds the patches.
         self.write_mode = str(
             self.options.get("write_mode", settings.get("write_mode", "cow"))
         ).lower()

@@ -1290,8 +1290,8 @@ def reconcile_clean_corpus(
     First call bootstraps: full ``cluster_assignment`` over the index
     (O(corpus), once). Steady state: ``reconcile_survivors_frontier``
     over the unreconciled batches' signatures, then ``merge_patch`` of
-    the churn-sized updates (write cost ∝ churn; reads pay one small
-    anti-join per live patch until the table's auto-compaction folds it).
+    the churn-sized updates (write cost ∝ churn; reads pay a broadcast
+    mask join until the table's auto-compaction folds the patches).
     Returns the reconciled survivors — the streamed output minus every
     newly-bridged loser — computed against the FULL post-reconcile
     assignment, so feeding the raw accumulated ``out_path`` (which still
@@ -1607,7 +1607,7 @@ def reconcile_clean_corpus(
     ):
         # the assignment table is maintained OUTSIDE the Processing loop,
         # so it needs its own patch-tail fold: every reconcile appends one
-        # churn-sized patch, and reads pay one anti-join per live patch —
+        # churn-sized patch, and reads scan one more segment per patch —
         # fold the small-segment tail once it outgrows the threshold (the
         # same incremental compaction the batch pipeline auto-runs). The
         # compaction commit carries no ledger metrics; the walk-back

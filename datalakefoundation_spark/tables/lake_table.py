@@ -16,9 +16,9 @@ file-provenance idea Delta's log encodes, at partition granularity.
 
 Why this scales:
 * Writes are never in-place: a merge writes ONLY the touched partitions
-  into a fresh segment directory and flips the manifest — identical I/O
-  shape to Delta's copy-on-write MERGE, and crash-safe via
-  write-temp-then-rename of the manifest file.
+  into a fresh segment directory and commits a new manifest — identical
+  I/O shape to Delta's copy-on-write MERGE. A crash before the commit
+  leaves only an unreferenced dir (``gc_orphans``).
 * Reads prune: the per-segment partition filter is an ordinary predicate
   on hive partition directories, so Spark's partition discovery skips
   non-owned directories entirely (no data I/O).
@@ -26,14 +26,16 @@ Why this scales:
   the partitions present in the incoming slice (Full.scala:38-50 parity).
 * Old versions remain readable (time travel) until `vacuum()`.
 
-Single-writer assumption (same as the reference's per-entity Processing
-run); concurrent writers would need a lock/CAS on the manifest commit,
-which object stores provide via conditional puts.
+Commits are compare-and-swap: each version's manifest file is created with
+the filesystem's create-if-absent primitive (``_commit``), so concurrent
+writers racing for one version never lose a commit — the loser gets
+ConcurrentCommitException and re-reads + retries.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -85,12 +87,13 @@ class Segment:
     owns_all: bool = True
     # Deletion-vector refs (merge-on-read): entries {"dir": <data-relative
     # dir of key parquet>, "keys": [col, ...], "flag": <bool col or None>}.
-    # A read of THIS segment anti-joins each entry's key projection
-    # (rows where `flag` is true, when set) — masking row versions
-    # superseded or hard-deleted by a later commit without rewriting this
-    # segment (the Delta deletion-vector / Iceberg merge-on-read idea at
-    # key granularity). Attached only to segments that existed BEFORE the
-    # masking commit, so re-inserted keys in later segments resurface.
+    # Each entry's key projection (rows where `flag` is true, when set)
+    # masks row versions superseded or hard-deleted by a later commit
+    # without rewriting this segment (the Delta deletion-vector / Iceberg
+    # merge-on-read idea at key granularity). Attached only to segments
+    # that existed BEFORE the masking commit, so re-inserted keys in later
+    # segments resurface; reads apply all entries as one version-keyed
+    # mask (LakeTable._read_segments).
     dv: list[dict] = field(default_factory=list)
 
 
@@ -180,18 +183,30 @@ MASK_COL = "__dlf_mask"
 DV_V_COL = "__dlf_dv_v"
 SEG_V_COL = "__dlf_seg_v"
 
-_DIR_V_RE = None
+_DIR_V_RE = re.compile(r"^data/v(\d{5})")
 
 
-def _dir_version(rel_dir: str) -> int | None:
-    """Commit version encoded in a data dir name (data/vNNNNN[-suffix])."""
-    global _DIR_V_RE
-    if _DIR_V_RE is None:
-        import re
-
-        _DIR_V_RE = re.compile(r"^data/v(\d{5})")
+def _dir_version(rel_dir: str) -> int:
+    """Commit version encoded in a data dir name (data/vNNNNN[-suffix]).
+    The deletion-vector mask compares these versions, so a manifest
+    naming a dir in any other form is rejected instead of mis-masked."""
     m = _DIR_V_RE.match(rel_dir)
-    return int(m.group(1)) if m else None
+    if m is None:
+        raise ValueError(
+            f"data dir {rel_dir!r} does not encode a commit version "
+            "(expected data/vNNNNN...)"
+        )
+    return int(m.group(1))
+
+
+def _path_version() -> Column:
+    """Per-row commit version parsed from the segment dir inside
+    ``_metadata.file_path``: the greedy '.*' pins the LAST '/data/vNNNNN'
+    occurrence, which is this table's segment dir regardless of hive-subdir
+    depth (bucketed/partitioned segments nest one level deeper)."""
+    return F.regexp_extract(
+        F.col("_metadata.file_path"), r".*/data/v(\d{5})", 1
+    ).cast("long")
 
 
 def bucket_expr(pk_col: str, n_buckets: int) -> Column:
@@ -656,15 +671,18 @@ class LakeTable:
         return out
 
     # ------------------------------------------------------------ segment io
-    def _write_segment(self, df: DataFrame) -> tuple[str, dict | None, int, dict | None]:
-        """Write one immutable segment; returns (relative dir, per-column
-        min/max stats or None, row count, per-file stats or None). Segment
-        stats + count are collected with ``df.observe`` DURING the write
-        action — no second pass; file stats come from the written footers
-        (metadata-only reads)."""
+    def _write_segment(
+        self, df: DataFrame, mf: Manifest | None
+    ) -> tuple[str, dict | None, int, dict | None]:
+        """Write one immutable segment for the commit that follows ``mf``
+        (the manifest the caller read); returns (relative dir, per-column
+        min/max stats or None, row count, per-file stats or None). The dir
+        name carries that commit's version, which the deletion-vector mask
+        relies on. Segment stats + count are collected with ``df.observe``
+        DURING the write action — no second pass; file stats come from the
+        written footers (metadata-only reads)."""
         from pyspark.sql import Observation
 
-        mf = self.latest_manifest()
         next_v = (mf.version + 1) if mf else 0
         # writer-unique dir (same rule as append_arrow / dv writers): two
         # same-entity writers racing for next_v must never share a segment
@@ -778,39 +796,50 @@ class LakeTable:
         mf = self.manifest_at(version) if version is not None else self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        segs = list(mf.segments)
+        return self._read_segments(mf.segments, keep_bucket, prune_spec)
+
+    def _read_segments(
+        self, all_segs: list[Segment], keep_bucket: bool, prune_spec=None
+    ) -> DataFrame:
+        """The rows of ``all_segs`` with their deletion vectors applied —
+        the one segment-reading path, shared by ``read`` and
+        ``compact_small_segments``.
+
+        Deletion vectors apply as ONE broadcast join after the union,
+        against a mask table keyed by commit version (``_dv_masks``): a
+        row is dropped when its key is masked by an entry newer than its
+        segment. That equals applying each segment's own dv list: an entry
+        created at commit d is attached to exactly the segments in the
+        manifest at d — all of which have version < d — and never to later
+        segments (re-inserted keys resurface). Segment versions are
+        monotone in commit order and encoded in the dir names, so "entry
+        attached to seg" <=> "d > seg_version", and masking by
+        ``max(d) per key > seg_version`` reproduces every list exactly —
+        for any subset of one manifest's segments. The global join costs
+        one small build regardless of patch count, where per-segment
+        anti-joins build O(live patches^2) broadcast exchanges (measured
+        0.5 s -> 19.6 s over 32 patches at 2M rows)."""
+        segs = list(all_segs)
         if prune_spec is not None:
             segs = [s for s in segs if segment_may_match(s.stats, prune_spec)]
-        # Deletion vectors apply as ONE global broadcast join after the
-        # union (masks keyed by commit version — see _global_dv_masks for
-        # the equivalence argument). The per-segment anti-join form built
-        # O(live patches^2) distinct broadcast exchanges across a read
-        # (measured 0.5 s -> 19.6 s over 32 patches at 2M rows); the
-        # global join costs one small build regardless of patch count.
-        # None => an entry's commit version couldn't be derived (foreign
-        # manifest) -> conservative per-segment application.
-        masks = self._global_dv_masks(segs)
-        dv_frames = self._dv_frames(segs) if masks is None else {}
+        entries = {e["dir"]: e for s in segs for e in s.dv or []}
+        masks = self._dv_masks(list(entries.values()))
         # Segment reads are BATCHED: every plain whole-dir segment (no
-        # ownership filter, no per-segment dv tagging, no file-level
-        # selection) lands in ONE multi-path spark.read.parquet(*dirs)
-        # call instead of its own reader + unionByName node. The
-        # per-segment union loop built an O(live segments) driver plan —
-        # measured 6.1 s of pure plan build at 100 tiny segments and
-        # 60.3 s at 1000 (tools/segment_probe.py) — while the batched read
-        # is one relation whose file listing Spark parallelizes
-        # (parallelPartitionDiscovery) and whose splits coalesce by
-        # maxPartitionBytes instead of one task per tiny file.
+        # ownership filter, no file-level selection) lands in ONE
+        # multi-path spark.read.parquet(*dirs) call instead of its own
+        # reader + unionByName node. The per-segment union loop built an
+        # O(live segments) driver plan — measured 6.1 s of pure plan build
+        # at 100 tiny segments and 60.3 s at 1000 (tools/segment_probe.py)
+        # — while the batched read is one relation whose file listing Spark
+        # parallelizes (parallelPartitionDiscovery) and whose splits
+        # coalesce by maxPartitionBytes instead of one task per tiny file.
         # mergeSchema keeps unionByName(allowMissingColumns) semantics for
         # additively-evolved segments (old files read typed NULLs).
         # Per-segment reads remain where the semantics are per-segment:
         # partition/bucket ownership filters (seg.partitions) and
-        # stats-pruned partial file lists. Global-dv-masked tables (MoR
-        # with live patches — the case that accumulates segments FASTEST,
-        # one per trickle merge) also batch: the per-row commit version the
-        # mask join needs is derived from the segment dir name inside
-        # _metadata.file_path instead of a per-segment literal, provided
-        # every batched dir's version parses (else per-segment fallback).
+        # stats-pruned partial file lists. Batched rows take the commit
+        # version the mask join needs from _metadata.file_path instead of
+        # a per-segment literal.
         parts: list[DataFrame] = []
         # two homogeneous batches: hive-layout segments (bucket/partition
         # subdirs) cannot share one multi-path read with plain segments
@@ -818,6 +847,7 @@ class LakeTable:
         batched_plain: list[str] = []
         batched_hive: list[str] = []
         for seg in segs:
+            seg_v = _dir_version(seg.dir) if masks else None
             base = f"{self.path}/{seg.dir}"
             whole_dir = True
             if prune_spec is not None and seg.files:
@@ -837,8 +867,7 @@ class LakeTable:
                     df = self.spark.read.option("basePath", base).parquet(
                         *[f"{base}/{p}" for p in sorted(keep)]
                     )
-            if (
-                whole_dir
+            if whole_dir and (
                 # ownership-full segments need NO per-segment filter: plain
                 # segments own everything by definition, and BUCKET-layout
                 # segments whose recorded ownership still covers their
@@ -852,16 +881,12 @@ class LakeTable:
                 # per-segment hive reads with real dir pruning. Real
                 # partitioned tables always read per-segment: their
                 # partition VALUES live in the dir names.
-                and (
-                    seg.partitions is None
-                    or (
-                        seg.owns_all
-                        and not keep_bucket
-                        and self.partition_by == [BUCKET_COL]
-                    )
+                seg.partitions is None
+                or (
+                    seg.owns_all
+                    and not keep_bucket
+                    and self.partition_by == [BUCKET_COL]
                 )
-                and not (masks is None and seg.dv)
-                and (not masks or _dir_version(seg.dir) is not None)
             ):
                 if seg.partitions is None:
                     batched_plain.append(base)
@@ -877,12 +902,8 @@ class LakeTable:
             if seg.partitions is not None and self.partition_by:
                 # equality predicates on hive partition dirs -> pure dir pruning
                 df = df.where(self._partition_filter(seg.partitions))
-            if masks is None:
-                df = self._apply_dv(df, seg, dv_frames)
-            elif masks:
-                df = df.withColumn(
-                    SEG_V_COL, F.lit(_dir_version(seg.dir)).cast("long")
-                )
+            if masks:
+                df = df.withColumn(SEG_V_COL, F.lit(seg_v).cast("long"))
             parts.append(df)
         for batched_dirs in (batched_plain, batched_hive):
             if not batched_dirs:
@@ -894,27 +915,14 @@ class LakeTable:
                     *batched_dirs
                 )
             if masks:
-                # per-row commit version parsed from the segment dir inside
-                # the file path: the greedy '.*' pins the LAST
-                # '/data/vNNNNN' occurrence, which is this table's segment
-                # dir regardless of hive-subdir depth (bucketed/partitioned
-                # segments nest one level deeper than plain ones); segments
-                # whose dir doesn't parse were excluded from the batch
-                bdf = bdf.withColumn(
-                    SEG_V_COL,
-                    F.regexp_extract(
-                        F.col("_metadata.file_path"), r".*/data/v(\d{5})", 1
-                    ).cast("long"),
-                )
+                bdf = bdf.withColumn(SEG_V_COL, _path_version())
             parts.insert(0, bdf)
         if not parts:
-            if not mf.segments:
+            if not all_segs:
                 raise FileNotFoundError(f"LakeTable has no segments: {self.path}")
             # everything pruned: preserve the schema with a zero-row scan of
             # one segment (limit 0 — footer read only)
-            empty = (
-                self.spark.read.parquet(f"{self.path}/{mf.segments[0].dir}").limit(0)
-            )
+            empty = self.spark.read.parquet(f"{self.path}/{all_segs[0].dir}").limit(0)
             for c in (BUCKET_COL, MASK_COL):
                 if c in empty.columns and not (keep_bucket and c == BUCKET_COL):
                     empty = empty.drop(c)
@@ -922,13 +930,14 @@ class LakeTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        for keys, mask in (masks or {}).items():
+        for keys, mask in masks.items():
             cond = None
             for k in keys:
                 # rows from segments predating an evolved key column read
-                # NULL -> no match -> kept (same as the per-segment rule)
+                # NULL -> no match -> kept
                 c = F.col(k) == F.col(f"__dv_{k}")
                 cond = c if cond is None else (cond & c)
+            mask = mask.select(*[F.col(k).alias(f"__dv_{k}") for k in keys], DV_V_COL)
             out = (
                 out.join(F.broadcast(mask), cond, "left")
                 .where(
@@ -948,179 +957,64 @@ class LakeTable:
             out = out.drop(MASK_COL)
         return out
 
-    def _global_dv_masks(self, segs: list[Segment]):
-        """One broadcastable mask table per deletion-vector key set:
-        ``(keys..., __dlf_dv_v = max commit version masking that key)``,
-        with mask-side columns pre-renamed to ``__dv_<k>``.
+    def _dv_masks(self, entries: list[dict]) -> dict[tuple, DataFrame]:
+        """One mask table per key set over deletion-vector ``entries``:
+        ``(keys..., __dlf_dv_v = max commit version masking that key)``.
 
-        Equivalence with the per-segment attachment lists: an entry
-        created at commit d is attached to exactly the segments in the
-        manifest at d — all of which have version < d — and never to
-        later segments (re-inserted keys resurface). Segment versions are
-        monotone in commit order and encoded in the dir names, so
-        "entry attached to seg" <=> "d > seg_version", and masking by
-        ``max(d) per key > seg_version`` reproduces every list exactly.
-        Coalesced dv dirs persist the per-key ``__dlf_dv_v`` column, so
-        merging never widens a key's mask window.
-
-        Returns {} when no segment carries dv refs, or None when an
-        entry's version cannot be derived (conservative fallback to
-        per-segment application)."""
-        entries: dict[str, tuple[tuple, str | None, int | None]] = {}
-        for seg in segs:
-            for e in seg.dv or []:
-                v = e.get("v")
-                if v is None:
-                    v = _dir_version(e["dir"])
-                if v is None:
-                    return None
-                entries[e["dir"]] = (tuple(e["keys"]), e.get("flag"), int(v))
-        if not entries:
-            return {}
+        A key's masking version is its entry's commit version, parsed from
+        the entry dir's name, unless the dir persists a per-key
+        ``__dlf_dv_v`` (coalesced dvs — merging never widens a key's mask
+        window). Returns {} when there are no entries."""
+        groups: dict[tuple, list[str]] = {}
+        for e in entries:
+            _dir_version(e["dir"])  # the mask compares dir versions
+            groups.setdefault((tuple(e["keys"]), e.get("flag")), []).append(e["dir"])
         by_keys: dict[tuple, list[DataFrame]] = {}
-        # entry dirs whose name encodes their commit version batch into ONE
-        # multi-path read per (keys, flag) group — the per-entry reader
-        # loop made every live patch its own relation (O(patches) plan
-        # nodes on exactly the trickle-ingest path that accumulates
-        # patches fastest). The per-row version comes from the dir name
-        # via the same last-'/data/vNNNNN' regexp the batched data read
-        # uses; dirs carrying a persisted DV_V_COL (coalesced dvs) keep it
-        # via coalesce. Entries with an explicit version differing from
-        # their dir name fall back to the single-dir form.
-        batchable: dict[tuple, list[str]] = {}
-        for d, (keys, flag, v) in entries.items():
-            if _dir_version(d) == v:
-                batchable.setdefault((keys, flag), []).append(d)
-                continue
-            f = self.spark.read.parquet(f"{self.path}/{d}")
-            if flag:
-                f = f.where(F.col(flag))
-            if DV_V_COL in f.columns:
-                f = f.select(*keys, DV_V_COL)
-            else:
-                f = f.select(*keys).withColumn(DV_V_COL, F.lit(v).cast("long"))
-            by_keys.setdefault(keys, []).append(f)
-        for (keys, flag), dirs in batchable.items():
-            # expand bucketed patch segments to their __dlf_bucket leaf
-            # dirs: multi-root reads reject mixed/hive structures, and leaf
-            # roots need no partition discovery. Dirs with any OTHER hive
-            # structure (real-partitioned patches — multi-level nesting,
-            # values live in dir names) read alone via single-root hive
-            # discovery instead of joining the batch.
+        for (keys, flag), dirs in groups.items():
+            # ONE multi-path read per (keys, flag) group — a reader per
+            # entry made every live patch its own relation (O(patches) plan
+            # nodes on exactly the trickle-ingest path that accumulates
+            # patches fastest). Bucketed patch dirs expand to their
+            # __dlf_bucket leaf dirs: multi-root reads reject mixed/hive
+            # structures, and leaf roots need no partition discovery. Dirs
+            # with any OTHER hive structure (real-partitioned patches —
+            # multi-level nesting, values live in dir names) read alone via
+            # single-root hive discovery instead of joining the batch.
             paths: list[str] = []
-            alone: list[str] = []
+            reads: list[DataFrame] = []
             for d in dirs:
                 base = f"{self.path}/{d}"
                 names = self.fs.listdir(base)
-                buckets = [n for n in names if n.startswith(f"{BUCKET_COL}=")]
-                other_hive = any(
+                if any(
                     "=" in n and not n.startswith((BUCKET_COL, "_", "."))
                     for n in names
-                )
-                if other_hive:
-                    alone.append(base)
-                elif buckets:
-                    paths.extend(f"{base}/{n}" for n in buckets)
-                else:
-                    paths.append(base)
-            for base in alone:
-                f = self.spark.read.parquet(base)
-                if flag and flag in f.columns:
-                    f = f.where(F.col(flag))
-                path_v = F.regexp_extract(
-                    F.col("_metadata.file_path"), r".*/data/v(\d{5})", 1
-                ).cast("long")
-                if DV_V_COL in f.columns:
-                    f = f.select(
-                        *keys, F.coalesce(F.col(DV_V_COL), path_v).alias(DV_V_COL)
-                    )
-                else:
-                    f = f.select(*keys, path_v.alias(DV_V_COL))
-                by_keys.setdefault(keys, []).append(f)
-            if not paths:
-                continue
+                ):
+                    reads.append(self.spark.read.parquet(base))
+                    continue
+                buckets = [n for n in names if n.startswith(f"{BUCKET_COL}=")]
+                paths.extend([f"{base}/{n}" for n in buckets] or [base])
             if len(paths) == 1:
-                f = self.spark.read.parquet(paths[0])
-            else:
-                f = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            if flag and flag in f.columns:
-                # NULL flag (row from a dir without the column, or a
-                # non-masking patch row) correctly drops from the mask
-                f = f.where(F.col(flag))
-            path_v = F.regexp_extract(
-                F.col("_metadata.file_path"), r".*/data/v(\d{5})", 1
-            ).cast("long")
-            if DV_V_COL in f.columns:
-                f = f.select(
-                    *keys, F.coalesce(F.col(DV_V_COL), path_v).alias(DV_V_COL)
+                reads.append(self.spark.read.parquet(paths[0]))
+            elif paths:
+                reads.append(
+                    self.spark.read.option("mergeSchema", "true").parquet(*paths)
                 )
-            else:
-                f = f.select(*keys, path_v.alias(DV_V_COL))
-            by_keys.setdefault(keys, []).append(f)
+            for f in reads:
+                if flag and flag in f.columns:
+                    # NULL flag (row from a dir without the column, or a
+                    # non-masking patch row) correctly drops from the mask
+                    f = f.where(F.col(flag))
+                v = _path_version()
+                if DV_V_COL in f.columns:
+                    v = F.coalesce(F.col(DV_V_COL), v)
+                by_keys.setdefault(keys, []).append(f.select(*keys, v.alias(DV_V_COL)))
         masks: dict[tuple, DataFrame] = {}
         for keys, frames in by_keys.items():
             u = frames[0]
             for f in frames[1:]:
                 u = u.unionByName(f)
-            masks[keys] = (
-                u.groupBy(*keys)
-                .agg(F.max(DV_V_COL).alias(DV_V_COL))
-                .select(
-                    *[F.col(k).alias(f"__dv_{k}") for k in keys], DV_V_COL
-                )
-            )
+            masks[keys] = u.groupBy(*keys).agg(F.max(DV_V_COL).alias(DV_V_COL))
         return masks
-
-    def _dv_key(self, entry: dict) -> tuple:
-        return (entry["dir"], tuple(entry["keys"]), entry.get("flag"))
-
-    def _dv_frames(self, segs: list[Segment]) -> dict[tuple, DataFrame]:
-        """One key-projection DataFrame per distinct deletion-vector entry
-        across ``segs`` (column-pruned scan of the masking commit's keys)."""
-        frames: dict[tuple, DataFrame] = {}
-        for seg in segs:
-            for entry in seg.dv or []:
-                k = self._dv_key(entry)
-                if k in frames:
-                    continue
-                df = self.spark.read.parquet(f"{self.path}/{entry['dir']}")
-                flag = entry.get("flag")
-                if flag:
-                    df = df.where(F.col(flag))
-                frames[k] = df.select(*entry["keys"])
-        return frames
-
-    def _apply_dv(
-        self, df: DataFrame, seg: Segment, dv_frames: dict[tuple, DataFrame]
-    ) -> DataFrame:
-        """Anti-join out the row versions this segment's deletion vectors
-        mask. Masking keys are non-null by construction (PK hashes /
-        temporal columns), so a plain LEFT ANTI equi-join is exact; the key
-        sides are change-sized, so AQE broadcasts them.
-
-        Entries sharing a key set are UNIONED and applied as ONE anti-join:
-        a long-lived segment accumulates one dv ref per later patch, and
-        joining per-entry made read plans grow O(patches^2) across the
-        table (measured 0.47 s -> 19.6 s over 32 patches at 2M rows); the
-        union form is one join per segment per key set."""
-        by_keys: dict[tuple, list[DataFrame]] = {}
-        for entry in seg.dv or []:
-            keys = tuple(entry["keys"])
-            if any(k not in df.columns for k in keys):
-                continue  # segment predates the masked columns — nothing to mask
-            by_keys.setdefault(keys, []).append(dv_frames[self._dv_key(entry)])
-        for keys, frames in by_keys.items():
-            dv = frames[0]
-            for f in frames[1:]:
-                dv = dv.unionByName(f)
-            cond = None
-            d = df.alias("__t")
-            m = dv.alias("__d")
-            for k in keys:
-                c = F.col(f"__t.{k}") == F.col(f"__d.{k}")
-                cond = c if cond is None else (cond & c)
-            df = d.join(m, cond, "left_anti").select("__t.*")
-        return df
 
     # ------------------------------------------------------------ write ops
     def overwrite(
@@ -1138,7 +1032,7 @@ class LakeTable:
         and merged into the commit metrics — the hook for observation-based
         counts (e.g. total_rows) that only exist once the job has run."""
         mf = self.latest_manifest()
-        seg_rel, stats, rows, fstats = self._write_segment(df)
+        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
         if metrics_fn is not None:
             metrics = {**(metrics or {}), **metrics_fn()}
         next_v = (mf.version + 1) if mf else 0
@@ -1350,34 +1244,22 @@ class LakeTable:
             small = [s for s in small if s.partitions is not None]
         if len(small) < 2:
             return []
-        dv_frames = self._dv_frames(small)
-        parts: list[DataFrame] = []
-        for seg in small:
-            df = self.spark.read.parquet(f"{self.path}/{seg.dir}")
-            if seg.partitions is not None and self.partition_by:
-                df = df.where(self._partition_filter(seg.partitions))
-            # deletion vectors materialize here: the folded segment holds
-            # the post-mask rows and needs no dv refs of its own (other
-            # segments' refs to a folded patch dir stay valid — the dir
-            # outlives the fold until vacuum)
-            parts.append(self._apply_dv(df, seg, dv_frames))
-        merged = parts[0]
-        for p in parts[1:]:
-            merged = merged.unionByName(p, allowMissingColumns=True)
-        if MASK_COL in merged.columns:
-            merged = merged.drop(MASK_COL)
-        seg_rel, stats, rows, fstats = self._write_segment(merged)
+        # deletion vectors materialize here, through the same mask read()
+        # applies: the folded segment holds the post-mask rows and needs no
+        # dv refs of its own (other segments' refs to a folded patch dir
+        # stay valid — the dir outlives the fold until vacuum)
+        merged = self._read_segments(small, keep_bucket=True)
+        seg_rel, stats, rows, fstats = self._write_segment(merged, mf)
         if any(s.partitions is None for s in small):
             ownership = None  # unpartitioned append-style segments
         else:
             ownership = [pv for s in small for pv in s.partitions]
         kept = [s for s in mf.segments if s not in small]
         # Coalesce surviving deletion-vector refs: a kept base segment
-        # still needs its masks (its rows stay superseded), but carrying
-        # one ref PER folded patch keeps the per-read anti-join fan-in at
-        # O(patches) forever. Union each key set's refs into ONE merged
-        # key dir and point the kept segments at that — post-compaction
-        # reads then pay a single anti-join per kept segment.
+        # still needs its masks (its rows stay superseded), but one ref PER
+        # folded patch grows its manifest entry forever and keeps every
+        # patch dir alive past vacuum(). One merged key dir per key set
+        # holds only the masking keys.
         kept = self._coalesce_dv_refs(kept, mf.version + 1)
         self._commit(
             Manifest(
@@ -1394,7 +1276,7 @@ class LakeTable:
 
     def append(self, df: DataFrame, metrics: dict | None = None) -> None:
         mf = self.latest_manifest()
-        seg_rel, stats, rows, fstats = self._write_segment(df)
+        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
         next_v = (mf.version + 1) if mf else 0
         segments = list(mf.segments) if mf else []
         segments.append(
@@ -1474,7 +1356,7 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        seg_rel, stats, rows, fstats = self._write_segment(df)
+        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
         # Rows may land outside the requested partitions (a merge that updates
         # a partition column). Those extra partitions get co-owned by the new
         # segment so the rows stay visible (matches the reference's Delta
@@ -1529,8 +1411,8 @@ class LakeTable:
         segment via a deletion-vector reference to the patch's own key
         projection — write cost O(changed rows) instead of rewriting every
         touched partition/bucket (the Delta deletion-vector / Hudi MOR
-        trade: cheap writes, reads pay one small anti-join per live patch
-        until compaction folds them).
+        trade: cheap writes, reads pay one version-keyed broadcast mask
+        join per key set until compaction folds the patches).
 
         ``keys`` identify a row VERSION (merge: the PK hash; SCD2: PK +
         ValidFrom). ``mask_col`` (persisted into the patch, stripped from
@@ -1541,7 +1423,7 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        seg_rel, stats, rows, fstats = self._write_segment(df)
+        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
         if rows == 0:
             self.fs.delete_tree(f"{self.path}/{seg_rel}")
             if metrics_fn is not None:
@@ -1582,10 +1464,14 @@ class LakeTable:
         self, segments: list[Segment], next_version: int
     ) -> list[Segment]:
         """Rewrite multi-entry dv lists into one merged key dir per key
-        set. Identical dv lists (the common case — every base segment
-        carries the same patch refs) share one merged write. Merged dirs
-        are committed in the same manifest, so vacuum/gc liveness holds;
-        a crash before the commit leaves only an unreferenced orphan."""
+        set. Reads already apply any number of entries as one mask join;
+        coalescing keeps manifests small and lets vacuum() reclaim folded
+        patch dirs, which _referenced_dirs keeps alive while any segment
+        refers to them. Identical dv lists (the common case — every base
+        segment carries the same patch refs) share one merged write. Merged
+        dirs are committed in the same manifest, so vacuum/gc liveness
+        holds; a crash before the commit leaves only an unreferenced
+        orphan."""
         merged_cache: dict[tuple, list[dict]] = {}
         out: list[Segment] = []
         for s in segments:
@@ -1593,7 +1479,9 @@ class LakeTable:
             if len(entries) <= 1:
                 out.append(s)
                 continue
-            sig = tuple(sorted(self._dv_key(e) for e in entries))
+            sig = tuple(
+                sorted((e["dir"], tuple(e["keys"]), e.get("flag")) for e in entries)
+            )
             if sig not in merged_cache:
                 groups: dict[tuple, list[dict]] = {}
                 for e in entries:
@@ -1603,29 +1491,13 @@ class LakeTable:
                     if len(es) == 1:
                         new_entries.append(es[0])
                         continue
-                    dv = None
-                    for e in es:
-                        f = self.spark.read.parquet(f"{self.path}/{e['dir']}")
-                        if e.get("flag"):
-                            f = f.where(F.col(e["flag"]))
-                        # carry each key's ORIGINAL masking version: the
-                        # merged dir must not widen any key's mask window
-                        # (the global-mask read derives "masks segment v"
-                        # from this column, see _global_dv_masks)
-                        if DV_V_COL in f.columns:
-                            f = f.select(*keys, DV_V_COL)
-                        else:
-                            ev = e.get("v")
-                            if ev is None:
-                                ev = _dir_version(e["dir"])
-                            f = f.select(*keys).withColumn(
-                                DV_V_COL, F.lit(int(ev)).cast("long")
-                            )
-                        dv = f if dv is None else dv.unionByName(f)
+                    # the mask table carries each key's ORIGINAL masking
+                    # version: the merged dir must not widen any key's
+                    # mask window
                     rel = f"data/v{next_version:05d}-dv-{uuid.uuid4().hex[:8]}"
-                    dv.groupBy(*keys).agg(
-                        F.max(DV_V_COL).alias(DV_V_COL)
-                    ).write.mode("overwrite").parquet(f"{self.path}/{rel}")
+                    self._dv_masks(es)[keys].write.mode("overwrite").parquet(
+                        f"{self.path}/{rel}"
+                    )
                     new_entries.append(
                         {"dir": rel, "keys": list(keys), "flag": None}
                     )

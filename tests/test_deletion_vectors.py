@@ -1,13 +1,15 @@
 """Merge-on-read deletion vectors (tables/lake_table.py merge_patch /
 delete_keys): patch commits append only changed rows and mask superseded
-versions in older segments via key anti-joins; compaction/optimize
+versions in older segments via a version-keyed key mask; compaction/optimize
 materialize; vacuum/gc keep dv dirs alive while referenced.
 """
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
-from datalakefoundation_spark.tables.lake_table import MASK_COL, LakeTable
+from datalakefoundation_spark.tables.lake_table import BUCKET_COL, MASK_COL, LakeTable
 
 
 def _base(spark, n=100):
@@ -200,7 +202,7 @@ def test_cow_replace_preserves_dv_on_kept_segments(spark, tmp_path):
     t.delete_keys(spark.createDataFrame([(_pk(3),)], "pk string"), keys=["pk"])
     # replace a bucket that does NOT hold pk2/pk3's rows: pick the bucket
     # of pk7 and rewrite just that bucket's current content
-    from datalakefoundation_spark.tables.lake_table import BUCKET_COL, bucket_expr
+    from datalakefoundation_spark.tables.lake_table import bucket_expr
 
     b7 = (
         _base(spark, n=100)
@@ -237,7 +239,8 @@ def test_dynamic_overwrite_preserves_dv(spark, tmp_path):
 def test_compaction_coalesces_surviving_dv_refs(spark, tmp_path):
     """A big base segment (not folded) accumulates one dv ref per patch;
     compaction must coalesce them into ONE merged ref while the folded
-    patch tail materializes — state identical, read fan-in O(1)."""
+    patch tail materializes — state identical, the manifest entry stays
+    small, and the folded patch dirs become vacuumable."""
     t = LakeTable(spark, str(tmp_path / "t"))
     t.overwrite(_base(spark, n=2000))
     for i in range(6):
@@ -254,9 +257,12 @@ def test_compaction_coalesces_surviving_dv_refs(spark, tmp_path):
     base_after = next(s for s in mf.segments if s.dir == base_seg.dir)
     assert len(base_after.dv) == 1 and base_after.dv[0]["flag"] is None
     assert _state(t) == before
-    # merged dv dir survives vacuum while referenced
-    t.vacuum(retain_last=1)
+    # merged dv dir survives vacuum while referenced; the patch dirs it
+    # replaced do not
+    removed = t.vacuum(retain_last=1)
+    assert set(folded) <= set(removed)
     assert _state(t) == before
+
 
 def test_mor_read_batches_segments_and_dv_dirs(spark, table):
     """A trickle-merged table (the fastest segment accumulator: one patch
@@ -296,3 +302,137 @@ def test_mor_read_batches_bucketed_segments(spark, tmp_path):
     st = {r["pk"]: r["val"] for r in df.collect()}
     assert len(st) == 206
     assert st[_pk(3)] == 21 and st[_pk(503)] == 3 and st[_pk(150)] == 150
+
+
+@pytest.mark.parametrize("n_patches", [2, 8])
+def test_compaction_plan_has_one_mask_join_per_key_set(
+    spark, table, monkeypatch, n_patches
+):
+    """Compaction reads through the same version-keyed mask as read():
+    one broadcast mask join per key set however many patches fold, and
+    no per-segment anti-joins."""
+    for i in range(n_patches):
+        table.merge_patch(
+            _patch(spark, {i: 10 * i}, {700 + i: i}), keys=["pk"], mask_col=MASK_COL
+        )
+    table.delete_keys(spark.createDataFrame([(_pk(50),)], "pk string"), keys=["pk"])
+    before = _state(table)
+    written = []
+    write = table._write_segment
+
+    def capture(df, *args):
+        written.append(df)
+        return write(df, *args)
+
+    monkeypatch.setattr(table, "_write_segment", capture)
+    assert len(table.compact_small_segments(small_rows=10_000)) == n_patches + 1
+    plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftAnti" not in plan
+    assert plan.count("LeftOuter") == 1, plan[:3000]
+    assert _state(table) == before
+
+
+def _bucket(pk: str, n: int) -> int:
+    return int(pk[:4], 16) % n
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+def test_random_ops_match_model(spark, tmp_path, layout):
+    """Seeded op sequences against an in-test dict model of the rows
+    {(pk, vfrom): val}: MoR patches masking by pk and by (pk, vfrom),
+    hard deletes, re-inserts after delete, bucket replaces, compaction
+    and restore. After every op read() must equal the model; compaction
+    must leave it unchanged."""
+    n_buckets = 4
+    bucketed = layout == "bucketed"
+    rng = random.Random(20 if bucketed else 10)
+    t = LakeTable(
+        spark, str(tmp_path / layout),
+        **({"bucket_pk": "pk", "n_buckets": n_buckets} if bucketed else {}),
+    )
+    schema = f"pk string, vfrom int, val long, {MASK_COL} boolean"
+    model = {(_pk(i), 0): i for i in range(60)}
+    t.overwrite(
+        spark.createDataFrame(
+            [(pk, vf, v) for (pk, vf), v in model.items()],
+            "pk string, vfrom int, val long",
+        )
+    )
+    history = {t.latest_manifest().version: dict(model)}
+    # ops lean on recently touched pks so keys get masked more than once
+    # (the max-version case) and re-inserted keys get masked again
+    next_id, deleted, touched = 60, [], []
+    ops = ["patch_pk", "patch_version", "delete", "compact", "restore"]
+    if bucketed:
+        ops.append("replace")
+    seq = ops * 2
+    rng.shuffle(seq)
+    # restore, then patches on the restored state, then a fold
+    seq += ["restore", "patch_pk", "patch_version", "compact"]
+    for step, op in enumerate(seq):
+        live = sorted({pk for pk, _ in model})
+        hot = [pk for pk in dict.fromkeys(reversed(touched)) if pk in live][:3]
+        if op == "patch_pk":
+            rows = []
+            for pk in sorted(set(rng.sample(live, 2) + hot[:1])):
+                val = rng.randrange(10**6)
+                model = {k: v for k, v in model.items() if k[0] != pk}
+                model[(pk, 0)] = val
+                rows.append((pk, 0, val, True))
+            gone = [pk for pk in deleted if pk not in live]
+            fresh = [_pk(next_id), _pk(next_id + 1)] + rng.sample(gone, min(1, len(gone)))
+            next_id += 2
+            touched += [r[0] for r in rows] + fresh
+            for pk in fresh:
+                model[(pk, 0)] = step
+                rows.append((pk, 0, step, False))
+            t.merge_patch(
+                spark.createDataFrame(rows, schema), keys=["pk"], mask_col=MASK_COL
+            )
+        elif op == "patch_version":
+            rows = []
+            hot_keys = sorted(k for k in model if k[0] in hot)
+            keys = rng.sample(sorted(model), 1)
+            keys += rng.sample(hot_keys, min(1, len(hot_keys)))
+            for key in sorted(set(keys)):
+                model[key] = -step
+                rows.append((*key, -step, True))
+            pk = rng.choice(hot or live)
+            touched.append(pk)
+            vf = max(v for p, v in model if p == pk) + 1
+            model[(pk, vf)] = step
+            rows.append((pk, vf, step, False))
+            t.merge_patch(
+                spark.createDataFrame(rows, schema),
+                keys=["pk", "vfrom"], mask_col=MASK_COL,
+            )
+        elif op == "delete":
+            victims = sorted(set(rng.sample(live, 1) + hot[:1]))
+            deleted += victims
+            model = {k: v for k, v in model.items() if k[0] not in victims}
+            t.delete_keys(
+                spark.createDataFrame([(pk,) for pk in victims], "pk string"),
+                keys=["pk"],
+            )
+        elif op == "replace":
+            b = _bucket(rng.choice(live), n_buckets)
+            in_b = sorted(k for k in model if _bucket(k[0], n_buckets) == b)
+            model.pop(in_b[0])
+            for k in in_b[1:]:
+                model[k] += 1000
+            t.replace_partitions(
+                spark.createDataFrame(
+                    [(*k, model[k]) for k in in_b[1:]],
+                    "pk string, vfrom int, val long",
+                ),
+                [{BUCKET_COL: str(b)}],
+            )
+        elif op == "compact":
+            t.compact_small_segments(small_rows=rng.choice([30, 10**6]))
+        elif op == "restore":
+            v = rng.choice(sorted(history))
+            t.restore(version=v)
+            model = dict(history[v])
+        got = sorted((r["pk"], r["vfrom"], r["val"]) for r in t.read().collect())
+        assert got == sorted((*k, v) for k, v in model.items()), f"step {step}: {op}"
+        history[t.latest_manifest().version] = dict(model)

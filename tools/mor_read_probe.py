@@ -1,7 +1,7 @@
 """Merge-on-read read-amplification probe: wall time of a full table read
 as live patches accumulate, and after compaction folds them — the number
 that sets the auto-compaction cadence for mor entities (each live patch
-adds one broadcast anti-join to every read).
+adds one segment and one mask dir to every read).
 
 Usage: python tools/mor_read_probe.py [n_rows] [patch_rows]
 """
