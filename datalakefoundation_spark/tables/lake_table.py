@@ -25,6 +25,11 @@ Why this scales:
 * Dynamic partition overwrite (Full loads) replaces ownership of exactly
   the partitions present in the incoming slice (Full.scala:38-50 parity).
 * Old versions remain readable (time travel) until `vacuum()`.
+* Every manifest records the table schema (the Delta log's ``metaData``
+  analog), and every read is planned from it: building a read DataFrame
+  starts no Spark schema-inference job, however many segments, patches or
+  deletion-vector dirs are live, and partition columns keep their written
+  types (a string partition "001" reads back as the string "001").
 
 Commits are compare-and-swap: each version's manifest file is created with
 the filesystem's create-if-absent primitive (``_commit``), so concurrent
@@ -43,6 +48,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import logging
 
@@ -110,6 +116,11 @@ class Manifest:
     # a config that drifts from the stored modulus would prune to the wrong
     # bucket dirs and silently lose/duplicate rows.
     bucketing: dict | None = None
+    # The table schema after this commit, every field nullable, partition
+    # columns last (where hive discovery puts them). Reads hand it to every
+    # parquet reader, so no read infers a schema. None only on manifests
+    # written before it was recorded (LakeTable._schema infers those once).
+    schema: T.StructType | None = None
 
     def to_json(self) -> str:
         return json.dumps(
@@ -132,6 +143,7 @@ class Manifest:
                 "timestamp": self.timestamp,
                 "metrics": self.metrics,
                 "bucketing": self.bucketing,
+                "schema": None if self.schema is None else self.schema.jsonValue(),
             },
             indent=1,
         )
@@ -158,7 +170,85 @@ class Manifest:
             timestamp=obj.get("timestamp", 0.0),
             metrics=obj.get("metrics", {}),
             bucketing=obj.get("bucketing"),
+            schema=(
+                T.StructType.fromJson(obj["schema"]) if obj.get("schema") else None
+            ),
         )
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable — how Spark
+    reads any parquet column, so schemas compare by type alone."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType)) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
+def _merge_type(old: T.DataType, new: T.DataType, name: str) -> T.DataType:
+    """Spark's parquet schema-merge rule for one column: structs merge
+    their fields by name (new fields appended), decimals of one scale widen
+    to the larger precision, anything else must be equal — a conflict
+    raises ValueError naming the column."""
+    if isinstance(old, T.StructType) and isinstance(new, T.StructType):
+        fields = {f.name: f.dataType for f in old.fields}
+        for f in new.fields:
+            path = f"{name}.{f.name}" if name else f.name
+            fields[f.name] = (
+                _merge_type(fields[f.name], f.dataType, path)
+                if f.name in fields
+                else f.dataType
+            )
+        return T.StructType([T.StructField(n, t) for n, t in fields.items()])
+    if isinstance(old, T.ArrayType) and isinstance(new, T.ArrayType):
+        return T.ArrayType(_merge_type(old.elementType, new.elementType, name))
+    if isinstance(old, T.MapType) and isinstance(new, T.MapType):
+        return T.MapType(
+            _merge_type(old.keyType, new.keyType, name),
+            _merge_type(old.valueType, new.valueType, name),
+        )
+    if (
+        isinstance(old, T.DecimalType)
+        and isinstance(new, T.DecimalType)
+        and old.scale == new.scale
+    ):
+        return T.DecimalType(max(old.precision, new.precision), old.scale)
+    if old != new:
+        raise ValueError(
+            f"column {name!r} is {new.simpleString()} but the table records "
+            f"{old.simpleString()}"
+        )
+    return old
+
+
+def _evolve_schema(
+    prev: T.StructType | None, new: T.StructType, partition_by: Sequence[str]
+) -> T.StructType:
+    """The table schema after writing a frame of schema ``new`` over a table
+    of schema ``prev``, merged by ``_merge_type``: prev's columns, then the
+    columns of ``new`` that prev lacks (additive evolution — older rows read
+    them as typed NULLs), with ``partition_by`` columns moved last. A type
+    conflict raises before the caller writes anything."""
+    merged = _merge_type(
+        prev if prev is not None else T.StructType(), _nullable(new), ""
+    )
+    return T.StructType(
+        [f for f in merged.fields if f.name not in partition_by]
+        + [merged[c] for c in partition_by if c in merged.fieldNames()]
+    )
+
+
+def spark_schema_of_arrow(arrow_schema) -> T.StructType:
+    """The Spark schema of a pyarrow-written parquet file as Spark reads it
+    back (naive timestamps are TIMESTAMP_NTZ)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)
 
 
 def _pv_key(pv: dict[str, str]) -> tuple:
@@ -579,6 +669,20 @@ class LakeTable:
     def exists(self) -> bool:
         return self.latest_manifest() is not None
 
+    def _schema(self, mf: Manifest) -> T.StructType | None:
+        """The table schema at ``mf`` (None for a manifest without
+        segments). A manifest written before the schema was recorded gets
+        it inferred here, once per manifest object — the one place this
+        table asks Spark to infer a schema; the next commit records it."""
+        if mf.schema is None:
+            for s in mf.segments:
+                mf.schema = _evolve_schema(
+                    mf.schema,
+                    self.spark.read.parquet(f"{self.path}/{s.dir}").schema,
+                    mf.partition_by,
+                )
+        return mf.schema
+
     def _commit(self, manifest: Manifest) -> None:
         """Atomic compare-and-swap commit: the version file is created with
         the filesystem's create-if-absent primitive (hard-link on LocalFS,
@@ -672,17 +776,29 @@ class LakeTable:
 
     # ------------------------------------------------------------ segment io
     def _write_segment(
-        self, df: DataFrame, mf: Manifest | None
-    ) -> tuple[str, dict | None, int, dict | None]:
+        self, df: DataFrame, mf: Manifest | None, evolve: bool = True
+    ) -> tuple[str, dict | None, int, dict | None, T.StructType]:
         """Write one immutable segment for the commit that follows ``mf``
         (the manifest the caller read); returns (relative dir, per-column
-        min/max stats or None, row count, per-file stats or None). The dir
-        name carries that commit's version, which the deletion-vector mask
-        relies on. Segment stats + count are collected with ``df.observe``
-        DURING the write action — no second pass; file stats come from the
-        written footers (metadata-only reads)."""
+        min/max stats or None, row count, per-file stats or None, the table
+        schema that commit records). The dir name carries that commit's
+        version, which the deletion-vector mask relies on. Segment stats +
+        count are collected with ``df.observe`` DURING the write action — no
+        second pass; file stats come from the written footers (metadata-only
+        reads).
+
+        The recorded schema is the written frame's (bucket, partition and
+        mask columns included) — added to ``mf``'s schema when ``evolve``,
+        replacing it otherwise (a full overwrite). A column typed unlike
+        its recorded type raises before anything is written."""
         from pyspark.sql import Observation
 
+        df = self._with_bucket(df)
+        schema = _evolve_schema(
+            self._schema(mf) if mf is not None and evolve else None,
+            df.schema,
+            self.partition_by,
+        )
         next_v = (mf.version + 1) if mf else 0
         # writer-unique dir (same rule as append_arrow / dv writers): two
         # same-entity writers racing for next_v must never share a segment
@@ -692,7 +808,6 @@ class LakeTable:
         # loser with an opaque rename IOException instead of the clean
         # ConcurrentCommitException (caught by tests/test_merge_race.py)
         seg_rel = f"data/v{next_v:05d}-{uuid.uuid4().hex[:8]}"
-        df = self._with_bucket(df)
         stat_cols = [
             f.name
             for f in df.schema.fields
@@ -717,7 +832,7 @@ class LakeTable:
                 mn, kind_mn = _encode_stat(got[f"mn_{c}"])
                 mx, kind_mx = _encode_stat(got[f"mx_{c}"])
                 stats[c] = {"min": mn, "max": mx, "t": kind_mn or kind_mx or "str"}
-        return seg_rel, stats, rows, self._collect_file_stats(seg_rel)
+        return seg_rel, stats, rows, self._collect_file_stats(seg_rel), schema
 
     def _partition_values(self, df: DataFrame) -> list[dict[str, str]]:
         """Distinct partition values present in df (Processing.scala:144-156).
@@ -796,14 +911,27 @@ class LakeTable:
         mf = self.manifest_at(version) if version is not None else self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        return self._read_segments(mf.segments, keep_bucket, prune_spec)
+        return self._read_segments(
+            mf.segments, self._schema(mf), keep_bucket, prune_spec
+        )
 
     def _read_segments(
-        self, all_segs: list[Segment], keep_bucket: bool, prune_spec=None
+        self,
+        all_segs: list[Segment],
+        schema: T.StructType,
+        keep_bucket: bool,
+        prune_spec=None,
     ) -> DataFrame:
         """The rows of ``all_segs`` with their deletion vectors applied —
         the one segment-reading path, shared by ``read`` and
         ``compact_small_segments``.
+
+        Every reader is planned from the table ``schema``, so building the
+        frame starts no schema-inference job (only Spark's parallel file
+        listing, past ``parallelPartitionDiscovery.threshold`` root paths,
+        may run one): a segment written before a column was added reads it
+        as a typed NULL, and partition values keep the written column types
+        instead of re-inferred ones.
 
         Deletion vectors apply as ONE broadcast join after the union,
         against a mask table keyed by commit version (``_dv_masks``): a
@@ -819,11 +947,13 @@ class LakeTable:
         one small build regardless of patch count, where per-segment
         anti-joins build O(live patches^2) broadcast exchanges (measured
         0.5 s -> 19.6 s over 32 patches at 2M rows)."""
+        if not all_segs:
+            raise FileNotFoundError(f"LakeTable has no segments: {self.path}")
         segs = list(all_segs)
         if prune_spec is not None:
             segs = [s for s in segs if segment_may_match(s.stats, prune_spec)]
         entries = {e["dir"]: e for s in segs for e in s.dv or []}
-        masks = self._dv_masks(list(entries.values()))
+        masks = self._dv_masks(list(entries.values()), schema)
         # Segment reads are BATCHED: every plain whole-dir segment (no
         # ownership filter, no file-level selection) lands in ONE
         # multi-path spark.read.parquet(*dirs) call instead of its own
@@ -833,8 +963,8 @@ class LakeTable:
         # — while the batched read is one relation whose file listing Spark
         # parallelizes (parallelPartitionDiscovery) and whose splits
         # coalesce by maxPartitionBytes instead of one task per tiny file.
-        # mergeSchema keeps unionByName(allowMissingColumns) semantics for
-        # additively-evolved segments (old files read typed NULLs).
+        # The table schema covers additively-evolved segments: files
+        # without a column read it as a typed NULL.
         # Per-segment reads remain where the semantics are per-segment:
         # partition/bucket ownership filters (seg.partitions) and
         # stats-pruned partial file lists. Batched rows take the commit
@@ -864,8 +994,12 @@ class LakeTable:
                     continue
                 if len(keep) < len(seg.files):
                     whole_dir = False
-                    df = self.spark.read.option("basePath", base).parquet(
-                        *[f"{base}/{p}" for p in sorted(keep)]
+                    # a fresh reader per read, never a shared one:
+                    # option("basePath") mutates the reader it is set on
+                    df = (
+                        self.spark.read.schema(schema)
+                        .option("basePath", base)
+                        .parquet(*[f"{base}/{p}" for p in sorted(keep)])
                     )
             if whole_dir and (
                 # ownership-full segments need NO per-segment filter: plain
@@ -898,7 +1032,7 @@ class LakeTable:
                     )
                 continue
             if whole_dir:
-                df = self.spark.read.parquet(base)
+                df = self.spark.read.schema(schema).parquet(base)
             if seg.partitions is not None and self.partition_by:
                 # equality predicates on hive partition dirs -> pure dir pruning
                 df = df.where(self._partition_filter(seg.partitions))
@@ -908,28 +1042,16 @@ class LakeTable:
         for batched_dirs in (batched_plain, batched_hive):
             if not batched_dirs:
                 continue
-            if len(batched_dirs) == 1:
-                bdf = self.spark.read.parquet(batched_dirs[0])
-            else:
-                bdf = self.spark.read.option("mergeSchema", "true").parquet(
-                    *batched_dirs
-                )
+            bdf = self.spark.read.schema(schema).parquet(*batched_dirs)
             if masks:
                 bdf = bdf.withColumn(SEG_V_COL, _path_version())
             parts.insert(0, bdf)
         if not parts:
-            if not all_segs:
-                raise FileNotFoundError(f"LakeTable has no segments: {self.path}")
-            # everything pruned: preserve the schema with a zero-row scan of
-            # one segment (limit 0 — footer read only)
-            empty = self.spark.read.parquet(f"{self.path}/{all_segs[0].dir}").limit(0)
-            for c in (BUCKET_COL, MASK_COL):
-                if c in empty.columns and not (keep_bucket and c == BUCKET_COL):
-                    empty = empty.drop(c)
-            return empty
+            # everything pruned: no rows, the table's columns
+            parts = [self.spark.createDataFrame([], schema)]
         out = parts[0]
         for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+            out = out.unionByName(p)
         for keys, mask in masks.items():
             cond = None
             for k in keys:
@@ -946,31 +1068,36 @@ class LakeTable:
                 )
                 .drop(DV_V_COL, *[f"__dv_{k}" for k in keys])
             )
-        if SEG_V_COL in out.columns:
-            out = out.drop(SEG_V_COL)
         # the bucket/mask columns are internal regardless of this instance's
         # config (e.g. a reader constructed with bucketing disabled on a
         # bucketed table must not leak them as data columns)
-        if not keep_bucket and BUCKET_COL in out.columns:
-            out = out.drop(BUCKET_COL)
-        if MASK_COL in out.columns:
-            out = out.drop(MASK_COL)
-        return out
+        return out.drop(SEG_V_COL, MASK_COL, *([] if keep_bucket else [BUCKET_COL]))
 
-    def _dv_masks(self, entries: list[dict]) -> dict[tuple, DataFrame]:
+    def _dv_masks(
+        self, entries: list[dict], schema: T.StructType
+    ) -> dict[tuple, DataFrame]:
         """One mask table per key set over deletion-vector ``entries``:
         ``(keys..., __dlf_dv_v = max commit version masking that key)``.
 
         A key's masking version is its entry's commit version, parsed from
         the entry dir's name, unless the dir persists a per-key
         ``__dlf_dv_v`` (coalesced dvs — merging never widens a key's mask
-        window). Returns {} when there are no entries."""
+        window). Each dir is read with just the projection the mask needs:
+        the keys typed as in the table ``schema``, the entry's flag as
+        boolean and ``__dlf_dv_v`` as long — a dir without the flag or the
+        version column reads it as NULL (no mask / the dir's version).
+        Returns {} when there are no entries."""
         groups: dict[tuple, list[str]] = {}
         for e in entries:
             _dir_version(e["dir"])  # the mask compares dir versions
             groups.setdefault((tuple(e["keys"]), e.get("flag")), []).append(e["dir"])
         by_keys: dict[tuple, list[DataFrame]] = {}
         for (keys, flag), dirs in groups.items():
+            proj = T.StructType(
+                [schema[k] for k in keys]
+                + ([T.StructField(flag, T.BooleanType())] if flag else [])
+                + [T.StructField(DV_V_COL, T.LongType())]
+            )
             # ONE multi-path read per (keys, flag) group — a reader per
             # entry made every live patch its own relation (O(patches) plan
             # nodes on exactly the trickle-ingest path that accumulates
@@ -989,24 +1116,17 @@ class LakeTable:
                     "=" in n and not n.startswith((BUCKET_COL, "_", "."))
                     for n in names
                 ):
-                    reads.append(self.spark.read.parquet(base))
+                    reads.append(self.spark.read.schema(proj).parquet(base))
                     continue
                 buckets = [n for n in names if n.startswith(f"{BUCKET_COL}=")]
                 paths.extend([f"{base}/{n}" for n in buckets] or [base])
-            if len(paths) == 1:
-                reads.append(self.spark.read.parquet(paths[0]))
-            elif paths:
-                reads.append(
-                    self.spark.read.option("mergeSchema", "true").parquet(*paths)
-                )
+            if paths:
+                reads.append(self.spark.read.schema(proj).parquet(*paths))
             for f in reads:
-                if flag and flag in f.columns:
-                    # NULL flag (row from a dir without the column, or a
-                    # non-masking patch row) correctly drops from the mask
+                if flag:
+                    # NULL flag (a non-masking patch row) drops from the mask
                     f = f.where(F.col(flag))
-                v = _path_version()
-                if DV_V_COL in f.columns:
-                    v = F.coalesce(F.col(DV_V_COL), v)
+                v = F.coalesce(F.col(DV_V_COL), _path_version())
                 by_keys.setdefault(keys, []).append(f.select(*keys, v.alias(DV_V_COL)))
         masks: dict[tuple, DataFrame] = {}
         for keys, frames in by_keys.items():
@@ -1032,11 +1152,14 @@ class LakeTable:
         and merged into the commit metrics — the hook for observation-based
         counts (e.g. total_rows) that only exist once the job has run."""
         mf = self.latest_manifest()
-        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
+        full = not dynamic or not self.partition_by or mf is None
+        # a full overwrite replaces the schema; a dynamic one keeps the
+        # other partitions' segments, so it evolves the schema instead
+        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf, not full)
         if metrics_fn is not None:
             metrics = {**(metrics or {}), **metrics_fn()}
         next_v = (mf.version + 1) if mf else 0
-        if not dynamic or not self.partition_by or mf is None:
+        if full:
             segments = [
                 Segment(
                     seg_rel,
@@ -1074,6 +1197,7 @@ class LakeTable:
                 operation=operation or ("overwrite_dynamic" if dynamic else "overwrite"),
                 timestamp=time.time(),
                 metrics=metrics or {},
+                schema=schema,
             )
         )
 
@@ -1248,8 +1372,8 @@ class LakeTable:
         # applies: the folded segment holds the post-mask rows and needs no
         # dv refs of its own (other segments' refs to a folded patch dir
         # stay valid — the dir outlives the fold until vacuum)
-        merged = self._read_segments(small, keep_bucket=True)
-        seg_rel, stats, rows, fstats = self._write_segment(merged, mf)
+        merged = self._read_segments(small, self._schema(mf), keep_bucket=True)
+        seg_rel, stats, rows, fstats, schema = self._write_segment(merged, mf)
         if any(s.partitions is None for s in small):
             ownership = None  # unpartitioned append-style segments
         else:
@@ -1260,7 +1384,7 @@ class LakeTable:
         # folded patch grows its manifest entry forever and keeps every
         # patch dir alive past vacuum(). One merged key dir per key set
         # holds only the masking keys.
-        kept = self._coalesce_dv_refs(kept, mf.version + 1)
+        kept = self._coalesce_dv_refs(kept, mf.version + 1, schema)
         self._commit(
             Manifest(
                 version=mf.version + 1,
@@ -1270,13 +1394,14 @@ class LakeTable:
                 operation="compact",
                 timestamp=time.time(),
                 metrics={"folded": len(small)},
+                schema=schema,
             )
         )
         return [s.dir for s in small]
 
     def append(self, df: DataFrame, metrics: dict | None = None) -> None:
         mf = self.latest_manifest()
-        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
+        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf)
         next_v = (mf.version + 1) if mf else 0
         segments = list(mf.segments) if mf else []
         segments.append(
@@ -1296,6 +1421,7 @@ class LakeTable:
                 operation="append",
                 timestamp=time.time(),
                 metrics=metrics or {},
+                schema=schema,
             )
         )
 
@@ -1313,6 +1439,11 @@ class LakeTable:
 
         for attempt in range(50):
             mf = self.latest_manifest()
+            schema = _evolve_schema(
+                self._schema(mf) if mf is not None else None,
+                spark_schema_of_arrow(arrow_table.schema),
+                [],
+            )
             next_v = (mf.version + 1) if mf else 0
             # writer-unique dir: the CAS loser deletes its own segment below,
             # so two writers must never share a path even at the same
@@ -1333,6 +1464,7 @@ class LakeTable:
                         segments=segments,
                         operation="append",
                         timestamp=time.time(),
+                        schema=schema,
                     )
                 )
                 return
@@ -1356,7 +1488,7 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
+        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf)
         # Rows may land outside the requested partitions (a merge that updates
         # a partition column). Those extra partitions get co-owned by the new
         # segment so the rows stay visible (matches the reference's Delta
@@ -1394,6 +1526,7 @@ class LakeTable:
                 operation=operation,
                 timestamp=time.time(),
                 metrics=metrics or {},
+                schema=schema,
             )
         )
 
@@ -1423,7 +1556,12 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        seg_rel, stats, rows, fstats = self._write_segment(df, mf)
+        if mask_col is not None and mask_col not in df.columns:
+            # the mask read types a missing flag as NULL: nothing would mask
+            raise ValueError(
+                f"merge_patch mask_col {mask_col!r} is not a column of the patch"
+            )
+        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf)
         if rows == 0:
             self.fs.delete_tree(f"{self.path}/{seg_rel}")
             if metrics_fn is not None:
@@ -1456,12 +1594,13 @@ class LakeTable:
                 operation=operation,
                 timestamp=time.time(),
                 metrics=metrics or {},
+                schema=schema,
             )
         )
         return rows
 
     def _coalesce_dv_refs(
-        self, segments: list[Segment], next_version: int
+        self, segments: list[Segment], next_version: int, schema: T.StructType
     ) -> list[Segment]:
         """Rewrite multi-entry dv lists into one merged key dir per key
         set. Reads already apply any number of entries as one mask join;
@@ -1495,7 +1634,7 @@ class LakeTable:
                     # version: the merged dir must not widen any key's
                     # mask window
                     rel = f"data/v{next_version:05d}-dv-{uuid.uuid4().hex[:8]}"
-                    self._dv_masks(es)[keys].write.mode("overwrite").parquet(
+                    self._dv_masks(es, schema)[keys].write.mode("overwrite").parquet(
                         f"{self.path}/{rel}"
                     )
                     new_entries.append(
@@ -1521,6 +1660,10 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
+        schema = self._schema(mf)
+        # a key typed unlike its table column raises before the dv dir is
+        # written (mask reads type the keys from the table schema)
+        _evolve_schema(schema, keys_df.select(*keys).schema, [])
         dv_rel = f"data/v{mf.version + 1:05d}-dv-{uuid.uuid4().hex[:8]}"
         keys_df.select(*keys).write.mode("overwrite").parquet(f"{self.path}/{dv_rel}")
         entry = {"dir": dv_rel, "keys": list(keys), "flag": None}
@@ -1538,13 +1681,19 @@ class LakeTable:
                 segments=segments,
                 operation="delete",
                 timestamp=time.time(),
+                schema=schema,
             )
         )
 
     def to_view_sql(self) -> str:
         """A self-contained SELECT over the current version's segments —
         usable to register a persistent catalog view (no temp-object refs).
-        Partition-ownership filters are inlined as WHERE clauses."""
+        Partition-ownership filters are inlined as WHERE clauses.
+
+        Known gap: ``parquet.`path``` SQL cannot carry a schema, so unlike
+        ``read()`` the view ignores the manifest's recorded schema and
+        Spark re-infers each segment's types — a numeric-looking string
+        partition column (values "001", "7") reads as a number here."""
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
@@ -1714,6 +1863,7 @@ class LakeTable:
                     timestamp=time.time(),
                     metrics={"restored_version": version},
                     bucketing=src.bucketing,
+                    schema=self._schema(src),
                 )
             )
         except Exception:

@@ -102,7 +102,11 @@ class WatermarkStore:
         import pyarrow.parquet as pq
 
         from datalakefoundation_spark.core.exceptions import ConcurrentCommitException
-        from datalakefoundation_spark.tables.lake_table import Manifest, Segment
+        from datalakefoundation_spark.tables.lake_table import (
+            Manifest,
+            Segment,
+            spark_schema_of_arrow,
+        )
 
         mf = self.table.latest_manifest()
         if mf is None or len(mf.segments) <= 1:
@@ -141,6 +145,7 @@ class WatermarkStore:
                     segments=[Segment(seg_rel, None)],
                     operation="compact",
                     timestamp=time.time(),
+                    schema=spark_schema_of_arrow(merged.schema),
                 )
             )
         except ConcurrentCommitException:

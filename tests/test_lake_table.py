@@ -1,6 +1,10 @@
+import json
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from datalakefoundation_spark.tables.lake_table import LakeTable
+from datalakefoundation_spark.tables.lake_table import MASK_COL, LakeTable, prune_spec_for
 
 
 def _df(spark, rows):
@@ -411,3 +415,248 @@ def test_batched_read_keeps_schema_evolution_semantics(spark, tmp_path):
     assert set(rows[1].asDict()) == {"id", "v", "extra"}
     assert rows[1]["extra"] is None and rows[3]["extra"] is None
     assert rows[2]["extra"] == 7.5
+
+
+# ---------------------------------------------------------- recorded schema
+
+
+@pytest.mark.parametrize(
+    "values",
+    [("001", "010", "7"), ("2026-01-01", "2026-01-02", "2026-02-01")],
+    ids=["numeric_looking", "date_looking"],
+)
+def test_string_partition_values_keep_rows_and_type(spark, tmp_path, values):
+    """A string partition column whose values look like numbers or dates
+    reads back as strings with every row, through overwrite,
+    replace_partitions and merge_patch. Re-inferred partition types read
+    "001"/"010"/"7" as int and the ownership filter then matched only
+    the "7" row (1 of 3), and date-looking values as date."""
+    a, b, c = values
+    t = LakeTable(spark, str(tmp_path / "sp"), partition_by=["region"])
+    schema = "id int, region string, v string"
+
+    def check(expected):
+        df = t.read()
+        assert dict(df.dtypes) == {"id": "int", "region": "string", "v": "string"}
+        assert sorted(tuple(r) for r in df.select("id", "region", "v").collect()) == sorted(
+            expected
+        )
+
+    t.overwrite(spark.createDataFrame([(1, a, "x"), (2, b, "y"), (3, c, "z")], schema))
+    check([(1, a, "x"), (2, b, "y"), (3, c, "z")])
+    t.replace_partitions(
+        spark.createDataFrame([(4, a, "w")], schema), [{"region": a}]
+    )
+    check([(4, a, "w"), (2, b, "y"), (3, c, "z")])
+    t.merge_patch(
+        spark.createDataFrame(
+            [(2, b, "y2", True), (5, c, "n", False)], f"{schema}, {MASK_COL} boolean"
+        ),
+        keys=["id"],
+        mask_col=MASK_COL,
+    )
+    check([(4, a, "w"), (2, b, "y2"), (3, c, "z"), (5, c, "n")])
+
+
+def _read_job_ids(spark, build):
+    """Spark jobs started while ``build()`` runs, via a job group."""
+    sc = spark.sparkContext
+    group = f"read-pin-{id(build)}"
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _pk(i: int) -> str:
+    return f"{(i * 2654435761) % 65536:04x}{i:06d}"
+
+
+def _patch(spark, rows):
+    return spark.createDataFrame(
+        [(_pk(i), v, True) for i, v in rows], f"pk string, v long, {MASK_COL} boolean"
+    )
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed", "partitioned", "file_pruned"])
+def test_read_starts_no_spark_job(spark, tmp_path, layout):
+    """Building a read DataFrame is pure planning from the manifest: no
+    schema-inference job for any segment, patch or deletion-vector dir
+    (each used to cost one), whatever the layout or read path."""
+    base = spark.createDataFrame([(_pk(i), i) for i in range(40)], "pk string, v long")
+    prune_spec = None
+    if layout == "plain":
+        t = LakeTable(spark, str(tmp_path / "t"))
+        t.overwrite(base)
+        t.merge_patch(_patch(spark, [(1, 100)]), keys=["pk"], mask_col=MASK_COL)
+        t.merge_patch(_patch(spark, [(2, 200)]), keys=["pk"], mask_col=MASK_COL)
+        t.delete_keys(spark.createDataFrame([(_pk(3),)], "pk string"), keys=["pk"])
+        expected = 39
+    elif layout == "bucketed":
+        t = LakeTable(spark, str(tmp_path / "t"), bucket_pk="pk", n_buckets=4)
+        t.overwrite(base)
+        t.merge_patch(_patch(spark, [(1, 100), (50, 50)]), keys=["pk"], mask_col=MASK_COL)
+        t.merge_patch(_patch(spark, [(2, 200)]), keys=["pk"], mask_col=MASK_COL)
+        expected = 41
+    elif layout == "partitioned":
+        t = LakeTable(spark, str(tmp_path / "t"), partition_by=["p"])
+        t.overwrite(base.withColumn("p", (F.col("v") % 3).cast("string")))
+        t.merge_patch(
+            _patch(spark, [(1, 1)]).withColumn("p", F.lit("1")),
+            keys=["pk"],
+            mask_col=MASK_COL,
+        )
+        expected = 40
+    else:
+        t = LakeTable(spark, str(tmp_path / "t"), stats_columns=["v"])
+        t.overwrite(base.repartitionByRange(4, "v").sortWithinPartitions("v"))
+        (seg,) = t.latest_manifest().segments
+        prune_spec = prune_spec_for([("v", "<=", 5)])
+        assert 0 < sum(
+            1 for f in seg.files.values() if f["v"]["min"] <= 5
+        ) < len(seg.files)  # the read takes the basePath file-list path
+        expected = 6
+    df, jobs = _read_job_ids(spark, lambda: t.read(prune_spec=prune_spec))
+    assert jobs == [], f"{layout}: read() started Spark jobs {jobs}"
+    if prune_spec is not None:
+        df = df.where(F.col("v") <= 5)
+    assert df.count() == expected
+
+
+def test_additive_columns_from_replace_and_patch_read_typed_nulls(spark, tmp_path):
+    """Columns added by replace_partitions and then by merge_patch are
+    recorded in the schema; rows written before them read typed NULLs."""
+    t = LakeTable(spark, str(tmp_path / "evo"), partition_by=["p"])
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a", "x"), (2, "b", "y"), (4, "b", "w")], "k int, p string, v string"
+        )
+    )
+    t.replace_partitions(
+        spark.createDataFrame([(3, "a", "z", 1.5)], "k int, p string, v string, extra double"),
+        [{"p": "a"}],
+    )
+    t.merge_patch(
+        spark.createDataFrame(
+            [(2, "b", "y2", None, 7, True)],
+            f"k int, p string, v string, extra double, more long, {MASK_COL} boolean",
+        ),
+        keys=["k"],
+        mask_col=MASK_COL,
+    )
+    df = t.read()
+    assert df.dtypes == [
+        ("k", "int"), ("v", "string"), ("extra", "double"), ("more", "bigint"), ("p", "string")
+    ]
+    rows = {r["k"]: r.asDict() for r in df.collect()}
+    assert rows == {
+        3: {"k": 3, "v": "z", "extra": 1.5, "more": None, "p": "a"},
+        2: {"k": 2, "v": "y2", "extra": None, "more": 7, "p": "b"},
+        4: {"k": 4, "v": "w", "extra": None, "more": None, "p": "b"},
+    }
+
+
+@pytest.mark.parametrize(
+    "op", ["append", "merge_patch", "replace_partitions", "delete_keys", "no_mask_col"]
+)
+def test_conflicting_column_type_raises_before_writing(spark, tmp_path, op):
+    """A column typed unlike the recorded schema (or a merge_patch flag
+    column missing from the patch) raises before any data is written."""
+    path = str(tmp_path / "c")
+    t = LakeTable(spark, path, partition_by=["p"])
+    t.overwrite(spark.createDataFrame([(1, "a", "x")], "k long, p string, v string"))
+    dirs = sorted(os.listdir(f"{path}/data"))
+    bad = spark.createDataFrame([(2, "a", 5)], "k long, p string, v int")
+    with pytest.raises(ValueError, match="mask_col" if op == "no_mask_col" else "'v'"):
+        if op == "no_mask_col":
+            t.merge_patch(bad, keys=["k"], mask_col=MASK_COL)
+        elif op == "append":
+            t.append(bad)
+        elif op == "merge_patch":
+            t.merge_patch(bad.withColumn(MASK_COL, F.lit(True)), keys=["k"], mask_col=MASK_COL)
+        elif op == "replace_partitions":
+            t.replace_partitions(bad, [{"p": "a"}])
+        else:
+            t.delete_keys(bad.select("v"), keys=["v"])
+    assert sorted(os.listdir(f"{path}/data")) == dirs  # nothing written
+    assert t.latest_manifest().version == 0
+    # a full overwrite replaces the schema instead
+    t.overwrite(bad)
+    assert dict(t.read().dtypes)["v"] == "int"
+
+
+def test_manifest_without_schema_reads_identically_and_next_commit_records_it(
+    spark, tmp_path
+):
+    """A manifest written before the schema was recorded infers it once
+    and reads the same rows; the next commit records the schema."""
+    path = str(tmp_path / "old")
+    t = LakeTable(spark, path, bucket_pk="pk", n_buckets=4)
+    t.overwrite(spark.createDataFrame([(_pk(i), i) for i in range(30)], "pk string, v long"))
+    t.merge_patch(
+        _patch(spark, [(1, 100)]).withColumn("note", F.lit("n")), keys=["pk"], mask_col=MASK_COL
+    )
+    t.delete_keys(spark.createDataFrame([(_pk(2),)], "pk string"), keys=["pk"])
+    before = t.read()
+    expected = (before.dtypes, sorted(tuple(r) for r in before.collect()))
+    for name in os.listdir(f"{path}/_manifest"):
+        f = f"{path}/_manifest/{name}"
+        with open(f) as fh:
+            obj = json.load(fh)
+        del obj["schema"]
+        with open(f, "w") as fh:
+            json.dump(obj, fh)
+    old = LakeTable(spark, path)
+    assert old.latest_manifest().schema is None
+    got = old.read()
+    assert (got.dtypes, sorted(tuple(r) for r in got.collect())) == expected
+    old.append(spark.createDataFrame([(_pk(99), 99)], "pk string, v long"))
+    recorded = old.latest_manifest().schema
+    assert recorded is not None and "note" in recorded.fieldNames()
+    assert old.read().count() == len(expected[1]) + 1
+
+
+def test_arrow_writes_record_the_schema_spark_reads(spark, tmp_path):
+    """append_arrow and the watermark compaction record the arrow schema
+    as Spark reads the file back (naive timestamps -> TIMESTAMP_NTZ)."""
+    from datalakefoundation_spark.watermark import WatermarkStore
+
+    w = WatermarkStore(spark, str(tmp_path / "lake"))
+    w.write(1, {"a": ("int", "1")})
+    w.write(2, {"b": ("str", None)})
+    for compacted in (False, True):
+        if compacted:
+            w._compact()
+        mf = w.table.latest_manifest()
+        inferred = spark.read.parquet(f"{w.path}/{mf.segments[-1].dir}").schema
+        assert mf.schema.simpleString() == inferred.simpleString()
+        assert w.table.read().count() == 2
+
+
+def test_schema_merge_widens_decimals_and_nested_structs(spark, tmp_path):
+    """Appends merge types by Spark's parquet mergeSchema rule: a decimal
+    of the same scale widens to the larger precision, a struct gains new
+    fields (NULL in older rows)."""
+    from decimal import Decimal
+
+    t = LakeTable(spark, str(tmp_path / "m"))
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, Decimal("1.50"), (1,))], "id int, d decimal(10,2), s struct<a:int>"
+        )
+    )
+    t.append(
+        spark.createDataFrame(
+            [(2, Decimal("12345678901.25"), (2, "x"))],
+            "id int, d decimal(20,2), s struct<a:int,b:string>",
+        )
+    )
+    df = t.read()
+    assert dict(df.dtypes) == {
+        "id": "int", "d": "decimal(20,2)", "s": "struct<a:int,b:string>"
+    }
+    rows = {r["id"]: (str(r["d"]), r["s"]["a"], r["s"]["b"]) for r in df.collect()}
+    assert rows == {1: ("1.50", 1, None), 2: ("12345678901.25", 2, "x")}
