@@ -118,8 +118,9 @@ class Manifest:
     bucketing: dict | None = None
     # The table schema after this commit, every field nullable, partition
     # columns last (where hive discovery puts them). Reads hand it to every
-    # parquet reader, so no read infers a schema. None only on manifests
-    # written before it was recorded (LakeTable._schema infers those once).
+    # parquet reader, so no read infers a schema. None on manifests written
+    # before it was recorded, and on commits of no new rows over those
+    # (LakeTable._schema infers it; the next commit writing rows records it).
     schema: T.StructType | None = None
 
     def to_json(self) -> str:
@@ -567,6 +568,9 @@ class LakeTable:
         requires a full rewrite (overwrite/optimize with the new config)."""
         self.spark = spark
         self.path = path.rstrip("/")
+        # LakeTable._schema's inferred schemas of manifests that predate the
+        # recorded one, by version
+        self._inferred_schemas: dict[int, T.StructType | None] = {}
         # Control-plane I/O (manifests, dir listings, vacuum) goes through a
         # filesystem abstraction: LocalFS for bare paths, the JVM Hadoop
         # FileSystem for scheme-qualified URIs (hdfs://, s3a://, file://...).
@@ -671,17 +675,37 @@ class LakeTable:
 
     def _schema(self, mf: Manifest) -> T.StructType | None:
         """The table schema at ``mf`` (None for a manifest without
-        segments). A manifest written before the schema was recorded gets
-        it inferred here, once per manifest object — the one place this
-        table asks Spark to infer a schema; the next commit records it."""
-        if mf.schema is None:
+        segments).
+
+        A manifest written before the schema was recorded gets it inferred
+        here — the one place this table asks Spark to infer a schema: one
+        inference job per segment, cached per LakeTable object and version.
+        Data column types come from the parquet footers. Partition column
+        types cannot be known from dir names, so they read as the exact
+        dir strings (the bucket column as int); they are provisional, and
+        the next commit that writes rows records its frame's types for
+        them (``_write_segment``)."""
+        if mf.schema is not None:
+            return mf.schema
+        if mf.version not in self._inferred_schemas:
+            data = None
             for s in mf.segments:
-                mf.schema = _evolve_schema(
-                    mf.schema,
-                    self.spark.read.parquet(f"{self.path}/{s.dir}").schema,
-                    mf.partition_by,
+                seg = self.spark.read.parquet(f"{self.path}/{s.dir}").schema
+                data = _evolve_schema(
+                    data,
+                    T.StructType([f for f in seg.fields if f.name not in mf.partition_by]),
+                    [],
                 )
-        return mf.schema
+            self._inferred_schemas[mf.version] = None if data is None else T.StructType(
+                data.fields
+                + [
+                    T.StructField(
+                        c, T.IntegerType() if c == BUCKET_COL else T.StringType()
+                    )
+                    for c in mf.partition_by
+                ]
+            )
+        return self._inferred_schemas[mf.version]
 
     def _commit(self, manifest: Manifest) -> None:
         """Atomic compare-and-swap commit: the version file is created with
@@ -790,15 +814,18 @@ class LakeTable:
         The recorded schema is the written frame's (bucket, partition and
         mask columns included) — added to ``mf``'s schema when ``evolve``,
         replacing it otherwise (a full overwrite). A column typed unlike
-        its recorded type raises before anything is written."""
+        its recorded type raises before anything is written. On a manifest
+        without a recorded schema the inferred partition column types are
+        provisional, so the frame's types replace them."""
         from pyspark.sql import Observation
 
         df = self._with_bucket(df)
-        schema = _evolve_schema(
-            self._schema(mf) if mf is not None and evolve else None,
-            df.schema,
-            self.partition_by,
-        )
+        prev = self._schema(mf) if mf is not None and evolve else None
+        if prev is not None and mf.schema is None:
+            prev = T.StructType(
+                [f for f in prev.fields if f.name not in mf.partition_by]
+            )
+        schema = _evolve_schema(prev, df.schema, self.partition_by)
         next_v = (mf.version + 1) if mf else 0
         # writer-unique dir (same rule as append_arrow / dv writers): two
         # same-entity writers racing for next_v must never share a segment
@@ -1372,8 +1399,9 @@ class LakeTable:
         # applies: the folded segment holds the post-mask rows and needs no
         # dv refs of its own (other segments' refs to a folded patch dir
         # stay valid — the dir outlives the fold until vacuum)
-        merged = self._read_segments(small, self._schema(mf), keep_bucket=True)
-        seg_rel, stats, rows, fstats, schema = self._write_segment(merged, mf)
+        schema = self._schema(mf)
+        merged = self._read_segments(small, schema, keep_bucket=True)
+        seg_rel, stats, rows, fstats, _ = self._write_segment(merged, mf)
         if any(s.partitions is None for s in small):
             ownership = None  # unpartitioned append-style segments
         else:
@@ -1394,7 +1422,10 @@ class LakeTable:
                 operation="compact",
                 timestamp=time.time(),
                 metrics={"folded": len(small)},
-                schema=schema,
+                # the table's own rows, read with its schema: the schema is
+                # unchanged (still None on a manifest that predates it, so
+                # its partition types stay provisional)
+                schema=mf.schema,
             )
         )
         return [s.dir for s in small]
@@ -1661,11 +1692,22 @@ class LakeTable:
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
         schema = self._schema(mf)
-        # a key typed unlike its table column raises before the dv dir is
-        # written (mask reads type the keys from the table schema)
-        _evolve_schema(schema, keys_df.select(*keys).schema, [])
+        # mask reads type the keys from the table schema, so the dv dir
+        # stores them cast to it (an int key frame against a bigint column
+        # keeps working); a key that is no table column, or a partition
+        # column whose type is still provisional, raises before writing
+        missing = [k for k in keys if k not in schema.fieldNames()]
+        if missing:
+            raise ValueError(f"delete_keys: {missing} are not columns of {self.path}")
+        if mf.schema is None and set(keys) & set(mf.partition_by):
+            raise ValueError(
+                f"delete_keys on partition columns of {self.path} needs their types "
+                "recorded: write rows to the table first"
+            )
         dv_rel = f"data/v{mf.version + 1:05d}-dv-{uuid.uuid4().hex[:8]}"
-        keys_df.select(*keys).write.mode("overwrite").parquet(f"{self.path}/{dv_rel}")
+        keys_df.select(
+            *[F.col(k).cast(schema[k].dataType).alias(k) for k in keys]
+        ).write.mode("overwrite").parquet(f"{self.path}/{dv_rel}")
         entry = {"dir": dv_rel, "keys": list(keys), "flag": None}
         segments = [
             Segment(
@@ -1681,7 +1723,7 @@ class LakeTable:
                 segments=segments,
                 operation="delete",
                 timestamp=time.time(),
-                schema=schema,
+                schema=mf.schema,
             )
         )
 
@@ -1863,7 +1905,7 @@ class LakeTable:
                     timestamp=time.time(),
                     metrics={"restored_version": version},
                     bucketing=src.bucketing,
-                    schema=self._schema(src),
+                    schema=src.schema,
                 )
             )
         except Exception:

@@ -560,17 +560,20 @@ def test_additive_columns_from_replace_and_patch_read_typed_nulls(spark, tmp_pat
 
 
 @pytest.mark.parametrize(
-    "op", ["append", "merge_patch", "replace_partitions", "delete_keys", "no_mask_col"]
+    "op",
+    ["append", "merge_patch", "replace_partitions", "delete_unknown_key", "no_mask_col"],
 )
 def test_conflicting_column_type_raises_before_writing(spark, tmp_path, op):
     """A column typed unlike the recorded schema (or a merge_patch flag
-    column missing from the patch) raises before any data is written."""
+    column missing from the patch, or a delete_keys key that is no table
+    column) raises before any data is written."""
     path = str(tmp_path / "c")
     t = LakeTable(spark, path, partition_by=["p"])
     t.overwrite(spark.createDataFrame([(1, "a", "x")], "k long, p string, v string"))
     dirs = sorted(os.listdir(f"{path}/data"))
     bad = spark.createDataFrame([(2, "a", 5)], "k long, p string, v int")
-    with pytest.raises(ValueError, match="mask_col" if op == "no_mask_col" else "'v'"):
+    match = {"no_mask_col": "mask_col", "delete_unknown_key": "'w'"}.get(op, "'v'")
+    with pytest.raises(ValueError, match=match):
         if op == "no_mask_col":
             t.merge_patch(bad, keys=["k"], mask_col=MASK_COL)
         elif op == "append":
@@ -580,7 +583,7 @@ def test_conflicting_column_type_raises_before_writing(spark, tmp_path, op):
         elif op == "replace_partitions":
             t.replace_partitions(bad, [{"p": "a"}])
         else:
-            t.delete_keys(bad.select("v"), keys=["v"])
+            t.delete_keys(bad.select(F.col("v").alias("w")), keys=["w"])
     assert sorted(os.listdir(f"{path}/data")) == dirs  # nothing written
     assert t.latest_manifest().version == 0
     # a full overwrite replaces the schema instead
@@ -588,11 +591,33 @@ def test_conflicting_column_type_raises_before_writing(spark, tmp_path, op):
     assert dict(t.read().dtypes)["v"] == "int"
 
 
+def test_delete_keys_casts_keys_to_the_recorded_column_type(spark, tmp_path):
+    """An int key frame against a bigint key column deletes its rows: the
+    dv dir stores the keys cast to the recorded type."""
+    t = LakeTable(spark, str(tmp_path / "d"))
+    t.overwrite(spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], "k long, v string"))
+    t.delete_keys(spark.createDataFrame([(2,)], "k int"), keys=["k"])
+    assert sorted(r["k"] for r in t.read().collect()) == [1, 3]
+    assert dict(t.read().dtypes)["k"] == "bigint"
+
+
+def _strip_recorded_schemas(path):
+    """Rewrite every manifest of ``path`` as written before the schema was
+    recorded."""
+    for name in os.listdir(f"{path}/_manifest"):
+        f = f"{path}/_manifest/{name}"
+        with open(f) as fh:
+            obj = json.load(fh)
+        del obj["schema"]
+        with open(f, "w") as fh:
+            json.dump(obj, fh)
+
+
 def test_manifest_without_schema_reads_identically_and_next_commit_records_it(
     spark, tmp_path
 ):
-    """A manifest written before the schema was recorded infers it once
-    and reads the same rows; the next commit records the schema."""
+    """A manifest written before the schema was recorded infers it and
+    reads the same rows; the next commit records the schema."""
     path = str(tmp_path / "old")
     t = LakeTable(spark, path, bucket_pk="pk", n_buckets=4)
     t.overwrite(spark.createDataFrame([(_pk(i), i) for i in range(30)], "pk string, v long"))
@@ -602,13 +627,7 @@ def test_manifest_without_schema_reads_identically_and_next_commit_records_it(
     t.delete_keys(spark.createDataFrame([(_pk(2),)], "pk string"), keys=["pk"])
     before = t.read()
     expected = (before.dtypes, sorted(tuple(r) for r in before.collect()))
-    for name in os.listdir(f"{path}/_manifest"):
-        f = f"{path}/_manifest/{name}"
-        with open(f) as fh:
-            obj = json.load(fh)
-        del obj["schema"]
-        with open(f, "w") as fh:
-            json.dump(obj, fh)
+    _strip_recorded_schemas(path)
     old = LakeTable(spark, path)
     assert old.latest_manifest().schema is None
     got = old.read()
@@ -617,6 +636,77 @@ def test_manifest_without_schema_reads_identically_and_next_commit_records_it(
     recorded = old.latest_manifest().schema
     assert recorded is not None and "note" in recorded.fieldNames()
     assert old.read().count() == len(expected[1]) + 1
+
+
+def test_manifest_without_schema_takes_partition_types_from_next_write(
+    spark, tmp_path
+):
+    """On a manifest without a recorded schema, partition column types are
+    unknown (dir names only hold strings): reads return the exact dir
+    strings, and the next commit that writes rows records the frame's
+    types — a date-looking string and a bigint partition column take
+    replace_partitions and merge_patch. Commits that write no user rows
+    (compaction, restore, delete_keys) leave the schema unrecorded."""
+    path = str(tmp_path / "oldp")
+    schema = "id int, dt string, b long, v string"
+    rows = [(1, "2026-01-01", 1, "x"), (2, "2026-01-02", 2, "y"), (3, "2026-01-02", 2, "z")]
+    t = LakeTable(spark, path, partition_by=["dt", "b"])
+    t.overwrite(spark.createDataFrame(rows[:1], schema))
+    t.append(spark.createDataFrame(rows[1:], schema))
+    t.merge_patch(
+        spark.createDataFrame([(3, "2026-01-02", 2, "z", True)], f"{schema}, {MASK_COL} boolean"),
+        keys=["id"],
+        mask_col=MASK_COL,
+    )
+    v_old = t.latest_manifest().version
+    _strip_recorded_schemas(path)
+
+    def check(table, expected, b_type):
+        df = table.read()
+        assert dict(df.dtypes) == {"id": "int", "dt": "string", "b": b_type, "v": "string"}
+        got = sorted(tuple(r) for r in df.select("id", "dt", "b", "v").collect())
+        assert got == sorted(expected)
+
+    old = LakeTable(spark, path, partition_by=["dt", "b"])
+    strs = [(i, dt, str(b), v) for i, dt, b, v in rows]
+    check(old, strs, "string")
+    # inferred once per object and version: the next read is pure planning
+    _, jobs = _read_job_ids(spark, old.read)
+    assert jobs == []
+    with pytest.raises(ValueError, match="partition columns"):
+        old.delete_keys(spark.createDataFrame([("2026-01-01",)], "dt string"), keys=["dt"])
+    assert old.compact_small_segments() != []
+    old.delete_keys(spark.createDataFrame([(9,)], "id int"), keys=["id"])
+    assert old.latest_manifest().schema is None
+    check(old, strs, "string")
+
+    old.replace_partitions(
+        spark.createDataFrame([(4, "2026-01-01", 1, "w")], schema), [{"dt": "2026-01-01", "b": "1"}]
+    )
+    assert old.latest_manifest().schema["b"].dataType.simpleString() == "bigint"
+    expected = [(4, "2026-01-01", 1, "w"), (2, "2026-01-02", 2, "y"), (3, "2026-01-02", 2, "z")]
+    check(old, expected, "bigint")
+    old.merge_patch(
+        spark.createDataFrame(
+            [(2, "2026-01-02", 2, "y2", True)], f"{schema}, {MASK_COL} boolean"
+        ),
+        keys=["id"],
+        mask_col=MASK_COL,
+    )
+    expected[1] = (2, "2026-01-02", 2, "y2")
+    check(old, expected, "bigint")
+
+    # restoring a pre-upgrade version restores its unrecorded schema, and
+    # the next write records the types again
+    old.restore(v_old)
+    assert old.latest_manifest().schema is None
+    check(old, strs, "string")
+    old.merge_patch(
+        spark.createDataFrame([(1, "2026-01-01", 1, "x2", True)], f"{schema}, {MASK_COL} boolean"),
+        keys=["id"],
+        mask_col=MASK_COL,
+    )
+    check(old, [(1, "2026-01-01", 1, "x2")] + rows[1:], "bigint")
 
 
 def test_arrow_writes_record_the_schema_spark_reads(spark, tmp_path):
