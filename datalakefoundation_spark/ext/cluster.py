@@ -3,17 +3,21 @@ pair list (e.g. MinHash+LSH output), so every document gets a canonical
 cluster id (the minimum doc id in its component) and dedup can keep exactly
 one survivor per cluster instead of dropping both ends of every pair.
 
-``connected_components`` runs alternating large-star/small-star rounds
-(Kiveris et al., "Connected Components in MapReduce and Beyond", 2014 —
-public algorithm). Each round halves tree heights, so convergence is
-O(log d) rounds even on adversarial long-chain graphs; each half-round is
-one groupBy-min + one join-free projection over the edge list. No
-driver-side graph state; per-round results are ``localCheckpoint``-ed so
-the plan doesn't grow with iteration count (standard practice for
-iterative DataFrame algorithms).
+``connected_components`` is the one entry point. It checkpoints the
+canonical edge list once and picks the algorithm from its row count:
 
-``connected_components_driver`` is a driver-side union-find with the same
-output contract, for edge lists already known to be small."""
+- up to ``_DRIVER_MAX_EDGES`` edges, it collects them and labels them with
+  a driver-side union-find;
+- above that, it runs alternating large-star/small-star rounds (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", 2014 — public
+  algorithm). Each round halves tree heights, so convergence is O(log d)
+  rounds even on adversarial long-chain graphs; each half-round is one
+  groupBy-min + one join-free projection over the edge list. No
+  driver-side graph state; per-round results are ``localCheckpoint``-ed so
+  the plan doesn't grow with iteration count (standard practice for
+  iterative DataFrame algorithms).
+
+Both paths return the same rows and the same schema."""
 
 from __future__ import annotations
 
@@ -21,8 +25,15 @@ import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 logger = logging.getLogger(__name__)
+
+# Largest edge list labelled on the driver. The star loop pays ~10–25 Spark
+# jobs (a checkpoint and a convergence check per round) whatever the graph
+# size: a 260k-edge graph took 11 s with star and under 1 s with union-find.
+# Above this bound the edge list may not fit on the driver.
+_DRIVER_MAX_EDGES = 1_000_000
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -72,28 +83,25 @@ def connected_components(
     """(node, cluster_id) for every node appearing in ``pairs``;
     cluster_id = min node id in the connected component.
 
-    Large-star/small-star labeling (Kiveris et al. 2014): O(log d) rounds
-    on any graph shape, so a 10k-node path converges in ~14 rounds where
-    plain label propagation needs 10k. At fixpoint the edge set is a star
-    per component, rooted at the component minimum."""
-    edges = (
+    Graphs of at most ``_DRIVER_MAX_EDGES`` distinct edges are labelled by
+    a driver-side union-find; larger ones by large-star/small-star rounds
+    (Kiveris et al. 2014): O(log d) rounds on any graph shape, so a
+    10k-node path converges in ~14 rounds where plain label propagation
+    needs 10k. At fixpoint the edge set is a star per component, rooted at
+    the component minimum."""
+    # canonical (larger, smaller) edges, self-pairs kept so that a node
+    # seen only in a self-pair still gets its singleton row
+    canon = (
         pairs.select(
             F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
             F.least(F.col(src_col), F.col(dst_col)).alias("v"),
         )
-        .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if not edges.head(1):
-        # no real edges (pairs empty or all self-pairs): every node that
-        # appears is its own singleton cluster
-        return (
-            pairs.select(F.col(src_col).alias("node"))
-            .unionByName(pairs.select(F.col(dst_col).alias("node")))
-            .distinct()
-            .withColumn("cluster_id", F.col("node"))
-        )
+    if canon.count() <= _DRIVER_MAX_EDGES:
+        return _union_find(canon)
+    edges = canon.where(F.col("u") != F.col("v"))
     converged = False
     prev_count = edges.count()
     for _ in range(max_iter):
@@ -113,14 +121,14 @@ def connected_components(
             "labels may split components — raise max_iter", max_iter,
         )
     members = edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-    # every node appearing in pairs gets a row — components' roots and nodes
-    # whose only pair was a self-edge (dropped from the edge list) label
-    # themselves. At fixpoint every non-root points directly at its root so
-    # the min-agg is a semantic no-op; it also guarantees one row per node
-    # even when max_iter ran out mid-collapse.
+    # every node of the canonical edge list gets a row — components' roots
+    # and self-pair-only nodes label themselves. At fixpoint every non-root
+    # points directly at its root so the min-agg is a semantic no-op; it
+    # also guarantees one row per node even when max_iter ran out
+    # mid-collapse.
     all_nodes = (
-        pairs.select(F.col(src_col).alias("node"))
-        .unionByName(pairs.select(F.col(dst_col).alias("node")))
+        canon.select(F.col("u").alias("node"))
+        .unionByName(canon.select(F.col("v").alias("node")))
         .distinct()
         .withColumn("cluster_id", F.col("node"))
     )
@@ -131,23 +139,10 @@ def connected_components(
     )
 
 
-def connected_components_driver(
-    pairs: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-) -> DataFrame:
-    """Driver-side union-find over a BOUNDED edge list — same output
-    contract as ``connected_components`` ((node, cluster_id), cluster_id =
-    component minimum), built for graphs already known to be small.
-
-    The distributed ``connected_components`` pays ~10–25 Spark jobs of per-iteration overhead
-    (checkpoint + convergence count per round) regardless of graph size —
-    measured 11 s for a 260k-edge reduced graph whose union-find answer
-    costs well under a second. Callers gate on an edge-count threshold
-    (see reconcile_survivors_frontier): the collect here is control-plane
-    bounded by that gate, NOT a corpus-sized pull."""
-    src_field = pairs.schema[src_col]
-    rows = pairs.select(src_col, dst_col).collect()
+def _union_find(canon: DataFrame) -> DataFrame:
+    """Driver-side union-find over the collected canonical (u, v) edge
+    list. Every root is its component's minimum: a union hangs the larger
+    root under the smaller one."""
     parent: dict = {}
 
     def find(x):
@@ -158,30 +153,19 @@ def connected_components_driver(
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in canon.collect():
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
-            parent[ra] = rb
-    label: dict = {}
-    for node in parent:
-        root = find(node)
-        cur = label.get(root)
-        if cur is None or node < cur:
-            label[root] = node
-    out = [(node, label[find(node)]) for node in parent]
-    spark = pairs.sparkSession
-    from pyspark.sql import types as T
-
+            parent[max(ra, rb)] = min(ra, rb)
+    dtype = canon.schema["u"].dataType
     schema = T.StructType(
-        [
-            T.StructField("node", src_field.dataType),
-            T.StructField("cluster_id", src_field.dataType),
-        ]
+        [T.StructField("node", dtype), T.StructField("cluster_id", dtype)]
     )
-    return spark.createDataFrame(out, schema)
+    return canon.sparkSession.createDataFrame(
+        [(node, find(node)) for node in parent], schema
+    )
 
 
 def dedup_clusters(

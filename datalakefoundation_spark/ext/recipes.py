@@ -175,14 +175,13 @@ def clean_corpus(
 
     index_updates: DataFrame | None = None
     if near_dedup:
-        # persist the survivors feeding the iterative clustering stage:
-        # dedup_clusters' connected-components loop takes several actions
-        # over its input, and without a persist each one re-runs the
-        # whole quality/PII/exact-dedup prefix from the raw corpus
-        # (18% end-to-end at 1M docs in tools/corpus_cert.py; at cluster
-        # scale the prefix re-scan is O(corpus) per CC round vs
-        # O(survivors) with the persist). Standard persist-before-iterate;
-        # storage is the post-filter survivor set, not the raw corpus, and
+        # persist the exact-dedup survivors: the near-dup stage reads them
+        # more than once — the candidate pairs that connected_components
+        # checkpoints, the loser anti-join that keeps `cur`, and the
+        # signatures behind index_updates — and without a persist each
+        # read re-runs the whole quality/PII/exact-dedup prefix from the
+        # raw corpus (18% end-to-end at 1M docs in tools/corpus_cert.py).
+        # Storage is the post-filter survivor set, not the raw corpus, and
         # it is surfaced on CleanResult.persisted so callers can release it
         # (CleanResult.unpersist()) after materializing.
         cur = cur.persist()
@@ -487,7 +486,6 @@ def reconcile_survivors_frontier(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     band_size: int = 2,
-    driver_cc_threshold: int = 1_000_000,
     prior_banded: DataFrame | None = None,
 ) -> FrontierReconcile:
     """Frontier-bounded X54: converge streamed near-dedup output to the
@@ -509,7 +507,9 @@ def reconcile_survivors_frontier(
        label IS its component's min doc id, so the label is a faithful
        stand-in for the whole component) — the REDUCED graph's nodes are
        frontier ids + touched prior labels, sized by the churn;
-    3. run connected components on the reduced graph only;
+    3. run connected components on the reduced graph only — churn-sized,
+       so ``connected_components`` labels it on the driver unless it
+       exceeds its driver edge bound;
     4. a reduced component's new minimum over {frontier ids, prior
        labels} is the true new component minimum — every non-min member
        is a newly-bridged loser, dropped from ``survivors``;
@@ -600,18 +600,7 @@ def reconcile_survivors_frontier(
         )
         .where(F.col("doc_a") != F.col("doc_b"))
     )
-    # the reduced graph is churn-sized by construction; below the
-    # threshold, driver-side union-find skips the distributed CC's
-    # ~10-25 jobs of per-iteration overhead (measured 11 s for a
-    # 260k-edge reduced graph vs <1 s union-find). The collect is
-    # bounded by the gate; set driver_cc_threshold=0 to force the
-    # distributed path for frontier batches large enough to matter.
-    if pairs.count() <= driver_cc_threshold:
-        from datalakefoundation_spark.ext.cluster import connected_components_driver
-
-        comp = connected_components_driver(reduced).localCheckpoint(eager=True)
-    else:
-        comp = connected_components(reduced).localCheckpoint(eager=True)
+    comp = connected_components(reduced).localCheckpoint(eager=True)
     # comp nodes are prior labels and fresh ids (frontier docs / old
     # singletons). Relabel prior clusters whose minimum changed ...
     changed = comp.where(F.col("node") != F.col("cluster_id"))

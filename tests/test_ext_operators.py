@@ -532,53 +532,104 @@ def test_connected_components_chain_and_triangle(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
 
 
-def test_connected_components_long_path_converges(spark):
+@pytest.fixture
+def cc_at_bound(monkeypatch):
+    """Runs ``connected_components`` with ``_DRIVER_MAX_EDGES`` patched to
+    ``bound``; returns (row set, schema, paths taken), where a path is
+    "union_find" or "star"."""
+    from datalakefoundation_spark.ext import cluster
+
+    ran = []
+    union_find, large_star = cluster._union_find, cluster._large_star
+    monkeypatch.setattr(
+        cluster, "_union_find", lambda c: ran.append("union_find") or union_find(c)
+    )
+    monkeypatch.setattr(
+        cluster, "_large_star", lambda e: ran.append("star") or large_star(e)
+    )
+
+    def run(pairs, bound, **kwargs):
+        monkeypatch.setattr(cluster, "_DRIVER_MAX_EDGES", bound)
+        ran.clear()
+        out = cluster.connected_components(pairs, **kwargs)
+        rows = {(r["node"], r["cluster_id"]) for r in out.collect()}
+        return rows, out.schema, set(ran)
+
+    return run
+
+
+def test_connected_components_long_path_converges(spark, cc_at_bound):
     """Adversarial long-chain graph: a 10k-node path has diameter 10k, so
     label propagation would need 10k rounds — large-star/small-star must
-    collapse it to one component within its O(log d) budget (~14 rounds)."""
-    from datalakefoundation_spark.ext.cluster import connected_components
-
+    collapse it to one component within its O(log d) budget (~14 rounds).
+    The driver bound is 0 so the star path runs."""
     n = 10_000
     pairs = spark.range(n - 1).selectExpr("id AS doc_a", "id + 1 AS doc_b")
-    out = connected_components(pairs, max_iter=30)
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("cluster_id").alias("c"),
-        F.min("cluster_id").alias("m"),
-        F.max("node").alias("mx"),
-    ).head()
-    assert (agg["n"], agg["c"], agg["m"], agg["mx"]) == (n, 1, 0, n - 1)
+    rows, _, paths = cc_at_bound(pairs, 0, max_iter=30)
+    assert paths == {"star"}
+    assert rows == {(i, 0) for i in range(n)}
 
 
-def test_connected_components_star_matches_driver_union_find(spark):
-    """Property: the distributed large-star/small-star labeling equals the
-    driver-side union-find on a random graph (deterministic seed) mixing
-    chains, stars and isolated pairs."""
+def _random_graph():
+    """40 seeded components over 400 node ids, mixing chains and stars."""
     import random
-
-    from datalakefoundation_spark.ext.cluster import (
-        connected_components,
-        connected_components_driver,
-    )
 
     rng = random.Random(7)
     edges = set()
-    # 40 random components over 400 node ids
     for comp in range(40):
         base = comp * 10
         nodes = [base + i for i in range(rng.randint(2, 10))]
         for x in nodes[1:]:
             edges.add((rng.choice(nodes), x) if rng.random() < 0.5 else (x, nodes[0]))
-    pairs = spark.createDataFrame(sorted(edges), "doc_a long, doc_b long")
-    star = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components(pairs).collect()
-    }
-    driver = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components_driver(pairs).collect()
-    }
-    assert star == driver
+    return sorted(edges)
+
+
+def _components(edges):
+    """Reference labelling: (node, component minimum) by graph search."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in adj:
+        if start in label:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for y in adj[todo.pop()] - comp:
+                comp.add(y)
+                todo.append(y)
+        label.update((x, min(comp)) for x in comp)
+    return set(label.items())
+
+
+@pytest.mark.parametrize(
+    "edges, ddl",
+    [
+        (_random_graph(), "doc_a long, doc_b long"),
+        # 3 and 5 appear only in self-pairs; (8, 7) duplicates (7, 8)
+        ([(1, 2), (2, 2), (3, 3), (5, 5), (7, 8), (8, 7)], "doc_a long, doc_b long"),
+        ([(4, 4), (9, 9), (4, 4)], "doc_a long, doc_b long"),
+        ([], "doc_a long, doc_b long"),
+        ([(1, 2), (3, 2), (10, 11)], "doc_a int, doc_b long"),
+    ],
+    ids=["random", "self_pairs_mixed", "only_self_pairs", "empty", "int_long"],
+)
+def test_connected_components_star_matches_driver_union_find(
+    spark, cc_at_bound, edges, ddl
+):
+    """At the driver bound the graph is labelled by union-find, one edge
+    below it by large-star/small-star; both give the reference labels and
+    the same schema."""
+    pairs = spark.createDataFrame(edges, ddl)
+    n_edges = len({(max(a, b), min(a, b)) for a, b in edges})
+    uf_rows, uf_schema, uf_paths = cc_at_bound(pairs, n_edges)
+    star_rows, star_schema, star_paths = cc_at_bound(pairs, n_edges - 1)
+    assert uf_paths == {"union_find"}
+    assert star_paths == {"star"}
+    assert uf_rows == star_rows == _components(edges)
+    assert uf_schema == star_schema
+    assert [f.dataType.simpleString() for f in star_schema] == ["bigint", "bigint"]
 
 
 def test_dedup_clusters_planted(spark, docs):
