@@ -75,19 +75,20 @@ class Processing:
         self.check_duplicates = bool(
             self.options.get("check_duplicates", settings.get("check_duplicates", True))
         )
-        # Write mode for merge/historic runs: "cow" (default — rewrite the
-        # touched partitions/buckets, the reference's Delta copy-on-write
-        # MERGE shape) or "mor" (merge-on-read: append only the changed
-        # rows as a patch segment and mask superseded versions with a
-        # deletion-vector ref, lake_table.merge_patch). MoR writes
-        # O(changed rows) per run regardless of table size — the right
-        # trade for trickle/streaming ingestion into huge tables — at the
-        # cost of a broadcast mask join and a growing segment count on
-        # reads until auto-compaction folds the patches.
-        self.write_mode = str(
-            self.options.get("write_mode", settings.get("write_mode", "cow"))
-        ).lower()
-        if self.write_mode not in ("cow", "mor"):
+        # Write mode for merge/historic runs. Unset (the default), every run
+        # picks its path from the slice (_write_path): a merge-on-read patch
+        # (append only the changed rows as a patch segment and mask the
+        # superseded versions with a deletion-vector ref,
+        # lake_table.merge_patch) while the patches are cheap, else a
+        # rewrite of the touched partitions/buckets (the reference's Delta
+        # copy-on-write MERGE shape), which folds their patches. "cow"
+        # forces the rewrite, "mor" the patch — MoR writes O(changed rows)
+        # per run regardless of table size, at the cost of a broadcast mask
+        # join and a growing segment count on reads until auto-compaction
+        # folds the patches.
+        mode = self.options.get("write_mode", settings.get("write_mode"))
+        self.write_mode = None if mode is None else str(mode).lower()
+        if self.write_mode not in (None, "cow", "mor"):
             raise DatalakeException(f"write_mode must be cow|mor: {self.write_mode}")
         # CHECK constraints (Delta analog, rebuild addition): list of
         # {"name", "expression" (SQL boolean over post-pipeline columns),
@@ -613,16 +614,24 @@ class Processing:
         )
         # A full rewrite is also the moment a merge-only entity's layout
         # catches up with its actual size (full overwrites re-derive in
-        # _process_full; merges never do). One count() against the table is
-        # trivial next to the rewrite, and optimize() recomputes bucket ids
-        # from the new layout.
+        # _process_full; merges never do). optimize() recomputes bucket ids
+        # from the new layout. The recorded segment rows bound the live rows
+        # from above; when that bound already derives the current layout the
+        # count() job is skipped (a compacting table far below two buckets
+        # paid it on every fold).
         did_layout = False
         if not self.entity.partition_columns and self.entity.businesskeys and self._bucket_cap > 0:
-            total_rows = table.read().count()
-            if total_rows > 0:
-                n = self._derive_bucket_n(total_rows)
-                new_layout = (self.pk_name, int(n)) if n > 1 else (None, 0)
-                if new_layout != (table.bucket_pk, table.n_buckets if table.bucket_pk else 0):
+            current = (table.bucket_pk, table.n_buckets) if table.bucket_pk else (None, 0)
+
+            def layout_for(rows: int) -> tuple[str | None, int]:
+                n = self._derive_bucket_n(rows)
+                return (self.pk_name, int(n)) if n > 1 else (None, 0)
+
+            recorded = [seg.rows for seg in mf.segments]
+            if None in recorded or layout_for(sum(recorded)) != current:
+                total_rows = table.read().count()
+                new_layout = layout_for(total_rows)
+                if total_rows > 0 and new_layout != current:
                     logger.info(
                         "auto-optimize %s: re-deriving layout for %d rows -> %s",
                         self.entity.destination, total_rows, new_layout,
@@ -744,30 +753,36 @@ class Processing:
             records_in_slice=n,
             inserted=n,
             touched=n,
+            write_path="rewrite",
+            rows_written=n,
         )
 
     def _merge_like(self, historic: bool) -> ProcessingSummary:
         source = self.get_source(historic=historic)
         table = self.silver_table()
         mf = table.latest_manifest()
+        path = None
         # Layout catch-up for merge-only entities: a table created small
         # (plain directory) whose wholesale-rewrite merges have recorded a
         # grown total_rows upgrades to a bucketed layout NOW — this merge
         # rewrites every directory anyway, and merges would otherwise never
         # re-derive (full overwrites do it in _process_full).
-        if (
+        plain_keyed = (
             not self._bucketed
             and not self.entity.partition_columns
             and self.entity.businesskeys
             and self._bucket_cap > 0
             and mf is not None
-            # mor runs append a patch, never the wholesale rewrite this
-            # catch-up's premise requires — flipping the recorded layout
-            # here would leave the base segment plain forever (layout
-            # upgrades for mor tables happen in auto-optimize/optimize,
-            # which DO rewrite)
-            and self.write_mode != "mor"
-        ):
+        )
+        if plain_keyed:
+            # a plain table's path does not depend on the slice's buckets,
+            # so it is settled before the catch-up: a patch run never does
+            # the wholesale rewrite the catch-up's premise requires, and
+            # flipping the recorded layout under it would leave the base
+            # segment plain forever (layout upgrades for patched tables
+            # happen in auto-optimize/optimize, which DO rewrite)
+            path = self._write_path(table, mf, None)
+        if plain_keyed and path == "rewrite":
             known_rows = int(mf.metrics.get("total_rows", 0) or 0)
             n = self._derive_bucket_n(known_rows)
             if n > 1:
@@ -922,7 +937,14 @@ class Processing:
         # only so the observe can count them like the reference does
         # (Merge.scala:35,92,132); they never land in the table.
         op = "historic" if historic else "merge"
-        if self.write_mode == "mor":
+        if path is None:
+            touched = (
+                pvs if pvs
+                else [{BUCKET_COL: str(b)} for b in bucket_values] if bucketed
+                else None
+            )
+            path = self._write_path(table, mf, touched)
+        if path == "patch":
             # Merge-on-read: write ONLY the changed/inserted rows; the
             # passthrough rows ("keep" / "unchanged" / "historical") stay in
             # their segments and the patch's key projection masks the
@@ -946,14 +968,25 @@ class Processing:
                 .withColumn(MASK_COL, F.col("__action").isin(mask_actions))
                 .drop("__action")
             )
-            table.merge_patch(
+            prev_total = mf.metrics.get("total_rows")
+
+            def patch_metrics() -> dict:
+                counts = {
+                    k: int(v or 0) for k, v in obs.get.items() if not k.startswith("__")
+                }
+                if prev_total is None:
+                    return counts
+                # a patch adds exactly its inserts and new versions to the
+                # table, so the layout catch-up keeps an exact row count
+                added = counts.get("insert", 0) + counts.get("new_version", 0)
+                return counts | {"total_rows": int(prev_total) + added}
+
+            rows_written = table.merge_patch(
                 patch,
                 keys=keys,
                 mask_col=MASK_COL,
                 operation=op,
-                metrics_fn=lambda: {
-                    k: int(v or 0) for k, v in obs.get.items() if not k.startswith("__")
-                },
+                metrics_fn=patch_metrics,
             )
         else:
             final = state.where(F.col("__action") != "skip_delete").drop("__action")
@@ -971,7 +1004,9 @@ class Processing:
                     operation=op,
                     metrics_fn=lambda: {"total_rows": int(obs.get.get("__total_rows") or 0)},
                 )
+            rows_written = int(obs.get.get("__total_rows") or 0)
         counts = {k: (v or 0) for k, v in obs.get.items()}
+        written = {"write_path": path, "rows_written": rows_written}
         # records_in_slice is fully determined by the action counts —
         # no extra count() job over the source.
         if historic:
@@ -991,6 +1026,7 @@ class Processing:
                 deleted=counts.get("delete_close", 0),
                 inferred_deletes=counts.get("delete_close", 0),
                 touched=n,
+                **written,
             )
         # deleted = matched soft-deletes + unmatched-deleted source rows;
         # both count toward records_in_slice (Merge.scala:35,92,132)
@@ -1010,7 +1046,47 @@ class Processing:
             deleted=soft,
             inferred_deletes=counts.get("infer_delete", 0),
             touched=n,
+            **written,
         )
+
+    # A merge/SCD2 run with no write_mode writes a patch while the live
+    # patch rows of the partitions/buckets it touches, plus the slice, stay
+    # under this share of the rows a rewrite of that set would copy; past
+    # it, the run rewrites the set, which folds those patches. Cost model:
+    # a rewrite reads the set's R rows and writes them again; a patch writes
+    # ~slice rows but leaves them for every later read of the set (merge
+    # reads and user scans) to union and mask. At 1/2 a read of a patched
+    # set touches at most 1.5x its rows, and a set is rewritten at most once
+    # per R / (2 x slice) runs: a 5% slice (2k rows over 40k) folds every
+    # ~10th run, so a run writes ~0.15 R rows on average instead of R. A
+    # bound on read amplification, not fitted to a table size or workload.
+    PATCH_FRACTION = 0.5
+
+    def _write_path(self, table, mf, touched: list[dict] | None) -> str:
+        """"patch" or "rewrite" for this run's commit over ``touched`` (the
+        partition/bucket values it would rewrite; None = the whole table),
+        from numbers the run already holds: the slice's row count from the
+        bookkeeping aggregate and the manifest's recorded segment rows. No
+        Spark job. A segment owning part of the set counts the owned share
+        of its rows. A backend without ``merge_patch``, or a segment of
+        unknown size, always rewrites (the rewrite records the size)."""
+        if self.write_mode is not None:
+            return "patch" if self.write_mode == "mor" else "rewrite"
+        if not hasattr(table, "merge_patch"):
+            return "rewrite"
+        keys = None if touched is None else {tuple(sorted(pv.items())) for pv in touched}
+        rows = {False: 0.0, True: 0.0}  # base rows, live patch rows
+        for seg in mf.segments:
+            if seg.rows is None:
+                return "rewrite"
+            share = 1.0
+            if keys is not None and seg.partitions:
+                hit = sum(tuple(sorted(pv.items())) in keys for pv in seg.partitions)
+                share = hit / len(seg.partitions)
+            rows[seg.patch] += seg.rows * share
+        if rows[True] + self._slice_count < self.PATCH_FRACTION * rows[False]:
+            return "patch"
+        return "rewrite"
 
     def _process_merge(self) -> ProcessingSummary:
         if self.is_first_run():

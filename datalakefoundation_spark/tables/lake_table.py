@@ -17,8 +17,10 @@ file-provenance idea Delta's log encodes, at partition granularity.
 Why this scales:
 * Writes are never in-place: a merge writes ONLY the touched partitions
   into a fresh segment directory and commits a new manifest — identical
-  I/O shape to Delta's copy-on-write MERGE. A crash before the commit
-  leaves only an unreferenced dir (``gc_orphans``).
+  I/O shape to Delta's copy-on-write MERGE — or only its changed rows as
+  a flat patch segment that masks the versions it supersedes
+  (``merge_patch``). A crash before the commit leaves only an
+  unreferenced dir (``gc_orphans``).
 * Reads prune: the per-segment partition filter is an ordinary predicate
   on hive partition directories, so Spark's partition discovery skips
   non-owned directories entirely (no data I/O).
@@ -43,7 +45,7 @@ import json
 import re
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -101,6 +103,13 @@ class Segment:
     # segments resurface; reads apply all entries as one version-keyed
     # mask (LakeTable._read_segments).
     dv: list[dict] = field(default_factory=list)
+    # True for a merge-on-read patch (merge_patch). A patch stores its
+    # bucket/partition columns as data in files directly under its dir (no
+    # hive subdirs) and records its ownership from the values it wrote, so
+    # every live patch joins the one batched plain read and the one batched
+    # mask read, whatever the table layout. Old manifests read False: their
+    # patches are hive segments and read as such.
+    patch: bool = False
 
 
 @dataclass
@@ -137,6 +146,7 @@ class Manifest:
                         "files": s.files,
                         "dv": s.dv,
                         "owns_all": s.owns_all,
+                        "patch": s.patch,
                     }
                     for s in self.segments
                 ],
@@ -164,6 +174,7 @@ class Manifest:
                     files=s.get("files"),
                     dv=list(s.get("dv") or []),
                     owns_all=bool(s.get("owns_all", False)),
+                    patch=bool(s.get("patch", False)),
                 )
                 for s in obj.get("segments", [])
             ],
@@ -292,11 +303,13 @@ def _dir_version(rel_dir: str) -> int:
 
 def _path_version() -> Column:
     """Per-row commit version parsed from the segment dir inside
-    ``_metadata.file_path``: the greedy '.*' pins the LAST '/data/vNNNNN'
+    ``_metadata.file_path``: the five digits after the LAST '/data/v'
     occurrence, which is this table's segment dir regardless of hive-subdir
-    depth (bucketed/partitioned segments nest one level deeper)."""
-    return F.regexp_extract(
-        F.col("_metadata.file_path"), r".*/data/v(\d{5})", 1
+    depth (bucketed/partitioned segments nest one level deeper). A plain
+    substring search, not a backtracking regex: it runs on every row of
+    every masked read."""
+    return F.substring(
+        F.substring_index(F.col("_metadata.file_path"), "/data/v", -1), 1, 5
     ).cast("long")
 
 
@@ -571,6 +584,9 @@ class LakeTable:
         # LakeTable._schema's inferred schemas of manifests that predate the
         # recorded one, by version
         self._inferred_schemas: dict[int, T.StructType | None] = {}
+        # and, per such version, the partition column types its patch files
+        # hold as data (LakeTable._patch_types)
+        self._inferred_patch_types: dict[int, dict[str, T.DataType]] = {}
         # Control-plane I/O (manifests, dir listings, vacuum) goes through a
         # filesystem abstraction: LocalFS for bare paths, the JVM Hadoop
         # FileSystem for scheme-qualified URIs (hdfs://, s3a://, file://...).
@@ -689,6 +705,7 @@ class LakeTable:
             return mf.schema
         if mf.version not in self._inferred_schemas:
             data = None
+            patch_types: dict[str, T.DataType] = {}
             for s in mf.segments:
                 seg = self.spark.read.parquet(f"{self.path}/{s.dir}").schema
                 data = _evolve_schema(
@@ -696,6 +713,11 @@ class LakeTable:
                     T.StructType([f for f in seg.fields if f.name not in mf.partition_by]),
                     [],
                 )
+                if s.patch:
+                    patch_types.update(
+                        (f.name, f.dataType) for f in seg.fields if f.name in mf.partition_by
+                    )
+            self._inferred_patch_types[mf.version] = patch_types
             self._inferred_schemas[mf.version] = None if data is None else T.StructType(
                 data.fields
                 + [
@@ -706,6 +728,16 @@ class LakeTable:
                 ]
             )
         return self._inferred_schemas[mf.version]
+
+    def _patch_types(self, mf: Manifest) -> dict[str, T.DataType]:
+        """Partition columns whose type in patch files differs from the
+        provisional one ``_schema`` gives a manifest without a recorded
+        schema: a patch stores them as data, typed as written, so reads
+        take them at that type and cast. Empty when the schema is
+        recorded (call after ``_schema``)."""
+        if mf.schema is not None:
+            return {}
+        return self._inferred_patch_types.get(mf.version, {})
 
     def _commit(self, manifest: Manifest) -> None:
         """Atomic compare-and-swap commit: the version file is created with
@@ -800,16 +832,24 @@ class LakeTable:
 
     # ------------------------------------------------------------ segment io
     def _write_segment(
-        self, df: DataFrame, mf: Manifest | None, evolve: bool = True
-    ) -> tuple[str, dict | None, int, dict | None, T.StructType]:
+        self, df: DataFrame, mf: Manifest | None, evolve: bool = True,
+        patch: bool = False,
+    ) -> tuple[Segment, T.StructType]:
         """Write one immutable segment for the commit that follows ``mf``
-        (the manifest the caller read); returns (relative dir, per-column
-        min/max stats or None, row count, per-file stats or None, the table
-        schema that commit records). The dir name carries that commit's
-        version, which the deletion-vector mask relies on. Segment stats +
-        count are collected with ``df.observe`` DURING the write action — no
-        second pass; file stats come from the written footers (metadata-only
-        reads).
+        (the manifest the caller read); returns the new ``Segment`` (dir,
+        ownership, per-column min/max stats, row count, per-file stats) and
+        the table schema that commit records. The dir name carries that
+        commit's version, which the deletion-vector mask relies on. Segment
+        stats + count are collected with ``df.observe`` DURING the write
+        action — no second pass; file stats come from the written footers
+        (metadata-only reads).
+
+        Ownership (``partitions``) is None on an unpartitioned table. A hive
+        segment lists it from its partition dirs. A ``patch`` segment is
+        written flat — bucket/partition columns as data, moved last like
+        hive discovery places them, rebalanced into few files instead of
+        shuffled into bucket dirs — and its ownership is the distinct values
+        the same observation saw.
 
         The recorded schema is the written frame's (bucket, partition and
         mask columns included) — added to ``mf``'s schema when ``evolve``,
@@ -819,7 +859,21 @@ class LakeTable:
         provisional, so the frame's types replace them."""
         from pyspark.sql import Observation
 
-        df = self._with_bucket(df)
+        if not patch:
+            df = self._with_bucket(df)
+        else:
+            if self.partition_by:
+                if self.bucket_pk and BUCKET_COL not in df.columns:
+                    df = df.withColumn(BUCKET_COL, bucket_expr(self.bucket_pk, self.n_buckets))
+                df = df.select(
+                    *[c for c in df.columns if c not in self.partition_by],
+                    *self.partition_by,
+                )
+            # a patch's few rows come from every task of the plan that found
+            # them; rebalanced to advisory-size partitions they land as one
+            # file per ~64 MB instead of one per task, so every later read
+            # of the patch opens that many files, not more
+            df = df.hint("rebalance")
         prev = self._schema(mf) if mf is not None and evolve else None
         if prev is not None and mf.schema is None:
             prev = T.StructType(
@@ -845,13 +899,19 @@ class LakeTable:
         for c in stat_cols:
             aggs.append(F.min(F.col(c)).alias(f"mn_{c}"))
             aggs.append(F.max(F.col(c)).alias(f"mx_{c}"))
+        flat_owned = patch and bool(self.partition_by)
+        if flat_owned:
+            aggs.append(
+                F.collect_set(
+                    F.struct(*[F.col(c).cast("string").alias(c) for c in self.partition_by])
+                ).alias("__pvs")
+            )
         df = df.observe(obs, *aggs)
         writer = df.write.mode("overwrite")
-        if self.partition_by:
+        if self.partition_by and not patch:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(f"{self.path}/{seg_rel}")
         got = obs.get
-        rows = int(got["__n"] or 0)
         stats = None
         if stat_cols:
             stats = {}
@@ -859,7 +919,17 @@ class LakeTable:
                 mn, kind_mn = _encode_stat(got[f"mn_{c}"])
                 mx, kind_mx = _encode_stat(got[f"mx_{c}"])
                 stats[c] = {"min": mn, "max": mx, "t": kind_mn or kind_mx or "str"}
-        return seg_rel, stats, rows, self._collect_file_stats(seg_rel), schema
+        if flat_owned:
+            partitions = [pv.asDict() for pv in got["__pvs"]]
+        elif self.partition_by:
+            partitions = self._read_segment_partitions(seg_rel)
+        else:
+            partitions = None
+        seg = Segment(
+            seg_rel, partitions, stats=stats, rows=int(got["__n"] or 0),
+            files=self._collect_file_stats(seg_rel), patch=patch,
+        )
+        return seg, schema
 
     def _partition_values(self, df: DataFrame) -> list[dict[str, str]]:
         """Distinct partition values present in df (Processing.scala:144-156).
@@ -939,7 +1009,8 @@ class LakeTable:
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
         return self._read_segments(
-            mf.segments, self._schema(mf), keep_bucket, prune_spec
+            mf.segments, self._schema(mf), keep_bucket, prune_spec,
+            self._patch_types(mf),
         )
 
     def _read_segments(
@@ -948,10 +1019,12 @@ class LakeTable:
         schema: T.StructType,
         keep_bucket: bool,
         prune_spec=None,
+        patch_types: dict[str, T.DataType] | None = None,
     ) -> DataFrame:
         """The rows of ``all_segs`` with their deletion vectors applied —
         the one segment-reading path, shared by ``read`` and
-        ``compact_small_segments``.
+        ``compact_small_segments``. ``patch_types`` (``_patch_types``)
+        retypes partition columns of the batched patch read.
 
         Every reader is planned from the table ``schema``, so building the
         frame starts no schema-inference job (only Spark's parallel file
@@ -960,20 +1033,24 @@ class LakeTable:
         as a typed NULL, and partition values keep the written column types
         instead of re-inferred ones.
 
-        Deletion vectors apply as ONE broadcast join after the union,
-        against a mask table keyed by commit version (``_dv_masks``): a
-        row is dropped when its key is masked by an entry newer than its
-        segment. That equals applying each segment's own dv list: an entry
-        created at commit d is attached to exactly the segments in the
-        manifest at d — all of which have version < d — and never to later
-        segments (re-inserted keys resurface). Segment versions are
-        monotone in commit order and encoded in the dir names, so "entry
-        attached to seg" <=> "d > seg_version", and masking by
-        ``max(d) per key > seg_version`` reproduces every list exactly —
-        for any subset of one manifest's segments. The global join costs
-        one small build regardless of patch count, where per-segment
-        anti-joins build O(live patches^2) broadcast exchanges (measured
-        0.5 s -> 19.6 s over 32 patches at 2M rows)."""
+        Deletion vectors apply as ONE broadcast anti join per key set after
+        the union, against the mask rows ``(keys, d)`` of every entry
+        (``_dv_masks``): a row is dropped when its key is masked by an entry
+        newer than its segment (``d > seg_version``). That equals applying
+        each segment's own dv list: an entry created at commit d is
+        attached to exactly the segments in the manifest at d — all of
+        which have version < d — and never to later segments (re-inserted
+        keys resurface). Segment versions are monotone in commit order and
+        encoded in the dir names, so "entry attached to seg" <=> "d >
+        seg_version", which reproduces every list exactly — for any subset
+        of one manifest's segments. The global join costs one small build
+        regardless of patch count, where per-segment anti-joins build
+        O(live patches^2) broadcast exchanges (measured 0.5 s -> 19.6 s
+        over 32 patches at 2M rows). The mask rows are broadcast as read:
+        grouping them to one max version per key first, for a left join
+        keeping rows whose max is not newer, cost a shuffle stage and
+        2.4–2.9 s of CPU per read against 1.5–2.0 s for the anti join (40k
+        rows in 10 buckets plus 4 patches, 4 cores)."""
         if not all_segs:
             raise FileNotFoundError(f"LakeTable has no segments: {self.path}")
         segs = list(all_segs)
@@ -993,18 +1070,21 @@ class LakeTable:
         # The table schema covers additively-evolved segments: files
         # without a column read it as a typed NULL.
         # Per-segment reads remain where the semantics are per-segment:
-        # partition/bucket ownership filters (seg.partitions) and
-        # stats-pruned partial file lists. Batched rows take the commit
-        # version the mask join needs from _metadata.file_path instead of
-        # a per-segment literal.
+        # partition/bucket ownership filters of hive segments
+        # (seg.partitions) and stats-pruned partial file lists. Batched rows
+        # take the commit version the mask join needs from
+        # _metadata.file_path instead of a per-segment literal.
         parts: list[DataFrame] = []
-        # two homogeneous batches: hive-layout segments (bucket/partition
-        # subdirs) cannot share one multi-path read with plain segments
-        # (Spark rejects conflicting directory structures)
-        batched_plain: list[str] = []
-        batched_hive: list[str] = []
+        # Every batched root is a dir of files without hive subdirs — plain
+        # segments, patches (flat whatever the layout) and the leaf bucket
+        # dirs of bucketed segments — so one multi-path read takes them all
+        # (hive discovery under mixed roots would conflict). A patch that
+        # lost ownership keeps its rows filtered there by its commit
+        # version (unique per data segment in a manifest).
+        batched: list[str] = []
+        restricted: list[tuple[int, list[dict[str, str]]]] = []
         for seg in segs:
-            seg_v = _dir_version(seg.dir) if masks else None
+            seg_v = _dir_version(seg.dir) if masks or seg.patch else None
             base = f"{self.path}/{seg.dir}"
             whole_dir = True
             if prune_spec is not None and seg.files:
@@ -1043,16 +1123,19 @@ class LakeTable:
                 # partitioned tables always read per-segment: their
                 # partition VALUES live in the dir names.
                 seg.partitions is None
+                or seg.patch
                 or (
                     seg.owns_all
                     and not keep_bucket
                     and self.partition_by == [BUCKET_COL]
                 )
             ):
-                if seg.partitions is None:
-                    batched_plain.append(base)
+                if seg.partitions is None or seg.patch:
+                    batched.append(base)
+                    if seg.partitions is not None and not seg.owns_all:
+                        restricted.append((seg_v, seg.partitions))
                 else:
-                    batched_hive.extend(
+                    batched.extend(
                         f"{base}/{d}"
                         for d in self.fs.listdir(base)
                         if d.startswith(f"{BUCKET_COL}=")
@@ -1066,12 +1149,19 @@ class LakeTable:
             if masks:
                 df = df.withColumn(SEG_V_COL, F.lit(seg_v).cast("long"))
             parts.append(df)
-        for batched_dirs in (batched_plain, batched_hive):
-            if not batched_dirs:
-                continue
-            bdf = self.spark.read.schema(schema).parquet(*batched_dirs)
-            if masks:
+        if batched:
+            types = patch_types or {}
+            bdf = self.spark.read.schema(
+                T.StructType(
+                    [T.StructField(f.name, types.get(f.name, f.dataType)) for f in schema.fields]
+                )
+            ).parquet(*batched)
+            for c in types:
+                bdf = bdf.withColumn(c, F.col(c).cast(schema[c].dataType))
+            if masks or restricted:
                 bdf = bdf.withColumn(SEG_V_COL, _path_version())
+            for v, pvs in restricted:
+                bdf = bdf.where((F.col(SEG_V_COL) != v) | self._partition_filter(pvs))
             parts.insert(0, bdf)
         if not parts:
             # everything pruned: no rows, the table's columns
@@ -1080,21 +1170,13 @@ class LakeTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         for keys, mask in masks.items():
-            cond = None
+            cond = F.col(DV_V_COL) > F.col(SEG_V_COL)
             for k in keys:
                 # rows from segments predating an evolved key column read
                 # NULL -> no match -> kept
-                c = F.col(k) == F.col(f"__dv_{k}")
-                cond = c if cond is None else (cond & c)
+                cond = cond & (F.col(k) == F.col(f"__dv_{k}"))
             mask = mask.select(*[F.col(k).alias(f"__dv_{k}") for k in keys], DV_V_COL)
-            out = (
-                out.join(F.broadcast(mask), cond, "left")
-                .where(
-                    F.col(DV_V_COL).isNull()
-                    | (F.col(DV_V_COL) <= F.col(SEG_V_COL))
-                )
-                .drop(DV_V_COL, *[f"__dv_{k}" for k in keys])
-            )
+            out = out.join(F.broadcast(mask), cond, "left_anti")
         # the bucket/mask columns are internal regardless of this instance's
         # config (e.g. a reader constructed with bucketing disabled on a
         # bucketed table must not leak them as data columns)
@@ -1104,7 +1186,8 @@ class LakeTable:
         self, entries: list[dict], schema: T.StructType
     ) -> dict[tuple, DataFrame]:
         """One mask table per key set over deletion-vector ``entries``:
-        ``(keys..., __dlf_dv_v = max commit version masking that key)``.
+        ``(keys..., __dlf_dv_v = a commit version masking that key)``, a
+        row per masking entry (a key masked twice has two rows).
 
         A key's masking version is its entry's commit version, parsed from
         the entry dir's name, unless the dir persists a per-key
@@ -1128,11 +1211,11 @@ class LakeTable:
             # ONE multi-path read per (keys, flag) group — a reader per
             # entry made every live patch its own relation (O(patches) plan
             # nodes on exactly the trickle-ingest path that accumulates
-            # patches fastest). Bucketed patch dirs expand to their
-            # __dlf_bucket leaf dirs: multi-root reads reject mixed/hive
-            # structures, and leaf roots need no partition discovery. Dirs
-            # with any OTHER hive structure (real-partitioned patches —
-            # multi-level nesting, values live in dir names) read alone via
+            # patches fastest). Patches are flat dirs; hive-layout patch
+            # dirs of older manifests expand to their __dlf_bucket leaf
+            # dirs (multi-root reads reject mixed/hive structures, and leaf
+            # roots need no partition discovery), and real-partitioned ones
+            # (multi-level nesting, values live in dir names) read alone via
             # single-root hive discovery instead of joining the batch.
             paths: list[str] = []
             reads: list[DataFrame] = []
@@ -1160,7 +1243,7 @@ class LakeTable:
             u = frames[0]
             for f in frames[1:]:
                 u = u.unionByName(f)
-            masks[keys] = u.groupBy(*keys).agg(F.max(DV_V_COL).alias(DV_V_COL))
+            masks[keys] = u
         return masks
 
     # ------------------------------------------------------------ write ops
@@ -1182,40 +1265,14 @@ class LakeTable:
         full = not dynamic or not self.partition_by or mf is None
         # a full overwrite replaces the schema; a dynamic one keeps the
         # other partitions' segments, so it evolves the schema instead
-        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf, not full)
+        new, schema = self._write_segment(df, mf, not full)
         if metrics_fn is not None:
             metrics = {**(metrics or {}), **metrics_fn()}
         next_v = (mf.version + 1) if mf else 0
         if full:
-            segments = [
-                Segment(
-                    seg_rel,
-                    None if not self.partition_by else self._read_segment_partitions(seg_rel),
-                    stats=stats,
-                    rows=rows,
-                    files=fstats,
-                )
-            ]
+            segments = [new]
         else:
-            new_pvs = self._read_segment_partitions(seg_rel)
-            new_keys = {_pv_key(pv) for pv in new_pvs}
-            segments = []
-            for seg in mf.segments:
-                if seg.partitions is None:
-                    continue  # fully replaced below is wrong; but unpartitioned+dynamic can't happen
-                kept = [pv for pv in seg.partitions if _pv_key(pv) not in new_keys]
-                if kept:
-                    # dv refs MUST survive partition handoff: the kept rows
-                    # are still masked by any later patches/deletes —
-                    # dropping the refs would resurrect superseded versions
-                    segments.append(
-                        Segment(
-                            seg.dir, kept, stats=seg.stats, rows=seg.rows,
-                            files=seg.files, dv=list(seg.dv or []),
-                            owns_all=seg.owns_all and len(kept) == len(seg.partitions),
-                        )
-                    )
-            segments.append(Segment(seg_rel, new_pvs, stats=stats, rows=rows, files=fstats))
+            segments = self._without_partitions(mf.segments, new.partitions) + [new]
         self._commit(
             Manifest(
                 version=next_v,
@@ -1400,12 +1457,14 @@ class LakeTable:
         # dv refs of its own (other segments' refs to a folded patch dir
         # stay valid — the dir outlives the fold until vacuum)
         schema = self._schema(mf)
-        merged = self._read_segments(small, schema, keep_bucket=True)
-        seg_rel, stats, rows, fstats, _ = self._write_segment(merged, mf)
+        merged = self._read_segments(
+            small, schema, keep_bucket=True, patch_types=self._patch_types(mf)
+        )
+        folded, _ = self._write_segment(merged, mf)
         if any(s.partitions is None for s in small):
-            ownership = None  # unpartitioned append-style segments
+            folded.partitions = None  # unpartitioned append-style segments
         else:
-            ownership = [pv for s in small for pv in s.partitions]
+            folded.partitions = [pv for s in small for pv in s.partitions]
         kept = [s for s in mf.segments if s not in small]
         # Coalesce surviving deletion-vector refs: a kept base segment
         # still needs its masks (its rows stay superseded), but one ref PER
@@ -1417,8 +1476,7 @@ class LakeTable:
             Manifest(
                 version=mf.version + 1,
                 partition_by=self.partition_by,
-                segments=kept
-                + [Segment(seg_rel, ownership, stats=stats, rows=rows, files=fstats)],
+                segments=kept + [folded],
                 operation="compact",
                 timestamp=time.time(),
                 metrics={"folded": len(small)},
@@ -1432,18 +1490,9 @@ class LakeTable:
 
     def append(self, df: DataFrame, metrics: dict | None = None) -> None:
         mf = self.latest_manifest()
-        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf)
+        new, schema = self._write_segment(df, mf)
         next_v = (mf.version + 1) if mf else 0
-        segments = list(mf.segments) if mf else []
-        segments.append(
-            Segment(
-                seg_rel,
-                None if not self.partition_by else self._read_segment_partitions(seg_rel),
-                stats=stats,
-                rows=rows,
-                files=fstats,
-            )
-        )
+        segments = (list(mf.segments) if mf else []) + [new]
         self._commit(
             Manifest(
                 version=next_v,
@@ -1519,36 +1568,16 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf)
+        new, schema = self._write_segment(df, mf)
         # Rows may land outside the requested partitions (a merge that updates
         # a partition column). Those extra partitions get co-owned by the new
         # segment so the rows stay visible (matches the reference's Delta
         # behavior where a partition-moving update inserts alongside the old
         # row); the old owners are NOT dropped for them.
-        written = {_pv_key(pv): pv for pv in self._read_segment_partitions(seg_rel)}
         requested = {_pv_key(pv) for pv in partition_values}
-        extra = [pv for k, pv in written.items() if k not in requested]
-        partition_values = list(partition_values) + extra
-        replaced = requested
-        segments = []
-        for seg in mf.segments:
-            if seg.partitions is None:
-                continue  # unpartitioned tables replace wholesale via overwrite()
-            kept = [pv for pv in seg.partitions if _pv_key(pv) not in replaced]
-            if kept:
-                # same dv-preservation rule as dynamic overwrite above: a
-                # CoW merge after MoR patches must not resurrect the rows
-                # those patches (or delete_keys) masked in KEPT partitions
-                segments.append(
-                    Segment(
-                        seg.dir, kept, stats=seg.stats, rows=seg.rows,
-                        files=seg.files, dv=list(seg.dv or []),
-                        owns_all=seg.owns_all and len(kept) == len(seg.partitions),
-                    )
-                )
-        segments.append(
-            Segment(seg_rel, partition_values, stats=stats, rows=rows, files=fstats)
-        )
+        extra = [pv for pv in new.partitions if _pv_key(pv) not in requested]
+        new.partitions = list(partition_values) + extra
+        segments = self._without_partitions(mf.segments, partition_values) + [new]
         self._commit(
             Manifest(
                 version=mf.version + 1,
@@ -1560,6 +1589,31 @@ class LakeTable:
                 schema=schema,
             )
         )
+
+    @staticmethod
+    def _without_partitions(
+        segments: list[Segment], pvs: list[dict[str, str]]
+    ) -> list[Segment]:
+        """``segments`` after a commit takes over ownership of ``pvs``: each
+        keeps the partitions it still owns, and one left owning nothing
+        drops out. Whole-table segments (``partitions`` None) cannot occur
+        on a partitioned table. The dv refs MUST survive the handoff: kept
+        rows are still masked by later patches/deletes, and dropping the
+        refs would resurrect superseded versions."""
+        drop = {_pv_key(pv) for pv in pvs}
+        out = []
+        for seg in segments:
+            if seg.partitions is None:
+                continue
+            kept = [pv for pv in seg.partitions if _pv_key(pv) not in drop]
+            if kept:
+                out.append(
+                    replace(
+                        seg, partitions=kept, dv=list(seg.dv or []),
+                        owns_all=seg.owns_all and len(kept) == len(seg.partitions),
+                    )
+                )
+        return out
 
     def merge_patch(
         self,
@@ -1583,6 +1637,12 @@ class LakeTable:
         reads) marks which patch rows mask an old version — inserts mask
         nothing, and excluding them keeps the DV exact. Returns the patch
         row count; an empty patch commits nothing (the state is unchanged).
+
+        The patch is written flat on every layout (``Segment.patch``): its
+        bucket/partition columns are data, and it owns the values it holds,
+        so a later ``replace_partitions`` of those values takes them over
+        (folding the patch) exactly as for a hive segment, while reads take
+        every live patch in one batched relation.
         """
         mf = self.latest_manifest()
         if mf is None:
@@ -1592,31 +1652,17 @@ class LakeTable:
             raise ValueError(
                 f"merge_patch mask_col {mask_col!r} is not a column of the patch"
             )
-        seg_rel, stats, rows, fstats, schema = self._write_segment(df, mf)
-        if rows == 0:
-            self.fs.delete_tree(f"{self.path}/{seg_rel}")
+        new, schema = self._write_segment(df, mf, patch=True)
+        if new.rows == 0:
+            self.fs.delete_tree(f"{self.path}/{new.dir}")
             if metrics_fn is not None:
                 metrics_fn()  # evaluate observers so callers can read counts
             return 0
         if metrics_fn is not None:
             metrics = {**(metrics or {}), **metrics_fn()}
-        entry = {"dir": seg_rel, "keys": list(keys), "flag": mask_col}
-        segments = [
-            Segment(
-                s.dir, s.partitions, stats=s.stats, rows=s.rows, files=s.files,
-                dv=list(s.dv or []) + [entry], owns_all=s.owns_all,
-            )
-            for s in mf.segments
-        ]
-        segments.append(
-            Segment(
-                seg_rel,
-                None if not self.partition_by else self._read_segment_partitions(seg_rel),
-                stats=stats,
-                rows=rows,
-                files=fstats,
-            )
-        )
+        entry = {"dir": new.dir, "keys": list(keys), "flag": mask_col}
+        segments = [replace(s, dv=list(s.dv or []) + [entry]) for s in mf.segments]
+        segments.append(new)
         self._commit(
             Manifest(
                 version=mf.version + 1,
@@ -1628,7 +1674,7 @@ class LakeTable:
                 schema=schema,
             )
         )
-        return rows
+        return new.rows
 
     def _coalesce_dv_refs(
         self, segments: list[Segment], next_version: int, schema: T.StructType
@@ -1665,20 +1711,14 @@ class LakeTable:
                     # version: the merged dir must not widen any key's
                     # mask window
                     rel = f"data/v{next_version:05d}-dv-{uuid.uuid4().hex[:8]}"
-                    self._dv_masks(es, schema)[keys].write.mode("overwrite").parquet(
-                        f"{self.path}/{rel}"
-                    )
+                    self._dv_masks(es, schema)[keys].groupBy(*keys).agg(
+                        F.max(DV_V_COL).alias(DV_V_COL)
+                    ).write.mode("overwrite").parquet(f"{self.path}/{rel}")
                     new_entries.append(
                         {"dir": rel, "keys": list(keys), "flag": None}
                     )
                 merged_cache[sig] = new_entries
-            out.append(
-                Segment(
-                    s.dir, s.partitions, stats=s.stats, rows=s.rows,
-                    files=s.files, dv=list(merged_cache[sig]),
-                    owns_all=s.owns_all,
-                )
-            )
+            out.append(replace(s, dv=list(merged_cache[sig])))
         return out
 
     def delete_keys(self, keys_df: DataFrame, keys: Sequence[str]) -> None:
@@ -1709,13 +1749,7 @@ class LakeTable:
             *[F.col(k).cast(schema[k].dataType).alias(k) for k in keys]
         ).write.mode("overwrite").parquet(f"{self.path}/{dv_rel}")
         entry = {"dir": dv_rel, "keys": list(keys), "flag": None}
-        segments = [
-            Segment(
-                s.dir, s.partitions, stats=s.stats, rows=s.rows, files=s.files,
-                dv=list(s.dv or []) + [entry], owns_all=s.owns_all,
-            )
-            for s in mf.segments
-        ]
+        segments = [replace(s, dv=list(s.dv or []) + [entry]) for s in mf.segments]
         self._commit(
             Manifest(
                 version=mf.version + 1,
@@ -1893,14 +1927,7 @@ class LakeTable:
                 Manifest(
                     version=cur.version + 1,
                     partition_by=list(src.partition_by),
-                    segments=[
-                        Segment(
-                            s.dir, s.partitions, stats=s.stats, rows=s.rows,
-                            files=s.files, dv=list(s.dv or []),
-                            owns_all=s.owns_all,
-                        )
-                        for s in src.segments
-                    ],
+                    segments=[replace(s, dv=list(s.dv or [])) for s in src.segments],
                     operation="restore",
                     timestamp=time.time(),
                     metrics={"restored_version": version},

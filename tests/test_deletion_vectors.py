@@ -188,7 +188,7 @@ def test_dv_mask_join_broadcasts_once(spark, table):
         )
     plan = table.read()._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 1
-    assert "LeftOuter, BuildRight" in plan
+    assert "LeftAnti, BuildRight" in plan
     assert "BroadcastNestedLoop" not in plan
 
 
@@ -309,8 +309,8 @@ def test_compaction_plan_has_one_mask_join_per_key_set(
     spark, table, monkeypatch, n_patches
 ):
     """Compaction reads through the same version-keyed mask as read():
-    one broadcast mask join per key set however many patches fold, and
-    no per-segment anti-joins."""
+    one broadcast anti join per key set however many patches fold, not
+    one per segment."""
     for i in range(n_patches):
         table.merge_patch(
             _patch(spark, {i: 10 * i}, {700 + i: i}), keys=["pk"], mask_col=MASK_COL
@@ -327,8 +327,8 @@ def test_compaction_plan_has_one_mask_join_per_key_set(
     monkeypatch.setattr(table, "_write_segment", capture)
     assert len(table.compact_small_segments(small_rows=10_000)) == n_patches + 1
     plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftAnti" not in plan
-    assert plan.count("LeftOuter") == 1, plan[:3000]
+    assert plan.count("LeftAnti") == 1, plan[:3000]
+    assert "LeftOuter" not in plan
     assert _state(table) == before
 
 
@@ -436,3 +436,41 @@ def test_random_ops_match_model(spark, tmp_path, layout):
         got = sorted((r["pk"], r["vfrom"], r["val"]) for r in t.read().collect())
         assert got == sorted((*k, v) for k, v in model.items()), f"step {step}: {op}"
         history[t.latest_manifest().version] = dict(model)
+
+
+def _file_scans(df) -> int:
+    """Parquet scan leaves in ``df``'s physical plan."""
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+
+
+@pytest.mark.parametrize("layout", ["bucketed", "partitioned"])
+def test_patch_read_plan_size_independent_of_live_patches(spark, tmp_path, layout):
+    """Patches on bucketed and partitioned tables are flat segments: all
+    live patches read through the one batched plain relation and their
+    keys through the one batched mask relation, so the merge-read plan has
+    as many parquet scans with 5 live patches as with 1 (per-segment hive
+    reads grew it by two scans per patch). Rows stay exact."""
+    bucketed = layout == "bucketed"
+    t = LakeTable(
+        spark, str(tmp_path / layout),
+        **({"bucket_pk": "pk", "n_buckets": 4} if bucketed else {"partition_by": ["p"]}),
+    )
+
+    def with_p(df):
+        return df if bucketed else df.withColumn("p", F.col("val") % 3)
+
+    t.overwrite(with_p(_base(spark, n=200)))
+    expected = {_pk(i): i for i in range(200)}
+    scans = {}
+    for i in range(5):
+        t.merge_patch(
+            with_p(_patch(spark, {i: 1000 + i}, {500 + i: 500 + i})),
+            keys=["pk"], mask_col=MASK_COL,
+        )
+        expected |= {_pk(i): 1000 + i, _pk(500 + i): 500 + i}
+        df = t.read(keep_bucket=bucketed)
+        scans[i + 1] = _file_scans(df)
+        assert {r["pk"]: r["val"] for r in df.collect()} == expected
+    base, *patches = t.latest_manifest().segments
+    assert not base.patch and all(s.patch and s.partitions for s in patches)
+    assert scans[1] == scans[5], scans

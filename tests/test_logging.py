@@ -100,7 +100,7 @@ def test_summary_written_even_at_warn_level(spark, tmp_path):
     )
     summary = ProcessingSummary(
         entity_id=1, destination="person", strategy="merge",
-        records_in_slice=42, inserted=42,
+        records_in_slice=42, inserted=42, write_path="patch", rows_written=42,
     )
     mgr.log_summary(summary)
     mgr.flush()
@@ -109,6 +109,7 @@ def test_summary_written_even_at_warn_level(spark, tmp_path):
     assert rows[0]["data_type"] == "ProcessingSummary"
     data = _payload(rows[0]["data"])
     assert data["records_in_slice"] == 42
+    assert (data["write_path"], data["rows_written"]) == ("patch", 42)
     assert rows[0]["run_id"] == summary.run_id
 
 

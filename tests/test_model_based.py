@@ -29,6 +29,12 @@ TIMES = [
 VALUE_COLS = ("SeqNr", "name", "data")
 
 
+def _mode_opts(mode: str) -> dict:
+    """Run options for a write mode; "auto" leaves write_mode unset, so
+    each run picks patch or rewrite itself."""
+    return {} if mode == "auto" else {"write_mode": mode}
+
+
 def _gen_history(seed: int) -> list[list[dict]]:
     rng = random.Random(seed)
     slices = []
@@ -142,7 +148,7 @@ def _merge_model_with_inference(slices: list[list[dict]]) -> dict[int, dict]:
 
 
 # seeds chosen so the model infers >=2 deletions (non-vacuous windows)
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["cow", "mor", "auto"])
 @pytest.mark.parametrize("seed", [1, 28, 32])
 def test_merge_delete_inference_matches_reference_model(
     spark, lake_root, prefix, seed, mode
@@ -157,7 +163,7 @@ def test_merge_delete_inference_matches_reference_model(
         )
         p = Processing(
             spark, md, 1, f"s{i}.parquet",
-            {"processing.time": TIMES[i], "write_mode": mode},
+            {"processing.time": TIMES[i], **_mode_opts(mode)},
         )
         p.process("merge")
 
@@ -260,7 +266,7 @@ def _scd2_model(slices: list[list[dict]], sentinel: str) -> dict[tuple, dict]:
     }
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["cow", "mor", "auto"])
 @pytest.mark.parametrize("seed", [5, 31])
 def test_scd2_history_matches_reference_model(spark, lake_root, prefix, seed, mode):
     from datalakefoundation_spark import pipeline as P
@@ -276,7 +282,7 @@ def test_scd2_history_matches_reference_model(spark, lake_root, prefix, seed, mo
         write_slice(spark, md, f"s{i}.parquet", rows)
         p = Processing(
             spark, md, 1, f"s{i}.parquet",
-            {"processing.time": TIMES[i], "write_mode": mode},
+            {"processing.time": TIMES[i], **_mode_opts(mode)},
         )
         p.process("historic")
 
@@ -311,7 +317,7 @@ def test_scd2_history_matches_reference_model(spark, lake_root, prefix, seed, mo
     assert all(n == 1 for n in per_key.values())
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["cow", "mor", "auto"])
 @pytest.mark.parametrize("seed", [11, 23, 47])
 def test_merge_history_matches_reference_model(spark, lake_root, prefix, seed, mode):
     md = make_metadata(lake_root, prefix)
@@ -327,7 +333,7 @@ def test_merge_history_matches_reference_model(spark, lake_root, prefix, seed, m
         write_slice(spark, md, f"s{i}.parquet", out_rows)
         p = Processing(
             spark, md, 1, f"s{i}.parquet",
-            {"processing.time": TIMES[i], "write_mode": mode},
+            {"processing.time": TIMES[i], **_mode_opts(mode)},
         )
         p.process("merge")
 
@@ -351,3 +357,84 @@ def test_merge_history_matches_reference_model(spark, lake_root, prefix, seed, m
             "lastSeen": row["lastSeen"],
         }
         assert actual == exp, f"seed {seed}, ID {id_}: {actual} != {exp}"
+
+
+def _long_metadata(root: str, prefix: str, shape: str):
+    """A bucketed delete_missing merge entity, or an SCD2 entity partitioned
+    by a calculated day column."""
+    import json
+
+    from datalakefoundation_spark.metadata.models import Metadata
+    from datalakefoundation_spark.metadata.sources import StringMetadataSettings
+
+    columns = [{"name": "ID", "fieldroles": ["businesskey"]}]
+    settings = {"delete_missing": True}
+    if shape == "day_scd2":
+        columns.append({
+            "name": "", "newname": "Day", "fieldroles": ["calculated", "partition"],
+            "expression": "date_add(to_date('2026-01-01'), CAST(ID % 3 AS INT))",
+        })
+        settings = {}
+    entity = {
+        "id": 1, "name": "person", "enabled": True, "connection": "testconn",
+        "processtype": "historic" if shape == "day_scd2" else "merge",
+        "watermark": [{"column_name": "SeqNr", "operation": "and",
+                       "operation_group": 0, "expression": "'${last_value}'"}],
+        "columns": columns, "settings": settings, "transformations": [],
+    }
+    config = {
+        "environment": {"name": "TEST", "timezone": "UTC", "root_folder": root,
+                        "systemfield_prefix": prefix, "output": "paths"},
+        "connections": [{"name": "testconn", "enabled": True, "settings": {}}],
+        "entities": [entity],
+    }
+    return Metadata(StringMetadataSettings().initialize(json.dumps(config)))
+
+
+@pytest.mark.parametrize("shape", ["bucketed_merge", "day_scd2"])
+def test_auto_write_path_folds_and_matches_cow(spark, lake_root, prefix, shape):
+    """A seeded history long enough to cross the patch/rewrite fold: with
+    write_mode unset, runs patch while the touched set's live patch rows
+    plus the slice stay under Processing.PATCH_FRACTION of its rows, then
+    rewrite it (folding the patches), and patch again. The table must
+    equal the forced copy-on-write table row for row, both paths must run,
+    and the live segment count must stay bounded by the fold."""
+    rng = random.Random(7)
+    n_keys, n_slices, slice_rows = 60, 12, 6
+    history = [[
+        {"ID": k, "SeqNr": k, "name": f"n{k}", "data": "d0"} for k in range(n_keys)
+    ]]
+    for i in range(1, n_slices):
+        history.append([
+            {"ID": k, "SeqNr": rng.randint(0, 60 + 6 * i),
+             "name": f"n{rng.randint(0, 4)}", "data": f"d{i}"}
+            for k in sorted(rng.sample(range(n_keys + 3 * i), slice_rows))
+        ])
+    opts = {"bucketing.rows_per_bucket": 15} if shape == "bucketed_merge" else {}
+    tables, paths, live = {}, [], []
+    for mode in ("auto", "cow"):
+        md = _long_metadata(f"{lake_root}/{mode}", prefix, shape)
+        for i, rows in enumerate(history):
+            write_slice(spark, md, f"s{i}.parquet", rows)
+            p = Processing(
+                spark, md, 1, f"s{i}.parquet",
+                {"processing.time": f"2026-01-{i + 1:02d} 00:00:00",
+                 **opts, **_mode_opts(mode)},
+            )
+            summary = p.process()
+            if mode == "auto":
+                paths.append(summary.write_path)
+                live.append(len(p.silver_table().latest_manifest().segments))
+        df = p.silver_table().read()
+        tables[mode] = sorted(
+            tuple(r) for r in df.select(*sorted(df.columns)).collect()
+        )
+    if shape == "bucketed_merge":
+        assert p.silver_table().latest_manifest().bucketing["n"] == 4
+    assert tables["auto"] == tables["cow"]
+    # bootstrap is a full load; later runs must take both paths, a
+    # rewrite following a patch (the fold)
+    assert paths[0] == "rewrite"
+    assert any(a == "patch" and b == "rewrite" for a, b in zip(paths[1:], paths[2:])), paths
+    assert paths.count("patch") >= 4, paths
+    assert max(live) <= 8, live

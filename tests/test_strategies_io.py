@@ -324,7 +324,7 @@ def test_partitioned_merge_prunes(spark, lake_root, prefix):
     for r in rows2:
         r["data"] += "_v2"
     write_slice(spark, md, "s2.parquet", rows2)
-    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1})
+    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1, "write_mode": "cow"})
     summary = p2.process()
     assert summary.updated == 5
     out = silver(p2)
@@ -363,7 +363,7 @@ def test_unpartitioned_merge_bucket_cow(spark, lake_root, prefix):
 
     rows2 = [dict(rows_v1(50)[7], data="changed")]
     write_slice(spark, md, "s2.parquet", rows2)
-    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1})
+    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1, "write_mode": "cow"})
     summary = p2.process()
     assert summary.updated == 1
     mf2 = table.latest_manifest()
@@ -431,7 +431,7 @@ def test_full_overwrite_rederives_bucket_layout(spark, lake_root, prefix):
     # merge against the upgraded layout prunes to touched buckets
     rows3 = [dict(rows_v1(20)[3], data="changed")]
     write_slice(spark, md, "s3.parquet", rows3)
-    p3 = Processing(spark, md, 1, "s3.parquet", {"processing.time": T2})
+    p3 = Processing(spark, md, 1, "s3.parquet", {"processing.time": T2, "write_mode": "cow"})
     assert p3._bucketed and p3.n_buckets == 5
     p3.process("merge")
     mf3 = p3.silver_table().latest_manifest()
@@ -487,7 +487,7 @@ def test_merge_rederives_layout_once_table_grows(spark, lake_root, prefix):
     the wholesale-rewrite merge rebuilds every directory anyway, so it is
     the catch-up moment (full overwrites re-derive separately)."""
     md = make_metadata(lake_root, prefix)
-    opts = {"bucketing.rows_per_bucket": 10}
+    opts = {"bucketing.rows_per_bucket": 10, "write_mode": "cow"}
     write_slice(spark, md, "s1.parquet", rows_v1(5))
     p1 = Processing(spark, md, 1, "s1.parquet", {"processing.time": T0, **opts})
     p1.process("merge")  # first run -> divert to full, 5 rows -> unbucketed
@@ -809,7 +809,7 @@ def test_auto_optimize_compacts_after_threshold(spark, tmp_path):
     )
     p = Processing(
         spark, md, 1, "s1.parquet",
-        {"processing.time": T1, "maintenance.auto_optimize": 1},
+        {"processing.time": T1, "maintenance.auto_optimize": 1, "write_mode": "cow"},
     )
     p.process()
     table = p.silver_table()
