@@ -38,18 +38,18 @@ from datalakefoundation_spark.ext.util import (
 # The crossover where hashing the corpus-distinct vocabulary beats hashing
 # per occurrence depends on the REPETITION RATIO (occurrences / vocabulary),
 # which no zero-job signal can see — so each floor is set where the vocab
-# plan won on BOTH measured geometries (tools/vocab_hash_probe.py on
-# local[32]): verbatim-replicated sf0.1 docs (vocabulary constant — the
-# boilerplate-heavy web-corpus shape) AND token-salted sf1 replicas
+# plan won on BOTH measured geometries (the vocab-hashing probe on
+# local[32], last in the tree at commit 4dd3b77): verbatim-replicated
+# sf0.1 docs (vocabulary constant — the boilerplate-heavy web-corpus
+# shape) AND token-salted sf1 replicas
 # (vocabulary grows with the corpus — the distinct-documents shape).
 # Measured crossovers (plain-scan-estimate terms; OPTIMIZATION_r11.md has
 # the full table): hashed features ~2-10 MiB geometry-dependent, >=2.2x win
 # above; simhash ~8-40 MiB, 1.1-1.6x above; minhash ~8-80 MiB, ~1.1x above.
 # Every floor is far above the driver SFs (sf0.1 documents estimate
-# ~0.25 MiB) and the sf1 scale point (~2.5 MiB), so the bench keeps the
-# per-occurrence plan; one env var overrides all three (a corpus whose
-# repetition ratio is known can also just pass hash_distinct explicitly).
-HASH_DISTINCT_ENV = "SPARK_GRAFT_HASH_DISTINCT_MIN_BYTES"
+# ~0.25 MiB) and the sf1 scale point (~2.5 MiB), so those keep the
+# per-occurrence plan (a corpus whose repetition ratio is known can pass
+# hash_distinct explicitly).
 HASH_DISTINCT_FLOOR = 16 * 1024 * 1024  # hashed_feature_entries
 SIMHASH_DISTINCT_FLOOR = 48 * 1024 * 1024
 MINHASH_DISTINCT_FLOOR = 64 * 1024 * 1024
@@ -144,22 +144,19 @@ def minhash_signature(
     the cost of one extra (map-side-deduped) distinct stage. The vocab
     side also carries the 8 long slices, so the occurrence stream pays
     only a join probe + 8-long map-side mins. Measured (r11, local[32],
-    tools/vocab_hash_probe.py): ~1.1-1.15x faster above ~17M shingle
-    occurrences on the constant-vocabulary geometry and ~even by ~43M on
-    the growing-vocabulary one; a small fixed loss below — the win is
+    vocab-hashing probe at commit 4dd3b77): ~1.1-1.15x faster above ~17M
+    shingle occurrences on the constant-vocabulary geometry and ~even by
+    ~43M on the growing-vocabulary one; a small fixed loss below — the win is
     modest here because the direct path's HashAggregate is already cheap.
 
     ``None`` (default, r11) resolves by the optimizer's input-size
-    estimate (``size_adaptive_flag``; floor ``MINHASH_DISTINCT_FLOOR`` /
-    ``$SPARK_GRAFT_HASH_DISTINCT_MIN_BYTES``, set where BOTH measured
-    geometries favored vocab): per-occurrence below the floor, vocab at
-    scale or on unknown size. Both branches are bit-identical
-    (equivalence-tested), so the pick never changes a result, only the
-    plan.
+    estimate (``size_adaptive_flag``; floor ``MINHASH_DISTINCT_FLOOR``,
+    set where BOTH measured geometries favored vocab): per-occurrence
+    below the floor, vocab at scale or on unknown size. Both branches are
+    bit-identical (equivalence-tested), so the pick never changes a
+    result, only the plan.
     """
-    hash_distinct = size_adaptive_flag(
-        df, hash_distinct, HASH_DISTINCT_ENV, MINHASH_DISTINCT_FLOOR
-    )
+    hash_distinct = size_adaptive_flag(df, hash_distinct, MINHASH_DISTINCT_FLOOR)
     # Explode + groupBy rather than k array_min(transform(...)) columns:
     # Catalyst's CollapseProject would inline the shingle construction into
     # every hash column (k-fold recompute); the explode computes shingles
@@ -463,9 +460,10 @@ def simhash(
     tested). It trades one extra (tiny, map-side-deduped) distinct stage
     for hashing vocab-many rows instead of occurrence-many — a win
     wherever occurrences outnumber the vocabulary enough to amortize the
-    stage. Measured (r11, local[32], tools/vocab_hash_probe.py — these
-    supersede the pre-r11 crossover notes, which predate the packed-lane
-    and hash-aggregate work that made the direct path cheaper): on
+    stage. Measured (r11, local[32], vocab-hashing probe at commit
+    4dd3b77 — these supersede the pre-r11 crossover notes, which predate
+    the packed-lane and hash-aggregate work that made the direct path
+    cheaper): on
     constant-vocabulary replication the vocab path wins ~1.1x above ~17M
     token occurrences; on growing-vocabulary (token-salted sf1) replicas
     it wins 1.56x at ~43M occurrences (12.2 s vs 7.8 s) but LOSES below
@@ -473,18 +471,15 @@ def simhash(
     alone.
 
     ``None`` (default, r11) resolves by the optimizer's input-size
-    estimate (``size_adaptive_flag``; floor ``SIMHASH_DISTINCT_FLOOR`` /
-    ``$SPARK_GRAFT_HASH_DISTINCT_MIN_BYTES``, set where BOTH measured
-    geometries favored vocab): per-occurrence below the floor, vocab at
-    scale or on unknown size, and the pick never changes a result
-    (bit-identical, equivalence-tested).
+    estimate (``size_adaptive_flag``; floor ``SIMHASH_DISTINCT_FLOOR``,
+    set where BOTH measured geometries favored vocab): per-occurrence
+    below the floor, vocab at scale or on unknown size, and the pick never
+    changes a result (bit-identical, equivalence-tested).
 
     The bit-string representation avoids 64-bit signed-integer pitfalls and
     is directly comparable across engines.
     """
-    hash_distinct = size_adaptive_flag(
-        df, hash_distinct, HASH_DISTINCT_ENV, SIMHASH_DISTINCT_FLOOR
-    )
+    hash_distinct = size_adaptive_flag(df, hash_distinct, SIMHASH_DISTINCT_FLOOR)
     # Cap tokens per doc so the packed lane sums below cannot overflow
     # (4 x 16-bit lanes per long: safe to 2^15 tokens; also bounds worst-case
     # compute per document — a desirable property at 100 TB regardless).

@@ -180,7 +180,8 @@ def clean_corpus(
         # checkpoints, the loser anti-join that keeps `cur`, and the
         # signatures behind index_updates — and without a persist each
         # read re-runs the whole quality/PII/exact-dedup prefix from the
-        # raw corpus (18% end-to-end at 1M docs in tools/corpus_cert.py).
+        # raw corpus (18% end-to-end at 1M docs, measured by the corpus
+        # certification probe last in the tree at commit 4dd3b77).
         # Storage is the post-filter survivor set, not the raw corpus, and
         # it is surfaced on CleanResult.persisted so callers can release it
         # (CleanResult.unpersist()) after materializing.
@@ -209,8 +210,9 @@ def clean_corpus(
             # already-kept earlier survivors are not retracted (measured
             # 0.9% excess at 1M docs, tools/stream_ingest_probe.py; a
             # periodic doc-level dedup compaction reconciles). Asserted
-            # in tools/corpus_cert.py, tests/test_ext_operators.py, and
-            # the subset/excess identities in tools/stream_ingest_probe.
+            # in tests/test_ext_operators.py and the subset/excess
+            # identities in tools/stream_ingest_probe.py (and at 1M docs
+            # by the corpus certification probe at commit 4dd3b77).
             from datalakefoundation_spark.ext.cluster import connected_components
             from datalakefoundation_spark.ext.dedup import incremental_lsh_candidates
 

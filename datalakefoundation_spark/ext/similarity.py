@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -40,7 +39,6 @@ from pyspark.sql.window import Window
 from datalakefoundation_spark.ext.dedup import cosine_similarity
 from datalakefoundation_spark.ext.util import (
     ensure_compute_parallelism,
-    plan_size_bytes,
     size_adaptive_flag,
 )
 
@@ -403,17 +401,12 @@ def _id_is_integral(df: DataFrame, id_col: str) -> bool:
 # + bool masks -> the 8M default keeps a chunk under ~80 MB at ANY bucket
 # width). A bucket at or below the chunk size runs exactly the old
 # single-block code path.
-_BLOCKED_CHUNK_CELLS_ENV = "SPARK_GRAFT_BLOCKED_CHUNK_CELLS"
-_BLOCKED_CHUNK_CELLS_DEFAULT = 8_000_000
+# Read at plan build time on the driver; the kernels close over the value.
+_BLOCKED_CHUNK_CELLS = 8_000_000
 
-
-def _blocked_chunk_cells() -> int:
-    """Cell budget per chunk, resolved at PLAN BUILD time on the driver
-    (worker processes inherit the env captured at JVM start, so reading it
-    inside the kernel would be stale); the kernels close over the value."""
-    return int(
-        os.environ.get(_BLOCKED_CHUNK_CELLS_ENV, str(_BLOCKED_CHUNK_CELLS_DEFAULT))
-    )
+# Input-size floor (bytes, plan-build-time estimate) above which the ANN
+# operators take the blocked kernels (``_resolve_blocked``).
+_LSH_BLOCKED_MIN_BYTES = 4 * 1024 * 1024
 
 
 def _id_cast_back(out: DataFrame, src: DataFrame, id_col: str, cols) -> DataFrame:
@@ -442,11 +435,11 @@ def _resolve_blocked(df: DataFrame, id_col: str, blocked: bool | None) -> bool:
     schema ``id long``), so a string/decimal id would crash mid-job with an
     opaque pandas cast error (r12, ADVICE r11). ``None`` picks blocked iff
     the optimizer's plan-build-time size estimate reaches
-    ``SPARK_GRAFT_LSH_BLOCKED_MIN_BYTES`` (default 4 MiB; unknown size
-    chooses blocked — the scale-safe side) AND the id column is integral —
-    non-integral ids silently keep the per-pair form, whose output
-    preserves the id type at any scale, instead of making the crash/type
-    outcome depend on a size estimate. Integral-but-narrower ids (int,
+    ``_LSH_BLOCKED_MIN_BYTES`` (4 MiB; unknown size chooses blocked — the
+    scale-safe side) AND the id column is integral — non-integral ids
+    silently keep the per-pair form, whose output preserves the id type at
+    any scale, instead of making the crash/type outcome depend on a size
+    estimate. Integral-but-narrower ids (int,
     short) are fine: callers cast the blocked output back to the input id
     type so both forms return the same schema."""
     if blocked is not None:
@@ -459,11 +452,7 @@ def _resolve_blocked(df: DataFrame, id_col: str, blocked: bool | None) -> bool:
         return bool(blocked)
     if not _id_is_integral(df, id_col):
         return False
-    floor = int(
-        os.environ.get("SPARK_GRAFT_LSH_BLOCKED_MIN_BYTES", str(4 * 1024 * 1024))
-    )
-    est = plan_size_bytes(df)
-    return est is None or est >= floor
+    return size_adaptive_flag(df, None, _LSH_BLOCKED_MIN_BYTES)
 
 
 def _banded_pairs_scored_blocked(
@@ -520,7 +509,7 @@ def _banded_pairs_scored_blocked(
         "*", F.explode(_band_key_array(bands, planes_per_band)).alias("__bk")
     )
     ppb = int(planes_per_band)
-    chunk_cells = _blocked_chunk_cells()
+    chunk_cells = _BLOCKED_CHUNK_CELLS
     cap = None if max_bucket_width is None else int(max_bucket_width)
     is_ordered = bool(ordered)
 
@@ -937,7 +926,7 @@ def _ivf_pairs_scored_blocked(
     sequence, so cosines are bit-identical, not approximately equal
     (pinned in tests/test_ann_blocked.py::test_ivf_topk_blocked_identical)."""
     kk = int(k)
-    chunk_cells = _blocked_chunk_cells()
+    chunk_cells = _BLOCKED_CHUNK_CELLS
 
     def _score(qp: pd.DataFrame, cp: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -1077,7 +1066,7 @@ def _ivf_pq_adc_blocked(
     B = np.asarray(codebooks, dtype=np.float64)
     m, _k, sub = B.shape
     rr = int(rerank)
-    chunk_cells = _blocked_chunk_cells()
+    chunk_cells = _BLOCKED_CHUNK_CELLS
 
     def _score(qp: pd.DataFrame, cp: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -1204,7 +1193,7 @@ def ivf_topk(
       (cheaper while cells are small; the r11-measured per-group-overhead
       crossover is the same as ``lsh_topk``'s).
     * ``None`` (default) — size-adaptive on the optimizer's input-size
-      estimate, same ``SPARK_GRAFT_LSH_BLOCKED_MIN_BYTES`` floor as
+      estimate, same ``_LSH_BLOCKED_MIN_BYTES`` floor as
       ``lsh_topk`` (guide §3 pick-by-size; core-count-independent).
       Unknown size chooses blocked (scale-safe)."""
     blocked = _resolve_blocked(df, id_col, blocked)
@@ -1240,11 +1229,6 @@ def ivf_topk(
     if blocked:
         out = _id_cast_back(out, df, id_col, ("query_id", "neighbor_id"))
     return out
-
-
-# moved to ext.util (shared with the dedup vocab-hash knobs); the module-
-# level name stays for existing callers/tests
-_plan_size_bytes = plan_size_bytes
 
 
 def lsh_topk(
@@ -1286,8 +1270,8 @@ def lsh_topk(
       buckets at sf0.1 cost the blocked form ~0.4 s of per-group pandas
       overhead against ~73k candidate pairs whose Arrow bytes are trivial).
     * ``None`` (default) — size-adaptive: blocked iff the optimizer's
-      input-size estimate reaches ``SPARK_GRAFT_LSH_BLOCKED_MIN_BYTES``
-      (default 4 MiB — above every driver SF, below sf1's ~8 MiB; the
+      input-size estimate reaches ``_LSH_BLOCKED_MIN_BYTES``
+      (4 MiB — above every driver SF, below sf1's ~8 MiB; the
       guide §3 "pick the strategy by size" rule, data-dependent and
       core-count-independent). Unknown size chooses blocked (scale-safe;
       ``_resolve_blocked`` — non-integral ids keep the per-pair form).
@@ -1346,7 +1330,7 @@ def _semantic_flags_blocked(
     reference prefix is the same lowest-id member set (ids are unique by
     contract, so sorting ids equals the per-pair form's struct sort)."""
     thr = float(threshold)
-    chunk_cells = _blocked_chunk_cells()
+    chunk_cells = _BLOCKED_CHUNK_CELLS
     cap = None if max_cluster_width is None else int(max_cluster_width)
 
     def _flags(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1692,7 +1676,7 @@ def ivf_pq_topk(
       small — the same measured per-group-overhead crossover as
       ``lsh_topk``'s).
     * ``None`` (default) — size-adaptive on the optimizer's input-size
-      estimate, same ``SPARK_GRAFT_LSH_BLOCKED_MIN_BYTES`` floor as the
+      estimate, same ``_LSH_BLOCKED_MIN_BYTES`` floor as the
       other ANN paths. Unknown size chooses blocked (scale-safe;
       ``_resolve_blocked`` — non-integral ids keep the per-pair form)."""
     blocked = _resolve_blocked(df, id_col, blocked)
@@ -1940,21 +1924,18 @@ def hashed_feature_entries(
     distinct stage for hashing vocab-many rows instead of
     occurrence-many; sha256+conv per occurrence dominates this operator,
     so the win is the biggest of the three vocab knobs. Measured (r11,
-    local[32], tools/vocab_hash_probe.py): 1.8-2.1x above ~2M occurrences
-    on constant-vocabulary replication, 2.2-2.7x above ~11M on
+    local[32], vocab-hashing probe at commit 4dd3b77): 1.8-2.1x above ~2M
+    occurrences on constant-vocabulary replication, 2.2-2.7x above ~11M on
     growing-vocabulary (token-salted sf1) replicas — and a loss below
     ~3M there, so the floor sits where BOTH geometries favored vocab.
     ``None`` (default) resolves by the optimizer's input-size estimate
-    (floor ``dedup.HASH_DISTINCT_FLOOR`` /
-    ``$SPARK_GRAFT_HASH_DISTINCT_MIN_BYTES``); unknown size chooses the
-    vocab path (scale-safe).
+    (floor ``dedup.HASH_DISTINCT_FLOOR``); unknown size chooses the vocab
+    path (scale-safe).
     Output: (id_col, bucket, weight)."""
-    from .dedup import HASH_DISTINCT_ENV, HASH_DISTINCT_FLOOR, shingles
+    from .dedup import HASH_DISTINCT_FLOOR, shingles
     from .text import tokens
 
-    hash_distinct = size_adaptive_flag(
-        df, hash_distinct, HASH_DISTINCT_ENV, HASH_DISTINCT_FLOOR
-    )
+    hash_distinct = size_adaptive_flag(df, hash_distinct, HASH_DISTINCT_FLOOR)
     unit = (
         tokens(text_col) if ngram <= 1 else shingles(text_col, ngram)
     )

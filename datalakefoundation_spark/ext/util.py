@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
@@ -53,18 +51,15 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return None if est >= (1 << 62) else est
 
 
-def size_adaptive_flag(
-    df: DataFrame, flag: bool | None, env_var: str, default_floor: int
-) -> bool:
+def size_adaptive_flag(df: DataFrame, flag: bool | None, floor: int) -> bool:
     """Resolve a tri-state strategy knob by input size (guide §3.1 "pick
     the strategy by size"): an explicit True/False wins; ``None`` picks
     True iff the optimizer's plan-build-time size estimate for ``df``
-    reaches the floor (``env_var`` overrides ``default_floor`` bytes).
-    Unknown size chooses True — every caller's True branch is its
-    scale-safe form. Data-dependent and core-count-independent, so the
-    driver's low-core re-run takes the same path."""
+    reaches ``floor`` bytes. Unknown size chooses True — every caller's
+    True branch is its scale-safe form. Data-dependent and
+    core-count-independent, so the driver's low-core re-run takes the same
+    path."""
     if flag is not None:
         return bool(flag)
-    floor = int(os.environ.get(env_var, str(default_floor)))
     est = plan_size_bytes(df)
     return est is None or est >= floor

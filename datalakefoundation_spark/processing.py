@@ -760,7 +760,14 @@ class Processing:
     def _merge_like(self, historic: bool) -> ProcessingSummary:
         source = self.get_source(historic=historic)
         table = self.silver_table()
+        # the manifest this run plans from: the target is read at its
+        # version and the commit takes the next one (``base=mf``), so a
+        # writer that commits in between fails this run's compare-and-swap
+        # instead of having its rows replaced by a state computed without
+        # them
         mf = table.latest_manifest()
+        if mf is None:
+            raise FileNotFoundError(f"silver table does not exist: {table.path}")
         path = None
         # Layout catch-up for merge-only entities: a table created small
         # (plain directory) whose wholesale-rewrite merges have recorded a
@@ -772,7 +779,6 @@ class Processing:
             and not self.entity.partition_columns
             and self.entity.businesskeys
             and self._bucket_cap > 0
-            and mf is not None
         )
         if plain_keyed:
             # a plain table's path does not depend on the slice's buckets,
@@ -799,10 +805,8 @@ class Processing:
         # Bucket-level CoW only applies when every live segment declares its
         # buckets (a table created before bucketing was enabled has a
         # None-partitioned segment and must be rewritten wholesale once).
-        bucketed = (
-            self._bucketed
-            and mf is not None
-            and all(seg.partitions is not None for seg in mf.segments)
+        bucketed = self._bucketed and all(
+            seg.partitions is not None for seg in mf.segments
         )
         # Delete inference must see every target row (a slice-missing row can
         # live in any bucket), so an active delete window forces a full read
@@ -812,7 +816,7 @@ class Processing:
         # the window predicate resolves on the target side, so validate its
         # columns against the target schema (additive bronze drift must skip
         # the new column, not crash the merge)
-        target_probe = table.read(keep_bucket=bucketed)
+        target_probe = table.read(version=mf.version, keep_bucket=bucketed)
         window = (
             self.delete_window(target=target_probe) if self.delete_missing else None
         )
@@ -857,7 +861,7 @@ class Processing:
                 target = target_probe
             else:
                 bucketed = False
-                target = table.read(keep_bucket=False)
+                target = table.read(version=mf.version, keep_bucket=False)
         else:
             target = target_probe
         if bucketed and BUCKET_COL not in target.columns:
@@ -987,22 +991,25 @@ class Processing:
                 mask_col=MASK_COL,
                 operation=op,
                 metrics_fn=patch_metrics,
+                base=mf,
             )
         else:
             final = state.where(F.col("__action") != "skip_delete").drop("__action")
             if pvs:
-                table.replace_partitions(final, pvs, operation=op)
+                table.replace_partitions(final, pvs, operation=op, base=mf)
             elif bucketed:
                 table.replace_partitions(
                     final,
                     [{BUCKET_COL: str(b)} for b in bucket_values],
                     operation=op,
+                    base=mf,
                 )
             else:
                 table.overwrite(
                     final,
                     operation=op,
                     metrics_fn=lambda: {"total_rows": int(obs.get.get("__total_rows") or 0)},
+                    base=mf,
                 )
             rows_written = int(obs.get.get("__total_rows") or 0)
         counts = {k: (v or 0) for k, v in obs.get.items()}

@@ -29,7 +29,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,15 +36,6 @@ from pyspark.sql import functions as F
 _logger = logging.getLogger(__name__)
 
 from datalakefoundation_spark.pipeline import VALID_TO_SENTINEL, ts_lit  # noqa: F401
-
-
-@dataclass
-class MergeResult:
-    """Post-run state + the ProcessingSummary metric fields
-    (log/DatalakeLogManager.scala:13-38)."""
-
-    state: DataFrame
-    metrics: dict[str, int] = field(default_factory=dict)
 
 
 def _nvl_pick(cond: Column, a: Column, b: Column) -> Column:

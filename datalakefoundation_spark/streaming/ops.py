@@ -462,8 +462,8 @@ def salted_stream_stream_join(
     (``hot_keys=None``) pays ×salt_buckets right-side state on ALL keys to
     fix a skew only the heavy hitters have; with a hot list, right-state
     overhead drops to ×(1 + (salt_buckets-1)·hot_share) — plain-level
-    state with salted-level wall (measured head-to-head in
-    tools/stream_state_probe.py legs join_salted vs join_salted_hot).
+    state with salted-level wall (measured head-to-head by the stream-state
+    probe at commit 4dd3b77, legs join_salted vs join_salted_hot).
     Detect the list with ``detect_hot_keys`` over a calibration window, or
     pass it statically. Row-identity holds for any list — a key's rows
     meet exactly once whether salted or not — so a stale calibration

@@ -15,14 +15,19 @@ tested property.
 REQUIRED surface (what Processing actually calls on the write path):
 
 * ``exists() -> bool``
-* ``read(version=None, keep_bucket=False, ...) -> DataFrame``
+* ``read(version=None, keep_bucket=False, ...) -> DataFrame`` — at least
+  the latest manifest's ``version`` must be accepted (a merge reads the
+  target at the version it plans from).
 * ``overwrite(df, dynamic=False, metrics=None, operation=None,
-  metrics_fn=None)`` — full or dynamic-partition overwrite; MUST execute
-  the plan (it is the run's single action: ``df.observe`` metrics and
-  ``metrics_fn`` results only exist after it) and MUST call ``metrics_fn``
-  after that action.
-* ``replace_partitions(df, partition_values, metrics=None, operation=...)``
-  — copy-on-write of exactly the named partitions.
+  metrics_fn=None, base=None)`` — full or dynamic-partition overwrite; MUST
+  execute the plan (it is the run's single action: ``df.observe`` metrics
+  and ``metrics_fn`` results only exist after it) and MUST call
+  ``metrics_fn`` after that action.
+* ``replace_partitions(df, partition_values, metrics=None, operation=...,
+  base=None)`` — copy-on-write of exactly the named partitions.
+* Both commit on ``base`` (the manifest the caller planned from; None =
+  the latest) and MUST raise ``ConcurrentCommitException`` when another
+  commit landed after it.
 * ``latest_manifest() -> manifest | None`` with ``.metrics: dict``,
   ``.segments: list`` (each with ``.partitions: dict | None``) and
   ``.version: int``.
@@ -47,6 +52,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from datalakefoundation_spark.core.exceptions import ConcurrentCommitException
 
 
 @dataclass
@@ -121,9 +128,9 @@ class MemoryBackend:
         st = self._store
         if st is None:
             raise FileNotFoundError(f"MemoryBackend table does not exist: {self.path}")
-        # keep_bucket is meaningless (never bucketed); version/time travel
-        # are optional capabilities this backend does not offer
-        if version is not None or as_of_timestamp is not None:
+        # keep_bucket is meaningless (never bucketed); time travel to an
+        # older version is an optional capability this backend does not offer
+        if (version is not None and version != st["version"]) or as_of_timestamp is not None:
             raise NotImplementedError("MemoryBackend has no time travel")
         return self.spark.createDataFrame(st["rows"], st["schema"])
 
@@ -144,11 +151,17 @@ class MemoryBackend:
         return out
 
     # ------------------------------------------------------------- write
-    def _commit(self, df: DataFrame, metrics: dict | None, operation: str, metrics_fn) -> None:
+    def _commit(
+        self, df: DataFrame, metrics: dict | None, operation: str, metrics_fn, base
+    ) -> None:
         rows = df.collect()  # THE action — populates observe metrics
         if metrics_fn is not None:
             metrics = {**(metrics or {}), **metrics_fn()}
         prev = self._store
+        if base is not None and (prev is None or prev["version"] != base.version):
+            raise ConcurrentCommitException(
+                f"{self.path} changed after version {base.version}"
+            )
         self._STORES[self.path] = {
             "rows": rows,
             "schema": df.schema,
@@ -165,6 +178,7 @@ class MemoryBackend:
         metrics: dict | None = None,
         operation: str | None = None,
         metrics_fn=None,
+        base: MemManifest | None = None,
     ) -> None:
         if dynamic and self.partition_by and self.exists():
             # dynamic partition overwrite: replace exactly the partitions
@@ -174,9 +188,11 @@ class MemoryBackend:
                 {k: (None if r[k] is None else str(r[k])) for k in self.partition_by}
                 for r in df.select(*self.partition_by).distinct().collect()
             ]
-            self.replace_partitions(df, pvs, metrics=metrics, operation=operation or "full")
+            self.replace_partitions(
+                df, pvs, metrics=metrics, operation=operation or "full", base=base
+            )
             return
-        self._commit(df, metrics, operation or "full", metrics_fn)
+        self._commit(df, metrics, operation or "full", metrics_fn, base)
 
     def replace_partitions(
         self,
@@ -184,11 +200,14 @@ class MemoryBackend:
         partition_values: list[dict[str, str]],
         metrics: dict | None = None,
         operation: str = "merge",
+        base: MemManifest | None = None,
     ) -> None:
         if not self.exists():
             raise FileNotFoundError(f"MemoryBackend table does not exist: {self.path}")
         keep = self.read().where(~self._partition_filter(partition_values))
-        self._commit(keep.unionByName(df, allowMissingColumns=True), metrics, operation, None)
+        self._commit(
+            keep.unionByName(df, allowMissingColumns=True), metrics, operation, None, base
+        )
 
     # ------------------------------------------------- declined capabilities
     def set_layout(self, bucket_pk: str | None, n_buckets: int, force: bool = False) -> None:

@@ -584,9 +584,6 @@ class LakeTable:
         # LakeTable._schema's inferred schemas of manifests that predate the
         # recorded one, by version
         self._inferred_schemas: dict[int, T.StructType | None] = {}
-        # and, per such version, the partition column types its patch files
-        # hold as data (LakeTable._patch_types)
-        self._inferred_patch_types: dict[int, dict[str, T.DataType]] = {}
         # Control-plane I/O (manifests, dir listings, vacuum) goes through a
         # filesystem abstraction: LocalFS for bare paths, the JVM Hadoop
         # FileSystem for scheme-qualified URIs (hdfs://, s3a://, file://...).
@@ -705,7 +702,6 @@ class LakeTable:
             return mf.schema
         if mf.version not in self._inferred_schemas:
             data = None
-            patch_types: dict[str, T.DataType] = {}
             for s in mf.segments:
                 seg = self.spark.read.parquet(f"{self.path}/{s.dir}").schema
                 data = _evolve_schema(
@@ -713,11 +709,6 @@ class LakeTable:
                     T.StructType([f for f in seg.fields if f.name not in mf.partition_by]),
                     [],
                 )
-                if s.patch:
-                    patch_types.update(
-                        (f.name, f.dataType) for f in seg.fields if f.name in mf.partition_by
-                    )
-            self._inferred_patch_types[mf.version] = patch_types
             self._inferred_schemas[mf.version] = None if data is None else T.StructType(
                 data.fields
                 + [
@@ -728,16 +719,6 @@ class LakeTable:
                 ]
             )
         return self._inferred_schemas[mf.version]
-
-    def _patch_types(self, mf: Manifest) -> dict[str, T.DataType]:
-        """Partition columns whose type in patch files differs from the
-        provisional one ``_schema`` gives a manifest without a recorded
-        schema: a patch stores them as data, typed as written, so reads
-        take them at that type and cast. Empty when the schema is
-        recorded (call after ``_schema``)."""
-        if mf.schema is not None:
-            return {}
-        return self._inferred_patch_types.get(mf.version, {})
 
     def _commit(self, manifest: Manifest) -> None:
         """Atomic compare-and-swap commit: the version file is created with
@@ -1008,10 +989,7 @@ class LakeTable:
         mf = self.manifest_at(version) if version is not None else self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        return self._read_segments(
-            mf.segments, self._schema(mf), keep_bucket, prune_spec,
-            self._patch_types(mf),
-        )
+        return self._read_segments(mf.segments, self._schema(mf), keep_bucket, prune_spec)
 
     def _read_segments(
         self,
@@ -1019,12 +997,10 @@ class LakeTable:
         schema: T.StructType,
         keep_bucket: bool,
         prune_spec=None,
-        patch_types: dict[str, T.DataType] | None = None,
     ) -> DataFrame:
         """The rows of ``all_segs`` with their deletion vectors applied —
         the one segment-reading path, shared by ``read`` and
-        ``compact_small_segments``. ``patch_types`` (``_patch_types``)
-        retypes partition columns of the batched patch read.
+        ``compact_small_segments``.
 
         Every reader is planned from the table ``schema``, so building the
         frame starts no schema-inference job (only Spark's parallel file
@@ -1063,7 +1039,8 @@ class LakeTable:
         # multi-path spark.read.parquet(*dirs) call instead of its own
         # reader + unionByName node. The per-segment union loop built an
         # O(live segments) driver plan — measured 6.1 s of pure plan build
-        # at 100 tiny segments and 60.3 s at 1000 (tools/segment_probe.py)
+        # at 100 tiny segments and 60.3 s at 1000 (segment-count probe at
+        # commit 4dd3b77)
         # — while the batched read is one relation whose file listing Spark
         # parallelizes (parallelPartitionDiscovery) and whose splits
         # coalesce by maxPartitionBytes instead of one task per tiny file.
@@ -1150,14 +1127,7 @@ class LakeTable:
                 df = df.withColumn(SEG_V_COL, F.lit(seg_v).cast("long"))
             parts.append(df)
         if batched:
-            types = patch_types or {}
-            bdf = self.spark.read.schema(
-                T.StructType(
-                    [T.StructField(f.name, types.get(f.name, f.dataType)) for f in schema.fields]
-                )
-            ).parquet(*batched)
-            for c in types:
-                bdf = bdf.withColumn(c, F.col(c).cast(schema[c].dataType))
+            bdf = self.spark.read.schema(schema).parquet(*batched)
             if masks or restricted:
                 bdf = bdf.withColumn(SEG_V_COL, _path_version())
             for v, pvs in restricted:
@@ -1254,14 +1224,22 @@ class LakeTable:
         metrics: dict | None = None,
         operation: str | None = None,
         metrics_fn=None,
+        base: Manifest | None = None,
     ) -> None:
         """Full overwrite, or dynamic partition overwrite (only partitions
         present in df are replaced — Full.scala:38-50).
 
         ``metrics_fn`` (no-arg callable) is evaluated AFTER the write action
         and merged into the commit metrics — the hook for observation-based
-        counts (e.g. total_rows) that only exist once the job has run."""
-        mf = self.latest_manifest()
+        counts (e.g. total_rows) that only exist once the job has run.
+
+        ``base`` is the manifest ``df`` was planned from (default: the
+        latest). The commit takes the version after it, so if another
+        writer committed since, the compare-and-swap fails with
+        ``ConcurrentCommitException`` instead of replacing that writer's
+        rows with a state computed without them. The same holds for
+        ``replace_partitions`` and ``merge_patch``."""
+        mf = self.latest_manifest() if base is None else base
         full = not dynamic or not self.partition_by or mf is None
         # a full overwrite replaces the schema; a dynamic one keeps the
         # other partitions' segments, so it evolves the schema instead
@@ -1324,10 +1302,17 @@ class LakeTable:
         Delta ZORDER BY trade — slightly wider per-file ranges on the first
         column, bounded ranges on all of them). Costs one extra min/max
         aggregation to fix the normalization bounds.
+
+        The rewrite commits on the manifest it read (``overwrite(base=)``),
+        so a writer that commits meanwhile makes it fail rather than lose
+        rows.
         """
+        mf = self.latest_manifest()
+        if mf is None:
+            raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
+        cur = self._read_segments(mf.segments, self._schema(mf), keep_bucket=False)
         if zorder and cluster_by:
             zcols = list(cluster_by)
-            cur = self.read()
             numeric_ok = {
                 f.name
                 for f in cur.schema.fields
@@ -1390,6 +1375,7 @@ class LakeTable:
                 df,
                 operation="optimize",
                 metrics={"cluster_by": list(cluster_by), "zorder": True},
+                base=mf,
             )
             return
         if self.bucket_pk:
@@ -1399,7 +1385,7 @@ class LakeTable:
             # re-bucketing a grown incremental table (full rewrite anyway).
             # The repartition on the bucket folds each bucket's accumulated
             # small files into one.
-            df = self.read().withColumn(
+            df = cur.withColumn(
                 BUCKET_COL, bucket_expr(self.bucket_pk, self.n_buckets)
             ).repartition(
                 min(self.n_buckets, self.spark.sparkContext.defaultParallelism),
@@ -1410,7 +1396,7 @@ class LakeTable:
                     BUCKET_COL, *[F.col(c) for c in cluster_by]
                 )
         else:
-            df = self.read()
+            df = cur
             if cluster_by:
                 cols = [F.col(c) for c in cluster_by]
                 if target_partitions:
@@ -1424,6 +1410,7 @@ class LakeTable:
             df,
             operation="optimize",
             metrics={"cluster_by": list(cluster_by)},
+            base=mf,
         )
 
     def compact_small_segments(self, small_rows: int = 100_000) -> list[str]:
@@ -1457,9 +1444,7 @@ class LakeTable:
         # dv refs of its own (other segments' refs to a folded patch dir
         # stay valid — the dir outlives the fold until vacuum)
         schema = self._schema(mf)
-        merged = self._read_segments(
-            small, schema, keep_bucket=True, patch_types=self._patch_types(mf)
-        )
+        merged = self._read_segments(small, schema, keep_bucket=True)
         folded, _ = self._write_segment(merged, mf)
         if any(s.partitions is None for s in small):
             folded.partitions = None  # unpartitioned append-style segments
@@ -1561,11 +1546,14 @@ class LakeTable:
         partition_values: list[dict[str, str]],
         metrics: dict | None = None,
         operation: str = "merge",
+        base: Manifest | None = None,
     ) -> None:
         """Copy-on-write commit: df becomes the new content of exactly
-        ``partition_values``; every other partition keeps its current segment.
-        This is the merge/SCD2 write path — touched partitions written once."""
-        mf = self.latest_manifest()
+        ``partition_values``; every other partition keeps its segment in
+        ``base`` (the manifest ``df`` was planned from, default: the latest;
+        see ``overwrite``). This is the merge/SCD2 write path — touched
+        partitions written once."""
+        mf = self.latest_manifest() if base is None else base
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
         new, schema = self._write_segment(df, mf)
@@ -1623,6 +1611,7 @@ class LakeTable:
         metrics: dict | None = None,
         operation: str = "merge_patch",
         metrics_fn=None,
+        base: Manifest | None = None,
     ) -> int:
         """Merge-on-read commit: append ONLY the changed/inserted rows as a
         patch segment and mask the superseded versions in every existing
@@ -1643,8 +1632,12 @@ class LakeTable:
         so a later ``replace_partitions`` of those values takes them over
         (folding the patch) exactly as for a hive segment, while reads take
         every live patch in one batched relation.
+
+        ``base`` is the manifest the patch was planned from (default: the
+        latest; see ``overwrite``): a patch planned before another writer's
+        commit could mask that writer's newer version of a key it touched.
         """
-        mf = self.latest_manifest()
+        mf = self.latest_manifest() if base is None else base
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
         if mask_col is not None and mask_col not in df.columns:

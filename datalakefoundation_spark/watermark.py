@@ -2,8 +2,9 @@
 
 Reference: core/WatermarkData.scala:12-96 (system Delta table
 ``<root>/system/watermark`` partitioned by (entity_id, column_name), values
-stored as strings with their type name), Processing.scala:123-142 (max-agg
-capture + stored lookup), ProcessStrategy.scala:86-153 (inclusive
+stored as strings with their type name), Processing.scala:123-142 (stored
+lookup; the max-agg capture is part of ``Processing.get_source``'s fused
+bookkeeping aggregate), ProcessStrategy.scala:86-153 (inclusive
 current-vs-previous window scoping delete inference).
 
 "Watermark" here is a *batch incremental bookmark*, not a streaming
@@ -17,7 +18,7 @@ import io
 import time
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -172,8 +173,8 @@ class WatermarkStore:
         folded segment dirs right after committing the compacted manifest,
         so a reader holding the pre-compaction manifest across that delete
         must RE-READ the manifest (the contract _compact's docstring
-        states; first hit for real by the 50-entity concurrent fleet in
-        tools/fleet_probe.py). The rows live on in the compacted segment,
+        states; first hit for real by the 50-entity concurrent fleet probe
+        at commit 4dd3b77). The rows live on in the compacted segment,
         so the retry always converges."""
         for attempt in range(5):
             mf = self.table.latest_manifest()
@@ -210,24 +211,6 @@ class WatermarkStore:
                     if c not in best or ts >= best[c][0]:
                         best[c] = (ts, row["value"])
         return {c: v for c, (_ts, v) in best.items()}
-
-
-def capture_max_values(df: DataFrame, columns: Sequence[str]) -> dict[str, tuple[str, str | None]]:
-    """One multi-column max-agg action (Processing.scala:123-135).
-
-    Standalone utility for external callers; Processing itself folds the
-    same (type-name, str) encoding into its fused bookkeeping aggregate
-    (processing.py get_source) to avoid a second scan — keep the two
-    encodings in sync."""
-    present = [c for c in columns if c in df.columns]
-    if not present:
-        return {}
-    row = df.agg(*[F.max(F.col(c)).alias(c) for c in present]).head()
-    out: dict[str, tuple[str, str | None]] = {}
-    for c in present:
-        v = row[c]
-        out[c] = (type(v).__name__, None if v is None else str(v))
-    return out
 
 
 def _strip_quotes(v: str) -> str:

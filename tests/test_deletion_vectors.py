@@ -271,7 +271,7 @@ def test_mor_read_batches_segments_and_dv_dirs(spark, table):
     multi-path scan with per-row versions parsed from _metadata.file_path,
     and same-(keys, flag) dv dirs collapse into one multi-path mask scan.
     The per-relation form measured 17.5 s at 32 patches / 2M rows; the
-    batched form 6.3 s (tools/mor_read_probe.py)."""
+    batched form 6.3 s (merge-on-read probe at commit 4dd3b77)."""
     for i in range(12):
         table.merge_patch(
             _patch(spark, {i: 10 * i}, {1000 + i: i}), keys=["pk"], mask_col=MASK_COL

@@ -43,6 +43,7 @@ from datalakefoundation_spark.strategies import merge_state
 from datalakefoundation_spark.core.exceptions import ConcurrentCommitException
 
 table = LakeTable(spark, table_path)
+base = table.latest_manifest()
 
 # each writer updates ITS half of the keys (disjoint slices, same entity)
 lo, hi = (0, 5) if wid == 0 else (5, 10)
@@ -54,7 +55,7 @@ source = spark.createDataFrame(
     slice_rows, "ID long, name string, SourceHash string, deleted boolean, lastSeen string"
 )
 
-target = table.read()
+target = table.read(version=base.version)
 state = merge_state(target, source, "ID", processing_time="2026-02-01 00:00:00")
 # force the state computation NOW so both writers hold a fully-derived
 # post-merge state from the SAME base version before either commits
@@ -71,7 +72,7 @@ while len([f for f in os.listdir(barrier_dir) if f.startswith("ready_")]) < 2:
     time.sleep(0.05)
 
 try:
-    table.overwrite(frozen, operation=f"merge_w{wid}")
+    table.overwrite(frozen, operation=f"merge_w{wid}", base=base)
     print(f"COMMITTED {wid}", flush=True)
     sys.exit(0)
 except ConcurrentCommitException:
@@ -160,3 +161,66 @@ def test_concurrent_same_entity_merge_race(spark, tmp_path):
     for k in range(10):
         expect = f"w{winner}_new" if w_lo <= k < w_hi else f"w{loser}_new"
         assert rows[k]["name"] == expect, (k, rows[k])
+
+
+# ------------------------------------------- single-process interleaving
+# Writer A plans a merge from v0; writer B's run commits v1 just before A's
+# commit call. A must fail the compare-and-swap: committing at v2 on top of
+# v1 with a state computed from v0 drops (rewrite) or masks (patch) B's rows.
+_INTERLEAVE = {
+    # op: (metadata partitioned?, write_mode, A's key, B's key)
+    "overwrite": (False, "cow", 3, 99),
+    "replace_partitions": (True, "cow", 3, 99),  # 3 and 99: partition 1
+    "merge_patch": (False, "mor", 5, 5),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_INTERLEAVE))
+def test_merge_commits_on_the_manifest_it_planned_from(
+    spark, lake_root, prefix, monkeypatch, op
+):
+    from datalakefoundation_spark.core.exceptions import ConcurrentCommitException
+    from datalakefoundation_spark.processing import Processing
+    from datalakefoundation_spark.tables.lake_table import LakeTable
+    from tests.helpers import T0, T1, T2, make_metadata, write_slice
+
+    partitioned, mode, a_key, b_key = _INTERLEAVE[op]
+    md = make_metadata(lake_root, prefix, partitioned=partitioned, watermark=False)
+
+    def run(name, keys, writer, t):
+        rows = [
+            {"ID": k, "SeqNr": k, "name": f"{writer}{k}", "data": f"d{k}"} for k in keys
+        ]
+        write_slice(spark, md, name, rows)
+        p = Processing(spark, md, 1, name, {"processing.time": t, "write_mode": mode})
+        p.process("merge")
+        return p
+
+    path = run("s0.parquet", range(10), "orig", T0).silver_table().path  # v0
+
+    orig = getattr(LakeTable, op)
+    calls = []
+
+    def b_commits_first(self, *args, **kwargs):
+        calls.append(op)
+        if len(calls) == 1:  # A's commit: B's whole run lands before it
+            run("b.parquet", [b_key], "b", T2)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, op, b_commits_first)
+    lost = None
+    try:
+        run("a.parquet", [a_key], "a", T1)
+    except ConcurrentCommitException as exc:
+        lost = exc
+    assert calls == [op, op]  # A's and B's runs both took the op under test
+
+    table = LakeTable(spark, path)
+    rows = {r["ID"]: r["name"] for r in table.read().select("ID", "name").collect()}
+    assert rows.get(b_key) == f"b{b_key}", f"writer B's key {b_key} lost: {rows.get(b_key)}"
+    assert lost is not None, "A committed on top of B with a state planned from v0"
+    assert table.latest_manifest().version == 1
+    assert set(rows) == set(range(10)) | {b_key}
+    assert all(
+        name == f"orig{k}" for k, name in rows.items() if k != b_key
+    ), rows

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from datalakefoundation_spark.ext import dedup as D
 from datalakefoundation_spark.ext import similarity as SIM
+from datalakefoundation_spark.ext.util import plan_size_bytes
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,10 +72,10 @@ def test_lsh_topk_auto_picks_by_input_size(spark, embs, monkeypatch):
     """blocked=None sizes the input from plan stats: a tiny corpus takes the
     per-pair codegen path, a floor of 0 forces blocked — and both return
     identical rows (the declared query's results cannot depend on the pick)."""
-    est = SIM._plan_size_bytes(embs)
-    assert est is not None and 0 < est < 4 * 1024 * 1024
+    est = plan_size_bytes(embs)
+    assert est is not None and 0 < est < SIM._LSH_BLOCKED_MIN_BYTES
     auto = _topk_rows(SIM.lsh_topk(embs, k=3))
-    monkeypatch.setenv("SPARK_GRAFT_LSH_BLOCKED_MIN_BYTES", "0")
+    monkeypatch.setattr(SIM, "_LSH_BLOCKED_MIN_BYTES", 0)
     forced = _topk_rows(SIM.lsh_topk(embs, k=3))
     assert auto == forced == _topk_rows(SIM.lsh_topk(embs, k=3, blocked=False))
 
@@ -267,8 +268,6 @@ def test_hash_distinct_auto_picks_by_input_size(spark, docs, monkeypatch):
     to size-adaptive: a tiny corpus resolves to the per-occurrence plan, a
     floor of 0 forces the vocab plan — and the rows are identical either
     way (the declared queries' results cannot depend on the pick)."""
-    from datalakefoundation_spark.ext.util import plan_size_bytes
-
     est = plan_size_bytes(docs)
     assert est is not None and 0 < est < D.HASH_DISTINCT_FLOOR
 
@@ -280,13 +279,15 @@ def test_hash_distinct_auto_picks_by_input_size(spark, docs, monkeypatch):
         rows(D.simhash(docs)),
         rows(SIM.hashed_feature_entries(docs)),
     )
-    monkeypatch.setenv(D.HASH_DISTINCT_ENV, "0")
+    for floor in (
+        "HASH_DISTINCT_FLOOR", "SIMHASH_DISTINCT_FLOOR", "MINHASH_DISTINCT_FLOOR"
+    ):
+        monkeypatch.setattr(D, floor, 0)
     forced_vocab = (
         rows(D.minhash_signature(docs)),
         rows(D.simhash(docs)),
         rows(SIM.hashed_feature_entries(docs)),
     )
-    monkeypatch.delenv(D.HASH_DISTINCT_ENV)
     explicit_off = (
         rows(D.minhash_signature(docs, hash_distinct=False)),
         rows(D.simhash(docs, hash_distinct=False)),

@@ -59,7 +59,7 @@ def test_blocked_chunked_row_identical(spark, embs, monkeypatch):
     }
     # 64 cells -> single-digit rows per chunk against bucket widths in the
     # tens: every kernel takes the multi-chunk path
-    monkeypatch.setenv("SPARK_GRAFT_BLOCKED_CHUNK_CELLS", "64")
+    monkeypatch.setattr(SIM, "_BLOCKED_CHUNK_CELLS", 64)
     chunked = {
         "lsh": _rows(SIM.lsh_topk(sub, k=3, blocked=True)),
         "near": _rows(
@@ -89,7 +89,7 @@ def test_blocked_chunked_null_vectors(spark, embs, monkeypatch):
         ).otherwise(F.col("embedding")),
     )
     want = _rows(SIM.lsh_topk(nulled, k=3, blocked=True))
-    monkeypatch.setenv("SPARK_GRAFT_BLOCKED_CHUNK_CELLS", "64")
+    monkeypatch.setattr(SIM, "_BLOCKED_CHUNK_CELLS", 64)
     assert _rows(SIM.lsh_topk(nulled, k=3, blocked=True)) == want
 
 
@@ -110,7 +110,7 @@ def test_blocked_auto_keeps_per_pair_for_string_ids(spark, embs, monkeypatch):
     """blocked=None must not crash (or change the id type) on string ids
     even when the size estimate crosses the floor: the per-pair form is
     kept and preserves the id column type."""
-    monkeypatch.setenv("SPARK_GRAFT_LSH_BLOCKED_MIN_BYTES", "0")
+    monkeypatch.setattr(SIM, "_LSH_BLOCKED_MIN_BYTES", 0)
     strs = embs.where(F.col("vec_id") < 60).withColumn(
         "vec_id", F.concat(F.lit("doc_"), F.col("vec_id").cast("string"))
     )

@@ -24,7 +24,8 @@ Asserted (recorded in BASELINE.md):
     median wall of batches 2-5 (index grew ~5x between those windows);
   * absorb identities: survivors with rep % 5 != 0 (escaped planted dups)
     <= 0.1% of planted absorb targets — the same zero-escape geometry
-    corpus_cert certified at 1M docs;
+    the corpus certification probe (at commit 4dd3b77) certified at 1M
+    docs;
   * the GOLD identity at full scale vs the from-scratch batch twin:
     batch survivors ⊆ streamed survivors EXACTLY (zero missing — a
     component's global-min id never loses under ingest-ordered ids),
