@@ -40,7 +40,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from datalakefoundation_spark.tables.lake_table import LakeTable
+from datalakefoundation_spark.tables.lake_table import PARQUET_CODEC, LakeTable
 
 LEVELS = {
     "TRACE": 5, "DEBUG": 10, "INFO": 20, "WARN": 30,
@@ -169,7 +169,7 @@ class ParquetLogSink:
         import pyarrow.parquet as pq
 
         buf = io.BytesIO()
-        pq.write_table(_entries_to_arrow(entries), buf)
+        pq.write_table(_entries_to_arrow(entries), buf, compression=PARQUET_CODEC)
         self.fs.put_bytes(f"{self.path}/part-{uuid.uuid4().hex}.parquet", buf.getvalue())
 
 

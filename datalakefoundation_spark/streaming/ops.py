@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from datalakefoundation_spark.tables.lake_table import PARQUET_CODEC
+
 
 def _stream_id(checkpoint: str) -> str:
     """Stream-generation id derived from the checkpoint location (batch ids
@@ -798,7 +800,9 @@ def stream_merge_to_silver(
         entity = metadata.get_entity(entity_id)
         bronze = entity.get_output().bronzepath.value
         slice_name = f"stream_batch_{batch_id:012d}.parquet"
-        batch_df.write.mode("overwrite").parquet(f"{bronze}/{slice_name}")
+        batch_df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(
+            f"{bronze}/{slice_name}"
+        )
         Processing(
             batch_df.sparkSession, metadata, entity_id, slice_name, dict(options or {})
         ).process()
@@ -818,6 +822,7 @@ def stream_to_lake(
     Processing pipeline can slice."""
     writer = (
         events.writeStream.format("parquet")
+        .option("compression", PARQUET_CODEC)
         .option("path", bronze_path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
@@ -971,7 +976,7 @@ def stream_dedup_index(
                 # second stream sharing pairs_path overwrite prior output
                 pairs.withColumn("__batch_key", F.lit(replay_key)).write.mode(
                     "overwrite"
-                ).parquet(
+                ).option("compression", PARQUET_CODEC).parquet(
                     f"{pairs_path}/stream={stream_id}/batch_id={batch_id:012d}"
                 )
         finally:
@@ -1206,7 +1211,7 @@ def stream_clean_corpus(
             # the batch, overwrites the same survivor directory with the
             # same rows (the index join excluded this replay's own
             # signatures), and the index append then lands exactly once
-            res.df.write.mode("overwrite").parquet(
+            res.df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(
                 f"{out_path}/stream={stream_id}/batch_id={batch_id:012d}"
             )
             sigs = res.index_updates.withColumn("__batch_key", F.lit(replay_key))

@@ -32,6 +32,12 @@ Why this scales:
   starts no Spark schema-inference job, however many segments, patches or
   deletion-vector dirs are live, and partition columns keep their written
   types (a string partition "001" reads back as the string "001").
+* Every parquet file the format writes — segments, patches, deletion-vector
+  dirs and the arrow appends of the system tables — is zstd-compressed
+  (``PARQUET_CODEC``), whichever session writes it. Parquet records the
+  codec per column chunk, so segments written with another codec (snappy,
+  before zstd was the format's) stay readable; compaction or a rewrite
+  writes them back as zstd.
 
 Commits are compare-and-swap: each version's manifest file is created with
 the filesystem's create-if-absent primitive (``_commit``), so concurrent
@@ -284,6 +290,13 @@ MASK_COL = "__dlf_mask"
 # version attached to rows during the global mask join. Internal.
 DV_V_COL = "__dlf_dv_v"
 SEG_V_COL = "__dlf_seg_v"
+
+# Codec of every parquet file the format writes. Writers pass it
+# themselves rather than rely on the session's default, so a table keeps
+# its format whatever session writes to it; zstd's entropy stage stores the
+# sha256 hex key and hash columns of silver rows at about half their snappy
+# size.
+PARQUET_CODEC = "zstd"
 
 _DIR_V_RE = re.compile(r"^data/v(\d{5})")
 
@@ -888,7 +901,7 @@ class LakeTable:
                 ).alias("__pvs")
             )
         df = df.observe(obs, *aggs)
-        writer = df.write.mode("overwrite")
+        writer = df.write.mode("overwrite").option("compression", PARQUET_CODEC)
         if self.partition_by and not patch:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(f"{self.path}/{seg_rel}")
@@ -1490,12 +1503,13 @@ class LakeTable:
             )
         )
 
-    def append_arrow(self, arrow_table, label: str = "") -> None:
+    def append_arrow(self, arrow_table, label: str = "") -> Manifest:
         """Driver-side control-plane append: one pyarrow file, no Spark job
         (for KB-sized system rows — watermarks, logs). Optimistic-concurrency
         retry: a commit conflict means another writer won that version —
         re-read the manifest and go again (same CAS protocol as Spark-side
-        commits; swap os.link for a conditional put on an object store)."""
+        commits; swap os.link for a conditional put on an object store).
+        Returns the manifest it committed."""
         import pyarrow.parquet as pq
 
         from datalakefoundation_spark.core.exceptions import ConcurrentCommitException
@@ -1518,21 +1532,20 @@ class LakeTable:
                 f"data/v{next_v:05d}-{label}-{nonce}" if label else f"data/v{next_v:05d}-{nonce}"
             )
             buf = io.BytesIO()
-            pq.write_table(arrow_table, buf)
+            pq.write_table(arrow_table, buf, compression=PARQUET_CODEC)
             self.fs.put_bytes(f"{self.path}/{seg_rel}/part-00000.parquet", buf.getvalue())
             segments = (list(mf.segments) if mf else []) + [Segment(seg_rel, None)]
+            new_mf = Manifest(
+                version=next_v,
+                partition_by=[],
+                segments=segments,
+                operation="append",
+                timestamp=time.time(),
+                schema=schema,
+            )
             try:
-                self._commit(
-                    Manifest(
-                        version=next_v,
-                        partition_by=[],
-                        segments=segments,
-                        operation="append",
-                        timestamp=time.time(),
-                        schema=schema,
-                    )
-                )
-                return
+                self._commit(new_mf)
+                return new_mf
             except ConcurrentCommitException:
                 # reclaim the orphaned segment before retrying at the next
                 # version — lost races must not leak a dir per attempt
@@ -1706,7 +1719,9 @@ class LakeTable:
                     rel = f"data/v{next_version:05d}-dv-{uuid.uuid4().hex[:8]}"
                     self._dv_masks(es, schema)[keys].groupBy(*keys).agg(
                         F.max(DV_V_COL).alias(DV_V_COL)
-                    ).write.mode("overwrite").parquet(f"{self.path}/{rel}")
+                    ).write.mode("overwrite").option(
+                        "compression", PARQUET_CODEC
+                    ).parquet(f"{self.path}/{rel}")
                     new_entries.append(
                         {"dir": rel, "keys": list(keys), "flag": None}
                     )
@@ -1740,7 +1755,9 @@ class LakeTable:
         dv_rel = f"data/v{mf.version + 1:05d}-dv-{uuid.uuid4().hex[:8]}"
         keys_df.select(
             *[F.col(k).cast(schema[k].dataType).alias(k) for k in keys]
-        ).write.mode("overwrite").parquet(f"{self.path}/{dv_rel}")
+        ).write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(
+            f"{self.path}/{dv_rel}"
+        )
         entry = {"dir": dv_rel, "keys": list(keys), "flag": None}
         segments = [replace(s, dv=list(s.dv or []) + [entry]) for s in mf.segments]
         self._commit(

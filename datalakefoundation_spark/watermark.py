@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from datalakefoundation_spark.core.expressions import evaluate_watermark_expression
 from datalakefoundation_spark.metadata.models import Watermark
-from datalakefoundation_spark.tables.lake_table import LakeTable
+from datalakefoundation_spark.tables.lake_table import PARQUET_CODEC, LakeTable
 
 WATERMARK_SCHEMA = T.StructType(
     [
@@ -80,10 +80,10 @@ class WatermarkStore:
             }
         )
         # CAS append (concurrent entity runs share this table) + fold
-        # segments once enough accumulate so latest() stays O(1)
-        self.table.append_arrow(arrow, label=str(entity_id))
-        mf = self.table.latest_manifest()
-        if mf is not None and len(mf.segments) > self.COMPACT_THRESHOLD:
+        # segments once enough accumulate so latest() stays O(1); the
+        # manifest the append committed decides, no second manifest read
+        mf = self.table.append_arrow(arrow, label=str(entity_id))
+        if len(mf.segments) > self.COMPACT_THRESHOLD:
             self._compact()
 
     def _compact(self) -> None:
@@ -136,7 +136,7 @@ class WatermarkStore:
         # winner's committed segment
         seg_rel = f"data/v{next_v:05d}-compact-{_uuid.uuid4().hex[:8]}"
         buf = io.BytesIO()
-        pq.write_table(merged, buf)
+        pq.write_table(merged, buf, compression=PARQUET_CODEC)
         fs.put_bytes(f"{self.path}/{seg_rel}/part-00000.parquet", buf.getvalue())
         try:
             self.table._commit(
