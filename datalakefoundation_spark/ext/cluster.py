@@ -1,31 +1,39 @@
 """Near-duplicate cluster assignment: connected components over a candidate
-pair list (e.g. MinHash+LSH output), so every document gets a canonical
+edge list (e.g. MinHash+LSH output), so every document gets a canonical
 cluster id (the minimum doc id in its component) and dedup can keep exactly
 one survivor per cluster instead of dropping both ends of every pair.
 
-``connected_components`` is the one entry point. It checkpoints the
-canonical edge list once and picks the algorithm from its row count:
+``connected_components`` is the one entry point. It marks the canonical
+edge list for a lazy local checkpoint and takes at most
+``_DRIVER_MAX_EDGES + 1`` rows of it; the row count picks the algorithm:
 
-- up to ``_DRIVER_MAX_EDGES`` edges, it collects them and labels them with
-  a driver-side union-find;
+- up to ``_DRIVER_MAX_EDGES`` rows, a driver-side union-find labels them.
+  The take is the path's only action, with no eager checkpoint and no
+  count: one Spark job over a one-partition edge list, besides the jobs
+  that compute ``pairs``. The labels come back as an Arrow-built local
+  relation, not a Python RDD;
 - above that, it runs alternating large-star/small-star rounds (Kiveris et
   al., "Connected Components in MapReduce and Beyond", 2014 — public
-  algorithm). Each round halves tree heights, so convergence is O(log d)
-  rounds even on adversarial long-chain graphs; each half-round is one
-  groupBy-min + one join-free projection over the edge list. No
-  driver-side graph state; per-round results are ``localCheckpoint``-ed so
-  the plan doesn't grow with iteration count (standard practice for
-  iterative DataFrame algorithms).
+  algorithm) over the checkpointed edges, so the candidate lineage is
+  computed once on either path. Each round halves tree heights, so
+  convergence is O(log d) rounds even on adversarial long-chain graphs;
+  each half-round is one groupBy-min + one join-free projection over the
+  edge list. No driver-side graph state; per-round results are
+  ``localCheckpoint``-ed so the plan doesn't grow with iteration count
+  (standard practice for iterative DataFrame algorithms).
 
-Both paths return the same rows and the same schema."""
+Both paths return the same rows and the same schema. ``dedup_clusters``
+feeds it one star per LSH bucket (``dedup.lsh_star_edges``)."""
 
 from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 logger = logging.getLogger(__name__)
 
@@ -83,24 +91,27 @@ def connected_components(
     """(node, cluster_id) for every node appearing in ``pairs``;
     cluster_id = min node id in the connected component.
 
-    Graphs of at most ``_DRIVER_MAX_EDGES`` distinct edges are labelled by
-    a driver-side union-find; larger ones by large-star/small-star rounds
-    (Kiveris et al. 2014): O(log d) rounds on any graph shape, so a
-    10k-node path converges in ~14 rounds where plain label propagation
-    needs 10k. At fixpoint the edge set is a star per component, rooted at
-    the component minimum."""
+    Edge lists of at most ``_DRIVER_MAX_EDGES`` rows (counted as given:
+    a repeated edge counts every time) are labelled by a driver-side
+    union-find after one take of those rows, nothing checkpointed eagerly
+    and nothing counted. Larger ones go through
+    large-star/small-star rounds (Kiveris et al. 2014) over the same
+    checkpointed edges: O(log d) rounds on any graph shape, so a 10k-node
+    path converges in ~14 rounds where plain label propagation needs 10k.
+    At fixpoint the edge set is a star per component, rooted at the
+    component minimum."""
     # canonical (larger, smaller) edges, self-pairs kept so that a node
-    # seen only in a self-pair still gets its singleton row
-    canon = (
-        pairs.select(
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.least(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if canon.count() <= _DRIVER_MAX_EDGES:
-        return _union_find(canon)
+    # seen only in a self-pair still gets its singleton row. The lazy
+    # checkpoint keeps what the take computes, so the star path reads the
+    # candidate lineage once too.
+    canon = pairs.select(
+        F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
+        F.least(F.col(src_col), F.col(dst_col)).alias("v"),
+    ).localCheckpoint(eager=False)
+    rows = canon.limit(_DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) <= _DRIVER_MAX_EDGES:
+        return _union_find(canon, rows)
+    canon = canon.distinct().localCheckpoint(eager=True)
     edges = canon.where(F.col("u") != F.col("v"))
     converged = False
     prev_count = edges.count()
@@ -139,10 +150,12 @@ def connected_components(
     )
 
 
-def _union_find(canon: DataFrame) -> DataFrame:
-    """Driver-side union-find over the collected canonical (u, v) edge
-    list. Every root is its component's minimum: a union hangs the larger
-    root under the smaller one."""
+def _union_find(canon: DataFrame, edges: list) -> DataFrame:
+    """Driver-side union-find over the collected canonical (u, v) rows of
+    ``canon``. Every root is its component's minimum: a union hangs the
+    larger root under the smaller one. The labels go back through a
+    ``pyarrow.Table``, a local relation, so reading them forks no Python
+    worker."""
     parent: dict = {}
 
     def find(x):
@@ -153,7 +166,7 @@ def _union_find(canon: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in canon.collect():
+    for a, b in edges:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -163,9 +176,11 @@ def _union_find(canon: DataFrame) -> DataFrame:
     schema = T.StructType(
         [T.StructField("node", dtype), T.StructField("cluster_id", dtype)]
     )
-    return canon.sparkSession.createDataFrame(
-        [(node, find(node)) for node in parent], schema
+    labels = pa.table(
+        {"node": list(parent), "cluster_id": [find(n) for n in parent]},
+        schema=to_arrow_schema(schema),
     )
+    return canon.sparkSession.createDataFrame(labels, schema)
 
 
 def dedup_clusters(
@@ -174,13 +189,18 @@ def dedup_clusters(
     id_col: str = "doc_id",
     **minhash_kwargs,
 ) -> DataFrame:
-    """MinHash candidates -> connected components -> (doc_id, cluster_id,
-    is_survivor). Only documents that belong to a near-dup cluster appear;
-    the survivor is the cluster's minimum doc id."""
-    from datalakefoundation_spark.ext.dedup import minhash_dedup_candidates
+    """MinHash signatures -> one star per LSH bucket -> connected
+    components -> (doc_id, cluster_id, is_survivor). Only documents that
+    belong to a near-dup cluster appear; the survivor is the cluster's
+    minimum doc id. ``minhash_kwargs`` are ``minhash_dedup_candidates``'s
+    (``num_hashes``, ``band_size``, ``shingle_size``, ``hash_distinct``),
+    and the clusters equal the components of its pairs."""
+    from datalakefoundation_spark.ext.dedup import lsh_star_edges, minhash_signature
 
-    pairs = minhash_dedup_candidates(df, text_col, id_col, **minhash_kwargs)
-    comp = connected_components(pairs)
+    num_hashes = minhash_kwargs.pop("num_hashes", 8)
+    band_size = minhash_kwargs.pop("band_size", 2)
+    sig = minhash_signature(df, text_col, id_col, num_hashes, **minhash_kwargs)
+    comp = connected_components(lsh_star_edges(sig, id_col, num_hashes, band_size))
     return comp.select(
         F.col("node").alias(id_col),
         "cluster_id",

@@ -6,6 +6,7 @@ Scale design (100 TB corpus):
 * MinHash+LSH   — shingle -> k minhashes -> band keys -> candidate pairs via
                   an equi-join on (band_idx, band_key). Only same-bucket pairs
                   are ever materialized; the full O(n^2) space is never built.
+                  Clustering takes one star per bucket instead of its pairs.
 * SimHash       — 64-bit signature per doc in one explode+groupBy pass
                   (map-side combine on doc_id).
 * n-gram Jaccard— exact verification for candidate pairs (bounded join).
@@ -219,7 +220,8 @@ def band_explode(
     """(id, band_idx, band_key) rows of a minhash signature table: the
     signature split into bands of ``band_size`` hashes, each band keyed by
     the sha256 of its concatenated values. Shared by the batch bucketing
-    (lsh_candidate_pairs) and the incremental index path below."""
+    (lsh_candidate_pairs, lsh_star_edges) and the incremental index path
+    below."""
     n_bands = num_hashes // band_size
     bands = F.array(
         *[
@@ -276,6 +278,31 @@ def lsh_candidate_pairs(
         buckets.select(F.explode(pairs).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .distinct()
+    )
+
+
+def lsh_star_edges(
+    sig: DataFrame,
+    id_col: str = "doc_id",
+    num_hashes: int = 8,
+    band_size: int = 2,
+) -> DataFrame:
+    """(doc_a, doc_b) edges that join every member of an LSH bucket to the
+    bucket's minimum id (doc_a < doc_b): one star per bucket, |bucket| - 1
+    edges where ``lsh_candidate_pairs`` expands |bucket|·(|bucket| - 1)/2
+    pairs and deduplicates them. A star connects the same documents as
+    its bucket's pairs, so connected components over the stars have the
+    same nodes and the same components: this is the feed for clustering;
+    ``lsh_candidate_pairs`` is for callers that need the pairs themselves.
+    An edge found in several bands repeats once per band."""
+    ids = F.col("ids")
+    return (
+        band_explode(sig, id_col, num_hashes, band_size)
+        .groupBy("band_idx", "band_key")
+        .agg(F.collect_set(F.col(id_col)).alias("ids"))
+        .where(F.size(ids) > 1)
+        .select(F.array_min(ids).alias("doc_a"), F.explode(ids).alias("doc_b"))
+        .where(F.col("doc_b") != F.col("doc_a"))
     )
 
 

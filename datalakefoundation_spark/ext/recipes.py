@@ -33,10 +33,11 @@ class CleanResult:
 
     ``persisted`` lists every frame the recipe cached (currently the
     exact-dedup survivors feeding the clustering loop when
-    ``near_dedup=True``). Their storage lives for the SparkSession unless
-    released: call ``unpersist()`` after materializing ``df`` (the lazy
-    stages reference the cached frame, so release it only once you no
-    longer need to act on them)."""
+    ``near_dedup=True``; the quality/PII prefix it caches for exact dedup
+    is released before the call returns). Their storage lives for the
+    SparkSession unless released: call ``unpersist()`` after
+    materializing ``df`` (the lazy stages reference the cached frame, so
+    release it only once you no longer need to act on them)."""
 
     df: DataFrame
     stages: list[tuple[str, DataFrame]] = field(default_factory=list)
@@ -170,21 +171,29 @@ def clean_corpus(
         )
         # no stage record: redaction is row-preserving (same count)
 
+    if near_dedup:
+        # persist the quality/PII prefix for the rest of this call: exact
+        # dedup reads it twice (it joins the frame with its own aggregate),
+        # and without the cache both reads scan the raw corpus and run the
+        # PII regexes. It is released below, once connected_components has
+        # materialized the survivors' cache from it.
+        prefix = cur.persist()
+        cur = prefix
     cur = D.exact_dedup(cur, text_col=text_col, id_col=id_col)
     stages.append(("exact_dedup", cur))
 
     index_updates: DataFrame | None = None
     if near_dedup:
         # persist the exact-dedup survivors: the near-dup stage reads them
-        # more than once — the candidate pairs that connected_components
-        # checkpoints, the loser anti-join that keeps `cur`, and the
-        # signatures behind index_updates — and without a persist each
-        # read re-runs the whole quality/PII/exact-dedup prefix from the
-        # raw corpus (18% end-to-end at 1M docs, measured by the corpus
-        # certification probe last in the tree at commit 4dd3b77).
-        # Storage is the post-filter survivor set, not the raw corpus, and
-        # it is surfaced on CleanResult.persisted so callers can release it
-        # (CleanResult.unpersist()) after materializing.
+        # more than once — the candidate edges that connected_components
+        # collects, the loser anti-join that keeps `cur`, and the signatures
+        # behind index_updates — and without a persist each read re-runs
+        # exact dedup and, once the prefix is released, the whole
+        # quality/PII prefix from the raw corpus (18% end-to-end at 1M docs,
+        # measured by the corpus certification probe last in the tree at
+        # commit 4dd3b77). Storage is the post-filter survivor set, not the
+        # raw corpus, and it is surfaced on CleanResult.persisted so callers
+        # can release it (CleanResult.unpersist()) after materializing.
         cur = cur.persist()
         persisted.append(cur)
         exact_survivors = cur
@@ -254,6 +263,10 @@ def clean_corpus(
             index_updates = minhash_signature(
                 exact_survivors, text_col, id_col, shingle_size=shingle_size
             )
+        # both branches ran connected_components, whose collect or
+        # checkpoint filled the survivors' cache: the prefix is not read
+        # again (a dependent cache that is already filled stays)
+        prefix.unpersist()
         stages.append(("near_dedup", cur))
 
     if span_dedup_size is not None:
@@ -414,21 +427,22 @@ def reconcile_survivors(
     global minimum (the subset direction is exact — probe-asserted), the
     result EQUALS the from-scratch survivor set.
 
-    Cost: one full band-join + connected components over the index —
-    O(corpus), the price of exactness, which is why this is a PERIODIC
-    compaction and not a per-batch stage (per-batch stays O(batch)).
+    Cost: one full bucketing (a star per LSH bucket) + connected
+    components over the index — O(corpus), the price of exactness, which
+    is why this is a PERIODIC compaction and not a per-batch stage
+    (per-batch stays O(batch)).
     Returns the reconciled survivors (rows of ``survivors`` minus the
     bridged extras)."""
     from datalakefoundation_spark.ext.cluster import connected_components
-    from datalakefoundation_spark.ext.dedup import lsh_candidate_pairs
+    from datalakefoundation_spark.ext.dedup import lsh_star_edges
 
-    pairs = lsh_candidate_pairs(
+    edges = lsh_star_edges(
         index_sigs.select(id_col, *[f"h{i}" for i in range(num_hashes)]),
         id_col,
         num_hashes,
         band_size,
     )
-    comp = connected_components(pairs)
+    comp = connected_components(edges)
     losers = comp.where(F.col("node") != F.col("cluster_id")).select(
         F.col("node").alias(id_col)
     )
@@ -443,21 +457,22 @@ def cluster_assignment(
 ) -> DataFrame:
     """Full near-dup clustering over a standing signature index:
     ``(node, cluster_id)`` for every doc appearing in a candidate pair,
-    cluster_id = the component's minimum id. One band join + connected
-    components — O(corpus); run it ONCE to bootstrap the persisted
-    assignment state that ``reconcile_survivors_frontier`` then maintains
-    at O(churn) per reconcile. Docs in no pair are implicit singletons
+    cluster_id = the component's minimum id. One bucketing pass (a star
+    per LSH bucket) + connected components — O(corpus); run it ONCE to
+    bootstrap the persisted assignment state that
+    ``reconcile_survivors_frontier`` then maintains at O(churn) per
+    reconcile. Docs in no pair are implicit singletons
     (cluster = own id) and carry no row."""
     from datalakefoundation_spark.ext.cluster import connected_components
-    from datalakefoundation_spark.ext.dedup import lsh_candidate_pairs
+    from datalakefoundation_spark.ext.dedup import lsh_star_edges
 
-    pairs = lsh_candidate_pairs(
+    edges = lsh_star_edges(
         index_sigs.select(id_col, *[f"h{i}" for i in range(num_hashes)]),
         id_col,
         num_hashes,
         band_size,
     )
-    return connected_components(pairs)
+    return connected_components(edges)
 
 
 @dataclass

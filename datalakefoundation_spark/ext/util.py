@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame
 
 def ensure_compute_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition iff the input has fewer partitions than the
-    cluster can use.
+    cluster can use, or cannot show how many it has.
 
     Compute-heavy operators (minhash shingling, simhash, cosine scoring) do
     10-100x more work per row than the scan; their parallelism must not be
@@ -23,13 +23,28 @@ def ensure_compute_parallelism(df: DataFrame, min_partitions: int | None = None)
     # full physical planning on the driver (~1 s per call). File count
     # under-estimates splits for large multi-row-group files, which only
     # makes this MORE of a no-op at scale — exactly when it should be.
+    # A frame with no input files (a cached frame reports none, whatever
+    # it was read from) shows its partitions only through its physical
+    # plan (planned, not run: ~1-30 ms on a 4-core host): a shuffle,
+    # repartition or range reports a count; a cache, local data or a
+    # Python RDD reports none and gets the fan-out.
     try:
-        n_files = len(df.inputFiles())
+        n_parts = len(df.inputFiles()) or _planned_partitions(df)
     except Exception:
         return df
-    if 0 < n_files < target:
+    if n_parts < target:
         return df.repartition(target)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """Partition count the frame's physical plan reports before it runs
+    (adaptive execution's input plan, where that wraps it); 0 when the
+    plan does not know it."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    return plan.outputPartitioning().numPartitions()
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:

@@ -542,7 +542,7 @@ def cc_at_bound(monkeypatch):
     ran = []
     union_find, large_star = cluster._union_find, cluster._large_star
     monkeypatch.setattr(
-        cluster, "_union_find", lambda c: ran.append("union_find") or union_find(c)
+        cluster, "_union_find", lambda *a: ran.append("union_find") or union_find(*a)
     )
     monkeypatch.setattr(
         cluster, "_large_star", lambda e: ran.append("star") or large_star(e)
@@ -620,9 +620,10 @@ def test_connected_components_star_matches_driver_union_find(
 ):
     """At the driver bound the graph is labelled by union-find, one edge
     below it by large-star/small-star; both give the reference labels and
-    the same schema."""
+    the same schema. The bound counts edge rows as given, repeats and
+    both orientations of an edge included."""
     pairs = spark.createDataFrame(edges, ddl)
-    n_edges = len({(max(a, b), min(a, b)) for a, b in edges})
+    n_edges = len(edges)
     uf_rows, uf_schema, uf_paths = cc_at_bound(pairs, n_edges)
     star_rows, star_schema, star_paths = cc_at_bound(pairs, n_edges - 1)
     assert uf_paths == {"union_find"}
@@ -630,6 +631,215 @@ def test_connected_components_star_matches_driver_union_find(
     assert uf_rows == star_rows == _components(edges)
     assert uf_schema == star_schema
     assert [f.dataType.simpleString() for f in star_schema] == ["bigint", "bigint"]
+
+
+def _spark_work(spark, fn):
+    """(fn(), Spark jobs it ran, input records its stages read), counted
+    through a job group once the listener bus has caught up."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    records = sum(
+        store.lastStageAttempt(s).inputRecords()
+        for j in jobs
+        for s in sc.statusTracker().getJobInfo(j).stageIds
+    )
+    return out, len(jobs), records
+
+
+@pytest.mark.parametrize(
+    "ddl, edges",
+    [
+        ("doc_a long, doc_b long", [(1, 2), (2, 3), (10, 11), (7, 7), (3, 1)]),
+        ("doc_a int, doc_b int", [(1, 2), (3, 2), (10, 11)]),
+        ("doc_a string, doc_b string", [("a", "b"), ("c", "b"), ("x", "y")]),
+    ],
+    ids=["long", "int", "string"],
+)
+def test_connected_components_union_find_is_one_job(spark, tmp_path, ddl, edges):
+    """The driver path is the take of the edge rows and nothing else: one
+    Spark job over a one-file edge list. Its labels are an Arrow-built
+    local relation (no Python RDD scan) typed like the input ids."""
+    from datalakefoundation_spark.ext.cluster import connected_components
+
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(edges, ddl).coalesce(1).write.parquet(path)
+    pairs = spark.read.parquet(path)
+    out, jobs, _ = _spark_work(spark, lambda: connected_components(pairs))
+    assert jobs == 1
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    id_type = pairs.schema["doc_a"].dataType
+    assert [f.dataType for f in out.schema] == [id_type, id_type]
+    assert {(r["node"], r["cluster_id"]) for r in out.collect()} == _components(edges)
+
+
+def _near_dup_corpus(spark, id_type):
+    """120 documents plus a hot bucket (60 verbatim copies of one
+    document), one-word-tail copies of 20 documents and 60%-prefix copies
+    of 40 more, ids cast to ``id_type``."""
+    base = spark.read.parquet(f"{SF}/documents.parquet").where(
+        F.col("doc_id") < 120
+    ).select("doc_id", "text")
+    hot = (
+        base.where(F.col("doc_id") == 5)
+        .crossJoin(spark.range(60))
+        .select((F.col("id") + 1000).alias("doc_id"), "text")
+    )
+    tail = base.where(F.col("doc_id") < 20).select(
+        (F.col("doc_id") + 2000).alias("doc_id"),
+        F.concat("text", F.lit(" tail")).alias("text"),
+    )
+    prefix = base.where(F.col("doc_id").between(20, 59)).select(
+        (F.col("doc_id") + 3000).alias("doc_id"),
+        F.expr(
+            "concat_ws(' ', slice(split(text, ' '), 1, "
+            "int(size(split(text, ' ')) * 0.6)))"
+        ).alias("text"),
+    )
+    corpus = base.unionByName(hot).unionByName(tail).unionByName(prefix)
+    return corpus.withColumn("doc_id", F.col("doc_id").cast(id_type))
+
+
+def _pair_components(pairs):
+    return _components([(r["doc_a"], r["doc_b"]) for r in pairs.collect()])
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_lsh_star_edges_give_the_candidate_pair_components(spark, id_type):
+    """One star per LSH bucket connects exactly what the bucket's pairs
+    connect: the same nodes and components as lsh_candidate_pairs, with a
+    hot bucket of 61 identical documents sending 60 edges per band
+    instead of 1830 pairs."""
+    from datalakefoundation_spark.ext.cluster import connected_components
+
+    sig = D.minhash_signature(_near_dup_corpus(spark, id_type)).persist()
+    try:
+        pairs = D.lsh_candidate_pairs(sig)
+        stars = D.lsh_star_edges(sig)
+        want = _pair_components(pairs)
+        got = {(r["node"], r["cluster_id"]) for r in connected_components(stars).collect()}
+        assert got == want
+        assert all(a < b for a, b in stars.collect())
+        # the 61 identical documents share one bucket per band: 60 edges
+        # among them per band
+        hot_ids = [5, *range(1000, 1060)]
+        hot = F.col("doc_a").cast("long").isin(hot_ids) & F.col("doc_b").cast(
+            "long"
+        ).isin(hot_ids)
+        assert stars.where(hot).count() == 4 * 60
+        assert pairs.count() > 1830
+    finally:
+        sig.unpersist()
+
+
+def test_dedup_clusters_forwards_banding_to_the_star_edges(spark):
+    """``dedup_clusters(**minhash_kwargs)`` bands the star edges with the
+    caller's num_hashes/band_size: its clusters equal the components of
+    minhash_dedup_candidates with the same arguments, which differ from
+    the default banding on this corpus."""
+    from datalakefoundation_spark.ext.cluster import dedup_clusters
+
+    corpus = _near_dup_corpus(spark, "bigint")
+
+    def clusters(**kw):
+        return {
+            (r["doc_id"], r["cluster_id"])
+            for r in dedup_clusters(corpus, **kw).collect()
+        }
+
+    kw = {"num_hashes": 12, "band_size": 3}
+    got = clusters(**kw)
+    assert got == _pair_components(D.minhash_dedup_candidates(corpus, **kw))
+    assert got != clusters()
+
+
+def test_star_edges_on_an_empty_graph(spark):
+    """No document shares a bucket: no edges, no cluster rows, and the
+    cluster frame keeps the id type."""
+    from datalakefoundation_spark.ext.cluster import dedup_clusters
+
+    empty = spark.createDataFrame([], "doc_id int, text string")
+    assert D.lsh_star_edges(D.minhash_signature(empty)).count() == 0
+    out = dedup_clusters(empty)
+    assert out.count() == 0
+    assert out.schema["doc_id"].dataType.simpleString() == "int"
+    singles = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "one two three four five")],
+        "doc_id long, text string",
+    )
+    assert D.lsh_star_edges(D.minhash_signature(singles)).count() == 0
+
+
+def test_clean_corpus_jobs_and_single_prefix_scan(spark, tmp_path):
+    """Pins the Spark work of ``clean_corpus(...).df.count()`` on a fixed
+    one-file corpus (540 rows: 500 documents, 20 exact and 20 near
+    copies): 12 jobs, and the raw corpus is scanned once, its
+    quality/PII prefix cached for the call (before: 15 jobs and 1202
+    input records, the prefix computed on both sides of exact dedup)."""
+    from datalakefoundation_spark.ext.recipes import clean_corpus
+
+    path = str(tmp_path / "corpus")
+    base = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    exact = base.where("doc_id < 20").select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text"
+    )
+    near = base.where("doc_id < 20").select(
+        (F.col("doc_id") + 200000).alias("doc_id"),
+        F.concat("text", F.lit(" tail")).alias("text"),
+    )
+    base.unionByName(exact).unionByName(near).coalesce(1).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    held = []
+
+    def run():
+        held.append(clean_corpus(corpus))
+        return held[0].df.count()
+
+    n, jobs, records = _spark_work(spark, run)
+    try:
+        assert n == 475
+        assert jobs == 12
+        assert 540 <= records < 2 * 540
+        assert len(held[0].persisted) == 1
+    finally:
+        held[0].unpersist()
+
+
+def test_ensure_compute_parallelism_fans_out_a_cached_one_file_frame(spark, tmp_path):
+    """A cached frame lists no input files; from one file it has one
+    partition and gets the fan-out. Frames that show enough partitions,
+    by files or by their plan, come back unchanged."""
+    from datalakefoundation_spark.ext.util import ensure_compute_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    one, many = str(tmp_path / "one"), str(tmp_path / "many")
+    rows = spark.range(200).selectExpr("id AS doc_id", "cast(id AS string) AS text")
+    rows.coalesce(1).write.parquet(one)
+    rows.repartition(target).write.parquet(many)
+
+    cached = spark.read.parquet(one).persist()
+    try:
+        assert cached.inputFiles() == []
+        out = ensure_compute_parallelism(cached)
+        assert out.rdd.getNumPartitions() == target
+        assert out.count() == 200
+        shuffled = cached.repartition(target)
+        assert ensure_compute_parallelism(shuffled) is shuffled
+    finally:
+        cached.unpersist()
+    files = spark.read.parquet(many)
+    assert len(files.inputFiles()) == target
+    assert ensure_compute_parallelism(files) is files
 
 
 def test_dedup_clusters_planted(spark, docs):
