@@ -31,10 +31,10 @@ class CleanResult:
     """Cleaned corpus + the per-stage survivor counts (computed lazily —
     ``counts()`` triggers one action per recorded stage).
 
-    ``persisted`` lists every frame the recipe cached (currently the
-    exact-dedup survivors feeding the clustering loop when
-    ``near_dedup=True``; the quality/PII prefix it caches for exact dedup
-    is released before the call returns). Their storage lives for the
+    ``persisted`` lists every frame the recipe left cached: the
+    quality/PII prefix it caches for exact dedup when ``near_dedup=False``,
+    else the exact-dedup survivors feeding the clustering loop (the prefix
+    is then released before the call returns). Their storage lives for the
     SparkSession unless released: call ``unpersist()`` after
     materializing ``df`` (the lazy stages reference the cached frame, so
     release it only once you no longer need to act on them)."""
@@ -171,15 +171,14 @@ def clean_corpus(
         )
         # no stage record: redaction is row-preserving (same count)
 
-    if near_dedup:
-        # persist the quality/PII prefix for the rest of this call: exact
-        # dedup reads it twice (it joins the frame with its own aggregate),
-        # and without the cache both reads scan the raw corpus and run the
-        # PII regexes. It is released below, once connected_components has
-        # materialized the survivors' cache from it.
-        prefix = cur.persist()
-        cur = prefix
-    cur = D.exact_dedup(cur, text_col=text_col, id_col=id_col)
+    # persist the quality/PII prefix: exact dedup reads it twice (it joins
+    # the frame with its own aggregate), and without the cache both reads
+    # scan the raw corpus and run the PII regexes. With near-dedup it is
+    # released below, once connected_components has materialized the
+    # survivors' cache from it; without, the returned frame still reads it
+    # and the caller releases it (CleanResult.persisted).
+    prefix = cur.persist()
+    cur = D.exact_dedup(prefix, text_col=text_col, id_col=id_col)
     stages.append(("exact_dedup", cur))
 
     index_updates: DataFrame | None = None
@@ -268,6 +267,8 @@ def clean_corpus(
         # again (a dependent cache that is already filled stays)
         prefix.unpersist()
         stages.append(("near_dedup", cur))
+    else:
+        persisted.append(prefix)
 
     if span_dedup_size is not None:
         rewritten = D.span_dedup(

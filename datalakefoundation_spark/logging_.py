@@ -23,8 +23,8 @@ class ProcessingSummary:
     unchanged: int = 0
     touched: int = 0
     duration_ms: float = 0.0
-    # How the run committed its rows: "rewrite" (full overwrite or
-    # copy-on-write of the touched partitions/buckets) or "patch"
+    # How the run committed its rows: "rewrite" (full overwrite, or
+    # copy-on-write of the touched partitions) or "patch"
     # (merge-on-read patch segment); None when it wrote nothing.
     write_path: str | None = None
     # Rows the run's commit wrote (the rewritten set, or the patch).

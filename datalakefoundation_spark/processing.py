@@ -31,18 +31,11 @@ from datalakefoundation_spark.core.normalize import schema_compare
 from datalakefoundation_spark.log import DatalakeLogManager
 from datalakefoundation_spark.logging_ import ProcessingSummary
 from datalakefoundation_spark.metadata.models import Entity, Metadata
-from datalakefoundation_spark.tables.lake_table import (
-    BUCKET_COL,
-    MASK_COL,
-    LakeTable,
-    bucket_expr,
-    segment_may_match,
-)
+from datalakefoundation_spark.tables.lake_table import MASK_COL, LakeTable
 from datalakefoundation_spark.watermark import (
     WatermarkStore,
     build_watermark_values,
     build_window_condition,
-    build_window_spec,
 )
 
 logger = logging.getLogger(__name__)
@@ -80,7 +73,7 @@ class Processing:
         # (append only the changed rows as a patch segment and mask the
         # superseded versions with a deletion-vector ref,
         # lake_table.merge_patch) while the patches are cheap, else a
-        # rewrite of the touched partitions/buckets (the reference's Delta
+        # rewrite of the touched partitions (the reference's Delta
         # copy-on-write MERGE shape), which folds their patches. "cow"
         # forces the rewrite, "mor" the patch — MoR writes O(changed rows)
         # per run regardless of table size, at the cost of a broadcast mask
@@ -142,45 +135,11 @@ class Processing:
         if env.root_folder:
             self.log_sink = DatalakeLogManager.for_environment(spark, env)
 
-        # PK-hash bucketing for unpartitioned entities: incremental merges
-        # then rewrite only the buckets present in the slice instead of the
-        # whole table (segment-level copy-on-write). Size-aware: the actual
-        # bucket count is sized from the data (one bucket per
-        # ``bucketing.rows_per_bucket`` rows, capped at ``bucketing.buckets``)
-        # when the table is created or fully overwritten, so a 10k-row table
-        # stays a plain directory (no 32-dir small-file tax on every merge)
-        # while a large one keeps touched-buckets-only copy-on-write.
-        # ``bucketing.buckets = 0`` disables entirely.
-        self.n_buckets = self._bucket_cap = int(
-            self.options.get("bucketing.buckets", settings.get("bucketing.buckets", 32))
-        )
-        self.rows_per_bucket = int(
-            self.options.get(
-                "bucketing.rows_per_bucket", settings.get("bucketing.rows_per_bucket", 50_000)
-            )
-        )
-        self._bucketed = bool(
-            not self.entity.partition_columns and self.entity.businesskeys and self.n_buckets > 0
-        )
-        # Layout resolution: an existing table's recorded layout wins over the
-        # configured one (the modulus is baked into the stored dirs); a table
-        # that doesn't exist yet defers the choice until the slice row count
-        # is known (the fused bookkeeping agg in get_source).
-        self._layout_pending = False
-        if not self.entity.partition_columns and self.entity.businesskeys:
-            t = self.silver_table()
-            if t.exists():
-                self._bucketed = t.bucket_pk is not None
-                self.n_buckets = t.n_buckets
-            elif self._bucketed:
-                self._layout_pending = True
-
         self._cached_source: DataFrame | None = None
         self._slice_count: int = 0
         self._new_watermarks: dict[str, tuple[str, str | None]] = {}
         self._stored_watermarks: dict[str, str | None] = {}
         self._partition_values: list[dict[str, str]] = []
-        self._bucket_values: list[int] = []
 
     # ------------------------------------------------------------ source
     # The pipeline is compute-heavy (two sha256 passes over every column),
@@ -282,16 +241,6 @@ class Processing:
                     )
                 ).alias("__pvs")
             )
-        elif self._bucketed and not self._layout_pending:
-            # bucket ids of an about-to-be-created table are useless (no
-            # target dirs to prune yet) and the modulus isn't even decided —
-            # only collect them against a committed layout
-            aggs.append(
-                F.collect_set(
-                    F.when(kept, bucket_expr(self.pk_name, self.n_buckets))
-                ).alias("__bkts")
-            )
-        collected_buckets = self._bucketed and not self._layout_pending
         row = df.agg(*aggs).head()
         if viols:
             counts = {
@@ -329,8 +278,6 @@ class Processing:
                 raise DuplicateBusinesskeyException(  # pragma: no cover
                     f"Duplicate businesskeys in slice for {e.destination}"
                 )
-        if self._layout_pending:
-            self._resolve_layout(self._slice_count)
         if self._slice_count == 0:
             logger.warning("slice %s for entity %s is empty", self.slice_file, e.name)
         self._new_watermarks = {
@@ -343,56 +290,8 @@ class Processing:
         )
         if e.partition_columns:
             self._partition_values = [pv.asDict() for pv in row["__pvs"]]
-        elif collected_buckets:
-            self._bucket_values = sorted(row["__bkts"])
         self._cached_source = df
         return df
-
-    def _derive_bucket_n(self, rows: int) -> int:
-        """Size-aware bucket count: one bucket per ``bucketing.rows_per_bucket``
-        rows, capped at ``bucketing.buckets``; <=1 means plain directory."""
-        if not self.rows_per_bucket:
-            return self._bucket_cap
-        return min(self._bucket_cap, rows // self.rows_per_bucket)
-
-    def _apply_layout(self, rows: int) -> None:
-        """Apply the size-derived layout to the silver table (shared by
-        create-time resolution and full-overwrite re-derivation, so the two
-        moments can never disagree for the same row count)."""
-        n = self._derive_bucket_n(rows)
-        if n <= 1:
-            self._bucketed = False
-            self.silver_table().set_layout(None, 0, force=True)
-            logger.info(
-                "entity %s: %d rows below bucketing threshold (rows_per_bucket=%d)"
-                " — plain-directory layout", self.entity.destination, rows,
-                self.rows_per_bucket,
-            )
-        else:
-            t = self.silver_table()
-            t.set_layout(self.pk_name, int(n), force=True)
-            # honor what the backend actually adopted: a minimal backend
-            # (tables/backend.py) may decline PK-hash bucketing, and the
-            # engine must then run plain-layout merges, not prune against
-            # bucket dirs that don't exist
-            self._bucketed = t.bucket_pk is not None
-            self.n_buckets = t.n_buckets if self._bucketed else 0
-
-    def _resolve_layout(self, rows: int) -> None:
-        """Pick the layout for a table about to be created from the actual
-        slice size. Below ~2 buckets the layout degrades to a plain
-        directory — on a small table the per-merge bucket-dir small-file tax
-        costs more than touched-bucket copy-on-write saves. The choice is
-        recorded in the table manifest and sticky thereafter; a later full
-        overwrite of a grown table re-derives it (the overwrite rebuilds
-        every directory anyway).
-
-        An EMPTY first slice carries zero size information — honor the
-        configured cap instead of pinning the table to a plain directory a
-        merge-only entity could never escape (merges never re-derive)."""
-        if rows > 0:
-            self._apply_layout(rows)
-        self._layout_pending = False
 
     # ------------------------------------------------------------ watermark
     def current_watermarks(self) -> dict[str, str | None]:
@@ -441,26 +340,9 @@ class Processing:
                 pcond = pcond | c
         return cond if pcond is None else (cond & pcond)
 
-    def delete_window_spec(self, target: DataFrame | None = None):
-        """Interval form of ``delete_window`` for segment-stats data skipping
-        (same schema/field filtering, see watermark.build_window_spec).
-        Returns None exactly when ``delete_window``'s core condition would."""
-        src = self.get_source()
-        fields = list(src.schema.fields)
-        if target is not None:
-            tcols = set(target.columns)
-            fields = [f for f in fields if f.name in tcols]
-        return build_window_spec(
-            type(src.schema)(fields),
-            self.entity.watermarks,
-            self.previous_watermarks(),
-            self.current_watermarks(),
-        )
-
     # ------------------------------------------------------------ silver table
     def silver_table(self):  # -> LakeTable | any tables.backend-conformant backend
-        # memoized: each construction costs a control-plane manifest read
-        # (layout adoption), and a run calls this from 5+ sites
+        # memoized: a run calls this from 5+ sites
         if getattr(self, "_silver_table", None) is not None:
             return self._silver_table
         loc = self.output.silverpath
@@ -488,11 +370,6 @@ class Processing:
             self.spark,
             path,
             self.entity.partition_columns,
-            bucket_pk=self.pk_name if self._bucketed else None,
-            n_buckets=self.n_buckets,
-            # the engine sizes bucket layout adaptively, so a stored layout
-            # differing from the configured cap is expected, not a misconfig
-            warn_on_layout_mismatch=False,
             # per-segment min/max stats for the entity's watermark +
             # businesskey columns — recorded free (df.observe during the
             # write) and used to skip segments that can't intersect a
@@ -579,6 +456,9 @@ class Processing:
     # rarely enough (once per ~32 runs) that its full-rewrite cost amortizes
     # to ~3% of steady-state ingest work.
     AUTO_OPTIMIZE_DEFAULT = 32
+    # Segments below this many rows are "small" for auto-compaction unless
+    # ``maintenance.compact_small_rows`` overrides it.
+    COMPACT_SMALL_ROWS = 50_000
 
     def _maybe_auto_optimize(self) -> None:
         """Table maintenance inside the ingestion loop: when repeated
@@ -612,45 +492,16 @@ class Processing:
             "auto-optimize %s: %d segments > %s", self.entity.destination,
             len(mf.segments), threshold,
         )
-        # A full rewrite is also the moment a merge-only entity's layout
-        # catches up with its actual size (full overwrites re-derive in
-        # _process_full; merges never do). optimize() recomputes bucket ids
-        # from the new layout. The recorded segment rows bound the live rows
-        # from above; when that bound already derives the current layout the
-        # count() job is skipped (a compacting table far below two buckets
-        # paid it on every fold).
-        did_layout = False
-        if not self.entity.partition_columns and self.entity.businesskeys and self._bucket_cap > 0:
-            current = (table.bucket_pk, table.n_buckets) if table.bucket_pk else (None, 0)
-
-            def layout_for(rows: int) -> tuple[str | None, int]:
-                n = self._derive_bucket_n(rows)
-                return (self.pk_name, int(n)) if n > 1 else (None, 0)
-
-            recorded = [seg.rows for seg in mf.segments]
-            if None in recorded or layout_for(sum(recorded)) != current:
-                total_rows = table.read().count()
-                new_layout = layout_for(total_rows)
-                if total_rows > 0 and new_layout != current:
-                    logger.info(
-                        "auto-optimize %s: re-deriving layout for %d rows -> %s",
-                        self.entity.destination, total_rows, new_layout,
-                    )
-                    table.set_layout(*new_layout, force=True)
-                    self._bucketed = new_layout[0] is not None
-                    if self._bucketed:
-                        self.n_buckets = new_layout[1]
-                    did_layout = True
         retain = int(
             self.options.get(
                 "maintenance.vacuum_retain", settings.get("maintenance.vacuum_retain", 1)
             )
         )
-        # Layout changes and clustering need the full rewrite; otherwise
-        # fold ONLY the small-segment tail (incremental compaction — at
-        # scale a full optimize to fold micro-batch segments would rewrite
-        # the whole table). No vacuum when nothing was folded.
-        if did_layout or cluster:
+        # Clustering needs the full rewrite; otherwise fold ONLY the
+        # small-segment tail (incremental compaction — at scale a full
+        # optimize to fold micro-batch segments would rewrite the whole
+        # table). No vacuum when nothing was folded.
+        if cluster:
             table.optimize(
                 cluster_by=cluster,
                 # 2+ cluster columns: maintenance.zorder (default true)
@@ -666,13 +517,11 @@ class Processing:
             table.vacuum(retain_last=retain)
         else:
             folded = table.compact_small_segments(
-                # "smaller than one bucket's worth" unless overridden
                 small_rows=int(
                     self.options.get(
                         "maintenance.compact_small_rows",
                         settings.get(
-                            "maintenance.compact_small_rows",
-                            max(1, self.rows_per_bucket or 100_000),
+                            "maintenance.compact_small_rows", self.COMPACT_SMALL_ROWS
                         ),
                     )
                 )
@@ -727,24 +576,10 @@ class Processing:
         source = self.get_source(historic=historic)
         n = self._slice_count  # from the fused bookkeeping agg — no extra job
         table = self.silver_table()
-        # a full overwrite of an unpartitioned table rebuilds every directory,
-        # so it's the one safe moment to re-derive the size-aware bucket
-        # layout for a table that has grown (or shrunk) past the threshold
-        if (
-            not self.entity.partition_columns
-            and self.entity.businesskeys
-            and table.exists()
-            and self._bucket_cap > 0
-            and n > 0  # empty slice says nothing about the table's future size
-        ):
-            self._apply_layout(n)
         table.overwrite(
             source,
             dynamic=table.exists() and bool(self.entity.partition_columns),
-            # total_rows feeds the merge-path layout catch-up (an
-            # unpartitioned full load IS the whole table)
-            metrics={"records_in_slice": n}
-            | ({} if self.entity.partition_columns else {"total_rows": n}),
+            metrics={"records_in_slice": n},
         )
         return ProcessingSummary(
             entity_id=self.entity.id,
@@ -768,115 +603,32 @@ class Processing:
         mf = table.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"silver table does not exist: {table.path}")
-        path = None
-        # Layout catch-up for merge-only entities: a table created small
-        # (plain directory) whose wholesale-rewrite merges have recorded a
-        # grown total_rows upgrades to a bucketed layout NOW — this merge
-        # rewrites every directory anyway, and merges would otherwise never
-        # re-derive (full overwrites do it in _process_full).
-        plain_keyed = (
-            not self._bucketed
-            and not self.entity.partition_columns
-            and self.entity.businesskeys
-            and self._bucket_cap > 0
-        )
-        if plain_keyed:
-            # a plain table's path does not depend on the slice's buckets,
-            # so it is settled before the catch-up: a patch run never does
-            # the wholesale rewrite the catch-up's premise requires, and
-            # flipping the recorded layout under it would leave the base
-            # segment plain forever (layout upgrades for patched tables
-            # happen in auto-optimize/optimize, which DO rewrite)
-            path = self._write_path(table, mf, None)
-        if plain_keyed and path == "rewrite":
-            known_rows = int(mf.metrics.get("total_rows", 0) or 0)
-            n = self._derive_bucket_n(known_rows)
-            if n > 1:
-                logger.info(
-                    "entity %s: %d rows recorded — upgrading to %d-bucket "
-                    "layout during this rewrite", self.entity.destination,
-                    known_rows, n,
-                )
-                table.set_layout(self.pk_name, int(n), force=True)
-                # honor the layout the backend actually adopted (a minimal
-                # backend may decline bucketing — tables/backend.py)
-                self._bucketed = table.bucket_pk is not None
-                self.n_buckets = table.n_buckets if self._bucketed else 0
-        # Bucket-level CoW only applies when every live segment declares its
-        # buckets (a table created before bucketing was enabled has a
-        # None-partitioned segment and must be rewritten wholesale once).
-        bucketed = self._bucketed and all(
+        # A table of the retired PK-hash bucket layout (its segments own
+        # bucket values although the entity is unpartitioned;
+        # lake_table.Manifest.bucketing) takes the rewrite path on its first
+        # run here, which commits it plain.
+        legacy = not self.entity.partition_columns and any(
             seg.partitions is not None for seg in mf.segments
         )
-        # Delete inference must see every target row (a slice-missing row can
-        # live in any bucket), so an active delete window forces a full read
-        # and rewrite — the same trade Delta makes: whenNotMatchedBySource
-        # scans all files. Partitioned entities keep pruning because the
-        # window itself is partition-scoped (ProcessStrategy.scala:67-153).
-        # the window predicate resolves on the target side, so validate its
-        # columns against the target schema (additive bronze drift must skip
-        # the new column, not crash the merge)
-        target_probe = table.read(version=mf.version, keep_bucket=bucketed)
-        window = (
-            self.delete_window(target=target_probe) if self.delete_missing else None
-        )
-        bucket_values = list(self._bucket_values)
-        if bucketed and window is not None:
-            # Delete inference needs every target row that can fall inside
-            # the watermark window (a slice-missing row can live in any
-            # bucket). Per-segment min/max stats prove most segments can't
-            # intersect the window, so the read/rewrite set is: slice
-            # buckets + every bucket owned by a window-intersecting segment
-            # (Delta file-skipping parity for whenNotMatchedBySource; the
-            # old behavior was a full-table rewrite). Rows in those buckets
-            # are read from ALL segments — replacement stays at bucket-value
-            # granularity, so no segment's rows can be dropped. Segments
-            # without recorded stats are conservatively window-intersecting.
-            spec = self.delete_window_spec(target=target_probe)
-            window_buckets: set[int] = set()
-            prunable = spec is not None
-            if prunable:
-                for seg in mf.segments:
-                    if not segment_may_match(seg.stats, spec):
-                        continue
-                    for pv in seg.partitions or []:
-                        b = pv.get(BUCKET_COL)
-                        if b is None:  # foreign layout — bail to full read
-                            prunable = False
-                            break
-                        window_buckets.add(int(b))
-                    if not prunable:
-                        break
-            if prunable:
-                all_owned = {
-                    int(pv[BUCKET_COL])
-                    for seg in mf.segments
-                    for pv in (seg.partitions or [])
-                }
-                bucket_values = sorted(set(bucket_values) | window_buckets)
-                logger.info(
-                    "delete-inference stats pruning for %s: reading %d/%d buckets",
-                    self.entity.destination, len(bucket_values), len(all_owned),
-                )
-                target = target_probe
-            else:
-                bucketed = False
-                target = table.read(version=mf.version, keep_bucket=False)
-        else:
-            target = target_probe
-        if bucketed and BUCKET_COL not in target.columns:
-            bucketed = False
-        if self._slice_count == 0 and window is None:
+        # Delete inference must see every target row an unpartitioned
+        # table holds (a slice-missing row can live in any segment), the
+        # same trade Delta makes: whenNotMatchedBySource scans all files.
+        # Partitioned entities keep pruning because the window itself is
+        # partition-scoped (ProcessStrategy.scala:67-153). The window
+        # predicate resolves on the target side, so its columns are
+        # validated against the target schema (additive bronze drift must
+        # skip the new column, not crash the merge).
+        target = table.read(version=mf.version)
+        window = self.delete_window(target=target) if self.delete_missing else None
+        if self._slice_count == 0 and window is None and not legacy:
             # empty slice + no delete inference: the post-merge state is the
-            # current state — skip the read-join-rewrite entirely (previously
-            # only the bucketed path short-circuited; a partitioned or plain
-            # table paid a full-table rewrite for a no-op slice)
+            # current state — skip the read-join-rewrite entirely
             return ProcessingSummary(
                 entity_id=self.entity.id,
                 destination=self.entity.destination,
                 strategy="historic" if historic else "merge",
             )
-        drift = schema_compare(source, target.drop(BUCKET_COL) if bucketed else target)
+        drift = schema_compare(source, target)
         evolved: list[str] = []
         if drift["added"] and self.schema_evolution_additive:
             evolved = list(drift["added"])
@@ -891,18 +643,11 @@ class Processing:
                 drift["added"],
                 drift["removed"],
             )
-        # pruning: only read/rewrite partitions (or PK-hash buckets) present
-        # in the slice — at 100 TB this is what keeps an incremental merge
-        # from rewriting the whole table
+        # pruning: only read/rewrite partitions present in the slice — at
+        # 100 TB this is what keeps an incremental merge from rewriting the
+        # whole table
         pvs = self._partition_values
-        if pvs:
-            target_pruned = target.where(table._partition_filter(pvs))
-        elif bucketed:
-            target_pruned = target.where(
-                F.col(BUCKET_COL).isin(bucket_values)
-            ).drop(BUCKET_COL)
-        else:
-            target_pruned = target
+        target_pruned = target.where(table._partition_filter(pvs)) if pvs else target
         fn = S.scd2_state if historic else S.merge_state
         state = fn(
             target_pruned,
@@ -932,22 +677,14 @@ class Processing:
                 F.sum((F.col("__action") == a).cast("long")).alias(a)
                 for a in action_names
             ],
-            # rows actually landing in the table — recorded into wholesale
-            # commits so the next merge can size the bucket layout without
-            # an extra count job
+            # rows actually landing in the table (a rewrite's rows_written)
             F.sum((F.col("__action") != "skip_delete").cast("long")).alias("__total_rows"),
         )
         # skip_delete rows (source deleted=true matching no target row) exist
         # only so the observe can count them like the reference does
         # (Merge.scala:35,92,132); they never land in the table.
         op = "historic" if historic else "merge"
-        if path is None:
-            touched = (
-                pvs if pvs
-                else [{BUCKET_COL: str(b)} for b in bucket_values] if bucketed
-                else None
-            )
-            path = self._write_path(table, mf, touched)
+        path = "rewrite" if legacy else self._write_path(table, mf, pvs or None)
         if path == "patch":
             # Merge-on-read: write ONLY the changed/inserted rows; the
             # passthrough rows ("keep" / "unchanged" / "historical") stay in
@@ -972,45 +709,22 @@ class Processing:
                 .withColumn(MASK_COL, F.col("__action").isin(mask_actions))
                 .drop("__action")
             )
-            prev_total = mf.metrics.get("total_rows")
-
-            def patch_metrics() -> dict:
-                counts = {
-                    k: int(v or 0) for k, v in obs.get.items() if not k.startswith("__")
-                }
-                if prev_total is None:
-                    return counts
-                # a patch adds exactly its inserts and new versions to the
-                # table, so the layout catch-up keeps an exact row count
-                added = counts.get("insert", 0) + counts.get("new_version", 0)
-                return counts | {"total_rows": int(prev_total) + added}
-
             rows_written = table.merge_patch(
                 patch,
                 keys=keys,
                 mask_col=MASK_COL,
                 operation=op,
-                metrics_fn=patch_metrics,
+                metrics_fn=lambda: {
+                    k: int(v or 0) for k, v in obs.get.items() if not k.startswith("__")
+                },
                 base=mf,
             )
         else:
             final = state.where(F.col("__action") != "skip_delete").drop("__action")
             if pvs:
                 table.replace_partitions(final, pvs, operation=op, base=mf)
-            elif bucketed:
-                table.replace_partitions(
-                    final,
-                    [{BUCKET_COL: str(b)} for b in bucket_values],
-                    operation=op,
-                    base=mf,
-                )
             else:
-                table.overwrite(
-                    final,
-                    operation=op,
-                    metrics_fn=lambda: {"total_rows": int(obs.get.get("__total_rows") or 0)},
-                    base=mf,
-                )
+                table.overwrite(final, operation=op, base=mf)
             rows_written = int(obs.get.get("__total_rows") or 0)
         counts = {k: (v or 0) for k, v in obs.get.items()}
         written = {"write_path": path, "rows_written": rows_written}
@@ -1057,7 +771,8 @@ class Processing:
         )
 
     # A merge/SCD2 run with no write_mode writes a patch while the live
-    # patch rows of the partitions/buckets it touches, plus the slice, stay
+    # patch rows of the partitions it touches (or of the whole unpartitioned
+    # table), plus the slice, stay
     # under this share of the rows a rewrite of that set would copy; past
     # it, the run rewrites the set, which folds those patches. Cost model:
     # a rewrite reads the set's R rows and writes them again; a patch writes
@@ -1071,7 +786,7 @@ class Processing:
 
     def _write_path(self, table, mf, touched: list[dict] | None) -> str:
         """"patch" or "rewrite" for this run's commit over ``touched`` (the
-        partition/bucket values it would rewrite; None = the whole table),
+        partition values it would rewrite; None = the whole table),
         from numbers the run already holds: the slice's row count from the
         bookkeeping aggregate and the manifest's recorded segment rows. No
         Spark job. A segment owning part of the set counts the owned share

@@ -9,7 +9,7 @@ Semantics (same contract as Delta's streaming source over a Delta table):
   new/changed rows (``write_mode=mor`` upstream makes this a precise
   row-level change feed with no diffing at all — the patch segments are
   the deltas by construction);
-* copy-on-write merge/overwrite commits rewrite whole partitions/buckets,
+* copy-on-write merge/overwrite commits rewrite whole partitions or tables,
   so their new segments replay unchanged rows too (at-least-once per key,
   Delta's ``ignoreChanges`` behavior — downstream dedup by PK + version);
 * maintenance commits (compact / optimize) are row-preserving rewrites

@@ -15,7 +15,7 @@ tested property.
 REQUIRED surface (what Processing actually calls on the write path):
 
 * ``exists() -> bool``
-* ``read(version=None, keep_bucket=False, ...) -> DataFrame`` — at least
+* ``read(version=None, ...) -> DataFrame`` — at least
   the latest manifest's ``version`` must be accepted (a merge reads the
   target at the version it plans from).
 * ``overwrite(df, dynamic=False, metrics=None, operation=None,
@@ -32,11 +32,13 @@ REQUIRED surface (what Processing actually calls on the write path):
   ``.segments: list`` (each with ``.partitions: dict | None``) and
   ``.version: int``.
 * ``_partition_filter(pvs) -> Column`` over the table's partition columns.
-* ``set_layout(bucket_pk, n_buckets, force=False)`` — MAY decline (keep
-  ``bucket_pk is None``); Processing re-reads the attributes afterwards and
-  runs plain-layout merges against a backend that declines.
 * ``gc_orphans(older_than_seconds) -> list`` — MAY be a no-op.
-* attributes ``path``, ``partition_by``, ``bucket_pk``, ``n_buckets``.
+* attributes ``path``, ``partition_by``.
+
+An unpartitioned table has one layout: its segments own the whole table
+(``partitions`` None). Processing rewrites a table whose unpartitioned
+segments own partition values (LakeTable's retired PK-hash bucket layout)
+on its next run.
 
 OPTIONAL capabilities (LakeTable-only today, each used behind a Processing
 setting that defaults off or a mode flag): ``merge_patch`` (MoR write
@@ -68,15 +70,14 @@ class MemManifest:
     metrics: dict = field(default_factory=dict)
     operation: str = ""
     timestamp: float = 0.0
-    bucketing: dict | None = None
 
 
 class MemoryBackend:
     """Minimal in-memory silver backend: committed state is a list of
     collected rows + schema per path (class-level store, so successive
     Processing instances over the same path share state like successive
-    runs against real storage do). No bucketing (set_layout declines), no
-    MoR, no maintenance — the smallest surface the contract allows."""
+    runs against real storage do). No MoR, no maintenance — the smallest
+    surface the contract allows."""
 
     _STORES: dict[str, dict[str, Any]] = {}
 
@@ -90,8 +91,6 @@ class MemoryBackend:
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by or [])
-        self.bucket_pk: str | None = None
-        self.n_buckets = 0
 
     # ------------------------------------------------------------- state
     @property
@@ -121,15 +120,14 @@ class MemoryBackend:
     def read(
         self,
         version: int | None = None,
-        keep_bucket: bool = False,
         as_of_timestamp: float | None = None,
         prune_spec: Any = None,
     ) -> DataFrame:
         st = self._store
         if st is None:
             raise FileNotFoundError(f"MemoryBackend table does not exist: {self.path}")
-        # keep_bucket is meaningless (never bucketed); time travel to an
-        # older version is an optional capability this backend does not offer
+        # time travel to an older version is an optional capability this
+        # backend does not offer
         if (version is not None and version != st["version"]) or as_of_timestamp is not None:
             raise NotImplementedError("MemoryBackend has no time travel")
         return self.spark.createDataFrame(st["rows"], st["schema"])
@@ -210,11 +208,5 @@ class MemoryBackend:
         )
 
     # ------------------------------------------------- declined capabilities
-    def set_layout(self, bucket_pk: str | None, n_buckets: int, force: bool = False) -> None:
-        # declines bucketing: Processing re-reads bucket_pk afterwards and
-        # runs plain-layout merges (the contract's documented fallback)
-        self.bucket_pk = None
-        self.n_buckets = 0
-
     def gc_orphans(self, older_than_seconds: float = 3600.0) -> list:
         return []

@@ -110,10 +110,10 @@ class Segment:
     # mask (LakeTable._read_segments).
     dv: list[dict] = field(default_factory=list)
     # True for a merge-on-read patch (merge_patch). A patch stores its
-    # bucket/partition columns as data in files directly under its dir (no
-    # hive subdirs) and records its ownership from the values it wrote, so
-    # every live patch joins the one batched plain read and the one batched
-    # mask read, whatever the table layout. Old manifests read False: their
+    # partition columns as data in files directly under its dir (no hive
+    # subdirs) and records its ownership from the values it wrote, so every
+    # live patch joins the one batched plain read and the one batched mask
+    # read, whatever the table layout. Old manifests read False: their
     # patches are hive segments and read as such.
     patch: bool = False
 
@@ -126,10 +126,12 @@ class Manifest:
     operation: str = ""
     timestamp: float = 0.0
     metrics: dict = field(default_factory=dict)
-    # {"pk": <col>, "n": <buckets>} when the table is PK-hash bucketed.
-    # Persisted so every writer uses the layout the table was created with —
-    # a config that drifts from the stored modulus would prune to the wrong
-    # bucket dirs and silently lose/duplicate rows.
+    # {"pk": <col>, "n": <buckets>} on manifests of the retired PK-hash
+    # bucket layout (written by older versions of this format; nothing
+    # writes it now). Their segments are hive-partitioned on BUCKET_COL
+    # (``partition_by`` records it) and read per segment with ownership
+    # filters; writers refuse to build on them except by a full rewrite
+    # (LakeTable._require_current_layout).
     bucketing: dict | None = None
     # The table schema after this commit, every field nullable, partition
     # columns last (where hive discovery puts them). Reads hand it to every
@@ -273,16 +275,16 @@ def _pv_key(pv: dict[str, str]) -> tuple:
     return tuple(sorted(pv.items()))
 
 
-# Implicit partition column for PK-hash bucketing of otherwise-unpartitioned
-# tables. The PK is a sha256 hex string, so its first 4 hex chars are uniform
-# over [0, 65536) and `conv(substr(pk,1,4),16,10) % n` gives evenly-filled
-# buckets with zero skew by construction.
+# Hive partition column of the retired PK-hash bucket layout
+# (``Manifest.bucketing``): tables written with it keep their
+# ``__dlf_bucket=N`` segment dirs until their next full rewrite. Internal:
+# dropped from every read.
 BUCKET_COL = "__dlf_bucket"
 
 # Internal marker column persisted in merge-on-read patch segments: true on
 # rows whose key should mask the superseded version in older segments (see
 # Segment.dv / LakeTable.merge_patch). Dropped from every read, like the
-# bucket column.
+# legacy bucket column.
 MASK_COL = "__dlf_mask"
 
 # Commit version a deletion-vector key was created at (persisted into
@@ -318,16 +320,12 @@ def _path_version() -> Column:
     """Per-row commit version parsed from the segment dir inside
     ``_metadata.file_path``: the five digits after the LAST '/data/v'
     occurrence, which is this table's segment dir regardless of hive-subdir
-    depth (bucketed/partitioned segments nest one level deeper). A plain
+    depth (partitioned segments nest deeper). A plain
     substring search, not a backtracking regex: it runs on every row of
     every masked read."""
     return F.substring(
         F.substring_index(F.col("_metadata.file_path"), "/data/v", -1), 1, 5
     ).cast("long")
-
-
-def bucket_expr(pk_col: str, n_buckets: int) -> Column:
-    return F.pmod(F.conv(F.substring(F.col(pk_col), 1, 4), 16, 10).cast("int"), F.lit(n_buckets))
 
 
 def zorder_numeric(col: Column, dtype: str) -> Column:
@@ -574,24 +572,14 @@ class LakeTable:
         spark: SparkSession,
         path: str,
         partition_by: Sequence[str] = (),
-        bucket_pk: str | None = None,
-        n_buckets: int = 32,
         warn_on_layout_mismatch: bool = True,
         stats_columns: Sequence[str] = (),
     ) -> None:
-        """``bucket_pk`` (only honored when ``partition_by`` is empty) stores
-        the table hive-partitioned by a PK-hash bucket so incremental merges
-        rewrite only the buckets a slice touches instead of the whole table —
-        segment-level copy-on-write, the unpartitioned analog of Delta MERGE
-        rewriting only files containing matches (Merge.scala:96-125). The
-        bucket column is internal: writes derive it, reads drop it.
-
-        If the table already exists with a recorded bucketing layout, that
-        layout WINS over the constructor arguments (with a warning on
-        mismatch): the bucket modulus is baked into the stored directory
-        structure, so changing it per-run would prune merges against the
-        wrong dirs and silently lose/duplicate rows. A layout change
-        requires a full rewrite (overwrite/optimize with the new config)."""
+        """``partition_by`` names the hive partition columns of the
+        segments this instance writes; an unpartitioned table writes plain
+        segments plus flat patches. Reads plan from the manifest they read,
+        whatever this instance was given. ``warn_on_layout_mismatch`` is
+        accepted for older callers and has no effect."""
         self.spark = spark
         self.path = path.rstrip("/")
         # LakeTable._schema's inferred schemas of manifests that predate the
@@ -607,77 +595,19 @@ class LakeTable:
         # businesskey columns. Collected via df.observe during the write
         # action, so recording them costs no extra scan.
         self.stats_columns = tuple(stats_columns)
-        self.bucket_pk = bucket_pk if not partition_by else None
-        self.n_buckets = n_buckets
-        self.partition_by = list(partition_by) if partition_by else (
-            [BUCKET_COL] if bucket_pk else []
-        )
-        if not partition_by:
-            mf = self.latest_manifest()
-            stored = mf.bucketing if mf is not None else None
-            if stored:
-                if warn_on_layout_mismatch and (self.bucket_pk, self.n_buckets) != (
-                    stored["pk"],
-                    int(stored["n"]),
-                ):
-                    logger.warning(
-                        "table %s was written with bucketing %s; ignoring configured "
-                        "(pk=%s, n=%s) — rewrite the table to change its layout",
-                        self.path, stored, self.bucket_pk, self.n_buckets,
-                    )
-                self.bucket_pk = stored["pk"]
-                self.n_buckets = int(stored["n"])
-                self.partition_by = [BUCKET_COL]
-            elif mf is not None and self.bucket_pk:
-                # existing table written WITHOUT bucketing: the stored layout
-                # wins here too — a plain directory stays a plain directory
-                # (writing bucket-partitioned segments into it would mix
-                # layouts). Upgrading a grown table happens explicitly via
-                # set_layout(force=True) under a full overwrite
-                # (Processing._process_full) or optimize().
-                self.bucket_pk = None
-                self.partition_by = []
+        self.partition_by = list(partition_by)
 
-    def set_layout(self, bucket_pk: str | None, n_buckets: int, force: bool = False) -> None:
-        """Change the PK-hash bucket layout of this instance.
-
-        Only legal when the stored directory structure is about to be (re)built
-        wholesale: before the first commit, or immediately before a full
-        overwrite (``force=True``). Changing the modulus under live bucketed
-        segments would prune merges against the wrong dirs — that path raises.
-        """
-        if self.partition_by and self.partition_by != [BUCKET_COL]:
-            raise ValueError("set_layout only applies to unpartitioned tables")
-        if self.exists() and not force:
+    def _require_current_layout(self, mf: Manifest) -> None:
+        """Refuse a commit that would keep the segments of a PK-hash
+        bucketed table (``Manifest.bucketing``, written by older versions of
+        this format): its hive bucket segments stay readable, but only a
+        full rewrite — ``overwrite``, ``optimize`` or a Processing run —
+        may build on them, and that rewrite commits a plain manifest."""
+        if mf.bucketing:
             raise ValueError(
-                f"{self.path} already has committed segments; bucket layout can "
-                "only change under a full overwrite (force=True)"
+                f"{self.path} has the retired PK-hash bucket layout; rewrite it "
+                "(overwrite or optimize) before any other write"
             )
-        self.bucket_pk = bucket_pk
-        self.n_buckets = int(n_buckets)
-        self.partition_by = [BUCKET_COL] if bucket_pk else []
-
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        if self.bucket_pk and BUCKET_COL not in df.columns:
-            df = df.withColumn(BUCKET_COL, bucket_expr(self.bucket_pk, self.n_buckets))
-            # Cluster output files by bucket dir: without this every write
-            # task emits a file into every bucket dir (tasks x buckets small
-            # files). When there are fewer buckets than cores, clustering on
-            # the bucket alone would also CAP the write stage at n_buckets
-            # tasks — so each bucket is salted into ceil(cores/n_buckets)
-            # splits: write parallelism stays ~cores, files per bucket stay
-            # bounded at the split factor.
-            par = self.spark.sparkContext.defaultParallelism
-            split = max(1, -(-par // max(1, self.n_buckets)))  # ceil
-            if split > 1:
-                df = df.repartition(
-                    self.n_buckets * split,
-                    BUCKET_COL,
-                    F.pmod(F.hash(F.col(self.bucket_pk)), F.lit(split)),
-                )
-            else:
-                df = df.repartition(min(self.n_buckets, par), BUCKET_COL)
-        return df
 
     # ------------------------------------------------------------ manifest io
     @property
@@ -708,7 +638,7 @@ class LakeTable:
         inference job per segment, cached per LakeTable object and version.
         Data column types come from the parquet footers. Partition column
         types cannot be known from dir names, so they read as the exact
-        dir strings (the bucket column as int); they are provisional, and
+        dir strings (the legacy bucket column as int); they are provisional, and
         the next commit that writes rows records its frame's types for
         them (``_write_segment``)."""
         if mf.schema is not None:
@@ -741,8 +671,6 @@ class LakeTable:
         loser gets ConcurrentCommitException and must re-read + retry. This
         is the same one-immutable-file-per-version protocol Delta/Iceberg
         use for their commit files; object-store caveats live in fs.py."""
-        if manifest.bucketing is None and self.bucket_pk:
-            manifest.bucketing = {"pk": self.bucket_pk, "n": self.n_buckets}
         final = f"{self._manifest_dir}/v{manifest.version:05d}.json"
         try:
             self.fs.create_exclusive(final, manifest.to_json())
@@ -840,25 +768,21 @@ class LakeTable:
 
         Ownership (``partitions``) is None on an unpartitioned table. A hive
         segment lists it from its partition dirs. A ``patch`` segment is
-        written flat — bucket/partition columns as data, moved last like
-        hive discovery places them, rebalanced into few files instead of
-        shuffled into bucket dirs — and its ownership is the distinct values
-        the same observation saw.
+        written flat — partition columns as data, moved last like hive
+        discovery places them, rebalanced into few files instead of
+        shuffled into partition dirs — and its ownership is the distinct
+        values the same observation saw.
 
-        The recorded schema is the written frame's (bucket, partition and
-        mask columns included) — added to ``mf``'s schema when ``evolve``,
+        The recorded schema is the written frame's (partition and mask
+        columns included) — added to ``mf``'s schema when ``evolve``,
         replacing it otherwise (a full overwrite). A column typed unlike
         its recorded type raises before anything is written. On a manifest
         without a recorded schema the inferred partition column types are
         provisional, so the frame's types replace them."""
         from pyspark.sql import Observation
 
-        if not patch:
-            df = self._with_bucket(df)
-        else:
+        if patch:
             if self.partition_by:
-                if self.bucket_pk and BUCKET_COL not in df.columns:
-                    df = df.withColumn(BUCKET_COL, bucket_expr(self.bucket_pk, self.n_buckets))
                 df = df.select(
                     *[c for c in df.columns if c not in self.partition_by],
                     *self.partition_by,
@@ -939,11 +863,11 @@ class LakeTable:
         return [dict(r.asDict()) for r in rows]
 
     def _partition_filter(self, pvs: list[dict[str, str]]) -> Column:
-        # single-column ownership (the bucketed-table norm): one IN list
-        # instead of an OR-of-AND chain — with 32 buckets per segment and
-        # dozens of live segments the chained form made driver-side plan
-        # ANALYSIS the dominant read cost (measured 11 s of pure plan
-        # build at 33 segments x 32 values; isin analyzes in millis)
+        # single-column ownership: one IN list instead of an OR-of-AND
+        # chain — with 32 values per segment and dozens of live segments
+        # the chained form made driver-side plan ANALYSIS the dominant read
+        # cost (measured 11 s of pure plan build at 33 segments x 32 values;
+        # isin analyzes in millis)
         keys = {k for pv in pvs for k in pv.keys()}
         if len(keys) == 1:
             (k,) = keys
@@ -981,15 +905,13 @@ class LakeTable:
     def read(
         self,
         version: int | None = None,
-        keep_bucket: bool = False,
         as_of_timestamp: float | None = None,
         prune_spec=None,
     ) -> DataFrame:
-        """``keep_bucket=True`` retains the internal bucket column so callers
-        can prune to specific buckets (predicates on it are pure hive-dir
-        pruning) before dropping it themselves. ``as_of_timestamp`` reads
-        the newest version committed at or before the given unix time
-        (ignored when an explicit ``version`` is passed).
+        """The table's rows at ``version`` (default: the latest).
+        ``as_of_timestamp`` reads the newest version committed at or before
+        the given unix time (ignored when an explicit ``version`` is
+        passed).
 
         ``prune_spec`` (a window spec from ``watermark.build_window_spec``)
         skips segments whose recorded min/max stats prove no row can match —
@@ -1002,18 +924,14 @@ class LakeTable:
         mf = self.manifest_at(version) if version is not None else self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        return self._read_segments(mf.segments, self._schema(mf), keep_bucket, prune_spec)
+        return self._read_segments(mf, mf.segments, prune_spec)
 
     def _read_segments(
-        self,
-        all_segs: list[Segment],
-        schema: T.StructType,
-        keep_bucket: bool,
-        prune_spec=None,
+        self, mf: Manifest, all_segs: list[Segment], prune_spec=None
     ) -> DataFrame:
-        """The rows of ``all_segs`` with their deletion vectors applied —
-        the one segment-reading path, shared by ``read`` and
-        ``compact_small_segments``.
+        """The rows of ``all_segs`` (segments of ``mf``) with their deletion
+        vectors applied — the one segment-reading path, shared by ``read``,
+        ``optimize`` and ``compact_small_segments``.
 
         Every reader is planned from the table ``schema``, so building the
         frame starts no schema-inference job (only Spark's parallel file
@@ -1042,6 +960,7 @@ class LakeTable:
         rows in 10 buckets plus 4 patches, 4 cores)."""
         if not all_segs:
             raise FileNotFoundError(f"LakeTable has no segments: {self.path}")
+        schema = self._schema(mf)
         segs = list(all_segs)
         if prune_spec is not None:
             segs = [s for s in segs if segment_may_match(s.stats, prune_spec)]
@@ -1060,17 +979,19 @@ class LakeTable:
         # The table schema covers additively-evolved segments: files
         # without a column read it as a typed NULL.
         # Per-segment reads remain where the semantics are per-segment:
-        # partition/bucket ownership filters of hive segments
-        # (seg.partitions) and stats-pruned partial file lists. Batched rows
-        # take the commit version the mask join needs from
+        # hive segments, whose partition values live in their dir names and
+        # whose ownership (seg.partitions) filters them — the segments of
+        # partitioned tables and of the retired bucket layout
+        # (Manifest.bucketing) — and stats-pruned partial file lists.
+        # Batched rows take the commit version the mask join needs from
         # _metadata.file_path instead of a per-segment literal.
         parts: list[DataFrame] = []
         # Every batched root is a dir of files without hive subdirs — plain
-        # segments, patches (flat whatever the layout) and the leaf bucket
-        # dirs of bucketed segments — so one multi-path read takes them all
-        # (hive discovery under mixed roots would conflict). A patch that
-        # lost ownership keeps its rows filtered there by its commit
-        # version (unique per data segment in a manifest).
+        # segments and patches (flat whatever the layout) — so one
+        # multi-path read takes them all (hive discovery under mixed roots
+        # would conflict). A patch that lost ownership keeps its rows
+        # filtered there by its commit version (unique per data segment in
+        # a manifest).
         batched: list[str] = []
         restricted: list[tuple[int, list[dict[str, str]]]] = []
         for seg in segs:
@@ -1080,8 +1001,8 @@ class LakeTable:
             if prune_spec is not None and seg.files:
                 # file-level skipping inside the surviving segment: read only
                 # the files whose footer stats might hold a matching row.
-                # basePath keeps the hive partition columns of bucketed/
-                # partitioned segments intact on an explicit file list.
+                # basePath keeps the hive partition columns of partitioned
+                # segments intact on an explicit file list.
                 keep = [
                     p
                     for p, fstats in seg.files.items()
@@ -1098,42 +1019,14 @@ class LakeTable:
                         .option("basePath", base)
                         .parquet(*[f"{base}/{p}" for p in sorted(keep)])
                     )
-            if whole_dir and (
-                # ownership-full segments need NO per-segment filter: plain
-                # segments own everything by definition, and BUCKET-layout
-                # segments whose recorded ownership still covers their
-                # physical dirs (owns_all — tracked in the manifest,
-                # flipped when replace_partitions shrinks them) read
-                # identically without it. Bucketed segments batch via their
-                # LEAF bucket dirs (multi-root hive discovery conflicts on
-                # the non-hive vNNNNN level), so the bucket column is not
-                # materialized — only keep_bucket=False reads qualify; the
-                # merge path (keep_bucket=True + bucket-pruned reads) keeps
-                # per-segment hive reads with real dir pruning. Real
-                # partitioned tables always read per-segment: their
-                # partition VALUES live in the dir names.
-                seg.partitions is None
-                or seg.patch
-                or (
-                    seg.owns_all
-                    and not keep_bucket
-                    and self.partition_by == [BUCKET_COL]
-                )
-            ):
-                if seg.partitions is None or seg.patch:
-                    batched.append(base)
-                    if seg.partitions is not None and not seg.owns_all:
-                        restricted.append((seg_v, seg.partitions))
-                else:
-                    batched.extend(
-                        f"{base}/{d}"
-                        for d in self.fs.listdir(base)
-                        if d.startswith(f"{BUCKET_COL}=")
-                    )
+            if whole_dir and (seg.partitions is None or seg.patch):
+                batched.append(base)
+                if seg.partitions is not None and not seg.owns_all:
+                    restricted.append((seg_v, seg.partitions))
                 continue
             if whole_dir:
                 df = self.spark.read.schema(schema).parquet(base)
-            if seg.partitions is not None and self.partition_by:
+            if seg.partitions is not None and mf.partition_by:
                 # equality predicates on hive partition dirs -> pure dir pruning
                 df = df.where(self._partition_filter(seg.partitions))
             if masks:
@@ -1160,10 +1053,8 @@ class LakeTable:
                 cond = cond & (F.col(k) == F.col(f"__dv_{k}"))
             mask = mask.select(*[F.col(k).alias(f"__dv_{k}") for k in keys], DV_V_COL)
             out = out.join(F.broadcast(mask), cond, "left_anti")
-        # the bucket/mask columns are internal regardless of this instance's
-        # config (e.g. a reader constructed with bucketing disabled on a
-        # bucketed table must not leak them as data columns)
-        return out.drop(SEG_V_COL, MASK_COL, *([] if keep_bucket else [BUCKET_COL]))
+        # the mask column and the legacy bucket column are internal
+        return out.drop(SEG_V_COL, MASK_COL, BUCKET_COL)
 
     def _dv_masks(
         self, entries: list[dict], schema: T.StructType
@@ -1194,25 +1085,18 @@ class LakeTable:
             # ONE multi-path read per (keys, flag) group — a reader per
             # entry made every live patch its own relation (O(patches) plan
             # nodes on exactly the trickle-ingest path that accumulates
-            # patches fastest). Patches are flat dirs; hive-layout patch
-            # dirs of older manifests expand to their __dlf_bucket leaf
-            # dirs (multi-root reads reject mixed/hive structures, and leaf
-            # roots need no partition discovery), and real-partitioned ones
-            # (multi-level nesting, values live in dir names) read alone via
-            # single-root hive discovery instead of joining the batch.
+            # patches fastest). Patches are flat dirs; the hive-layout patch
+            # dirs of older manifests read alone via single-root hive
+            # discovery (multi-root reads reject mixed/hive structures)
+            # instead of joining the batch.
             paths: list[str] = []
             reads: list[DataFrame] = []
             for d in dirs:
                 base = f"{self.path}/{d}"
-                names = self.fs.listdir(base)
-                if any(
-                    "=" in n and not n.startswith((BUCKET_COL, "_", "."))
-                    for n in names
-                ):
+                if any("=" in n for n in self.fs.listdir(base)):
                     reads.append(self.spark.read.schema(proj).parquet(base))
                     continue
-                buckets = [n for n in names if n.startswith(f"{BUCKET_COL}=")]
-                paths.extend([f"{base}/{n}" for n in buckets] or [base])
+                paths.append(base)
             if paths:
                 reads.append(self.spark.read.schema(proj).parquet(*paths))
             for f in reads:
@@ -1298,14 +1182,8 @@ class LakeTable:
           strictly better, for 2+ it is the practical linear-order stand-in).
 
         Runs as one shuffle + one write; old versions stay readable until
-        ``vacuum()``.
-
-        Bucketed tables keep their bucket dirs, so clustering happens WITHIN
-        each bucket: repartition on the (retained) bucket column + sort
-        within partitions on (bucket, cluster_by) — one file per bucket with
-        min/max stats on the cluster columns. A global range-repartition
-        here would be undone by the bucket-directory write and just waste
-        two shuffles.
+        ``vacuum()``. A table of the retired bucket layout is rewritten
+        plain.
 
         ``zorder=True`` (with 2+ numeric/temporal ``cluster_by`` columns)
         clusters on an interleaved-bit Morton key instead of the
@@ -1323,7 +1201,7 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
-        cur = self._read_segments(mf.segments, self._schema(mf), keep_bucket=False)
+        cur = self._read_segments(mf, mf.segments)
         if zorder and cluster_by:
             zcols = list(cluster_by)
             numeric_ok = {
@@ -1366,24 +1244,12 @@ class LakeTable:
                 for c in zcols
             }
             zkey = zorder_column(zcols, bounds, bits=zorder_bits, dtypes=dtypes)
-            if self.bucket_pk:
-                df = (
-                    cur.withColumn(BUCKET_COL, bucket_expr(self.bucket_pk, self.n_buckets))
-                    .withColumn("__dlf_z", zkey)
-                    .repartition(
-                        min(self.n_buckets, self.spark.sparkContext.defaultParallelism),
-                        BUCKET_COL,
-                    )
-                    .sortWithinPartitions(BUCKET_COL, "__dlf_z")
-                    .drop("__dlf_z")
-                )
+            df = cur.withColumn("__dlf_z", zkey)
+            if target_partitions:
+                df = df.repartitionByRange(target_partitions, "__dlf_z")
             else:
-                df = cur.withColumn("__dlf_z", zkey)
-                if target_partitions:
-                    df = df.repartitionByRange(target_partitions, "__dlf_z")
-                else:
-                    df = df.repartitionByRange("__dlf_z")
-                df = df.sortWithinPartitions("__dlf_z").drop("__dlf_z")
+                df = df.repartitionByRange("__dlf_z")
+            df = df.sortWithinPartitions("__dlf_z").drop("__dlf_z")
             self.overwrite(
                 df,
                 operation="optimize",
@@ -1391,34 +1257,16 @@ class LakeTable:
                 base=mf,
             )
             return
-        if self.bucket_pk:
-            # Recompute the bucket column from the CURRENT layout instead of
-            # reusing the stored one: stored values are stale after
-            # set_layout(force=True), which makes optimize() the tool for
-            # re-bucketing a grown incremental table (full rewrite anyway).
-            # The repartition on the bucket folds each bucket's accumulated
-            # small files into one.
-            df = cur.withColumn(
-                BUCKET_COL, bucket_expr(self.bucket_pk, self.n_buckets)
-            ).repartition(
-                min(self.n_buckets, self.spark.sparkContext.defaultParallelism),
-                BUCKET_COL,
-            )
-            if cluster_by:
-                df = df.sortWithinPartitions(
-                    BUCKET_COL, *[F.col(c) for c in cluster_by]
-                )
-        else:
-            df = cur
-            if cluster_by:
-                cols = [F.col(c) for c in cluster_by]
-                if target_partitions:
-                    df = df.repartitionByRange(target_partitions, *cols)
-                else:
-                    df = df.repartitionByRange(*cols)
-                df = df.sortWithinPartitions(*cols)
-            elif target_partitions:
-                df = df.repartition(target_partitions)
+        df = cur
+        if cluster_by:
+            cols = [F.col(c) for c in cluster_by]
+            if target_partitions:
+                df = df.repartitionByRange(target_partitions, *cols)
+            else:
+                df = df.repartitionByRange(*cols)
+            df = df.sortWithinPartitions(*cols)
+        elif target_partitions:
+            df = df.repartition(target_partitions)
         self.overwrite(
             df,
             operation="optimize",
@@ -1444,6 +1292,7 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             return []
+        self._require_current_layout(mf)
         small = [s for s in mf.segments if s.rows is None or s.rows < small_rows]
         if self.partition_by:
             # a None-ownership segment means "whole table" — never fold it
@@ -1457,7 +1306,7 @@ class LakeTable:
         # dv refs of its own (other segments' refs to a folded patch dir
         # stay valid — the dir outlives the fold until vacuum)
         schema = self._schema(mf)
-        merged = self._read_segments(small, schema, keep_bucket=True)
+        merged = self._read_segments(mf, small)
         folded, _ = self._write_segment(merged, mf)
         if any(s.partitions is None for s in small):
             folded.partitions = None  # unpartitioned append-style segments
@@ -1488,6 +1337,8 @@ class LakeTable:
 
     def append(self, df: DataFrame, metrics: dict | None = None) -> None:
         mf = self.latest_manifest()
+        if mf is not None:
+            self._require_current_layout(mf)
         new, schema = self._write_segment(df, mf)
         next_v = (mf.version + 1) if mf else 0
         segments = (list(mf.segments) if mf else []) + [new]
@@ -1569,6 +1420,7 @@ class LakeTable:
         mf = self.latest_manifest() if base is None else base
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
+        self._require_current_layout(mf)
         new, schema = self._write_segment(df, mf)
         # Rows may land outside the requested partitions (a merge that updates
         # a partition column). Those extra partitions get co-owned by the new
@@ -1630,7 +1482,7 @@ class LakeTable:
         patch segment and mask the superseded versions in every existing
         segment via a deletion-vector reference to the patch's own key
         projection — write cost O(changed rows) instead of rewriting every
-        touched partition/bucket (the Delta deletion-vector / Hudi MOR
+        touched partition (the Delta deletion-vector / Hudi MOR
         trade: cheap writes, reads pay one version-keyed broadcast mask
         join per key set until compaction folds the patches).
 
@@ -1641,7 +1493,7 @@ class LakeTable:
         row count; an empty patch commits nothing (the state is unchanged).
 
         The patch is written flat on every layout (``Segment.patch``): its
-        bucket/partition columns are data, and it owns the values it holds,
+        partition columns are data, and it owns the values it holds,
         so a later ``replace_partitions`` of those values takes them over
         (folding the patch) exactly as for a hive segment, while reads take
         every live patch in one batched relation.
@@ -1653,6 +1505,7 @@ class LakeTable:
         mf = self.latest_manifest() if base is None else base
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
+        self._require_current_layout(mf)
         if mask_col is not None and mask_col not in df.columns:
             # the mask read types a missing flag as NULL: nothing would mask
             raise ValueError(
@@ -1739,6 +1592,7 @@ class LakeTable:
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
+        self._require_current_layout(mf)
         schema = self._schema(mf)
         # mask reads type the keys from the table schema, so the dv dir
         # stores them cast to it (an int key frame against a bigint column
@@ -1790,13 +1644,10 @@ class LakeTable:
         }
         selects = []
         for seg in mf.segments:
-            internal = [BUCKET_COL] if self.bucket_pk else []
-            if seg.dir in flagged:
-                internal.append(MASK_COL)
-            star = f"* EXCEPT ({', '.join(internal)})" if internal else "*"
+            star = f"* EXCEPT ({MASK_COL})" if seg.dir in flagged else "*"
             sql = f"SELECT {star} FROM parquet.`{self.path}/{seg.dir}`"
             clauses = []
-            if seg.partitions is not None and self.partition_by:
+            if seg.partitions is not None and mf.partition_by:
                 ors = []
                 for pv in seg.partitions:
                     ands = " AND ".join(
@@ -1918,38 +1769,18 @@ class LakeTable:
                 f"cannot restore {self.path} to v{version}: segment dirs "
                 f"{missing} were vacuumed"
             )
-        # Adopt the restored layout BEFORE committing: _commit injects the
-        # instance's current bucket layout into any manifest whose
-        # ``bucketing`` is None, so restoring an UNBUCKETED version from an
-        # instance currently bucketed would stamp the live bucket config
-        # onto plain-directory segments — every later writer would then
-        # prune merges against bucket dirs that don't exist. A commit
-        # failure (lost CAS race) rolls the instance layout back.
-        old_layout = (self.bucket_pk, self.n_buckets, list(self.partition_by))
-        self.partition_by = list(src.partition_by)
-        if src.bucketing:
-            self.bucket_pk = src.bucketing["pk"]
-            self.n_buckets = int(src.bucketing["n"])
-        elif self.partition_by != [BUCKET_COL]:
-            self.bucket_pk = None
-        try:
-            self._commit(
-                Manifest(
-                    version=cur.version + 1,
-                    partition_by=list(src.partition_by),
-                    segments=[replace(s, dv=list(s.dv or [])) for s in src.segments],
-                    operation="restore",
-                    timestamp=time.time(),
-                    metrics={"restored_version": version},
-                    bucketing=src.bucketing,
-                    schema=src.schema,
-                )
+        self._commit(
+            Manifest(
+                version=cur.version + 1,
+                partition_by=list(src.partition_by),
+                segments=[replace(s, dv=list(s.dv or [])) for s in src.segments],
+                operation="restore",
+                timestamp=time.time(),
+                metrics={"restored_version": version},
+                bucketing=src.bucketing,
+                schema=src.schema,
             )
-        except Exception:
-            self.bucket_pk, self.n_buckets, self.partition_by = (
-                old_layout[0], old_layout[1], list(old_layout[2])
-            )
-            raise
+        )
         return cur.version + 1
 
     def vacuum(

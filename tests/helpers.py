@@ -75,6 +75,48 @@ def rows_v1(n=10):
     return [{"ID": i, "SeqNr": i, "name": f"name{i}", "data": f"data{i}"} for i in range(n)]
 
 
+def legacy_bucket(pk_col: str, n_buckets: int):
+    """Bucket id of the retired PK-hash bucket layout: the first 4 hex
+    chars of the sha256 key, modulo the bucket count."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(
+        F.conv(F.substring(F.col(pk_col), 1, 4), 16, 10).cast("int"), F.lit(n_buckets)
+    )
+
+
+def legacy_bucketed_table(spark, path: str, stats_columns=()):
+    """A LakeTable instance that writes the on-disk shape of the retired
+    PK-hash bucket layout: hive segments partitioned by ``__dlf_bucket``
+    (frames must carry it, see ``legacy_bucket``), flat patches holding it
+    as data. ``stamp_legacy_bucketing`` then marks the manifests the way
+    that layout recorded itself."""
+    from datalakefoundation_spark.tables.lake_table import BUCKET_COL, LakeTable
+
+    return LakeTable(spark, path, partition_by=[BUCKET_COL], stats_columns=stats_columns)
+
+
+def stamp_legacy_bucketing(path: str, pk_col: str, n_buckets: int) -> None:
+    """Record ``bucketing`` in every manifest of the table at ``path`` that
+    is partitioned by ``__dlf_bucket``, as every commit of the retired
+    bucket layout did."""
+    import os
+
+    from datalakefoundation_spark.tables.lake_table import BUCKET_COL
+
+    d = f"{path}/_manifest"
+    for name in os.listdir(d):
+        if not name.endswith(".json"):
+            continue
+        with open(f"{d}/{name}") as fh:
+            obj = json.load(fh)
+        if obj["partition_by"] != [BUCKET_COL]:
+            continue
+        obj["bucketing"] = {"pk": pk_col, "n": n_buckets}
+        with open(f"{d}/{name}", "w") as fh:
+            json.dump(obj, fh)
+
+
 def find_bridge_fixture(spark):
     """Deterministic near-dup BRIDGE geometry for incremental-dedup tests:
     docs 1/2 and 3/4 form two separate near-dup clusters, doc 10 contains

@@ -99,10 +99,29 @@ def test_backends_agree_on_history(spark, tmp_path, processtype, partitioned):
 
 
 def test_memory_backend_declines_bucketing(spark, tmp_path):
+    """The backend contract has no bucketing: Processing hands a backend
+    its path, partition columns and stats columns only, so the retired
+    ``bucketing.*`` settings reach no backend, and a merge history that
+    sets them runs plain against MemoryBackend."""
     MemoryBackend.reset()
-    b = MemoryBackend(spark, str(tmp_path / "t"))
-    b.set_layout("PK_x", 32, force=True)
-    assert b.bucket_pk is None and b.n_buckets == 0
+    md = make_metadata(str(tmp_path), processtype="merge")
+    opts = {
+        "backend_factory": MemoryBackend,
+        "bucketing.buckets": 32,
+        "bucketing.rows_per_bucket": 1,
+    }
+    for i, rows in enumerate(_history()[:2]):
+        write_slice(spark, md, f"slice{i}", rows)
+        p = Processing(
+            spark, md, 1, f"slice{i}", options={**opts, "processing.time": TIMES[i]}
+        )
+        p.process()
+    table = p.silver_table()
+    assert isinstance(table, MemoryBackend) and table.partition_by == []
+    got = {r["ID"]: (r["name"], r["deleted"]) for r in table.read().collect()}
+    assert len(got) == 16
+    assert got[0] == ("n0x", False) and got[7] == ("n7", False)
+    assert got[9] == ("n9", True) and got[20] == ("new20", False)
 
 
 def test_memory_backend_dynamic_partition_overwrite(spark, tmp_path):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datalakefoundation_spark.tables.lake_table import BUCKET_COL, MASK_COL, LakeTable
+from tests.helpers import legacy_bucket, legacy_bucketed_table, stamp_legacy_bucketing
 
 
 def _base(spark, n=100):
@@ -37,6 +38,11 @@ def _patch(spark, updates: dict[int, int], inserts: dict[int, int]):
 
 def _spark_df(spark, rows):
     return spark.createDataFrame(rows, "_1 string, _2 long, _3 boolean")
+
+
+def _with_p(df):
+    """A partition column p = val % 4."""
+    return df.withColumn("p", F.col("val") % 4)
 
 
 @pytest.fixture()
@@ -167,14 +173,28 @@ def test_view_sql_applies_dv(spark, table):
 
 
 def test_bucketed_table_patch(spark, tmp_path):
-    t = LakeTable(spark, str(tmp_path / "b"), bucket_pk="pk", n_buckets=4)
-    t.overwrite(_base(spark, n=200))
+    """A table of the retired PK-hash bucket layout takes no patch: its
+    bucket segments stay readable, but only a full rewrite may build on
+    them. The refused patch leaves no commit and no rows behind."""
+    path = str(tmp_path / "b")
+    legacy_bucketed_table(spark, path).overwrite(
+        _base(spark, n=200).withColumn(BUCKET_COL, legacy_bucket("pk", 4))
+    )
+    stamp_legacy_bucketing(path, "pk", 4)
+    t = LakeTable(spark, path)
+    before = _state(t)
+    assert len(before) == 200
+    with pytest.raises(ValueError, match="bucket layout"):
+        t.merge_patch(
+            _patch(spark, {10: 100_000}, {999: 999}), keys=["pk"], mask_col=MASK_COL
+        )
+    assert t.latest_manifest().version == 0
+    assert _state(t) == before
+    t.optimize()  # the rewrite converts it; patches land from then on
+    assert t.latest_manifest().bucketing is None
     t.merge_patch(_patch(spark, {10: 100_000}, {999: 999}), keys=["pk"], mask_col=MASK_COL)
     st = _state(t)
     assert st[_pk(10)] == 100_000 and st[_pk(999)] == 999 and len(st) == 201
-    # patch rode the bucketed write path: its segment owns bucket values
-    patch_seg = t.latest_manifest().segments[-1]
-    assert patch_seg.partitions is not None
 
 
 def test_dv_mask_join_broadcasts_once(spark, table):
@@ -193,25 +213,20 @@ def test_dv_mask_join_broadcasts_once(spark, table):
 
 
 def test_cow_replace_preserves_dv_on_kept_segments(spark, tmp_path):
-    """Review repro: a copy-on-write replace of one bucket must NOT drop
+    """Review repro: a copy-on-write replace of one partition must NOT drop
     the dv refs on kept segments — the patch-masked old version (and
     delete_keys-erased rows) must stay invisible."""
-    t = LakeTable(spark, str(tmp_path / "t"), bucket_pk="pk", n_buckets=4)
-    t.overwrite(_base(spark, n=100))
-    t.merge_patch(_patch(spark, {2: 2000}, {}), keys=["pk"], mask_col=MASK_COL)
-    t.delete_keys(spark.createDataFrame([(_pk(3),)], "pk string"), keys=["pk"])
-    # replace a bucket that does NOT hold pk2/pk3's rows: pick the bucket
-    # of pk7 and rewrite just that bucket's current content
-    from datalakefoundation_spark.tables.lake_table import bucket_expr
-
-    b7 = (
-        _base(spark, n=100)
-        .withColumn(BUCKET_COL, bucket_expr("pk", 4))
-        .where(F.col("pk") == _pk(7))
-        .collect()[0][BUCKET_COL]
+    t = LakeTable(spark, str(tmp_path / "t"), partition_by=["p"])
+    t.overwrite(_with_p(_base(spark, n=100)))
+    t.merge_patch(
+        _with_p(_patch(spark, {2: 2000}, {})), keys=["pk"], mask_col=MASK_COL
     )
-    content = t.read(keep_bucket=True).where(F.col(BUCKET_COL) == b7).drop(BUCKET_COL)
-    t.replace_partitions(content, [{BUCKET_COL: str(b7)}])
+    t.delete_keys(spark.createDataFrame([(_pk(3),)], "pk string"), keys=["pk"])
+    # replace a partition that holds neither pk2/pk3's rows nor the patch
+    # (p = val % 4: pk2 -> 2, pk3 -> 3, the patch row -> 0) with its
+    # current content
+    content = t.read().where(F.col("p") == 1)
+    t.replace_partitions(content, [{"p": "1"}])
     st = _state(t)
     assert st[_pk(2)] == 2000, "masked old version resurrected by CoW replace"
     assert _pk(3) not in st, "hard-deleted key resurrected by CoW replace"
@@ -286,19 +301,34 @@ def test_mor_read_batches_segments_and_dv_dirs(spark, table):
 
 
 def test_mor_read_batches_bucketed_segments(spark, tmp_path):
-    """Bucketed MoR tables batch via their __dlf_bucket leaf dirs (multi-
-    root hive discovery rejects mixed roots); correctness and the bounded
-    relation count must both hold on keep_bucket=False reads."""
-    t = LakeTable(spark, str(tmp_path / "bm"), bucket_pk="pk", n_buckets=4)
-    t.overwrite(_base(spark, n=200))
-    for i in range(6):
-        t.merge_patch(
-            _patch(spark, {i: 7 * i}, {500 + i: i}), keys=["pk"], mask_col=MASK_COL
+    """A table of the retired PK-hash bucket layout with live patches (flat,
+    the bucket column as data) reads its hive bucket segment per segment
+    and every patch through the one batched relation: rows stay exact, and
+    the read plan has as many relations with 6 live patches as with 1."""
+
+    def build(n_patches):
+        path = str(tmp_path / f"bm{n_patches}")
+        legacy = legacy_bucketed_table(spark, path)
+        legacy.overwrite(
+            _base(spark, n=200).withColumn(BUCKET_COL, legacy_bucket("pk", 4))
         )
-    df = t.read()
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    n_rel = plan.count("Relation [")
-    assert n_rel <= 3, f"{n_rel} relations for 7 bucketed segments:\n{plan[:3000]}"
+        for i in range(n_patches):
+            legacy.merge_patch(
+                _patch(spark, {i: 7 * i}, {500 + i: i}).withColumn(
+                    BUCKET_COL, legacy_bucket("pk", 4)
+                ),
+                keys=["pk"],
+                mask_col=MASK_COL,
+            )
+        stamp_legacy_bucketing(path, "pk", 4)
+        df = LakeTable(spark, path).read()
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return df, plan.count("Relation [")
+
+    _, n_rel_1 = build(1)
+    df, n_rel_6 = build(6)
+    assert n_rel_1 == n_rel_6, (n_rel_1, n_rel_6)
+    assert BUCKET_COL not in df.columns
     st = {r["pk"]: r["val"] for r in df.collect()}
     assert len(st) == 206
     assert st[_pk(3)] == 21 and st[_pk(503)] == 3 and st[_pk(150)] == 150
@@ -332,28 +362,37 @@ def test_compaction_plan_has_one_mask_join_per_key_set(
     assert _state(table) == before
 
 
-def _bucket(pk: str, n: int) -> int:
+def _part(pk: str, n: int) -> int:
     return int(pk[:4], 16) % n
 
 
-@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+@pytest.mark.parametrize("layout", ["plain", "partitioned"])
 def test_random_ops_match_model(spark, tmp_path, layout):
     """Seeded op sequences against an in-test dict model of the rows
     {(pk, vfrom): val}: MoR patches masking by pk and by (pk, vfrom),
-    hard deletes, re-inserts after delete, bucket replaces, compaction
+    hard deletes, re-inserts after delete, partition replaces (ownership
+    handed from older segments and patches to the new one), compaction
     and restore. After every op read() must equal the model; compaction
     must leave it unchanged."""
-    n_buckets = 4
-    bucketed = layout == "bucketed"
-    rng = random.Random(20 if bucketed else 10)
+    n_parts = 4
+    partitioned = layout == "partitioned"
+    rng = random.Random(20 if partitioned else 10)
     t = LakeTable(
-        spark, str(tmp_path / layout),
-        **({"bucket_pk": "pk", "n_buckets": n_buckets} if bucketed else {}),
+        spark, str(tmp_path / layout), partition_by=["p"] if partitioned else ()
     )
+
+    def frame(rows, schema):
+        # the partition column derives from pk as _part does
+        df = spark.createDataFrame(rows, schema)
+        if not partitioned:
+            return df
+        p = F.pmod(F.conv(F.substring("pk", 1, 4), 16, 10).cast("int"), F.lit(n_parts))
+        return df.withColumn("p", p)
+
     schema = f"pk string, vfrom int, val long, {MASK_COL} boolean"
     model = {(_pk(i), 0): i for i in range(60)}
     t.overwrite(
-        spark.createDataFrame(
+        frame(
             [(pk, vf, v) for (pk, vf), v in model.items()],
             "pk string, vfrom int, val long",
         )
@@ -363,7 +402,7 @@ def test_random_ops_match_model(spark, tmp_path, layout):
     # (the max-version case) and re-inserted keys get masked again
     next_id, deleted, touched = 60, [], []
     ops = ["patch_pk", "patch_version", "delete", "compact", "restore"]
-    if bucketed:
+    if partitioned:
         ops.append("replace")
     seq = ops * 2
     rng.shuffle(seq)
@@ -386,9 +425,7 @@ def test_random_ops_match_model(spark, tmp_path, layout):
             for pk in fresh:
                 model[(pk, 0)] = step
                 rows.append((pk, 0, step, False))
-            t.merge_patch(
-                spark.createDataFrame(rows, schema), keys=["pk"], mask_col=MASK_COL
-            )
+            t.merge_patch(frame(rows, schema), keys=["pk"], mask_col=MASK_COL)
         elif op == "patch_version":
             rows = []
             hot_keys = sorted(k for k in model if k[0] in hot)
@@ -402,10 +439,7 @@ def test_random_ops_match_model(spark, tmp_path, layout):
             vf = max(v for p, v in model if p == pk) + 1
             model[(pk, vf)] = step
             rows.append((pk, vf, step, False))
-            t.merge_patch(
-                spark.createDataFrame(rows, schema),
-                keys=["pk", "vfrom"], mask_col=MASK_COL,
-            )
+            t.merge_patch(frame(rows, schema), keys=["pk", "vfrom"], mask_col=MASK_COL)
         elif op == "delete":
             victims = sorted(set(rng.sample(live, 1) + hot[:1]))
             deleted += victims
@@ -415,17 +449,17 @@ def test_random_ops_match_model(spark, tmp_path, layout):
                 keys=["pk"],
             )
         elif op == "replace":
-            b = _bucket(rng.choice(live), n_buckets)
-            in_b = sorted(k for k in model if _bucket(k[0], n_buckets) == b)
+            b = _part(rng.choice(live), n_parts)
+            in_b = sorted(k for k in model if _part(k[0], n_parts) == b)
             model.pop(in_b[0])
             for k in in_b[1:]:
                 model[k] += 1000
             t.replace_partitions(
-                spark.createDataFrame(
+                frame(
                     [(*k, model[k]) for k in in_b[1:]],
                     "pk string, vfrom int, val long",
                 ),
-                [{BUCKET_COL: str(b)}],
+                [{"p": str(b)}],
             )
         elif op == "compact":
             t.compact_small_segments(small_rows=rng.choice([30, 10**6]))
@@ -443,21 +477,18 @@ def _file_scans(df) -> int:
     return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
 
 
-@pytest.mark.parametrize("layout", ["bucketed", "partitioned"])
+@pytest.mark.parametrize("layout", ["plain", "partitioned"])
 def test_patch_read_plan_size_independent_of_live_patches(spark, tmp_path, layout):
-    """Patches on bucketed and partitioned tables are flat segments: all
-    live patches read through the one batched plain relation and their
-    keys through the one batched mask relation, so the merge-read plan has
-    as many parquet scans with 5 live patches as with 1 (per-segment hive
-    reads grew it by two scans per patch). Rows stay exact."""
-    bucketed = layout == "bucketed"
-    t = LakeTable(
-        spark, str(tmp_path / layout),
-        **({"bucket_pk": "pk", "n_buckets": 4} if bucketed else {"partition_by": ["p"]}),
-    )
+    """Patches on plain and partitioned tables are flat segments: all live
+    patches read through the one batched plain relation and their keys
+    through the one batched mask relation, so the read plan has as many
+    parquet scans with 5 live patches as with 1 (per-segment hive reads
+    grew it by two scans per patch). Rows stay exact."""
+    plain = layout == "plain"
+    t = LakeTable(spark, str(tmp_path / layout), partition_by=() if plain else ["p"])
 
     def with_p(df):
-        return df if bucketed else df.withColumn("p", F.col("val") % 3)
+        return df if plain else df.withColumn("p", F.col("val") % 3)
 
     t.overwrite(with_p(_base(spark, n=200)))
     expected = {_pk(i): i for i in range(200)}
@@ -468,9 +499,10 @@ def test_patch_read_plan_size_independent_of_live_patches(spark, tmp_path, layou
             keys=["pk"], mask_col=MASK_COL,
         )
         expected |= {_pk(i): 1000 + i, _pk(500 + i): 500 + i}
-        df = t.read(keep_bucket=bucketed)
+        df = t.read()
         scans[i + 1] = _file_scans(df)
         assert {r["pk"]: r["val"] for r in df.collect()} == expected
     base, *patches = t.latest_manifest().segments
-    assert not base.patch and all(s.patch and s.partitions for s in patches)
+    assert not base.patch and all(s.patch for s in patches)
+    assert all((s.partitions is None) == plain for s in patches)
     assert scans[1] == scans[5], scans

@@ -780,14 +780,9 @@ def test_star_edges_on_an_empty_graph(spark):
     assert D.lsh_star_edges(D.minhash_signature(singles)).count() == 0
 
 
-def test_clean_corpus_jobs_and_single_prefix_scan(spark, tmp_path):
-    """Pins the Spark work of ``clean_corpus(...).df.count()`` on a fixed
-    one-file corpus (540 rows: 500 documents, 20 exact and 20 near
-    copies): 12 jobs, and the raw corpus is scanned once, its
-    quality/PII prefix cached for the call (before: 15 jobs and 1202
-    input records, the prefix computed on both sides of exact dedup)."""
-    from datalakefoundation_spark.ext.recipes import clean_corpus
-
+def _one_file_corpus(spark, tmp_path):
+    """A fixed one-file corpus of 540 rows: 500 documents, 20 exact and 20
+    near copies."""
     path = str(tmp_path / "corpus")
     base = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     exact = base.where("doc_id < 20").select(
@@ -798,7 +793,18 @@ def test_clean_corpus_jobs_and_single_prefix_scan(spark, tmp_path):
         F.concat("text", F.lit(" tail")).alias("text"),
     )
     base.unionByName(exact).unionByName(near).coalesce(1).write.parquet(path)
-    corpus = spark.read.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_clean_corpus_jobs_and_single_prefix_scan(spark, tmp_path):
+    """Pins the Spark work of ``clean_corpus(...).df.count()`` on a fixed
+    one-file corpus (540 rows: 500 documents, 20 exact and 20 near
+    copies): 12 jobs, and the raw corpus is scanned once, its
+    quality/PII prefix cached for the call (before: 15 jobs and 1202
+    input records, the prefix computed on both sides of exact dedup)."""
+    from datalakefoundation_spark.ext.recipes import clean_corpus
+
+    corpus = _one_file_corpus(spark, tmp_path)
     held = []
 
     def run():
@@ -811,6 +817,30 @@ def test_clean_corpus_jobs_and_single_prefix_scan(spark, tmp_path):
         assert jobs == 12
         assert 540 <= records < 2 * 540
         assert len(held[0].persisted) == 1
+    finally:
+        held[0].unpersist()
+
+
+def test_clean_corpus_without_near_dedup_scans_the_corpus_once(spark, tmp_path):
+    """With ``near_dedup=False`` exact dedup reads the cached quality/PII
+    prefix too, so the raw corpus is scanned once (before: 1080 input
+    records for the 540-row corpus, the prefix computed on both sides of
+    exact dedup); the prefix is the frame left on CleanResult.persisted."""
+    from datalakefoundation_spark.ext.recipes import clean_corpus
+
+    corpus = _one_file_corpus(spark, tmp_path)
+    held = []
+
+    def run():
+        held.append(clean_corpus(corpus, near_dedup=False))
+        return held[0].df.count()
+
+    n, _jobs, records = _spark_work(spark, run)
+    try:
+        assert n == 520  # the 20 exact copies go, the near copies stay
+        assert 540 <= records < 2 * 540
+        (prefix,) = held[0].persisted
+        assert prefix.storageLevel.useMemory
     finally:
         held[0].unpersist()
 
@@ -2217,8 +2247,12 @@ def test_clean_corpus_unpersist_releases_cached_survivors(spark, docs):
     res.unpersist()
     assert not res.persisted[0].storageLevel.useMemory
     res.unpersist()  # idempotent
-    # near_dedup=False persists nothing
-    assert clean_corpus(docs.limit(10), near_dedup=False).persisted == []
+    # near_dedup=False leaves the quality/PII prefix cached for the
+    # returned frame, and surfaces it for release
+    res = clean_corpus(docs.limit(10), near_dedup=False)
+    assert len(res.persisted) == 1
+    res.unpersist()
+    assert not res.persisted[0].storageLevel.useMemory
 
 
 def test_hashed_features_feed_ann(spark, docs):

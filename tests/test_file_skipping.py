@@ -15,6 +15,7 @@ from datalakefoundation_spark.tables.lake_table import (
     LakeTable,
     zorder_column,
 )
+from tests.helpers import legacy_bucket, legacy_bucketed_table, stamp_legacy_bucketing
 
 N = 8192
 FILES = 16
@@ -142,14 +143,18 @@ def test_zorder_key_unit():
 
 
 def test_bucketed_table_file_pruning_keeps_ownership(spark, tmp_path):
-    """Bucketed layout: per-file stats live under the bucket dirs; a pruned
-    read keeps hive bucket columns working and row content exact."""
-    t = LakeTable(
-        spark, str(tmp_path / "b"), bucket_pk="pk", n_buckets=4,
-        stats_columns=("wm",),
-    )
-    t.overwrite(_scrambled(spark, n=2000))
+    """A table of the retired PK-hash bucket layout: per-file stats live
+    under the bucket dirs; a pruned read of a segment that lost a bucket to
+    a later one keeps its ownership filter, and row content stays exact."""
+    path = str(tmp_path / "b")
+    legacy = legacy_bucketed_table(spark, path, stats_columns=("wm",))
+    rows = _scrambled(spark, n=2000).withColumn(BUCKET_COL, legacy_bucket("pk", 4))
+    legacy.overwrite(rows)
+    legacy.replace_partitions(rows.where(F.col(BUCKET_COL) == 0), [{BUCKET_COL: "0"}])
+    stamp_legacy_bucketing(path, "pk", 4)
+    t = LakeTable(spark, path)
     seg = t.latest_manifest().segments[0]
+    assert not seg.owns_all
     assert seg.files and all("=" in p for p in seg.files)  # bucket subdirs
     spec = [[("and", "wm", "0", "50")]]
     got = sorted(

@@ -17,7 +17,7 @@ def _register(spark):
 
 
 def _mk(spark, path, n=10):
-    t = LakeTable(spark, path, bucket_pk="pk", n_buckets=2)
+    t = LakeTable(spark, path)
     t.overwrite(
         spark.range(n).select(
             F.sha2(F.col("id").cast("string"), 256).alias("pk"),

@@ -4,7 +4,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from datalakefoundation_spark.tables.lake_table import MASK_COL, LakeTable, prune_spec_for
+from datalakefoundation_spark.tables.lake_table import (
+    BUCKET_COL,
+    MASK_COL,
+    LakeTable,
+    prune_spec_for,
+)
+from tests.helpers import legacy_bucket, legacy_bucketed_table, stamp_legacy_bucketing
 
 
 def _df(spark, rows):
@@ -205,34 +211,6 @@ def test_time_travel_by_timestamp(spark, tmp_path):
         t.version_at_timestamp(after_v0 - 1e6)
 
 
-def test_optimize_bucketed_table_clusters_within_buckets(spark, tmp_path):
-    """optimize() on a PK-hash-bucketed table keeps the bucket layout (and
-    manifest bucketing record), folds per-bucket small files, and preserves
-    content — the global range-repartition path would be undone by the
-    bucket-dir write."""
-    from pyspark.sql import functions as F
-
-    t = LakeTable(spark, str(tmp_path / "bop"), bucket_pk="pk", n_buckets=4)
-    df = spark.createDataFrame(
-        [(f"{i:02x}{'0'*62}", i, f"v{i}") for i in range(64)], "pk string, k int, v string"
-    )
-    t.overwrite(df)
-    t.append(df.withColumn("k", F.col("k") + 100))
-    before = t.read().count()
-    t.optimize(cluster_by=["k"])
-    assert t.read().count() == before
-    mf = t.latest_manifest()
-    assert mf.bucketing == {"pk": "pk", "n": 4}
-    assert len(mf.segments) == 1
-    # bucket dirs survived the rewrite
-    seg_dirs = t.fs.listdir(f"{t.path}/{mf.segments[0].dir}")
-    assert any(d.startswith("__dlf_bucket=") for d in seg_dirs)
-    # a fresh instance with NO bucket config adopts the stored layout
-    t2 = LakeTable(spark, str(tmp_path / "bop"))
-    assert t2.bucket_pk == "pk" and t2.n_buckets == 4
-    assert "__dlf_bucket" not in t2.read().columns
-
-
 def test_compact_small_segments_folds_only_the_tail(spark, tmp_path):
     """Incremental compaction folds small segments into one and leaves the
     large segment's files untouched (the 100 TB maintenance shape)."""
@@ -312,39 +290,56 @@ def test_restore_refuses_vacuumed_version(spark, tmp_path):
 
 
 def test_restore_across_rebucketing_does_not_corrupt_layout(spark, tmp_path):
-    """Restoring an UNBUCKETED version from an instance that is currently
-    bucketed must commit the restored manifest with bucketing=None — a
-    stamped-on live layout would make every later writer prune merges
-    against bucket dirs that don't exist (silent row loss)."""
+    """Restore moves a table between a plain version and one of the retired
+    PK-hash bucket layout without mixing them: each restored manifest keeps
+    its own partition_by and bucketing record, reads plan from it, and only
+    the plain one takes appends."""
     path = str(tmp_path / "tr_layout")
     t = LakeTable(spark, path)
     t.overwrite(_df(spark, [(1, "a", "0" * 64), (2, "b", "1" * 64)]))  # v0 plain
-    t.set_layout(bucket_pk="v", n_buckets=4, force=True)
-    t.overwrite(_df(spark, [(9, "z", "f" * 64)]))                      # v1 bucketed
+    legacy_bucketed_table(spark, path).overwrite(                       # v1 bucketed
+        _df(spark, [(9, "z", "f" * 64)]).withColumn(BUCKET_COL, legacy_bucket("v", 4))
+    )
+    stamp_legacy_bucketing(path, "v", 4)
     assert t.latest_manifest().bucketing is not None
     t.restore(0)                                                        # v2 = v0
     mf = t.latest_manifest()
     assert mf.bucketing is None and mf.partition_by == []
-    assert t.bucket_pk is None and t.partition_by == []
-    # a FRESH instance adopts the plain layout and reads/writes correctly
     t2 = LakeTable(spark, path)
-    assert t2.bucket_pk is None
     assert {r["k"] for r in t2.read().collect()} == {1, 2}
     t2.append(_df(spark, [(3, "c", "2" * 64)]))
     assert {r["k"] for r in t2.read().collect()} == {1, 2, 3}
+    t2.restore(1)                                                       # v4 = v1
+    mf = t2.latest_manifest()
+    assert mf.bucketing == {"pk": "v", "n": 4} and mf.partition_by == [BUCKET_COL]
+    assert [tuple(r) for r in t2.read().collect()] == [(9, "z", "f" * 64)]
+    with pytest.raises(ValueError, match="bucket layout"):
+        t2.append(_df(spark, [(4, "d", "3" * 64)]))
 
 
 def test_restore_by_timestamp_and_bucketed_layout(spark, tmp_path):
+    """Restore by timestamp to a version of the retired PK-hash bucket
+    layout reads its rows back, and a later rewrite makes the table plain."""
     import time as _time
 
-    t = LakeTable(spark, str(tmp_path / "tr3"), bucket_pk="v", n_buckets=4)
-    t.overwrite(_df(spark, [(i, "a", f"{i:064x}") for i in range(10)]))  # v0
+    path = str(tmp_path / "tr3")
+    legacy_bucketed_table(spark, path).overwrite(                       # v0
+        _df(spark, [(i, "a", f"{i:064x}") for i in range(10)]).withColumn(
+            BUCKET_COL, legacy_bucket("v", 4)
+        )
+    )
+    stamp_legacy_bucketing(path, "v", 4)
     ts_after_v0 = _time.time()
+    t = LakeTable(spark, path)
     t.overwrite(_df(spark, [(99, "b", "f" * 64)]))                       # v1
+    assert t.latest_manifest().bucketing is None
     t.restore(as_of_timestamp=ts_after_v0)
-    assert t.read().count() == 10
-    # instance re-adopted the restored bucketed layout
-    assert t.bucket_pk == "v" and t.n_buckets == 4
+    assert t.latest_manifest().bucketing == {"pk": "v", "n": 4}
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(10))
+    t.optimize()
+    mf = t.latest_manifest()
+    assert mf.bucketing is None and mf.partition_by == []
+    assert sorted(r["k"] for r in t.read().collect()) == list(range(10))
 
 
 def test_vacuum_retain_seconds_keeps_recent_versions(spark, tmp_path):
@@ -496,10 +491,29 @@ def test_read_starts_no_spark_job(spark, tmp_path, layout):
         t.delete_keys(spark.createDataFrame([(_pk(3),)], "pk string"), keys=["pk"])
         expected = 39
     elif layout == "bucketed":
-        t = LakeTable(spark, str(tmp_path / "t"), bucket_pk="pk", n_buckets=4)
-        t.overwrite(base)
-        t.merge_patch(_patch(spark, [(1, 100), (50, 50)]), keys=["pk"], mask_col=MASK_COL)
-        t.merge_patch(_patch(spark, [(2, 200)]), keys=["pk"], mask_col=MASK_COL)
+        # the retired PK-hash bucket layout: hive bucket segments, one that
+        # lost a bucket to a later one, and flat patches
+        path = str(tmp_path / "t")
+        legacy = legacy_bucketed_table(spark, path)
+        legacy.overwrite(base.withColumn(BUCKET_COL, legacy_bucket("pk", 4)))
+        b1 = base.withColumn(BUCKET_COL, legacy_bucket("pk", 4)).where(
+            F.col("pk") == _pk(1)
+        ).first()[BUCKET_COL]
+        legacy.replace_partitions(
+            legacy.read().withColumn(BUCKET_COL, legacy_bucket("pk", 4)).where(
+                F.col(BUCKET_COL) == b1
+            ),
+            [{BUCKET_COL: str(b1)}],
+        )
+        for rows in ([(1, 100), (50, 50)], [(2, 200)]):
+            legacy.merge_patch(
+                _patch(spark, rows).withColumn(BUCKET_COL, legacy_bucket("pk", 4)),
+                keys=["pk"],
+                mask_col=MASK_COL,
+            )
+        stamp_legacy_bucketing(path, "pk", 4)
+        t = LakeTable(spark, path)
+        assert not t.latest_manifest().segments[0].owns_all
         expected = 41
     elif layout == "partitioned":
         t = LakeTable(spark, str(tmp_path / "t"), partition_by=["p"])
@@ -619,7 +633,7 @@ def test_manifest_without_schema_reads_identically_and_next_commit_records_it(
     """A manifest written before the schema was recorded infers it and
     reads the same rows; the next commit records the schema."""
     path = str(tmp_path / "old")
-    t = LakeTable(spark, path, bucket_pk="pk", n_buckets=4)
+    t = LakeTable(spark, path)
     t.overwrite(spark.createDataFrame([(_pk(i), i) for i in range(30)], "pk string, v long"))
     t.merge_patch(
         _patch(spark, [(1, 100)]).withColumn("note", F.lit("n")), keys=["pk"], mask_col=MASK_COL

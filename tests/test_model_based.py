@@ -190,17 +190,19 @@ def test_merge_delete_inference_matches_reference_model(
     assert any(v["deleted"] for v in expected.values()), f"seed {seed} vacuous"
 
 
-# seeds as above; forced PK-hash bucketing exercises the multi-segment
-# manifest path: per-segment min/max stats recorded each run, and the
-# windowed delete-inference merge pruning its read/rewrite set to slice
-# buckets + window-intersecting segments (processing.py _merge_like). The
-# reference model is identical — pruning must be invisible in the results.
+# seeds as above; a partitioned entity (Administration = ID % 2) written
+# merge-on-read exercises the multi-segment manifest path: per-segment
+# min/max stats recorded each run, patches owning the partitions they hold,
+# and the windowed delete-inference merge scoping its window and its read
+# set to the slice's partitions (processing.py _merge_like). Every slice
+# holds both parities, so the reference model is identical — pruning must
+# be invisible in the results.
 @pytest.mark.parametrize("seed", [1, 28, 32])
-def test_merge_delete_inference_bucketed_pruned_matches_model(
+def test_merge_delete_inference_partitioned_matches_model(
     spark, lake_root, prefix, seed
 ):
-    md = make_metadata(lake_root, prefix, delete_missing=True)
-    opts = {"bucketing.rows_per_bucket": 1, "bucketing.buckets": 8}
+    md = make_metadata(lake_root, prefix, delete_missing=True, partitioned=True)
+    opts = _mode_opts("mor")
     slices = _gen_overlapping_history(seed)
     p = None
     for i, rows in enumerate(slices):
@@ -213,10 +215,10 @@ def test_merge_delete_inference_bucketed_pruned_matches_model(
         )
         p.process("merge")
 
-    # the scenario must actually be multi-segment + bucketed, or this test
-    # degenerates into the plain variant above
+    # the scenario must actually be multi-segment + partitioned, or this
+    # test degenerates into the plain variant above
     mf = p.silver_table().latest_manifest()
-    assert mf.bucketing is not None
+    assert mf.partition_by == ["Administration"] and len(mf.segments) > 1
     assert any(seg.stats for seg in mf.segments)
 
     expected = _merge_model_with_inference(slices)
@@ -360,7 +362,7 @@ def test_merge_history_matches_reference_model(spark, lake_root, prefix, seed, m
 
 
 def _long_metadata(root: str, prefix: str, shape: str):
-    """A bucketed delete_missing merge entity, or an SCD2 entity partitioned
+    """A plain delete_missing merge entity, or an SCD2 entity partitioned
     by a calculated day column."""
     import json
 
@@ -391,7 +393,7 @@ def _long_metadata(root: str, prefix: str, shape: str):
     return Metadata(StringMetadataSettings().initialize(json.dumps(config)))
 
 
-@pytest.mark.parametrize("shape", ["bucketed_merge", "day_scd2"])
+@pytest.mark.parametrize("shape", ["plain_merge", "day_scd2"])
 def test_auto_write_path_folds_and_matches_cow(spark, lake_root, prefix, shape):
     """A seeded history long enough to cross the patch/rewrite fold: with
     write_mode unset, runs patch while the touched set's live patch rows
@@ -410,7 +412,6 @@ def test_auto_write_path_folds_and_matches_cow(spark, lake_root, prefix, shape):
              "name": f"n{rng.randint(0, 4)}", "data": f"d{i}"}
             for k in sorted(rng.sample(range(n_keys + 3 * i), slice_rows))
         ])
-    opts = {"bucketing.rows_per_bucket": 15} if shape == "bucketed_merge" else {}
     tables, paths, live = {}, [], []
     for mode in ("auto", "cow"):
         md = _long_metadata(f"{lake_root}/{mode}", prefix, shape)
@@ -419,7 +420,7 @@ def test_auto_write_path_folds_and_matches_cow(spark, lake_root, prefix, shape):
             p = Processing(
                 spark, md, 1, f"s{i}.parquet",
                 {"processing.time": f"2026-01-{i + 1:02d} 00:00:00",
-                 **opts, **_mode_opts(mode)},
+                 **_mode_opts(mode)},
             )
             summary = p.process()
             if mode == "auto":
@@ -429,8 +430,6 @@ def test_auto_write_path_folds_and_matches_cow(spark, lake_root, prefix, shape):
         tables[mode] = sorted(
             tuple(r) for r in df.select(*sorted(df.columns)).collect()
         )
-    if shape == "bucketed_merge":
-        assert p.silver_table().latest_manifest().bucketing["n"] == 4
     assert tables["auto"] == tables["cow"]
     # bootstrap is a full load; later runs must take both paths, a
     # rewrite following a patch (the fold)

@@ -7,9 +7,7 @@ Covers:
 * stats recording at write time (observe-based, in the manifest);
 * ``LakeTable.read(prune_spec=...)`` segment skipping incl. the all-pruned
   empty-schema path;
-* the delete-inference merge pruning its read/rewrite set to
-  slice-buckets + window-intersecting segments' buckets, while still
-  inferring deletes for window rows living outside the slice buckets
+* the partition-pruned delete-inference merge matching the plain one
   (processing.py _merge_like).
 """
 
@@ -20,7 +18,6 @@ from pyspark.sql import functions as F
 
 from datalakefoundation_spark.processing import Processing
 from datalakefoundation_spark.tables.lake_table import (
-    BUCKET_COL,
     LakeTable,
     segment_may_match,
 )
@@ -159,70 +156,15 @@ def _mk_rows(ids, seq_of=lambda i: i):
     return [{"ID": i, "SeqNr": seq_of(i), "name": f"n{i}", "data": f"d{i}"} for i in ids]
 
 
-def test_delete_inference_stats_pruning(spark, lake_root, prefix):
-    """A windowed delete-inference merge on a bucketed table reads/rewrites
-    only slice buckets + window-intersecting segments' buckets — NOT the
-    whole table (the pre-stats behavior was a wholesale overwrite, i.e. a
-    single-segment manifest afterwards)."""
-    md = make_metadata(lake_root, prefix, delete_missing=True)
-    opts = {"bucketing.rows_per_bucket": 1, "bucketing.buckets": 32}
-
-    # s1: full load, SeqNr 0..99 -> 32-bucket layout, one segment [0, 99]
-    write_slice(spark, md, "s1.parquet", _mk_rows(range(100)))
-    Processing(
-        spark, md, 1, "s1.parquet",
-        {"processing.time": T0, "delete_missing": False, **opts},
-    ).process()
-
-    # s2 (no delete): 3 new ids, SeqNr 100..102 -> touched-bucket segment
-    write_slice(spark, md, "s2.parquet", _mk_rows(range(100, 103)))
-    p2 = Processing(
-        spark, md, 1, "s2.parquet",
-        {"processing.time": T1, "delete_missing": False, **opts},
-    )
-    p2.process()
-    mf2 = p2.silver_table().latest_manifest()
-    assert len(mf2.segments) == 2  # touched-bucket CoW, not wholesale
-
-    # s3 (delete inference ON): new ids 103..105, and ID 102 (SeqNr 102,
-    # inside window [102, 105]) is MISSING -> must be soft-deleted even
-    # though it lives outside s3's slice buckets. The s1 segment's stats
-    # max (99) < window lo (102) -> pruned.
-    write_slice(spark, md, "s3.parquet", _mk_rows(range(103, 106)))
-    p3 = Processing(spark, md, 1, "s3.parquet", {"processing.time": T2, **opts})
-    p3.process()
-    table = p3.silver_table()
-    mf3 = table.latest_manifest()
-
-    # NOT a wholesale rewrite: the s1-era segment still owns buckets
-    assert len(mf3.segments) >= 2
-    merge_seg = mf3.segments[-1]
-    owned_by_merge = {pv[BUCKET_COL] for pv in merge_seg.partitions}
-    all_owned = {
-        pv[BUCKET_COL] for s in mf3.segments for pv in (s.partitions or [])
-    }
-    assert len(owned_by_merge) < len(all_owned), (
-        "merge rewrote every bucket — stats pruning did not engage"
-    )
-
-    out = table.read()
-    deleted = {r["ID"] for r in out.where(F.col(f"{prefix}deleted")).collect()}
-    assert deleted == {102}
-    assert out.count() == 106
-    # all non-deleted data intact
-    assert out.where(~F.col(f"{prefix}deleted")).count() == 105
-
-
 def test_delete_inference_pruning_matches_unpruned(spark, lake_root, tmp_path, prefix):
-    """Equivalence: the pruned windowed merge produces exactly the table an
-    unbucketed (full-read) merge produces, modulo system layout columns."""
+    """Equivalence: the partition-pruned windowed merge (window scoped to
+    the slice's partitions, only those read and rewritten) produces exactly
+    the table a plain (full-read) merge produces, modulo the partition
+    column. Every slice here touches both partitions."""
     results = {}
-    for tag, opts in (
-        ("bucketed", {"bucketing.rows_per_bucket": 1, "bucketing.buckets": 32}),
-        ("plain", {"bucketing.buckets": 0}),
-    ):
+    for tag, opts in (("partitioned", {"write_mode": "cow"}), ("plain", {})):
         root = str(tmp_path / tag)
-        md = make_metadata(root, prefix, delete_missing=True)
+        md = make_metadata(root, prefix, delete_missing=True, partitioned=tag != "plain")
         write_slice(spark, md, "s1.parquet", _mk_rows(range(60)))
         Processing(
             spark, md, 1, "s1.parquet",
@@ -243,7 +185,7 @@ def test_delete_inference_pruning_matches_unpruned(spark, lake_root, tmp_path, p
             (r["ID"], r["SeqNr"], r["data"], r[f"{prefix}deleted"])
             for r in out.collect()
         }
-    assert results["bucketed"] == results["plain"]
+    assert results["partitioned"] == results["plain"]
     assert any(d for (_i, _s, _d, d) in results["plain"])  # something was deleted
 
 

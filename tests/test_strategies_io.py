@@ -11,7 +11,18 @@ from datalakefoundation_spark.core.exceptions import (
     DuplicateBusinesskeyException,
 )
 from datalakefoundation_spark.processing import Processing
-from tests.helpers import T0, T1, T2, make_metadata, rows_v1, write_slice
+from datalakefoundation_spark.tables.lake_table import BUCKET_COL
+from tests.helpers import (
+    T0,
+    T1,
+    T2,
+    legacy_bucket,
+    legacy_bucketed_table,
+    make_metadata,
+    rows_v1,
+    stamp_legacy_bucketing,
+    write_slice,
+)
 
 
 def silver(processing):
@@ -343,49 +354,43 @@ def test_partitioned_merge_prunes(spark, lake_root, prefix):
 
 
 def test_unpartitioned_merge_bucket_cow(spark, lake_root, prefix):
-    """Unpartitioned entities store PK-hash bucketed; an incremental merge
-    rewrites ONLY the buckets present in the slice (segment-level
-    copy-on-write), not the whole table."""
+    """A merge into an unpartitioned table of the retired PK-hash bucket
+    layout is a copy-on-write of the whole table, whatever ``write_mode``
+    asks: its bucket segments take no patch, and the rewrite commits the
+    table plain with every row."""
     md = make_metadata(lake_root, prefix)
     write_slice(spark, md, "s1.parquet", rows_v1(50))
-    # rows_per_bucket=0 disables size-aware sizing (a 50-row table would
-    # otherwise be laid out unbucketed) — this test exercises the bucketed path
-    p1 = Processing(
-        spark, md, 1, "s1.parquet",
-        {"processing.time": T0, "bucketing.rows_per_bucket": 0},
-    )
+    p1 = Processing(spark, md, 1, "s1.parquet", {"processing.time": T0})
     p1.process()
-    table = p1.silver_table()
-    mf1 = table.latest_manifest()
-    assert mf1.partition_by == ["__dlf_bucket"]
-    all_buckets = {pv["__dlf_bucket"] for seg in mf1.segments for pv in (seg.partitions or [])}
-    assert len(all_buckets) > 5
+    path = p1.silver_table().path
+    legacy_bucketed_table(spark, path).overwrite(
+        silver(p1).withColumn(BUCKET_COL, legacy_bucket(p1.pk_name, 8))
+    )
+    stamp_legacy_bucketing(path, p1.pk_name, 8)
+    mf1 = p1.silver_table().latest_manifest()
+    assert len(mf1.segments[0].partitions) > 5
 
     rows2 = [dict(rows_v1(50)[7], data="changed")]
     write_slice(spark, md, "s2.parquet", rows2)
-    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1, "write_mode": "cow"})
+    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1, "write_mode": "mor"})
     summary = p2.process()
     assert summary.updated == 1
-    mf2 = table.latest_manifest()
-    new_seg = mf2.segments[-1]
-    # strictly fewer buckets rewritten than the table holds
-    assert len(new_seg.partitions) == 1
-    assert len(new_seg.partitions) < len(all_buckets)
-    # untouched buckets stay owned by the original segment (kept by reference)
-    old_owned = {pv["__dlf_bucket"] for pv in mf2.segments[0].partitions}
-    assert len(old_owned) == len(all_buckets) - 1
+    assert (summary.write_path, summary.rows_written) == ("rewrite", 50)
+    mf2 = p2.silver_table().latest_manifest()
+    assert mf2.bucketing is None and mf2.partition_by == []
+    (seg,) = mf2.segments
+    assert seg.partitions is None and not seg.patch
 
     out = silver(p2)
-    assert "__dlf_bucket" not in out.columns
+    assert BUCKET_COL not in out.columns
     assert out.count() == 50
     assert out.where(F.col("data") == "changed").count() == 1
     assert {r["ID"] for r in out.collect()} == set(range(50))
 
 
 def test_small_table_created_unbucketed(spark, lake_root, prefix):
-    """Size-aware layout: below ~2x bucketing.rows_per_bucket the table is a
-    plain directory — no per-merge bucket-dir small-file tax — and later
-    merges still produce correct results via wholesale rewrite."""
+    """An unpartitioned table is a plain directory: segments own the whole
+    table, and a copy-on-write merge rewrites it into one plain segment."""
     md = make_metadata(lake_root, prefix)
     write_slice(spark, md, "s1.parquet", rows_v1(50))
     p1 = Processing(spark, md, 1, "s1.parquet", {"processing.time": T0})
@@ -396,134 +401,50 @@ def test_small_table_created_unbucketed(spark, lake_root, prefix):
 
     rows2 = [dict(rows_v1(50)[7], data="changed")]
     write_slice(spark, md, "s2.parquet", rows2)
-    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1})
-    assert p2._bucketed is False  # adopted the stored (unbucketed) layout
+    p2 = Processing(spark, md, 1, "s2.parquet", {"processing.time": T1, "write_mode": "cow"})
     p2.process("merge")
+    (seg,) = p2.silver_table().latest_manifest().segments
+    assert seg.partitions is None and seg.rows == 50
     out = silver(p2)
     assert out.count() == 50
     assert out.where(F.col("data") == "changed").count() == 1
 
 
 def test_full_overwrite_rederives_bucket_layout(spark, lake_root, prefix):
-    """A full overwrite rebuilds every directory, so a grown table upgrades
-    to a bucketed layout at that moment (and a shrunk one downgrades)."""
+    """A full run over a table of the retired PK-hash bucket layout rewrites
+    it plain; ``bucketing.*`` settings are accepted and ignored."""
     md = make_metadata(lake_root, prefix)
     write_slice(spark, md, "s1.parquet", rows_v1(20))
     p1 = Processing(spark, md, 1, "s1.parquet", {"processing.time": T0})
     p1.process("full")
-    assert p1.silver_table().latest_manifest().bucketing is None
+    path = p1.silver_table().path
+    legacy_bucketed_table(spark, path).overwrite(
+        silver(p1).withColumn(BUCKET_COL, legacy_bucket(p1.pk_name, 5))
+    )
+    stamp_legacy_bucketing(path, p1.pk_name, 5)
+    assert p1.silver_table().latest_manifest().partition_by == [BUCKET_COL]
+    assert silver(p1).count() == 20
 
-    # "growth": same rows, but a 4-rows-per-bucket threshold makes 20 rows
-    # warrant 5 buckets on the next full overwrite
     write_slice(spark, md, "s2.parquet", rows_v1(20))
     p2 = Processing(
         spark, md, 1, "s2.parquet",
-        {"processing.time": T1, "bucketing.rows_per_bucket": 4},
+        {"processing.time": T1, "bucketing.rows_per_bucket": 4, "bucketing.buckets": 8},
     )
     p2.process("full")
     mf = p2.silver_table().latest_manifest()
-    assert mf.bucketing == {"pk": p2.pk_name, "n": 5}
-    assert mf.partition_by == ["__dlf_bucket"]
+    assert mf.bucketing is None and mf.partition_by == []
     out = silver(p2)
-    assert "__dlf_bucket" not in out.columns
+    assert BUCKET_COL not in out.columns
     assert out.count() == 20
 
-    # merge against the upgraded layout prunes to touched buckets
+    # a merge against the plain table rewrites it whole
     rows3 = [dict(rows_v1(20)[3], data="changed")]
     write_slice(spark, md, "s3.parquet", rows3)
     p3 = Processing(spark, md, 1, "s3.parquet", {"processing.time": T2, "write_mode": "cow"})
-    assert p3._bucketed and p3.n_buckets == 5
     p3.process("merge")
-    mf3 = p3.silver_table().latest_manifest()
-    assert len(mf3.segments[-1].partitions) == 1
+    (seg,) = p3.silver_table().latest_manifest().segments
+    assert seg.partitions is None
     assert silver(p3).where(F.col("data") == "changed").count() == 1
-
-    # "shrink": full overwrite with sizing back at default -> plain directory
-    write_slice(spark, md, "s4.parquet", rows_v1(20))
-    p4 = Processing(spark, md, 1, "s4.parquet", {"processing.time": "2026-04-01 00:00:00"})
-    p4.process("full")
-    assert p4.silver_table().latest_manifest().bucketing is None
-
-
-def test_set_layout_requires_force_on_committed_table(spark, tmp_path):
-    from datalakefoundation_spark.tables.lake_table import LakeTable
-
-    t = LakeTable(spark, str(tmp_path / "slt"), bucket_pk="pk", n_buckets=4)
-    df = spark.range(10).selectExpr("format_string('%04x', id) AS pk", "id AS v")
-    t.overwrite(df)
-    with pytest.raises(ValueError):
-        t.set_layout("pk", 8)
-    t.set_layout("pk", 8, force=True)  # caller promises a full rewrite
-    assert t.n_buckets == 8
-
-
-def test_optimize_rebuckets_after_set_layout(spark, tmp_path):
-    """set_layout(force=True) + optimize() re-buckets an incremental table:
-    the stored bucket dirs must be recomputed under the NEW modulus, not
-    carried over stale (stale values would make later merges prune against
-    wrong dirs and lose rows)."""
-    from datalakefoundation_spark.tables.lake_table import (
-        BUCKET_COL,
-        LakeTable,
-        bucket_expr,
-    )
-
-    t = LakeTable(spark, str(tmp_path / "rlo"), bucket_pk="pk", n_buckets=4)
-    df = spark.range(200).selectExpr("format_string('%04x', id) AS pk", "id AS v")
-    t.overwrite(df)
-    t.set_layout("pk", 8, force=True)
-    t.optimize()
-    mf = t.latest_manifest()
-    assert mf.bucketing == {"pk": "pk", "n": 8}
-    stored = LakeTable(spark, str(tmp_path / "rlo")).read(keep_bucket=True)
-    assert stored.where(F.col(BUCKET_COL) != bucket_expr("pk", 8)).count() == 0
-    assert stored.count() == 200
-    assert {r["v"] for r in stored.collect()} == set(range(200))
-
-
-def test_merge_rederives_layout_once_table_grows(spark, lake_root, prefix):
-    """A merge-only entity created small (plain directory) upgrades to a
-    bucketed layout once its recorded total_rows crosses the threshold —
-    the wholesale-rewrite merge rebuilds every directory anyway, so it is
-    the catch-up moment (full overwrites re-derive separately)."""
-    md = make_metadata(lake_root, prefix)
-    opts = {"bucketing.rows_per_bucket": 10, "write_mode": "cow"}
-    write_slice(spark, md, "s1.parquet", rows_v1(5))
-    p1 = Processing(spark, md, 1, "s1.parquet", {"processing.time": T0, **opts})
-    p1.process("merge")  # first run -> divert to full, 5 rows -> unbucketed
-    mf0 = p1.silver_table().latest_manifest()
-    assert mf0.bucketing is None
-    assert mf0.metrics["total_rows"] == 5
-
-    times = ["2026-02-01 00:00:00", "2026-03-01 00:00:00", "2026-04-01 00:00:00"]
-    for i, t in enumerate(times):
-        lo = 5 + i * 20
-        rows = [
-            {"ID": k, "SeqNr": k, "name": f"n{k}", "data": f"d{k}"}
-            for k in range(lo, lo + 20)
-        ]
-        write_slice(spark, md, f"g{i}.parquet", rows)
-        p = Processing(spark, md, 1, f"g{i}.parquet", {"processing.time": t, **opts})
-        p.process("merge")
-
-    table = p.silver_table()
-    mf = table.latest_manifest()
-    # growth: 5 -> 25 (wholesale, records total) -> upgrade to 25//10 = 2
-    # buckets during the next wholesale rewrite; sticky thereafter
-    assert mf.bucketing == {"pk": p.pk_name, "n": 2}
-    out = table.read()
-    assert out.count() == 65
-    assert "__dlf_bucket" not in out.columns
-    assert {r["ID"] for r in out.collect()} == set(range(65))
-
-    # the NEXT merge prunes against the upgraded bucketed layout
-    write_slice(spark, md, "u1.parquet", [dict(rows_v1(5)[2], data="changed")])
-    pn = Processing(spark, md, 1, "u1.parquet", {"processing.time": "2026-05-01 00:00:00", **opts})
-    assert pn._bucketed and pn.n_buckets == 2
-    pn.process("merge")
-    mf2 = pn.silver_table().latest_manifest()
-    assert len(mf2.segments[-1].partitions) == 1  # one touched bucket rewritten
-    assert pn.silver_table().read().where(F.col("data") == "changed").count() == 1
 
 
 def test_duplicate_businesskey_raises(spark, lake_root, prefix):
@@ -751,12 +672,11 @@ def test_auto_optimize_default_on_for_unpartitioned(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(Processing, "AUTO_OPTIMIZE_DEFAULT", 2)
 
-    # bucketed so each merge stacks segments (plain dirs rewrite wholesale)
+    # merge-on-read so each merge stacks a patch segment
     md = make_metadata(str(tmp_path / "root"), watermark=False)
     opts = {
         "processing.time": T0,
-        "bucketing.rows_per_bucket": 1,
-        "bucketing.buckets": 4,
+        "write_mode": "mor",
         # every segment in this test is tiny — make them all foldable
         "maintenance.compact_small_rows": 1000,
     }
@@ -844,10 +764,9 @@ def test_entity_reset_watermark_to_value(spark, lake_root, prefix):
 
 
 def test_bucket_modulus_change_is_ignored(spark, lake_root, prefix):
-    """A table's recorded bucket layout wins over a drifted per-run config:
-    pruning with a different modulus than the stored dirs would silently
-    lose rows. The second run configures 8 buckets against a 32-bucket
-    table and must still merge correctly."""
+    """``bucketing.buckets`` and ``bucketing.rows_per_bucket`` (settings of
+    the retired PK-hash bucket layout) are accepted and ignored: whatever a
+    run configures, the table stays plain and merges stay exact."""
     md = make_metadata(lake_root, prefix)
     write_slice(spark, md, "s1.parquet", rows_v1(20))
     p1 = Processing(
@@ -855,7 +774,8 @@ def test_bucket_modulus_change_is_ignored(spark, lake_root, prefix):
         {"processing.time": T0, "bucketing.rows_per_bucket": 0},
     )
     p1.process("merge")
-    assert p1.silver_table().latest_manifest().bucketing["n"] == 32
+    mf = p1.silver_table().latest_manifest()
+    assert mf.bucketing is None and mf.partition_by == []
 
     changed = [dict(r, data="changed") for r in rows_v1(20)]
     write_slice(spark, md, "s2.parquet", changed)
@@ -863,21 +783,19 @@ def test_bucket_modulus_change_is_ignored(spark, lake_root, prefix):
         spark, md, 1, "s2.parquet",
         {"processing.time": T1, "bucketing.buckets": 8},
     )
-    assert p2.n_buckets == 32  # adopted from the stored layout
     p2.process("merge")
     out = silver(p2)
     assert out.count() == 20
     assert out.where(F.col("data") == "changed").count() == 20
 
-    # bucketing "disabled" per-run is likewise overridden, and the internal
-    # bucket column never leaks into reads
     write_slice(spark, md, "s3.parquet", rows_v1(20))
     p3 = Processing(
         spark, md, 1, "s3.parquet",
         {"processing.time": T2, "bucketing.buckets": 0},
     )
-    assert p3._bucketed and p3.n_buckets == 32
     p3.process("merge")
+    mf = p3.silver_table().latest_manifest()
+    assert mf.bucketing is None and all(s.partitions is None for s in mf.segments)
     assert "__dlf_bucket" not in silver(p3).columns
     assert silver(p3).count() == 20
 
@@ -1006,8 +924,8 @@ def test_merge_with_null_partition_values(spark, lake_root, prefix):
 
 
 def test_mor_merge_metrics_and_auto_compaction(spark, tmp_path, monkeypatch):
-    """write_mode=mor: each merge appends one patch segment (no bucket
-    rewrite), the summary keeps the metric identity, and auto-compaction
+    """write_mode=mor: each merge appends one patch segment (no rewrite),
+    the summary keeps the metric identity, and auto-compaction
     folds the patch tail back into a clean segment with identical state."""
     from datalakefoundation_spark.processing import Processing
     from tests.helpers import T0, T1, make_metadata, rows_v1, write_slice
@@ -1015,12 +933,7 @@ def test_mor_merge_metrics_and_auto_compaction(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(Processing, "AUTO_OPTIMIZE_DEFAULT", 0)  # manual control
 
     md = make_metadata(str(tmp_path / "root"), watermark=False)
-    opts = {
-        "processing.time": T0,
-        "bucketing.rows_per_bucket": 1,
-        "bucketing.buckets": 4,
-        "write_mode": "mor",
-    }
+    opts = {"processing.time": T0, "write_mode": "mor"}
     write_slice(spark, md, "s0.parquet", rows_v1(40))
     Processing(spark, md, 1, "s0.parquet", opts).process()
     base_dirs = {
