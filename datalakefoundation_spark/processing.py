@@ -31,7 +31,12 @@ from datalakefoundation_spark.core.normalize import schema_compare
 from datalakefoundation_spark.log import DatalakeLogManager
 from datalakefoundation_spark.logging_ import ProcessingSummary
 from datalakefoundation_spark.metadata.models import Entity, Metadata
-from datalakefoundation_spark.tables.lake_table import MASK_COL, LakeTable
+from datalakefoundation_spark.tables.lake_table import (
+    MASK_COL,
+    LakeTable,
+    partition_filter,
+    prune_spec_isin,
+)
 from datalakefoundation_spark.watermark import (
     WatermarkStore,
     build_watermark_values,
@@ -140,6 +145,8 @@ class Processing:
         self._new_watermarks: dict[str, tuple[str, str | None]] = {}
         self._stored_watermarks: dict[str, str | None] = {}
         self._partition_values: list[dict[str, str]] = []
+        # read prune spec over the slice's partition values (None: none)
+        self._partition_prune: list | None = None
 
     # ------------------------------------------------------------ source
     # The pipeline is compute-heavy (two sha256 passes over every column),
@@ -241,6 +248,12 @@ class Processing:
                     )
                 ).alias("__pvs")
             )
+            # the typed values too: the target read prunes on them, encoded
+            # like the min/max stats its segments and files record
+            aggs += [
+                F.collect_set(F.when(kept, F.col(c))).alias(f"__pvt_{i}")
+                for i, c in enumerate(e.partition_columns)
+            ]
         row = df.agg(*aggs).head()
         if viols:
             counts = {
@@ -289,7 +302,17 @@ class Processing:
             self.watermark_store.latest(e.id) if self.watermark_store else {}
         )
         if e.partition_columns:
-            self._partition_values = [pv.asDict() for pv in row["__pvs"]]
+            pvs = [pv.asDict() for pv in row["__pvs"]]
+            # a column the slice holds NULL in prunes nothing: min/max
+            # stats skip NULLs, so they cannot show a file holds none
+            spec = [
+                group
+                for i, c in enumerate(e.partition_columns)
+                if pvs and all(pv[c] is not None for pv in pvs)
+                for group in prune_spec_isin(c, row[f"__pvt_{i}"])
+            ]
+            self._partition_values = pvs
+            self._partition_prune = spec or None
         self._cached_source = df
         return df
 
@@ -327,18 +350,9 @@ class Processing:
             # a partition IN-list alone must not widen the scope (safe
             # default, ProcessStrategy.scala:100-112).
             return None
-        pcond = None
         if self._partition_values:
-            pcond = F.lit(False)
-            for pv in self._partition_values:
-                c = F.lit(True)
-                for k, v in pv.items():
-                    qcol = F.col(f"{qualifier}{k}")
-                    # NULL partition value: equality to lit(None) never
-                    # matches — test isNull explicitly
-                    c = c & (qcol.isNull() if v is None else (qcol.cast("string") == F.lit(v)))
-                pcond = pcond | c
-        return cond if pcond is None else (cond & pcond)
+            cond = cond & partition_filter(self._partition_values, qualifier)
+        return cond
 
     # ------------------------------------------------------------ silver table
     def silver_table(self):  # -> LakeTable | any tables.backend-conformant backend
@@ -618,7 +632,10 @@ class Processing:
         # predicate resolves on the target side, so its columns are
         # validated against the target schema (additive bronze drift must
         # skip the new column, not crash the merge).
-        target = table.read(version=mf.version)
+        # A partitioned target is read pruned to the slice's partitions by
+        # the segment and file stats of the partition columns (a superset;
+        # the row filter below is exact).
+        target = table.read(version=mf.version, prune_spec=self._partition_prune)
         window = self.delete_window(target=target) if self.delete_missing else None
         if self._slice_count == 0 and window is None and not legacy:
             # empty slice + no delete inference: the post-merge state is the
@@ -647,7 +664,7 @@ class Processing:
         # 100 TB this is what keeps an incremental merge from rewriting the
         # whole table
         pvs = self._partition_values
-        target_pruned = target.where(table._partition_filter(pvs)) if pvs else target
+        target_pruned = target.where(partition_filter(pvs)) if pvs else target
         fn = S.scd2_state if historic else S.merge_state
         state = fn(
             target_pruned,

@@ -97,9 +97,11 @@ class _SegPartition(InputPartition):
 
 def _read_segment_batches(part: _SegPartition):
     """pyarrow scan of one segment dir -> RecordBatches cast to the
-    declared schema. Hive partitioning materializes the bucket column when
-    present (then unreferenced -> dropped); internal columns are dropped;
-    a column the segment predates reads as a typed NULL."""
+    declared schema. Segments store partition columns as data; hive
+    partitioning materializes them from the dir names of legacy hive
+    segments (the retired bucket column then goes unreferenced ->
+    dropped); internal columns are dropped; a column the segment predates
+    reads as a typed NULL."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
@@ -108,7 +110,8 @@ def _read_segment_batches(part: _SegPartition):
 
     target = to_arrow_schema(StructType.fromJson(json.loads(part.schema_json)))
     # default ignore_prefixes=['.', '_'] would swallow the internal
-    # '__dlf_bucket=N' hive dirs — ignore only Spark's marker files
+    # '__dlf_bucket=N' dirs of legacy hive segments — ignore only Spark's
+    # marker files
     dataset = ds.dataset(
         part.abs_dir,
         format="parquet",
@@ -220,9 +223,10 @@ class LakeStreamDataSource(DataSource):
             raise FileNotFoundError(
                 f"lake_stream: no parquet files under {seg_dir}"
             )
-        # a DATASET schema, not a file footer: hive partition columns
-        # (entity partition_by dirs) live in directory names, not footers —
-        # footer-only derivation would silently drop them from the feed
+        # a DATASET schema, not a file footer: segments store partition
+        # columns as data, but in a legacy hive segment they live in
+        # directory names — footer-only derivation would silently drop
+        # them from the feed
         arrow = ds.dataset(
             f"{path}/{seg_dir}",
             format="parquet",

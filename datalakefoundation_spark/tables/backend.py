@@ -15,9 +15,11 @@ tested property.
 REQUIRED surface (what Processing actually calls on the write path):
 
 * ``exists() -> bool``
-* ``read(version=None, ...) -> DataFrame`` — at least
+* ``read(version=None, prune_spec=None, ...) -> DataFrame`` — at least
   the latest manifest's ``version`` must be accepted (a merge reads the
-  target at the version it plans from).
+  target at the version it plans from). ``prune_spec`` MAY be ignored: it
+  only lets storage skip what holds none of the slice's partitions, and
+  the caller still filters rows.
 * ``overwrite(df, dynamic=False, metrics=None, operation=None,
   metrics_fn=None, base=None)`` — full or dynamic-partition overwrite; MUST
   execute the plan (it is the run's single action: ``df.observe`` metrics
@@ -31,7 +33,6 @@ REQUIRED surface (what Processing actually calls on the write path):
 * ``latest_manifest() -> manifest | None`` with ``.metrics: dict``,
   ``.segments: list`` (each with ``.partitions: dict | None``) and
   ``.version: int``.
-* ``_partition_filter(pvs) -> Column`` over the table's partition columns.
 * ``gc_orphans(older_than_seconds) -> list`` — MAY be a no-op.
 * attributes ``path``, ``partition_by``.
 
@@ -52,10 +53,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from datalakefoundation_spark.core.exceptions import ConcurrentCommitException
+from datalakefoundation_spark.tables.lake_table import partition_filter
 
 
 @dataclass
@@ -132,22 +133,6 @@ class MemoryBackend:
             raise NotImplementedError("MemoryBackend has no time travel")
         return self.spark.createDataFrame(st["rows"], st["schema"])
 
-    def _partition_filter(self, pvs: list[dict[str, str]]) -> Column:
-        conds = []
-        for pv in pvs:
-            parts = [
-                F.col(k).isNull() if v is None else F.col(k).cast("string") == F.lit(str(v))
-                for k, v in pv.items()
-            ]
-            cond = parts[0]
-            for p in parts[1:]:
-                cond = cond & p
-            conds.append(cond)
-        out = conds[0] if conds else F.lit(False)
-        for c in conds[1:]:
-            out = out | c
-        return out
-
     # ------------------------------------------------------------- write
     def _commit(
         self, df: DataFrame, metrics: dict | None, operation: str, metrics_fn, base
@@ -202,7 +187,7 @@ class MemoryBackend:
     ) -> None:
         if not self.exists():
             raise FileNotFoundError(f"MemoryBackend table does not exist: {self.path}")
-        keep = self.read().where(~self._partition_filter(partition_values))
+        keep = self.read().where(~partition_filter(partition_values))
         self._commit(
             keep.unionByName(df, allowMissingColumns=True), metrics, operation, None, base
         )

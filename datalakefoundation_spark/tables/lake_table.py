@@ -6,24 +6,30 @@ strategies need:
 
   <root>/
     _manifest/v00000.json ...   (one JSON per committed version; latest wins)
-    data/v00000/ ...            (immutable parquet segments, optionally
-                                 hive-partitioned via partitionBy)
+    data/v00000/ ...            (immutable parquet segments: flat dirs of
+                                 files, partition columns stored as data)
 
 A manifest lists *segments*; each segment owns either the whole table
-(unpartitioned) or an explicit set of partition values. Reads union the
-segments, filtering each to the partitions it still owns — the same
-file-provenance idea Delta's log encodes, at partition granularity.
+(unpartitioned) or an explicit set of partition values. Ownership lives
+only in the manifest — the Delta/Iceberg rule of taking partition values
+from the log, not from directory names. Reads take every segment in one
+batched relation, filtering a segment to the partitions it still owns
+where it lost some to a later commit — the same file-provenance idea
+Delta's log encodes, at partition granularity. Segments written by older
+versions of the format as hive-partitioned dirs (``Segment.hive``)
+read alone through one legacy path until a rewrite replaces them.
 
 Why this scales:
 * Writes are never in-place: a merge writes ONLY the touched partitions
   into a fresh segment directory and commits a new manifest — identical
   I/O shape to Delta's copy-on-write MERGE — or only its changed rows as
-  a flat patch segment that masks the versions it supersedes
+  a patch segment that masks the versions it supersedes
   (``merge_patch``). A crash before the commit leaves only an
   unreferenced dir (``gc_orphans``).
-* Reads prune: the per-segment partition filter is an ordinary predicate
-  on hive partition directories, so Spark's partition discovery skips
-  non-owned directories entirely (no data I/O).
+* Reads prune: partition columns are recorded in every segment's and
+  every file's min/max stats, and rows are written sorted by them, so a
+  partition-scoped read (``prune_spec_isin``) skips the segments and
+  files that hold none of its partitions.
 * Dynamic partition overwrite (Full loads) replaces ownership of exactly
   the partitions present in the incoming slice (Full.scala:38-50 parity).
 * Old versions remain readable (time travel) until `vacuum()`.
@@ -92,12 +98,11 @@ class Segment:
     # segments). None => unknown, read every file.
     files: dict[str, dict] | None = None
     # True iff the recorded `partitions` ownership still covers every
-    # hive dir physically inside this segment's directory (set at write
-    # time, flipped to False forever once replace_partitions shrinks the
-    # segment's ownership). Ownership-full segments can be read WITHOUT a
-    # per-segment ownership filter — the batched multi-dir read path
-    # depends on this. Old manifests deserialize as False (conservative:
-    # per-segment read with dir-pruned ownership filters).
+    # partition value of the rows inside this segment (set at write time,
+    # flipped to False forever once replace_partitions shrinks the
+    # segment's ownership). Ownership-full segments are read WITHOUT an
+    # ownership filter. Old manifests deserialize as False (conservative:
+    # every read filters them).
     owns_all: bool = True
     # Deletion-vector refs (merge-on-read): entries {"dir": <data-relative
     # dir of key parquet>, "keys": [col, ...], "flag": <bool col or None>}.
@@ -109,13 +114,19 @@ class Segment:
     # segments resurface; reads apply all entries as one version-keyed
     # mask (LakeTable._read_segments).
     dv: list[dict] = field(default_factory=list)
-    # True for a merge-on-read patch (merge_patch). A patch stores its
-    # partition columns as data in files directly under its dir (no hive
-    # subdirs) and records its ownership from the values it wrote, so every
-    # live patch joins the one batched plain read and the one batched mask
-    # read, whatever the table layout. Old manifests read False: their
-    # patches are hive segments and read as such.
+    # True for a merge-on-read patch (merge_patch): a few changed rows
+    # whose size counts as live patch rows in Processing's patch-or-rewrite
+    # choice. Written flat like every segment but rebalanced into few
+    # files, and read in the same batched relation.
     patch: bool = False
+    # True for a hive-partitioned segment written by an older version of
+    # this format (the partition dirs of a partitioned table, or of the
+    # retired bucket layout): its partition values live in its dir names,
+    # so it reads alone, filtered to its ownership, instead of joining the
+    # batched relation. Nothing writes it now; manifests that predate the
+    # field deserialize every partition-owning non-patch segment as hive,
+    # which is what those versions wrote.
+    hive: bool = False
 
 
 @dataclass
@@ -134,7 +145,7 @@ class Manifest:
     # (LakeTable._require_current_layout).
     bucketing: dict | None = None
     # The table schema after this commit, every field nullable, partition
-    # columns last (where hive discovery puts them). Reads hand it to every
+    # columns last (where segments store them). Reads hand it to every
     # parquet reader, so no read infers a schema. None on manifests written
     # before it was recorded, and on commits of no new rows over those
     # (LakeTable._schema infers it; the next commit writing rows records it).
@@ -155,6 +166,7 @@ class Manifest:
                         "dv": s.dv,
                         "owns_all": s.owns_all,
                         "patch": s.patch,
+                        "hive": s.hive,
                     }
                     for s in self.segments
                 ],
@@ -183,6 +195,12 @@ class Manifest:
                     dv=list(s.get("dv") or []),
                     owns_all=bool(s.get("owns_all", False)),
                     patch=bool(s.get("patch", False)),
+                    hive=bool(
+                        s.get(
+                            "hive",
+                            s.get("partitions") is not None and not s.get("patch"),
+                        )
+                    ),
                 )
                 for s in obj.get("segments", [])
             ],
@@ -275,6 +293,38 @@ def _pv_key(pv: dict[str, str]) -> tuple:
     return tuple(sorted(pv.items()))
 
 
+def partition_filter(pvs: list[dict[str, str]], qualifier: str = "") -> Column:
+    """Rows whose partition columns hold one of ``pvs`` — partition-value
+    dicts ``{col: value cast to string}``, None for a NULL value — with
+    columns named ``qualifier + col``. The one ownership predicate: segment
+    ownership on reads, the touched-partition scope of merges and of
+    delete inference, and backend partition replacement.
+
+    A single partition column is one IN list rather than an OR-of-AND
+    chain: with 32 values per segment and dozens of live segments the
+    chained form made driver-side plan ANALYSIS the dominant read cost
+    (measured 11 s of pure plan build at 33 segments x 32 values; isin
+    analyzes in millis). A NULL value is matched with isNull — equality to
+    lit(None) is never true and would drop every NULL-partition row."""
+    keys = {k for pv in pvs for k in pv}
+    if len(keys) == 1:
+        (k,) = keys
+        col = F.col(f"{qualifier}{k}")
+        vals = [pv[k] for pv in pvs if pv.get(k) is not None]
+        cond = col.cast("string").isin(vals) if vals else F.lit(False)
+        if any(pv.get(k) is None for pv in pvs):
+            cond = cond | col.isNull()
+        return cond
+    cond = F.lit(False)
+    for pv in pvs:
+        c = F.lit(True)
+        for k, v in pv.items():
+            col = F.col(f"{qualifier}{k}")
+            c = c & (col.isNull() if v is None else col.cast("string") == F.lit(v))
+        cond = cond | c
+    return cond
+
+
 # Hive partition column of the retired PK-hash bucket layout
 # (``Manifest.bucketing``): tables written with it keep their
 # ``__dlf_bucket=N`` segment dirs until their next full rewrite. Internal:
@@ -320,7 +370,7 @@ def _path_version() -> Column:
     """Per-row commit version parsed from the segment dir inside
     ``_metadata.file_path``: the five digits after the LAST '/data/v'
     occurrence, which is this table's segment dir regardless of hive-subdir
-    depth (partitioned segments nest deeper). A plain
+    depth (legacy hive segments nest deeper). A plain
     substring search, not a backtracking regex: it runs on every row of
     every masked read."""
     return F.substring(
@@ -575,11 +625,12 @@ class LakeTable:
         warn_on_layout_mismatch: bool = True,
         stats_columns: Sequence[str] = (),
     ) -> None:
-        """``partition_by`` names the hive partition columns of the
-        segments this instance writes; an unpartitioned table writes plain
-        segments plus flat patches. Reads plan from the manifest they read,
-        whatever this instance was given. ``warn_on_layout_mismatch`` is
-        accepted for older callers and has no effect."""
+        """``partition_by`` names the partition columns of the segments
+        this instance writes: each segment owns the values it holds, and an
+        unpartitioned table's segments own the whole table. Reads plan from
+        the manifest they read, whatever this instance was given.
+        ``warn_on_layout_mismatch`` is accepted for older callers and has no
+        effect."""
         self.spark = spark
         self.path = path.rstrip("/")
         # LakeTable._schema's inferred schemas of manifests that predate the
@@ -593,8 +644,9 @@ class LakeTable:
         # Columns to record per-segment min/max for at write time (the Delta
         # file-statistics analog): typically the entity's watermark +
         # businesskey columns. Collected via df.observe during the write
-        # action, so recording them costs no extra scan.
-        self.stats_columns = tuple(stats_columns)
+        # action, so recording them costs no extra scan. Partition columns
+        # are always recorded: partition-scoped reads prune on them.
+        self.stats_columns = tuple(dict.fromkeys((*stats_columns, *partition_by)))
         self.partition_by = list(partition_by)
 
     def _require_current_layout(self, mf: Manifest) -> None:
@@ -766,12 +818,13 @@ class LakeTable:
         action — no second pass; file stats come from the written footers
         (metadata-only reads).
 
-        Ownership (``partitions``) is None on an unpartitioned table. A hive
-        segment lists it from its partition dirs. A ``patch`` segment is
-        written flat — partition columns as data, moved last like hive
-        discovery places them, rebalanced into few files instead of
-        shuffled into partition dirs — and its ownership is the distinct
-        values the same observation saw.
+        Every segment is written flat: partition columns are data, moved
+        last, and each task's rows are sorted by them (the sort the hive
+        writer of older versions ran itself), so a task writes one file whose
+        stats isolate its partitions. Ownership (``partitions``) is the
+        distinct partition values the same observation saw; None on an
+        unpartitioned table. A ``patch`` is first rebalanced into few files
+        instead of one per task of the plan that found its rows.
 
         The recorded schema is the written frame's (partition and mask
         columns included) — added to ``mf``'s schema when ``evolve``,
@@ -782,16 +835,16 @@ class LakeTable:
         from pyspark.sql import Observation
 
         if patch:
-            if self.partition_by:
-                df = df.select(
-                    *[c for c in df.columns if c not in self.partition_by],
-                    *self.partition_by,
-                )
             # a patch's few rows come from every task of the plan that found
             # them; rebalanced to advisory-size partitions they land as one
             # file per ~64 MB instead of one per task, so every later read
             # of the patch opens that many files, not more
             df = df.hint("rebalance")
+        if self.partition_by:
+            df = df.select(
+                *[c for c in df.columns if c not in self.partition_by],
+                *self.partition_by,
+            ).sortWithinPartitions(*self.partition_by)
         prev = self._schema(mf) if mf is not None and evolve else None
         if prev is not None and mf.schema is None:
             prev = T.StructType(
@@ -817,18 +870,15 @@ class LakeTable:
         for c in stat_cols:
             aggs.append(F.min(F.col(c)).alias(f"mn_{c}"))
             aggs.append(F.max(F.col(c)).alias(f"mx_{c}"))
-        flat_owned = patch and bool(self.partition_by)
-        if flat_owned:
+        if self.partition_by:
             aggs.append(
                 F.collect_set(
                     F.struct(*[F.col(c).cast("string").alias(c) for c in self.partition_by])
                 ).alias("__pvs")
             )
-        df = df.observe(obs, *aggs)
-        writer = df.write.mode("overwrite").option("compression", PARQUET_CODEC)
-        if self.partition_by and not patch:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(f"{self.path}/{seg_rel}")
+        df.observe(obs, *aggs).write.mode("overwrite").option(
+            "compression", PARQUET_CODEC
+        ).parquet(f"{self.path}/{seg_rel}")
         got = obs.get
         stats = None
         if stat_cols:
@@ -837,58 +887,14 @@ class LakeTable:
                 mn, kind_mn = _encode_stat(got[f"mn_{c}"])
                 mx, kind_mx = _encode_stat(got[f"mx_{c}"])
                 stats[c] = {"min": mn, "max": mx, "t": kind_mn or kind_mx or "str"}
-        if flat_owned:
+        partitions = None
+        if self.partition_by:
             partitions = [pv.asDict() for pv in got["__pvs"]]
-        elif self.partition_by:
-            partitions = self._read_segment_partitions(seg_rel)
-        else:
-            partitions = None
         seg = Segment(
             seg_rel, partitions, stats=stats, rows=int(got["__n"] or 0),
             files=self._collect_file_stats(seg_rel), patch=patch,
         )
         return seg, schema
-
-    def _partition_values(self, df: DataFrame) -> list[dict[str, str]]:
-        """Distinct partition values present in df (Processing.scala:144-156).
-        One small distinct-agg job; values come back as strings to match
-        hive partition-dir encoding."""
-        if not self.partition_by:
-            return []
-        rows = (
-            df.select(*[F.col(c).cast("string").alias(c) for c in self.partition_by])
-            .distinct()
-            .collect()
-        )
-        return [dict(r.asDict()) for r in rows]
-
-    def _partition_filter(self, pvs: list[dict[str, str]]) -> Column:
-        # single-column ownership: one IN list instead of an OR-of-AND
-        # chain — with 32 values per segment and dozens of live segments
-        # the chained form made driver-side plan ANALYSIS the dominant read
-        # cost (measured 11 s of pure plan build at 33 segments x 32 values;
-        # isin analyzes in millis)
-        keys = {k for pv in pvs for k in pv.keys()}
-        if len(keys) == 1:
-            (k,) = keys
-            vals = [pv[k] for pv in pvs if pv.get(k) is not None]
-            cond = F.col(k).cast("string").isin(vals) if vals else F.lit(False)
-            if any(pv.get(k) is None for pv in pvs):
-                cond = cond | F.col(k).isNull()
-            return cond
-        cond = F.lit(False)
-        for pv in pvs:
-            c = F.lit(True)
-            for k, v in pv.items():
-                if v is None:
-                    # NULL partition value: equality to lit(None) is NULL
-                    # (never true) and would exclude every NULL-partition
-                    # row from pruning/replacement — match explicitly
-                    c = c & F.col(k).isNull()
-                else:
-                    c = c & (F.col(k).cast("string") == F.lit(v))
-            cond = cond | c
-        return cond
 
     def version_at_timestamp(self, ts: float) -> int:
         """Latest committed version whose commit timestamp is <= ts (the
@@ -966,43 +972,42 @@ class LakeTable:
             segs = [s for s in segs if segment_may_match(s.stats, prune_spec)]
         entries = {e["dir"]: e for s in segs for e in s.dv or []}
         masks = self._dv_masks(list(entries.values()), schema)
-        # Segment reads are BATCHED: every plain whole-dir segment (no
-        # ownership filter, no file-level selection) lands in ONE
-        # multi-path spark.read.parquet(*dirs) call instead of its own
-        # reader + unionByName node. The per-segment union loop built an
-        # O(live segments) driver plan — measured 6.1 s of pure plan build
-        # at 100 tiny segments and 60.3 s at 1000 (segment-count probe at
-        # commit 4dd3b77)
-        # — while the batched read is one relation whose file listing Spark
-        # parallelizes (parallelPartitionDiscovery) and whose splits
-        # coalesce by maxPartitionBytes instead of one task per tiny file.
-        # The table schema covers additively-evolved segments: files
-        # without a column read it as a typed NULL.
-        # Per-segment reads remain where the semantics are per-segment:
-        # hive segments, whose partition values live in their dir names and
-        # whose ownership (seg.partitions) filters them — the segments of
-        # partitioned tables and of the retired bucket layout
-        # (Manifest.bucketing) — and stats-pruned partial file lists.
-        # Batched rows take the commit version the mask join needs from
-        # _metadata.file_path instead of a per-segment literal.
-        parts: list[DataFrame] = []
-        # Every batched root is a dir of files without hive subdirs — plain
-        # segments and patches (flat whatever the layout) — so one
-        # multi-path read takes them all (hive discovery under mixed roots
-        # would conflict). A patch that lost ownership keeps its rows
+        # Segment reads are BATCHED: every segment lands in ONE multi-path
+        # spark.read.parquet(*paths) call instead of its own reader +
+        # unionByName node. The per-segment union loop built an O(live
+        # segments) driver plan — measured 6.1 s of pure plan build at 100
+        # tiny segments and 60.3 s at 1000 (segment-count probe at commit
+        # 4dd3b77) — while the batched read is one relation whose splits
+        # coalesce by maxPartitionBytes instead of one task per tiny file,
+        # and one mask join above it. Every root is a flat dir or file (no
+        # hive subdirs), so the batch discovers no partitions. A segment
+        # whose file stats prune part of it joins as its surviving files. A
+        # segment that lost ownership (not ``owns_all``) keeps its rows
         # filtered there by its commit version (unique per data segment in
-        # a manifest).
+        # a manifest), which batched rows take from _metadata.file_path —
+        # the same version the mask join compares. The table schema covers
+        # additively-evolved segments: files without a column read it as a
+        # typed NULL.
+        parts: list[DataFrame] = []
         batched: list[str] = []
         restricted: list[tuple[int, list[dict[str, str]]]] = []
         for seg in segs:
-            seg_v = _dir_version(seg.dir) if masks or seg.patch else None
             base = f"{self.path}/{seg.dir}"
-            whole_dir = True
+            if seg.hive:
+                # legacy hive segment (an older version's partitionBy
+                # write): its partition values live in its dir names, so it
+                # reads alone (single-root partition discovery), filtered
+                # to the partitions it owns
+                df = self.spark.read.schema(schema).parquet(base)
+                df = df.where(partition_filter(seg.partitions))
+                if masks:
+                    df = df.withColumn(SEG_V_COL, F.lit(_dir_version(seg.dir)).cast("long"))
+                parts.append(df)
+                continue
+            paths = [base]
             if prune_spec is not None and seg.files:
                 # file-level skipping inside the surviving segment: read only
-                # the files whose footer stats might hold a matching row.
-                # basePath keeps the hive partition columns of partitioned
-                # segments intact on an explicit file list.
+                # the files whose footer stats might hold a matching row
                 keep = [
                     p
                     for p, fstats in seg.files.items()
@@ -1011,33 +1016,16 @@ class LakeTable:
                 if not keep:
                     continue
                 if len(keep) < len(seg.files):
-                    whole_dir = False
-                    # a fresh reader per read, never a shared one:
-                    # option("basePath") mutates the reader it is set on
-                    df = (
-                        self.spark.read.schema(schema)
-                        .option("basePath", base)
-                        .parquet(*[f"{base}/{p}" for p in sorted(keep)])
-                    )
-            if whole_dir and (seg.partitions is None or seg.patch):
-                batched.append(base)
-                if seg.partitions is not None and not seg.owns_all:
-                    restricted.append((seg_v, seg.partitions))
-                continue
-            if whole_dir:
-                df = self.spark.read.schema(schema).parquet(base)
-            if seg.partitions is not None and mf.partition_by:
-                # equality predicates on hive partition dirs -> pure dir pruning
-                df = df.where(self._partition_filter(seg.partitions))
-            if masks:
-                df = df.withColumn(SEG_V_COL, F.lit(seg_v).cast("long"))
-            parts.append(df)
+                    paths = [f"{base}/{p}" for p in sorted(keep)]
+            batched.extend(paths)
+            if seg.partitions is not None and not seg.owns_all:
+                restricted.append((_dir_version(seg.dir), seg.partitions))
         if batched:
             bdf = self.spark.read.schema(schema).parquet(*batched)
             if masks or restricted:
                 bdf = bdf.withColumn(SEG_V_COL, _path_version())
             for v, pvs in restricted:
-                bdf = bdf.where((F.col(SEG_V_COL) != v) | self._partition_filter(pvs))
+                bdf = bdf.where((F.col(SEG_V_COL) != v) | partition_filter(pvs))
             parts.insert(0, bdf)
         if not parts:
             # everything pruned: no rows, the table's columns
@@ -1086,9 +1074,10 @@ class LakeTable:
             # entry made every live patch its own relation (O(patches) plan
             # nodes on exactly the trickle-ingest path that accumulates
             # patches fastest). Patches are flat dirs; the hive-layout patch
-            # dirs of older manifests read alone via single-root hive
+            # dirs of older versions read alone via single-root hive
             # discovery (multi-root reads reject mixed/hive structures)
-            # instead of joining the batch.
+            # instead of joining the batch. A folded patch dir is no longer
+            # a segment of the manifest, so its layout is listed here.
             paths: list[str] = []
             reads: list[DataFrame] = []
             for d in dirs:
@@ -1288,11 +1277,16 @@ class LakeTable:
         later lost partition ownership may be smaller than recorded and
         merely waits for a later pass — conservative, never wrong.
         Returns the folded segment dirs ([] if fewer than two
-        candidates)."""
+        candidates, or if the partition column types are still
+        provisional: a manifest without a recorded schema reads them as
+        the dir strings of its hive segments, and a flat fold would store
+        those strings as data under the types the next write records)."""
         mf = self.latest_manifest()
         if mf is None:
             return []
         self._require_current_layout(mf)
+        if mf.schema is None and mf.partition_by:
+            return []
         small = [s for s in mf.segments if s.rows is None or s.rows < small_rows]
         if self.partition_by:
             # a None-ownership segment means "whole table" — never fold it
@@ -1492,11 +1486,10 @@ class LakeTable:
         nothing, and excluding them keeps the DV exact. Returns the patch
         row count; an empty patch commits nothing (the state is unchanged).
 
-        The patch is written flat on every layout (``Segment.patch``): its
-        partition columns are data, and it owns the values it holds,
+        The patch owns the partition values it holds, like every segment,
         so a later ``replace_partitions`` of those values takes them over
-        (folding the patch) exactly as for a hive segment, while reads take
-        every live patch in one batched relation.
+        (folding the patch), while reads take every live patch in the one
+        batched relation.
 
         ``base`` is the manifest the patch was planned from (default: the
         latest; see ``overwrite``): a patch planned before another writer's
@@ -1630,10 +1623,13 @@ class LakeTable:
         usable to register a persistent catalog view (no temp-object refs).
         Partition-ownership filters are inlined as WHERE clauses.
 
-        Known gap: ``parquet.`path``` SQL cannot carry a schema, so unlike
-        ``read()`` the view ignores the manifest's recorded schema and
-        Spark re-infers each segment's types — a numeric-looking string
-        partition column (values "001", "7") reads as a number here."""
+        ``parquet.`path``` SQL cannot carry a schema, so unlike ``read()``
+        the view takes each segment's types from its file footers. Segments
+        store partition columns as data, so those keep their written types
+        (a string partition "001" reads as "001"). Known gap: a legacy hive
+        segment's partition values come from its dir names, re-inferred —
+        a numeric-looking string partition column reads as a number
+        there."""
         mf = self.latest_manifest()
         if mf is None:
             raise FileNotFoundError(f"LakeTable does not exist: {self.path}")
@@ -1648,14 +1644,14 @@ class LakeTable:
             sql = f"SELECT {star} FROM parquet.`{self.path}/{seg.dir}`"
             clauses = []
             if seg.partitions is not None and mf.partition_by:
-                ors = []
-                for pv in seg.partitions:
-                    ands = " AND ".join(
-                        f"CAST({k} AS STRING) = '{v}'" for k, v in pv.items()
+                ors = [
+                    " AND ".join(
+                        f"{k} IS NULL" if v is None else f"CAST({k} AS STRING) = '{v}'"
+                        for k, v in pv.items()
                     )
-                    ors.append(f"({ands})")
-                if ors:
-                    clauses.append("(" + " OR ".join(ors) + ")")
+                    for pv in seg.partitions
+                ]
+                clauses.append("(" + (" OR ".join(f"({o})" for o in ors) or "FALSE") + ")")
             for entry in seg.dv or []:
                 keys = ", ".join(entry["keys"])
                 sub = f"SELECT {keys} FROM parquet.`{self.path}/{entry['dir']}`"
@@ -1668,28 +1664,6 @@ class LakeTable:
         return " UNION ALL ".join(selects)
 
     # ------------------------------------------------------------ maintenance
-    def _read_segment_partitions(self, seg_rel: str) -> list[dict[str, str]]:
-        """Partition values of a written segment, from its hive directory
-        names — pure filesystem listing, no data read."""
-        base = f"{self.path}/{seg_rel}"
-        out: list[dict[str, str]] = []
-
-        def walk(d: str, acc: dict[str, str], depth: int) -> None:
-            if depth == len(self.partition_by):
-                out.append(dict(acc))
-                return
-            for name in self.fs.listdir(d):
-                if "=" in name and self.fs.isdir(f"{d}/{name}"):
-                    k, _, v = name.partition("=")
-                    # hive encodes a NULL partition value as this sentinel
-                    # dir name; map it back so keys line up with the None
-                    # values collected from the slice
-                    pv = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-                    walk(f"{d}/{name}", {**acc, k: pv}, depth + 1)
-
-        walk(base, {}, 0)
-        return out
-
     def gc_orphans(self, older_than_seconds: float = 3600.0) -> list[str]:
         """Reclaim crash leftovers: segment dirs referenced by NO manifest
         version (a writer dying between ``_write_segment`` and ``_commit``

@@ -9,7 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from datalakefoundation_spark.tables.lake_table import BUCKET_COL, MASK_COL, LakeTable
+from datalakefoundation_spark.tables.lake_table import BUCKET_COL, DV_V_COL, MASK_COL, LakeTable
 from tests.helpers import legacy_bucket, legacy_bucketed_table, stamp_legacy_bucketing
 
 
@@ -332,6 +332,44 @@ def test_mor_read_batches_bucketed_segments(spark, tmp_path):
     st = {r["pk"]: r["val"] for r in df.collect()}
     assert len(st) == 206
     assert st[_pk(3)] == 21 and st[_pk(503)] == 3 and st[_pk(150)] == 150
+
+
+def test_mor_read_batches_partitioned_segments(spark, tmp_path):
+    """A partitioned table whose base segment lost a partition to a later
+    rewrite, with live patches, plans one data relation and one mask
+    relation whatever the patch count: every segment joins the batched
+    relation (the restricted base filtered by its commit version), so the
+    mask is planned and read once, not once per union branch. Rows stay
+    exact."""
+
+    def build(n_patches):
+        t = LakeTable(spark, str(tmp_path / f"pm{n_patches}"), partition_by=["p"])
+        t.overwrite(_base(spark, n=200).withColumn("p", F.col("val") % 4))
+        t.replace_partitions(
+            t.read().where(F.col("p") == 0).withColumn("val", F.col("val") + 1), [{"p": "0"}]
+        )
+        for i in range(n_patches):
+            t.merge_patch(
+                _patch(spark, {2 * i + 1: 7 * i}, {500 + i: i}).withColumn(
+                    "p", F.col("val") % 4
+                ),
+                keys=["pk"],
+                mask_col=MASK_COL,
+            )
+        assert not t.latest_manifest().segments[0].owns_all
+        df = t.read()
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        relations = [ln for ln in plan.splitlines() if "Relation [" in ln]
+        return df, relations
+
+    _, rel_1 = build(1)
+    df, rel_6 = build(6)
+    assert len(rel_1) == len(rel_6) == 2, rel_6
+    assert sum(DV_V_COL in ln for ln in rel_6) == 1, rel_6
+    st = {r["pk"]: r["val"] for r in df.collect()}
+    assert len(st) == 206
+    assert st[_pk(4)] == 5 and st[_pk(5)] == 14 and st[_pk(503)] == 3
+    assert st[_pk(150)] == 150
 
 
 @pytest.mark.parametrize("n_patches", [2, 8])

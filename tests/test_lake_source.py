@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from datalakefoundation_spark.streaming import LakeStreamDataSource
 from datalakefoundation_spark.tables.lake_table import MASK_COL, LakeTable
+from tests.helpers import legacy_hive_table
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -129,10 +130,7 @@ def test_backfill_survives_vacuumed_history(spark, tmp_path):
     assert {r["_commit_version"] for r in b.select("_commit_version").collect()} == {2}
 
 
-def test_partitioned_table_streams_partition_columns(spark, tmp_path):
-    """Entity partition columns live in hive dir names, not parquet
-    footers — the feed must still carry them (review finding)."""
-    t = LakeTable(spark, str(tmp_path / "p"), partition_by=["country"])
+def _stream_partition_columns(spark, t):
     t.overwrite(
         spark.createDataFrame(
             [("a", 1, "NL"), ("b", 2, "BE")], "pk string, val long, country string"
@@ -142,3 +140,19 @@ def test_partitioned_table_streams_partition_columns(spark, tmp_path):
     assert "country" in b.columns
     rows = {r["pk"]: r["country"] for r in b.collect()}
     assert rows == {"a": "NL", "b": "BE"}
+
+
+def test_partitioned_table_streams_partition_columns(spark, tmp_path):
+    """Segments store entity partition columns as data, so the feed
+    carries them from the file footers."""
+    _stream_partition_columns(
+        spark, LakeTable(spark, str(tmp_path / "p"), partition_by=["country"])
+    )
+
+
+def test_legacy_hive_table_streams_partition_columns(spark, tmp_path):
+    """A legacy hive segment keeps its partition columns in dir names, not
+    parquet footers — the feed must still carry them (review finding)."""
+    _stream_partition_columns(
+        spark, legacy_hive_table(spark, str(tmp_path / "p"), ["country"])
+    )

@@ -10,7 +10,12 @@ from datalakefoundation_spark.tables.lake_table import (
     LakeTable,
     prune_spec_for,
 )
-from tests.helpers import legacy_bucket, legacy_bucketed_table, stamp_legacy_bucketing
+from tests.helpers import (
+    legacy_bucket,
+    legacy_bucketed_table,
+    legacy_hive_table,
+    stamp_legacy_bucketing,
+)
 
 
 def _df(spark, rows):
@@ -453,6 +458,52 @@ def test_string_partition_values_keep_rows_and_type(spark, tmp_path, values):
     check([(4, a, "w"), (2, b, "y2"), (3, c, "z"), (5, c, "n")])
 
 
+def test_partitioned_overwrite_writes_one_flat_segment(spark, tmp_path):
+    """A day-partitioned overwrite over several tasks writes its partition
+    column as data: no ``day=`` subdirs, at most one parquet file per task
+    of the final stage (the hive writer wrote one per day per task), and
+    ownership is the distinct values written, a NULL day included. The
+    recorded stats of every file cover the days it holds."""
+    import datetime as dt
+    import os
+
+    days = [dt.date(2026, 1, d) for d in range(1, 6)] + [None]
+    rows = [(i, days[i % len(days)]) for i in range(600)]
+    t = LakeTable(spark, str(tmp_path / "flat"), partition_by=["day"])
+    t.overwrite(spark.createDataFrame(rows, "id long, day date").repartition(4))
+    (seg,) = t.latest_manifest().segments
+    names = os.listdir(f"{t.path}/{seg.dir}")
+    assert not any("=" in n for n in names), names
+    assert all(os.path.isfile(f"{t.path}/{seg.dir}/{n}") for n in names)
+    assert 1 <= len([n for n in names if n.endswith(".parquet")]) <= 4
+    assert not seg.hive and seg.owns_all and seg.rows == 600
+    assert sorted(seg.partitions, key=lambda pv: pv["day"] or "") == [{"day": None}] + [
+        {"day": str(d)} for d in days[:-1]
+    ]
+    assert seg.stats["day"] == {"min": "2026-01-01", "max": "2026-01-05", "t": "str"}
+    assert len(seg.files) == len([n for n in names if n.endswith(".parquet")])
+    assert sorted((r["id"], r["day"]) for r in t.read().collect()) == rows
+
+
+def test_view_keeps_partition_types_and_null_partition(spark, tmp_path):
+    """The catalog view reads partition columns from the file footers of
+    flat segments: a numeric-looking string partition keeps its string
+    type and values, and a NULL partition's rows survive the inlined
+    ownership filter of a segment that lost another partition."""
+    schema = "id int, region string"
+    t = LakeTable(spark, str(tmp_path / "view"), partition_by=["region"])
+    t.overwrite(
+        spark.createDataFrame([(1, "001"), (2, "010"), (3, "7"), (4, None)], schema)
+    )
+    t.replace_partitions(spark.createDataFrame([(5, "7")], schema), [{"region": "7"}])
+    assert not t.latest_manifest().segments[0].owns_all
+    view = spark.sql(t.to_view_sql())
+    assert dict(view.dtypes)["region"] == "string"
+    expected = [(1, "001"), (2, "010"), (4, None), (5, "7")]
+    assert sorted(tuple(r) for r in view.collect()) == expected
+    assert sorted(tuple(r) for r in t.read().collect()) == expected
+
+
 def _read_job_ids(spark, build):
     """Spark jobs started while ``build()`` runs, via a job group."""
     sc = spark.sparkContext
@@ -525,16 +576,28 @@ def test_read_starts_no_spark_job(spark, tmp_path, layout):
         )
         expected = 40
     else:
-        t = LakeTable(spark, str(tmp_path / "t"), stats_columns=["v"])
-        t.overwrite(base.repartitionByRange(4, "v").sortWithinPartitions("v"))
+        # a partitioned segment pruned to part of its files joins the one
+        # batched relation as those files, beside a live patch
+        t = LakeTable(spark, str(tmp_path / "t"), partition_by=["p"], stats_columns=["v"])
+        t.overwrite(
+            base.withColumn("p", (F.col("v") % 3).cast("string")).repartitionByRange(4, "v")
+        )
         (seg,) = t.latest_manifest().segments
+        t.merge_patch(
+            _patch(spark, [(1, 1)]).withColumn("p", F.lit("1")),
+            keys=["pk"],
+            mask_col=MASK_COL,
+        )
         prune_spec = prune_spec_for([("v", "<=", 5)])
         assert 0 < sum(
             1 for f in seg.files.values() if f["v"]["min"] <= 5
-        ) < len(seg.files)  # the read takes the basePath file-list path
+        ) < len(seg.files)  # the read takes a partial file list
         expected = 6
     df, jobs = _read_job_ids(spark, lambda: t.read(prune_spec=prune_spec))
     assert jobs == [], f"{layout}: read() started Spark jobs {jobs}"
+    if layout == "file_pruned":
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Relation [") == 2, plan  # the batch and the mask
     if prune_spec is not None:
         df = df.where(F.col("v") <= 5)
     assert df.count() == expected
@@ -655,16 +718,19 @@ def test_manifest_without_schema_reads_identically_and_next_commit_records_it(
 def test_manifest_without_schema_takes_partition_types_from_next_write(
     spark, tmp_path
 ):
-    """On a manifest without a recorded schema, partition column types are
-    unknown (dir names only hold strings): reads return the exact dir
-    strings, and the next commit that writes rows records the frame's
-    types — a date-looking string and a bigint partition column take
-    replace_partitions and merge_patch. Commits that write no user rows
-    (compaction, restore, delete_keys) leave the schema unrecorded."""
+    """On a manifest without a recorded schema over hive segments (the
+    layout of the versions that wrote such manifests), partition column
+    types are unknown (dir names only hold strings): reads return the
+    exact dir strings, and the next commit that writes rows records the
+    frame's types — a date-looking string and a bigint partition column
+    take replace_partitions and merge_patch. Commits that write no user
+    rows (restore, delete_keys) leave the schema unrecorded; compaction
+    folds nothing while the types are provisional, since a flat fold would
+    store the dir strings as data."""
     path = str(tmp_path / "oldp")
     schema = "id int, dt string, b long, v string"
     rows = [(1, "2026-01-01", 1, "x"), (2, "2026-01-02", 2, "y"), (3, "2026-01-02", 2, "z")]
-    t = LakeTable(spark, path, partition_by=["dt", "b"])
+    t = legacy_hive_table(spark, path, ["dt", "b"])
     t.overwrite(spark.createDataFrame(rows[:1], schema))
     t.append(spark.createDataFrame(rows[1:], schema))
     v_old = t.latest_manifest().version
@@ -684,7 +750,7 @@ def test_manifest_without_schema_takes_partition_types_from_next_write(
     assert jobs == []
     with pytest.raises(ValueError, match="partition columns"):
         old.delete_keys(spark.createDataFrame([("2026-01-01",)], "dt string"), keys=["dt"])
-    assert old.compact_small_segments() != []
+    assert old.compact_small_segments() == []
     old.delete_keys(spark.createDataFrame([(9,)], "id int"), keys=["id"])
     assert old.latest_manifest().schema is None
     check(old, strs, "string")

@@ -1,7 +1,9 @@
-"""Tables of the retired PK-hash bucket layout (``Manifest.bucketing``, hive
+"""Tables written by older versions of the format, built by hand: the
+retired PK-hash bucket layout (``Manifest.bucketing``, hive
 ``__dlf_bucket=N`` segments, flat patches holding the bucket column as
-data): reads return the model's rows through the per-segment partitioned
-path, and the first merge rewrites the table plain."""
+data) and hive-partitioned day tables. Reads return the model's rows
+through the legacy per-segment path; the first merge rewrites a bucketed
+table plain, and a run rewrites the partitions it touches flat."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +16,7 @@ from tests.helpers import (
     T1,
     legacy_bucket,
     legacy_bucketed_table,
+    legacy_hive_table,
     make_metadata,
     rows_v1,
     stamp_legacy_bucketing,
@@ -102,3 +105,61 @@ def test_legacy_bucketed_table_reads_and_converts_on_merge(spark, lake_root, pre
     assert BUCKET_COL not in feed.columns
     last = feed.where(F.col("_commit_version") == mf.version)
     assert {r["ID"]: r["data"] for r in last.collect()} == model
+
+
+def test_legacy_partitioned_table_reads_and_converts_touched_partitions(
+    spark, lake_root, prefix
+):
+    """A partitioned SCD2 table laid out as older versions wrote it — one
+    hive segment (``Administration=N`` dirs) and a live flat patch — reads
+    the model's rows. An SCD2 run touching only Administration=1 rewrites
+    that partition as a flat segment and leaves Administration=0 in the
+    hive segment; rows still equal the model."""
+    md = make_metadata(lake_root, prefix, processtype="historic", partitioned=True)
+    write_slice(spark, md, "s0.parquet", rows_v1(10))
+    p = Processing(spark, md, 1, "s0.parquet", {"processing.time": T0})
+    p.process()
+    path, pk = p.silver_table().path, p.pk_name
+    cur_c = f"{prefix}IsCurrent"
+    rows = p.silver_table().read().localCheckpoint()
+
+    t = legacy_hive_table(spark, path, ["Administration"])
+    t.overwrite(rows)
+    t.vacuum(retain_last=1)  # the flat load is gone; history starts hive
+    t.merge_patch(
+        rows.where(F.col("ID") == 3)
+        .withColumn("data", F.lit("patched"))
+        .withColumn(MASK_COL, F.lit(True)),
+        keys=[pk, f"{prefix}ValidFrom"],
+        mask_col=MASK_COL,
+    )
+    model = {(i, f"data{i}", True) for i in range(10) if i != 3} | {(3, "patched", True)}
+
+    def state():
+        return {(r["ID"], r["data"], r[cur_c]) for r in LakeTable(spark, path).read().collect()}
+
+    mf = LakeTable(spark, path).latest_manifest()
+    base, patch = mf.segments
+    assert base.hive and not patch.hive and patch.patch
+    assert any(d.startswith("Administration=") for d in t.fs.listdir(f"{path}/{base.dir}"))
+    assert state() == model
+
+    write_slice(spark, md, "s1.parquet", [
+        {"ID": 1, "SeqNr": 11, "name": "n", "data": "merged"},
+        {"ID": 51, "SeqNr": 51, "name": "n51", "data": "d51"},
+    ])
+    p = Processing(spark, md, 1, "s1.parquet", {"processing.time": T1})
+    summary = p.process()
+    assert summary.write_path == "rewrite"
+    assert (summary.inserted, summary.updated) == (1, 1)
+    model = (model - {(1, "data1", True)}) | {
+        (1, "data1", False), (1, "merged", True), (51, "d51", True)
+    }
+
+    mf = LakeTable(spark, path).latest_manifest()
+    hive = [s for s in mf.segments if s.hive]
+    flat = [s for s in mf.segments if not s.hive]
+    assert [s.partitions for s in hive] == [[{"Administration": "0"}]]
+    assert [s.partitions for s in flat] == [[{"Administration": "1"}]]
+    assert not any("=" in d for d in t.fs.listdir(f"{path}/{flat[0].dir}"))
+    assert state() == model
