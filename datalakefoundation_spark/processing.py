@@ -351,7 +351,10 @@ class Processing:
             # default, ProcessStrategy.scala:100-112).
             return None
         if self._partition_values:
-            cond = cond & partition_filter(self._partition_values, qualifier)
+            cond = cond & partition_filter(
+                self._partition_values, qualifier,
+                schema=(src if target is None else target).schema,
+            )
         return cond
 
     # ------------------------------------------------------------ silver table
@@ -664,7 +667,9 @@ class Processing:
         # 100 TB this is what keeps an incremental merge from rewriting the
         # whole table
         pvs = self._partition_values
-        target_pruned = target.where(partition_filter(pvs)) if pvs else target
+        target_pruned = (
+            target.where(partition_filter(pvs, schema=target.schema)) if pvs else target
+        )
         fn = S.scd2_state if historic else S.merge_state
         state = fn(
             target_pruned,

@@ -54,6 +54,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from datalakefoundation_spark.core.exceptions import ConcurrentCommitException
 from datalakefoundation_spark.tables.lake_table import partition_filter
@@ -187,7 +188,12 @@ class MemoryBackend:
     ) -> None:
         if not self.exists():
             raise FileNotFoundError(f"MemoryBackend table does not exist: {self.path}")
-        keep = self.read().where(~partition_filter(partition_values))
+        cur = self.read()
+        # a NULL partition value makes the predicate NULL, not false: its
+        # rows are kept unless it is one of the replaced values
+        keep = cur.where(
+            ~F.coalesce(partition_filter(partition_values, schema=cur.schema), F.lit(False))
+        )
         self._commit(
             keep.unionByName(df, allowMissingColumns=True), metrics, operation, None, base
         )

@@ -26,10 +26,15 @@ Why this scales:
   a patch segment that masks the versions it supersedes
   (``merge_patch``). A crash before the commit leaves only an
   unreferenced dir (``gc_orphans``).
-* Reads prune: partition columns are recorded in every segment's and
-  every file's min/max stats, and rows are written sorted by them, so a
-  partition-scoped read (``prune_spec_isin``) skips the segments and
-  files that hold none of its partitions.
+* Reads prune: a partitioned table's segments are written distributed
+  by the partition columns (each partition in one file, or a few for a
+  large one) and sorted by them, and every segment's and file's stats
+  record the exact partition values it holds. A partition-scoped read
+  (``prune_spec_isin``) opens only the segments and files holding its
+  partitions; a segment that lost partitions to a later commit opens only
+  the files holding one it still owns; and the ownership predicate
+  compares typed values that parquet pushes down to row groups and
+  pages.
 * Dynamic partition overwrite (Full loads) replaces ownership of exactly
   the partitions present in the incoming slice (Full.scala:38-50 parity).
 * Old versions remain readable (time travel) until `vacuum()`.
@@ -95,7 +100,10 @@ class Segment:
     # as `stats`...}}}. Finer-grained than the segment-level `stats` — lets
     # a windowed read prune individual files inside a surviving segment
     # (the full Delta file-skipping analog; `stats` alone skips only whole
-    # segments). None => unknown, read every file.
+    # segments). A partition column's entry here and in `stats` may also
+    # list its exact non-NULL values ("vals", recorded at write time), which
+    # point-membership pruning (prune_spec_isin) tests instead of the range.
+    # None => unknown, read every file.
     files: dict[str, dict] | None = None
     # True iff the recorded `partitions` ownership still covers every
     # partition value of the rows inside this segment (set at write time,
@@ -293,12 +301,48 @@ def _pv_key(pv: dict[str, str]) -> tuple:
     return tuple(sorted(pv.items()))
 
 
-def partition_filter(pvs: list[dict[str, str]], qualifier: str = "") -> Column:
+def _exact_as_string(dt: T.DataType) -> bool:
+    """Does casting a value of ``dt`` to string and back give the value
+    itself? Partition values are recorded as strings; for these types they
+    compare in the column's own type, which parquet can push down."""
+    return isinstance(
+        dt,
+        (T.StringType, T.IntegralType, T.DateType, T.BooleanType, T.DecimalType),
+    )
+
+
+def _typed_value(v: str, dt: T.DataType):
+    """A recorded partition value of a ``_exact_as_string`` type as the
+    Python value the min/max stats encode (``_encode_stat``)."""
+    import datetime as dt_
+    import decimal
+
+    if isinstance(dt, T.IntegralType):
+        return int(v)
+    if isinstance(dt, T.DateType):
+        return dt_.date.fromisoformat(v)
+    if isinstance(dt, T.BooleanType):
+        return v == "true"
+    if isinstance(dt, T.DecimalType):
+        return decimal.Decimal(v)
+    return v
+
+
+def partition_filter(
+    pvs: list[dict[str, str]], qualifier: str = "",
+    schema: T.StructType | None = None,
+) -> Column:
     """Rows whose partition columns hold one of ``pvs`` — partition-value
     dicts ``{col: value cast to string}``, None for a NULL value — with
     columns named ``qualifier + col``. The one ownership predicate: segment
     ownership on reads, the touched-partition scope of merges and of
     delete inference, and backend partition replacement.
+
+    A column whose type ``schema`` gives as one a string round-trips
+    exactly (``_exact_as_string``) compares against the values cast to its
+    own type, a predicate parquet pushes down: on flat files sorted by
+    their partition columns, row groups and pages of other partitions are
+    skipped. Any other column compares as a string.
 
     A single partition column is one IN list rather than an OR-of-AND
     chain: with 32 values per segment and dozens of live segments the
@@ -306,23 +350,58 @@ def partition_filter(pvs: list[dict[str, str]], qualifier: str = "") -> Column:
     (measured 11 s of pure plan build at 33 segments x 32 values; isin
     analyzes in millis). A NULL value is matched with isNull — equality to
     lit(None) is never true and would drop every NULL-partition row."""
+    types = {} if schema is None else {f.name: f.dataType for f in schema.fields}
+
+    def side(k: str) -> tuple[Column, T.DataType | None]:
+        col = F.col(f"{qualifier}{k}")
+        dt = types.get(k)
+        if dt is not None and _exact_as_string(dt):
+            return col, dt
+        return col.cast("string"), None
+
+    def lit(v: str, dt: T.DataType | None) -> Column:
+        return F.lit(v) if dt is None or isinstance(dt, T.StringType) else F.lit(v).cast(dt)
+
     keys = {k for pv in pvs for k in pv}
     if len(keys) == 1:
         (k,) = keys
-        col = F.col(f"{qualifier}{k}")
-        vals = [pv[k] for pv in pvs if pv.get(k) is not None]
-        cond = col.cast("string").isin(vals) if vals else F.lit(False)
+        col, dt = side(k)
+        vals = [lit(pv[k], dt) for pv in pvs if pv.get(k) is not None]
+        cond = col.isin(vals) if vals else F.lit(False)
         if any(pv.get(k) is None for pv in pvs):
-            cond = cond | col.isNull()
+            cond = cond | F.col(f"{qualifier}{k}").isNull()
         return cond
     cond = F.lit(False)
     for pv in pvs:
         c = F.lit(True)
         for k, v in pv.items():
-            col = F.col(f"{qualifier}{k}")
-            c = c & (col.isNull() if v is None else col.cast("string") == F.lit(v))
+            if v is None:
+                c = c & F.col(f"{qualifier}{k}").isNull()
+            else:
+                col, dt = side(k)
+                c = c & (col == lit(v, dt))
         cond = cond | c
     return cond
+
+
+def ownership_prune_spec(
+    pvs: list[dict[str, str]], schema: T.StructType | None
+) -> list | None:
+    """A ``prune_spec_isin`` spec over the values of ``pvs`` for one
+    partition column of a ``_exact_as_string`` type: the files of a segment
+    that lost ownership whose stats hold none of the values it still owns
+    need not be read. None (prune nothing) for several partition columns,
+    another type, or a NULL value among ``pvs`` (min/max stats skip
+    NULLs, so they cannot show a file holds none)."""
+    keys = {k for pv in pvs for k in pv}
+    if len(keys) != 1 or schema is None:
+        return None
+    (k,) = keys
+    if k not in schema.fieldNames() or not _exact_as_string(schema[k].dataType):
+        return None
+    if any(pv.get(k) is None for pv in pvs):
+        return None
+    return prune_spec_isin(k, [_typed_value(pv[k], schema[k].dataType) for pv in pvs])
 
 
 # Hive partition column of the retired PK-hash bucket layout
@@ -351,6 +430,11 @@ SEG_V_COL = "__dlf_seg_v"
 PARQUET_CODEC = "zstd"
 
 _DIR_V_RE = re.compile(r"^data/v(\d{5})")
+
+# Write-task id column of a segment write's observation (never stored), and
+# the task id in the name Spark's writer gives each task's file.
+TASK_COL = "__dlf_task"
+_TASK_FILE_RE = re.compile(r"^part-(\d+)-")
 
 
 def _dir_version(rel_dir: str) -> int:
@@ -559,6 +643,14 @@ def _in_may_match(stats: dict | None, col: str, values) -> bool:
     if mn is None and mx is None:
         return False  # recorded all-NULL: equals nothing
     try:
+        if "vals" in e:
+            # the exact non-NULL values of a partition column (at most
+            # file_stats_max_values of them): bisect each into the spec
+            for v in e["vals"]:
+                i = bisect.bisect_left(values, v)
+                if i < len(values) and values[i] == v:
+                    return True
+            return False
         # convert only the two BOUNDS to the values' type — converting the
         # value list per file would cost O(files x values) over a whole
         # read (measured 131 s for 190k keys x 8k files before this)
@@ -738,12 +830,24 @@ class LakeTable:
     # of driver-side footer reads — the manifest format is already shaped
     # for that swap.
     file_stats_max_files = 256
+    # A file's partition-column stats list its exact values (``vals``) when
+    # it holds at most this many; past it, min/max only.
+    file_stats_max_values = 256
 
-    def _collect_file_stats(self, seg_rel: str) -> dict[str, dict] | None:
+    def _collect_file_stats(
+        self, seg_rel: str, task_vals: dict[int, dict[str, set]] | None = None
+    ) -> dict[str, dict] | None:
         """Per-file min/max for ``stats_columns``, read from the parquet
         footers of a just-written segment (seek-based: a few KB per file,
         no data pages). Local filesystems only — on object stores the
         production path is collecting the same numbers in the write tasks.
+
+        ``task_vals`` (write task -> {partition column: encoded values},
+        observed by ``_write_segment``) adds the exact values to the stats
+        of the files that task wrote, named ``part-<task>-...`` by Spark's
+        writer: a file holding a scattered set of partitions is then
+        skipped by any partition set it misses (``_in_may_match``), where
+        its min/max range would cover them.
 
         Parquet writers may truncate long BYTE_ARRAY min/max values, but
         always conservatively (stored min <= actual min, stored max >=
@@ -801,13 +905,17 @@ class LakeTable:
                 # same "no row can match a range predicate" encoding the
                 # segment-level stats use
                 fstats[c] = {"min": lo, "max": hi, "t": k_lo or k_hi or "str"}
+            m = _TASK_FILE_RE.match(os.path.basename(f))
+            for c, vals in (task_vals or {}).get(int(m.group(1)) if m else -1, {}).items():
+                if c in fstats and len(vals) <= self.file_stats_max_values:
+                    fstats[c]["vals"] = sorted(vals)
             out[os.path.relpath(f, base)] = fstats
         return out
 
     # ------------------------------------------------------------ segment io
     def _write_segment(
         self, df: DataFrame, mf: Manifest | None, evolve: bool = True,
-        patch: bool = False,
+        patch: bool = False, laid_out: bool = False,
     ) -> tuple[Segment, T.StructType]:
         """Write one immutable segment for the commit that follows ``mf``
         (the manifest the caller read); returns the new ``Segment`` (dir,
@@ -819,12 +927,19 @@ class LakeTable:
         (metadata-only reads).
 
         Every segment is written flat: partition columns are data, moved
-        last, and each task's rows are sorted by them (the sort the hive
-        writer of older versions ran itself), so a task writes one file whose
-        stats isolate its partitions. Ownership (``partitions``) is the
-        distinct partition values the same observation saw; None on an
-        unpartitioned table. A ``patch`` is first rebalanced into few files
-        instead of one per task of the plan that found its rows.
+        last. A base segment of a partitioned table is first rebalanced by
+        its partition columns — the hash write distribution Iceberg
+        defaults to for partitioned tables: each partition lands in one
+        task (a large one split over several, small ones sharing one) — and
+        each task's rows are sorted by them, so a file holds few partitions
+        in row groups and pages of their own. The values each task wrote
+        are recorded in its file's stats (``_collect_file_stats``), so
+        partition-scoped and ownership-filtered reads open only the files
+        holding their partitions. A ``patch`` is rebalanced into few files
+        instead of one per task of the plan that found its rows. A caller
+        that distributes and orders ``df`` itself (``optimize``) passes
+        ``laid_out``. Ownership (``partitions``) is the distinct partition
+        values the same observation saw; None on an unpartitioned table.
 
         The recorded schema is the written frame's (partition and mask
         columns included) — added to ``mf``'s schema when ``evolve``,
@@ -840,11 +955,15 @@ class LakeTable:
             # file per ~64 MB instead of one per task, so every later read
             # of the patch opens that many files, not more
             df = df.hint("rebalance")
+        elif self.partition_by and not laid_out:
+            df = df.hint("rebalance", *self.partition_by)
         if self.partition_by:
             df = df.select(
                 *[c for c in df.columns if c not in self.partition_by],
                 *self.partition_by,
-            ).sortWithinPartitions(*self.partition_by)
+            )
+            if not laid_out:
+                df = df.sortWithinPartitions(*self.partition_by)
         prev = self._schema(mf) if mf is not None and evolve else None
         if prev is not None and mf.schema is None:
             prev = T.StructType(
@@ -870,16 +989,30 @@ class LakeTable:
         for c in stat_cols:
             aggs.append(F.min(F.col(c)).alias(f"mn_{c}"))
             aggs.append(F.max(F.col(c)).alias(f"mx_{c}"))
+        # the partition values each write task holds, by the task's id (a
+        # column: Spark evaluates no nondeterministic expression inside an
+        # observed aggregate)
+        part_cols = [c for c in self.partition_by if c in stat_cols]
         if self.partition_by:
             aggs.append(
                 F.collect_set(
                     F.struct(*[F.col(c).cast("string").alias(c) for c in self.partition_by])
                 ).alias("__pvs")
             )
-        df.observe(obs, *aggs).write.mode("overwrite").option(
+        if part_cols:
+            df = df.withColumn(TASK_COL, F.spark_partition_id())
+            aggs.append(F.collect_set(F.struct(TASK_COL, *part_cols)).alias("__tvs"))
+        df.observe(obs, *aggs).drop(TASK_COL).write.mode("overwrite").option(
             "compression", PARQUET_CODEC
         ).parquet(f"{self.path}/{seg_rel}")
         got = obs.get
+        task_vals: dict[int, dict[str, set]] = {}
+        for r in got["__tvs"] if part_cols else []:
+            for c in part_cols:
+                if r[c] is not None:
+                    task_vals.setdefault(r[TASK_COL], {}).setdefault(c, set()).add(
+                        _encode_stat(r[c])[0]
+                    )
         stats = None
         if stat_cols:
             stats = {}
@@ -887,12 +1020,16 @@ class LakeTable:
                 mn, kind_mn = _encode_stat(got[f"mn_{c}"])
                 mx, kind_mx = _encode_stat(got[f"mx_{c}"])
                 stats[c] = {"min": mn, "max": mx, "t": kind_mn or kind_mx or "str"}
+            for c in part_cols:
+                vals = set().union(*(tv.get(c, set()) for tv in task_vals.values()))
+                if len(vals) <= self.file_stats_max_values:
+                    stats[c]["vals"] = sorted(vals)
         partitions = None
         if self.partition_by:
             partitions = [pv.asDict() for pv in got["__pvs"]]
         seg = Segment(
             seg_rel, partitions, stats=stats, rows=int(got["__n"] or 0),
-            files=self._collect_file_stats(seg_rel), patch=patch,
+            files=self._collect_file_stats(seg_rel, task_vals), patch=patch,
         )
         return seg, schema
 
@@ -999,33 +1136,41 @@ class LakeTable:
                 # reads alone (single-root partition discovery), filtered
                 # to the partitions it owns
                 df = self.spark.read.schema(schema).parquet(base)
-                df = df.where(partition_filter(seg.partitions))
+                df = df.where(partition_filter(seg.partitions, schema=schema))
                 if masks:
                     df = df.withColumn(SEG_V_COL, F.lit(_dir_version(seg.dir)).cast("long"))
                 parts.append(df)
                 continue
+            restrict = seg.partitions is not None and not seg.owns_all
+            # file-level skipping inside the surviving segment: read only
+            # the files whose footer stats might hold a matching row and,
+            # when the segment lost ownership, one of the partitions it
+            # still owns (a spec's groups AND together)
+            spec = list(prune_spec or [])
+            if restrict:
+                spec += ownership_prune_spec(seg.partitions, schema) or []
             paths = [base]
-            if prune_spec is not None and seg.files:
-                # file-level skipping inside the surviving segment: read only
-                # the files whose footer stats might hold a matching row
+            if spec and seg.files:
                 keep = [
                     p
                     for p, fstats in seg.files.items()
-                    if segment_may_match(fstats, prune_spec)
+                    if segment_may_match(fstats, spec)
                 ]
                 if not keep:
                     continue
                 if len(keep) < len(seg.files):
                     paths = [f"{base}/{p}" for p in sorted(keep)]
             batched.extend(paths)
-            if seg.partitions is not None and not seg.owns_all:
+            if restrict:
                 restricted.append((_dir_version(seg.dir), seg.partitions))
         if batched:
             bdf = self.spark.read.schema(schema).parquet(*batched)
             if masks or restricted:
                 bdf = bdf.withColumn(SEG_V_COL, _path_version())
             for v, pvs in restricted:
-                bdf = bdf.where((F.col(SEG_V_COL) != v) | partition_filter(pvs))
+                bdf = bdf.where(
+                    (F.col(SEG_V_COL) != v) | partition_filter(pvs, schema=schema)
+                )
             parts.insert(0, bdf)
         if not parts:
             # everything pruned: no rows, the table's columns
@@ -1169,6 +1314,7 @@ class LakeTable:
           selective predicates on those columns (the data-skipping effect
           Z-ORDER provides; for a single clustering dimension range-sort is
           strictly better, for 2+ it is the practical linear-order stand-in).
+          On a partitioned table the partition columns lead the range keys.
 
         Runs as one shuffle + one write; old versions stay readable until
         ``vacuum()``. A table of the retired bucket layout is rewritten
@@ -1183,9 +1329,8 @@ class LakeTable:
         column, bounded ranges on all of them). Costs one extra min/max
         aggregation to fix the normalization bounds.
 
-        The rewrite commits on the manifest it read (``overwrite(base=)``),
-        so a writer that commits meanwhile makes it fail rather than lose
-        rows.
+        The rewrite commits the version after the manifest it read, so a
+        writer that commits meanwhile makes it fail rather than lose rows.
         """
         mf = self.latest_manifest()
         if mf is None:
@@ -1213,6 +1358,10 @@ class LakeTable:
                     self.path, bad,
                 )
                 zorder = False
+        # a partitioned table's partition columns lead the clustering keys,
+        # so each file still holds few partitions
+        lead = [F.col(c) for c in self.partition_by]
+        df, keys = cur, []
         if zorder and cluster_by:
             dtypes = {
                 f.name: f.dataType.simpleString()
@@ -1234,33 +1383,32 @@ class LakeTable:
             }
             zkey = zorder_column(zcols, bounds, bits=zorder_bits, dtypes=dtypes)
             df = cur.withColumn("__dlf_z", zkey)
+            keys = [*lead, F.col("__dlf_z")]
+        elif cluster_by:
+            keys = [*lead, *[F.col(c) for c in cluster_by if c not in self.partition_by]]
+        if keys:
             if target_partitions:
-                df = df.repartitionByRange(target_partitions, "__dlf_z")
+                df = df.repartitionByRange(target_partitions, *keys)
             else:
-                df = df.repartitionByRange("__dlf_z")
-            df = df.sortWithinPartitions("__dlf_z").drop("__dlf_z")
-            self.overwrite(
-                df,
-                operation="optimize",
-                metrics={"cluster_by": list(cluster_by), "zorder": True},
-                base=mf,
-            )
-            return
-        df = cur
-        if cluster_by:
-            cols = [F.col(c) for c in cluster_by]
-            if target_partitions:
-                df = df.repartitionByRange(target_partitions, *cols)
-            else:
-                df = df.repartitionByRange(*cols)
-            df = df.sortWithinPartitions(*cols)
+                df = df.repartitionByRange(*keys)
+            df = df.sortWithinPartitions(*keys).drop("__dlf_z")
         elif target_partitions:
-            df = df.repartition(target_partitions)
-        self.overwrite(
-            df,
-            operation="optimize",
-            metrics={"cluster_by": list(cluster_by)},
-            base=mf,
+            df = df.repartition(target_partitions, *lead)
+            if lead:
+                df = df.sortWithinPartitions(*lead)
+        new, schema = self._write_segment(
+            df, mf, evolve=False, laid_out=bool(keys or target_partitions)
+        )
+        self._commit(
+            Manifest(
+                version=mf.version + 1,
+                partition_by=self.partition_by,
+                segments=[new],
+                operation="optimize",
+                timestamp=time.time(),
+                metrics={"cluster_by": list(cluster_by), **({"zorder": True} if zorder and keys else {})},
+                schema=schema,
+            )
         )
 
     def compact_small_segments(self, small_rows: int = 100_000) -> list[str]:
@@ -1276,24 +1424,30 @@ class LakeTable:
         Recorded ``rows`` are the counts at write time; a segment that
         later lost partition ownership may be smaller than recorded and
         merely waits for a later pass — conservative, never wrong.
-        Returns the folded segment dirs ([] if fewer than two
-        candidates, or if the partition column types are still
-        provisional: a manifest without a recorded schema reads them as
-        the dir strings of its hive segments, and a flat fold would store
-        those strings as data under the types the next write records)."""
+
+        Hive segments of older versions (``Segment.hive``) are folded
+        whatever their size: this is how partitions no merge touches again
+        leave the legacy read path. Returns the folded segment dirs ([] if
+        fewer than two candidates and no hive one, or if the partition
+        column types are still provisional: a manifest without a recorded
+        schema reads them as the dir strings of its hive segments, and a
+        flat fold would store those strings as data under the types the
+        next write records, so its fold waits for that write)."""
         mf = self.latest_manifest()
         if mf is None:
             return []
         self._require_current_layout(mf)
         if mf.schema is None and mf.partition_by:
             return []
-        small = [s for s in mf.segments if s.rows is None or s.rows < small_rows]
+        small = [
+            s for s in mf.segments if s.hive or s.rows is None or s.rows < small_rows
+        ]
         if self.partition_by:
             # a None-ownership segment means "whole table" — never fold it
             # into explicit partition ownership (shouldn't exist on a
             # partitioned table, but stay safe)
             small = [s for s in small if s.partitions is not None]
-        if len(small) < 2:
+        if len(small) < 2 and not any(s.hive for s in small):
             return []
         # deletion vectors materialize here, through the same mask read()
         # applies: the folded segment holds the post-mask rows and needs no

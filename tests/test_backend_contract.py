@@ -11,6 +11,7 @@ from __future__ import annotations
 import dataclasses
 
 import pytest
+from pyspark.sql import functions as F
 
 from datalakefoundation_spark.processing import Processing
 from datalakefoundation_spark.tables.backend import MemoryBackend
@@ -137,3 +138,8 @@ def test_memory_backend_dynamic_partition_overwrite(spark, tmp_path):
     got = sorted((r["id"], r["p"], r["v"]) for r in b.read().collect())
     assert got == [(1, "a", 10), (9, "b", 99)]
     assert b.latest_manifest().version == 1
+    # a NULL partition is kept unless it is one of the replaced values
+    b.overwrite(spark.createDataFrame([(4, None, 40)], "id long, p string, v long"), dynamic=True)
+    b.overwrite(df1.withColumn("v", F.lit(98).cast("long")), dynamic=True)
+    got = sorted((r["id"], r["p"] or "", r["v"]) for r in b.read().collect())
+    assert got == [(1, "a", 10), (4, "", 40), (9, "b", 98)]

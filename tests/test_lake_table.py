@@ -459,11 +459,13 @@ def test_string_partition_values_keep_rows_and_type(spark, tmp_path, values):
 
 
 def test_partitioned_overwrite_writes_one_flat_segment(spark, tmp_path):
-    """A day-partitioned overwrite over several tasks writes its partition
-    column as data: no ``day=`` subdirs, at most one parquet file per task
-    of the final stage (the hive writer wrote one per day per task), and
-    ownership is the distinct values written, a NULL day included. The
-    recorded stats of every file cover the days it holds."""
+    """A day-partitioned overwrite of a plan whose every task holds every
+    day writes its partition column as data: no ``day=`` subdirs, at most
+    one parquet file per task of the final stage (the hive writer wrote one
+    per day per task), and ownership is the distinct values written, a NULL
+    day included. The write is distributed by the partition column, so
+    each day lands in one file, and every file's stats list the exact days
+    it holds."""
     import datetime as dt
     import os
 
@@ -480,9 +482,72 @@ def test_partitioned_overwrite_writes_one_flat_segment(spark, tmp_path):
     assert sorted(seg.partitions, key=lambda pv: pv["day"] or "") == [{"day": None}] + [
         {"day": str(d)} for d in days[:-1]
     ]
-    assert seg.stats["day"] == {"min": "2026-01-01", "max": "2026-01-05", "t": "str"}
+    assert seg.stats["day"] == {
+        "min": "2026-01-01", "max": "2026-01-05", "t": "str",
+        "vals": [str(d) for d in days[:-1]],
+    }
     assert len(seg.files) == len([n for n in names if n.endswith(".parquet")])
+    held = sorted(v for f in seg.files.values() for v in f["day"].get("vals", []))
+    assert held == [str(d) for d in days[:-1]]  # each day in exactly one file
     assert sorted((r["id"], r["day"]) for r in t.read().collect()) == rows
+
+
+def test_partition_scoped_reads_open_only_files_holding_their_partitions(
+    spark, tmp_path
+):
+    """Files of a hash-distributed partitioned segment hold scattered day
+    sets whose min/max ranges overlap; their recorded exact values let a
+    partition-scoped read (``prune_spec_isin``) open only the files holding
+    its day, and a segment that lost days to a later commit open only the
+    files holding a day it still owns. The ownership predicate compares a
+    date column to typed values, which parquet pushes down."""
+    import datetime as dt
+
+    from datalakefoundation_spark.tables.lake_table import partition_filter, prune_spec_isin
+
+    days = [dt.date(2026, 1, d) for d in range(1, 9)]
+    schema = "id long, day date"
+    rows = [(i, days[i % 8]) for i in range(160)]
+    t = LakeTable(spark, str(tmp_path / "days"), partition_by=["day"])
+    t.overwrite(spark.createDataFrame(rows, schema))
+    t.optimize(target_partitions=4)  # hash-distributed by day over 4 files
+    (seg,) = t.latest_manifest().segments
+    held = {f: set(st["day"]["vals"]) for f, st in seg.files.items()}
+    assert len(held) >= 2 and sorted(v for vs in held.values() for v in vs) == [
+        str(d) for d in days
+    ]
+
+    def opened(df):
+        return {f.rsplit("/", 1)[-1] for f in df.inputFiles()}
+
+    day = str(days[5])
+    df = t.read(prune_spec=prune_spec_isin("day", [days[5]]))
+    assert opened(df) == {f for f, vs in held.items() if day in vs}
+    assert df.where(F.col("day") == days[5]).count() == 20
+
+    # a later commit takes over every day of one file: the old segment
+    # skips that file and reads the others
+    gone_file, gone = sorted(held.items())[0]
+    t.replace_partitions(
+        spark.createDataFrame(
+            [(1000 + k, dt.date.fromisoformat(d)) for k, d in enumerate(sorted(gone))], schema
+        ),
+        [{"day": d} for d in sorted(gone)],
+    )
+    assert not t.latest_manifest().segments[0].owns_all
+    df = t.read()
+    assert gone_file not in opened(df) and set(held) - {gone_file} <= opened(df)
+    expected = sorted(
+        [r for r in rows if str(r[1]) not in gone]
+        + [(1000 + k, dt.date.fromisoformat(d)) for k, d in enumerate(sorted(gone))]
+    )
+    assert sorted((r["id"], r["day"]) for r in df.collect()) == expected
+
+    pushed = (
+        df.where(partition_filter([{"day": day}], schema=df.schema))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "PushedFilters: [IsNotNull(day), EqualTo(day," in pushed, pushed
 
 
 def test_view_keeps_partition_types_and_null_partition(spark, tmp_path):
@@ -577,14 +642,14 @@ def test_read_starts_no_spark_job(spark, tmp_path, layout):
         expected = 40
     else:
         # a partitioned segment pruned to part of its files joins the one
-        # batched relation as those files, beside a live patch
+        # batched relation as those files, beside a live patch (optimize
+        # range-clusters the segment into files of narrow v ranges)
         t = LakeTable(spark, str(tmp_path / "t"), partition_by=["p"], stats_columns=["v"])
-        t.overwrite(
-            base.withColumn("p", (F.col("v") % 3).cast("string")).repartitionByRange(4, "v")
-        )
+        t.overwrite(base.withColumn("p", (F.col("v") / 10).cast("int").cast("string")))
+        t.optimize(cluster_by=["v"], target_partitions=4)
         (seg,) = t.latest_manifest().segments
         t.merge_patch(
-            _patch(spark, [(1, 1)]).withColumn("p", F.lit("1")),
+            _patch(spark, [(1, 1)]).withColumn("p", F.lit("0")),
             keys=["pk"],
             mask_col=MASK_COL,
         )
@@ -769,6 +834,15 @@ def test_manifest_without_schema_takes_partition_types_from_next_write(
         mask_col=MASK_COL,
     )
     expected[1] = (2, "2026-01-02", 2, "y2")
+    check(old, expected, "bigint")
+    # once a write has recorded the types, compaction folds the hive
+    # segments whatever their size (small_rows=1 makes no flat segment a
+    # candidate): rows, types and the recorded schema are unchanged
+    typed = old.latest_manifest().schema
+    assert any(s.hive for s in old.latest_manifest().segments)
+    assert old.compact_small_segments(small_rows=1) != []
+    assert not any(s.hive for s in old.latest_manifest().segments)
+    assert old.latest_manifest().schema == typed
     check(old, expected, "bigint")
 
     # restoring a pre-upgrade version restores its unrecorded schema, and
